@@ -95,7 +95,7 @@ object ChangelogScan {
           // the changelog presents every commit under the TO endpoint's
           // schema, so TO's initial defaults apply to files predating
           // their add-column commit — same rule as read(to)
-          Some(t.withInitialDefaults(t.readFiles(ents.map(_.path), phys), to, ents)
+          Some(t.withInitialDefaults(t.scan(ents, phys), to, ents)
             .withColumn(ChangeTypeCol, lit("insert"))
             .withColumn(CommitVersionCol, lit(v)))
         case _ => // merge, rollback, delete, upsert — anything row-changing:
@@ -167,9 +167,9 @@ object ChangelogScan {
       val ents = t.entries(snap).filter(e => wanted.contains(e.path))
       val live =
         if (t.defaultsFor(to, ents).isEmpty)
-          t.applyDeletes(t.readFiles(paths, phys), snap, paths)
+          t.applyDeletes(t.scan(ents, phys), snap, paths)
         else t.applyDefaults(
-          t.applyDeletesWithPos(t.readFiles(paths, phys), snap, paths),
+          t.applyDeletesWithPos(t.scan(ents, phys), snap, paths),
           to, ents).drop("__gpath", "__gpos")
       live.select(col("image_id").as(key), struct(allCols.map(col): _*).as(row))
     }

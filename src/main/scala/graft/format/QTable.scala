@@ -146,12 +146,10 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * under their PHYSICAL (creation-time) names and aliased to the
     * current logical names, so a renamed column reads old and new files
     * alike — the projection is a no-op when nothing was renamed. Live
-    * position deletes (merge-on-read) are applied — see [[applyDeletes]]. */
-  def read(s: Snapshot): DataFrame = {
-    val ents = entries(s)
-    toLogical(decorateRead(
-      readFiles(ents.map(_.path), s.physicalSchema), s, ents), s)
-  }
+    * position deletes (merge-on-read) are applied — see [[applyDeletes]].
+    * Planned from the manifests through [[scan]], exactly as
+    * [[readIndexed]]. */
+  def read(s: Snapshot): DataFrame = readIndexed(s)._1
 
   /** Read a SUBSET of a snapshot's data files with position deletes
     * applied and logical column naming — the hybrid-planner primitive:
@@ -159,11 +157,8 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * what it can from manifest stats and reads only the files it
     * cannot, through the exact same delete/rename semantics as a full
     * [[read]]. */
-  def readSubset(s: Snapshot, paths: Seq[String]): DataFrame = {
-    val wanted = paths.toSet
-    val ents = entries(s).filter(e => wanted.contains(e.path))
-    toLogical(decorateRead(readFiles(paths, s.physicalSchema), s, ents), s)
-  }
+  def readSubset(s: Snapshot, files: Seq[DataFileEntry]): DataFrame =
+    toLogical(decorateRead(scan(files, s.physicalSchema), s, files), s)
 
   // ------------------------------------------ merge-on-read position deletes
 
@@ -176,9 +171,9 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
         org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** Scheme-insensitive path key for delete-file range pruning:
-    * authority + URI path. Scan flavors render the SAME file as
-    * `file:///x`, `file:/x` or `/x` — lexicographic compares must not
-    * see the scheme prefix. */
+    * authority + URI path. Stored delete files and manifests may render
+    * the SAME file as `file:///x`, `file:/x` or `/x` — lexicographic
+    * compares must not see the scheme prefix. */
   private def pathKey(p: String): String = {
     val u = new org.apache.hadoop.fs.Path(p).toUri
     Option(u.getAuthority).getOrElse("") + u.getPath
@@ -199,9 +194,9 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     *
     * Position deletes anti-join on `(_metadata.file_path,
     * _metadata.row_index)`. The join key is the file NAME (UUID-unique
-    * part files), not the full path: the flavors of scan behind
-    * read/readIndexed render the same file with different scheme
-    * qualification, and names are immune. The delete side is
+    * part files), not the full path: a delete file's stored path and
+    * the scan's `_metadata.file_path` may qualify the same file with
+    * different schemes, and names are immune. The delete side is
     * O(deleted-since-last-fold rows) and AQE broadcasts it when small
     * (the steady-state case); `readPaths` prunes delete files whose
     * referenced-path range cannot overlap the scan, so a scoped rewrite
@@ -234,8 +229,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     val posApplied =
       if (needed.isEmpty) withPos
       else {
-        val delDf = df.sparkSession.read.schema(deleteSchema)
-          .parquet(needed.map(_.path): _*)
+        val delDf = scan(needed, deleteSchema)
           .select(substring_index(col("file_path"), "/", -1).as("__gname"),
             col("pos").as("__gpos"))
         withPos.withColumn("__gname", substring_index(col("__gpath"), "/", -1))
@@ -388,12 +382,8 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     val ents = entries(s)
     val cols = s.schemaFields.map(f => col(f.phys).as(f.name)) :+
       col(QTable.RowIdCol)
-    if (ents.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        physicalSchemaWithRowId(s)).select(cols: _*)
-    val scan = readFiles(ents.map(_.path), physicalSchemaWithRowId(s))
-    val withPos = applyDeletesWithPos(scan, s, ents.map(_.path))
+    val withPos = applyDeletesWithPos(
+      scan(ents, physicalSchemaWithRowId(s)), s, ents.map(_.path))
     applyRowIds(applyDefaults(withPos, s, ents), ents)
       .drop("__gpath", "__gpos")
       .select(cols: _*)
@@ -410,7 +400,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   def readEntriesForRewrite(s: Snapshot,
       inputs: Seq[DataFileEntry]): DataFrame =
     if (!s.rowLineage)
-      decorateRead(readFiles(inputs.map(_.path), s.physicalSchema), s, inputs)
+      decorateRead(scan(inputs, s.physicalSchema), s, inputs)
     else readEntriesForRewriteWithPos(s, inputs).drop("__gpath", "__gpos")
 
   /** [[readEntriesForRewrite]] keeping the `__gpath`/`__gpos` address
@@ -418,10 +408,9 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   def readEntriesForRewriteWithPos(s: Snapshot,
       inputs: Seq[DataFileEntry]): DataFrame = {
     if (!s.rowLineage)
-      return decorateReadWithPos(
-        readFiles(inputs.map(_.path), s.physicalSchema), s, inputs)
-    val scan = readFiles(inputs.map(_.path), physicalSchemaWithRowId(s))
-    val withPos = applyDeletesWithPos(scan, s, inputs.map(_.path))
+      return decorateReadWithPos(scan(inputs, s.physicalSchema), s, inputs)
+    val withPos = applyDeletesWithPos(
+      scan(inputs, physicalSchemaWithRowId(s)), s, inputs.map(_.path))
     applyRowIds(applyDefaults(withPos, s, inputs), inputs)
   }
 
@@ -469,8 +458,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     // attached via the delete-file name (consolidation-safe)
     val dseqDf = broadcast(spark.createDataFrame(
       applicable.map(d => (QTable.fileName(d.path), d.seq))).toDF("__dname", "__dseq"))
-    val delKeys = spark.read.schema(eqDeleteSchema)
-      .parquet(applicable.map(_.path): _*)
+    val delKeys = scan(applicable, eqDeleteSchema)
       .select(col("image_id").as("__dkey"),
         substring_index(col("_metadata.file_path"), "/", -1).as("__dname"))
       .join(dseqDf, "__dname")
@@ -544,7 +532,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     val dels = s.deleteFiles
     if (dels.isEmpty) return Nil
     import org.apache.spark.sql.functions.col
-    spark.read.schema(deleteSchema).parquet(dels.map(_.path): _*)
+    scan(dels, deleteSchema)
       .select(col("_metadata.file_path").as("d"), col("file_path").as("f"))
       .distinct().collect()
       .map(r => (QTable.fileName(r.getString(0)), QTable.fileName(r.getString(1))))
@@ -572,48 +560,71 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     else df.select(s.schemaFields.map(f =>
       org.apache.spark.sql.functions.col(f.phys).as(f.name)): _*)
 
-  /** Read a snapshot through the Catalyst-integrated stats-skipping
-    * [[QTableFileIndex]]: pushed filters on phash/pbucket/image_id prune
-    * data files from manifest min/max ranges INSIDE the scan node — the
-    * declarative equivalent of [[planFiles]], composing with column
-    * pruning/joins/AQE, and listing never touches the filesystem.
-    * Returns the DataFrame and the index (whose `lastSelection` exposes
-    * the skip ratio for tests/metrics). */
-  /** The Catalyst relation behind [[readIndexed]] and the `qtable`
-    * DataSource ([[graft.spark.QTableSource]]): a parquet
-    * HadoopFsRelation whose file listing is the manifest-backed
-    * stats-skipping index. */
-  private[graft] def relationFor(s: Snapshot)
-      : (org.apache.spark.sql.execution.datasources.HadoopFsRelation, QTableFileIndex) =
-    relationFor(s, entries(s))
+  /** THE table-read primitive: a parquet scan of recorded file entries
+    * (data, position-delete or equality-delete) under a declared schema,
+    * planned from the entries alone — the [[QTableFileIndex]] listing
+    * synthesizes each file's status from its recorded size, so no read
+    * stats or lists the filesystem. Over data files the index skips by
+    * manifest stats (pushed filters on phash/pbucket/image_id and the
+    * generic column stats); delete files are listed whole. Returns the
+    * frame and the index (whose `lastSelection` exposes the skip ratio
+    * for tests/metrics). */
+  def scanIndexed(files: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType): (DataFrame, QTableFileIndex) = {
+    val (rel, index) = relationOver(files, schema)
+    (org.apache.spark.sql.GraftBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(rel)), index)
+  }
 
-  /** [[relationFor]] over a SUBSET of a snapshot's entries — for callers
-    * that already excluded files at a higher level (DeleteJob's
-    * metadata-dropped files) but still want the stats-skipping index
-    * over the remainder. */
-  private[graft] def relationFor(s: Snapshot, subset: Seq[DataFileEntry])
+  /** [[scanIndexed]] without the index. */
+  def scan(files: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    scanIndexed(files, schema)._1
+
+  /** The Catalyst relation behind [[scan]] and the `qtable` DataSource
+    * ([[graft.spark.QTableSource]]): a parquet HadoopFsRelation whose
+    * file listing is the manifest-backed [[QTableFileIndex]]. The schema
+    * is declared nullable, as Spark's path-based reader declares it: a
+    * file may hold nulls in a column the table declares non-null (an
+    * UPDATE ... SET c = NULL writes them), and a non-null declaration
+    * would let the optimizer fold `c IS NULL` to false. */
+  private def relationOver(files: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType)
       : (org.apache.spark.sql.execution.datasources.HadoopFsRelation, QTableFileIndex) = {
-    val index = new QTableFileIndex(subset)
+    val index = new QTableFileIndex(files)
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       location = index,
       partitionSchema = org.apache.spark.sql.types.StructType(Nil),
-      dataSchema = s.physicalSchema,
+      dataSchema = org.apache.spark.sql.GraftBridge.asNullable(schema),
       bucketSpec = None,
       fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
       options = Map.empty)(spark)
     (rel, index)
   }
 
+  /** A snapshot's data files as a raw physical relation (no deletes,
+    * defaults or renames applied) — what [[graft.spark.QTableSource]]
+    * serves when none of those apply. */
+  private[graft] def relationFor(s: Snapshot)
+      : (org.apache.spark.sql.execution.datasources.HadoopFsRelation, QTableFileIndex) =
+    relationOver(entries(s), s.physicalSchema)
+
+  /** Read a snapshot through the Catalyst-integrated stats-skipping
+    * [[QTableFileIndex]]: pushed filters on phash/pbucket/image_id prune
+    * data files from manifest min/max ranges INSIDE the scan node — the
+    * declarative equivalent of [[planFiles]], composing with column
+    * pruning/joins/AQE, and listing never touches the filesystem.
+    * Returns the DataFrame and the index (whose `lastSelection` exposes
+    * the skip ratio for tests/metrics). [[read]] is this frame. */
   def readIndexed(s: Snapshot): (DataFrame, QTableFileIndex) = {
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val (rel, index) = relationFor(s)
-    val df0 = org.apache.spark.sql.GraftBridge.ofRows(spark, LogicalRelation(rel))
+    val ents = entries(s)
+    val (df0, index) = scanIndexed(ents, s.physicalSchema)
     // merge-on-read: anti-join live position deletes above the indexed
     // scan (pushed filters and stats skipping still reach the scan node
     // below the join; a no-op when the snapshot carries no deletes);
     // initial defaults substitute above that when pre-evolution files
     // are still live
-    val df = decorateRead(df0, s, entries(s))
+    val df = decorateRead(df0, s, ents)
     // renamed columns surface under logical names via a projection the
     // optimizer collapses into the scan (alias pushdown keeps the stats
     // skipping on phash/pbucket/image_id intact — those are base fields
@@ -630,20 +641,16 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   def storedSchema: org.apache.spark.sql.types.StructType =
     currentSnapshotOpt.map(_.storedSchema).getOrElse(ImageRow.storedSchema)
 
-  /** The maintenance-job read surface: files under their PHYSICAL names
-    * (what rewrites must also WRITE, so every data file ever produced
-    * carries creation-time names regardless of later renames). User-facing
-    * reads go through [[read]], which aliases to logical names. */
-  def readFiles(paths: Seq[String]): DataFrame =
-    readFiles(paths,
-      currentSnapshotOpt.map(_.physicalSchema).getOrElse(ImageRow.storedSchema))
-
-  def readFiles(paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    else spark.read.schema(schema).parquet(paths: _*)
+  /** Raw physical scan of some of the CURRENT snapshot's data files, by
+    * path (dev probes and the bench's warm-up read): files under their
+    * PHYSICAL names, no deletes or defaults applied. Planned from the
+    * manifests like every other read; a path the snapshot does not
+    * record is an error, never a silently shorter scan. */
+  def readFiles(paths: Seq[String]): DataFrame = {
+    val snap = currentSnapshot
+    val byPath = entries(snap).map(e => e.path -> e).toMap
+    scan(paths.map(p => byPath.getOrElse(p, throw new IllegalArgumentException(
+      s"$p is not a live data file of version ${snap.version}"))), snap.physicalSchema)
   }
 
   /** Commit a new snapshot. `files` are chunked into NEW manifests,
@@ -1263,7 +1270,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     // predate the add-column commit (deletes stay un-applied here by
     // contract: incremental = "rows as appended")
     toLogical(withInitialDefaults(
-      readFiles(ents.map(_.path), to.physicalSchema), to, ents), to)
+      scan(ents, to.physicalSchema), to, ents), to)
   }
 
   /** Row-level changelog (CDC) over (fromV, toV] — unlike

@@ -1,6 +1,6 @@
 package graft.format
 
-import graft.model.DataFileEntry
+import graft.model.{DataFileEntry, FileEntry}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -8,21 +8,32 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst-integrated data skipping for qtable scans — the custom
-  * `FileIndex` integration pattern Delta/Iceberg use: Spark's
-  * `FileSourceStrategy` hands every scan's pushed data filters to
-  * `listFiles`, and this index answers with only the data files whose
-  * manifest min/max ranges can satisfy them. A user writing plain
-  * declarative `table.readIndexed().where($"phash".between(a, b))` gets
-  * the same file skipping the driver-side `QTable.planFiles` does by
-  * hand — no manual planning call, and the skipping composes with every
-  * other Catalyst feature (column pruning, AQE, joins).
+/** The file listing behind EVERY qtable read — the custom `FileIndex`
+  * integration pattern Delta/Iceberg use. Data-file reads (`read`,
+  * `readIndexed`, rewrite reads, incremental/changelog/streaming scans)
+  * and delete-file reads (position and equality deletes) all plan from
+  * manifest/snapshot entries through this index; none lists or stats
+  * the filesystem. FileStatus objects are synthesized from the entries
+  * (size is recorded at commit time), so planning a 10^12-image table's
+  * scan is pure in-memory metadata work. A file that vanished out of
+  * band fails the task that opens it, naming the file — never a
+  * silently shorter result.
   *
-  * FileStatus objects are synthesized from manifest metadata (size is
-  * recorded at commit time), so the index NEVER touches the filesystem —
-  * listing a 10^12-image table's scan is pure in-memory metadata work.
+  * Over data files the index also skips: Spark's `FileSourceStrategy`
+  * hands every scan's pushed data filters to `listFiles`, and the index
+  * answers with only the files whose manifest min/max ranges can
+  * satisfy them. A user writing plain declarative
+  * `table.readIndexed().where($"phash".between(a, b))` gets the same
+  * file skipping the planner call `QTable.planFiles` does by hand, and
+  * the skipping composes with every other Catalyst feature (column
+  * pruning, AQE, joins). Delete files carry no such stats and are
+  * always listed whole.
+  *
+  * Two indexes over the same file set are EQUAL (as `InMemoryFileIndex`
+  * compares root paths), so two reads of one snapshot match in exchange
+  * reuse and the `CacheManager`.
   */
-class QTableFileIndex(entries: Seq[DataFileEntry]) extends FileIndex {
+class QTableFileIndex(entries: Seq[FileEntry]) extends FileIndex {
 
   /** (selected, total) of the last listFiles call — test/metrics hook. */
   @volatile var lastSelection: (Int, Int) = (entries.size, entries.size)
@@ -48,9 +59,23 @@ class QTableFileIndex(entries: Seq[DataFileEntry]) extends FileIndex {
 
   override def refresh(): Unit = ()
 
+  private lazy val pathSet: Set[String] = entries.iterator.map(_.path).toSet
+
+  // the mutable test/DML hooks above take no part: they describe how a
+  // relation is used, not what it reads
+  override def equals(other: Any): Boolean = other match {
+    case o: QTableFileIndex => pathSet == o.pathSet
+    case _ => false
+  }
+
+  override def hashCode(): Int = pathSet.hashCode
+
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val selected = entries.filter(e => dataFilters.forall(f => mayMatch(f, e)))
+    val selected = entries.filter {
+      case e: DataFileEntry => dataFilters.forall(f => mayMatch(f, e))
+      case _ => true
+    }
     lastSelection = (selected.size, entries.size)
     val statuses = selected.map { e =>
       new FileStatus(e.byteCount, false, 1, 128L << 20, 0L, new HPath(e.path))

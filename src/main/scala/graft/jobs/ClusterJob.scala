@@ -182,7 +182,7 @@ class ClusterJob(
     * key components are independent of the slicing key — each file is a
     * near-uniform sample of its group's key distribution; boundary error
     * only skews output file sizes a few percent, never correctness. */
-  private def boundsByGroup(plans: Seq[Plan],
+  private def boundsByGroup(snap: Snapshot, plans: Seq[Plan],
       zkeyCol: Column, sampleEvery: Int): Map[String, Array[Long]] = {
     // every 8th file per group (min 1): pre-cluster files are id-range
     // slices independent of the key components, so each is a near-uniform
@@ -195,9 +195,9 @@ class ClusterJob(
     // slices, so skipping files skips key ranges — and the caller passes
     // sampleEvery = 1 (every file; the pass is still column-pruned).
     val sampled = plans.flatMap(_.inputs.sortBy(_.path).zipWithIndex
-      .collect { case (f, i) if i % sampleEvery == 0 => f.path })
+      .collect { case (f, i) if i % sampleEvery == 0 => f })
     val grid = (1 until QuantileGrid).map(_.toDouble / QuantileGrid).toArray
-    val rows = table.readFiles(sampled)
+    val rows = table.scan(sampled, snap.physicalSchema)
       .select(col("pbucket"), zkeyCol.as("zkey"))
     ClusterJob.groupQuantiles(rows, ClusterJob.bucketGroupLookup(plans.map(p =>
       (p.group, p.inputs.map(_.pbucketMin).min, p.inputs.map(_.pbucketMax).max))), grid)
@@ -243,7 +243,7 @@ class ClusterJob(
       .flatMap(_._2.grouped(math.max(1, gridBatchGroups)))
       .flatMap { batch =>
       val tB0 = System.nanoTime()
-      val grids = boundsByGroup(batch, zkeyCol, sampleEvery)
+      val grids = boundsByGroup(snap, batch, zkeyCol, sampleEvery)
       if (sys.env.contains("GRAFT_TIMING"))
         System.err.println(f"[timing] cluster-bounds ${(System.nanoTime() - tB0) / 1e9}%6.2fs (${batch.size} groups)")
       runBatch(snap, batch, grids, zkeyCol, ckpt, jobTable, failAfterGroups)
@@ -312,7 +312,7 @@ class ClusterJob(
           val bounds: Seq[Long] =
             if (nOut <= QuantileGrid)
               (1 until nOut).map(i => grid(i * QuantileGrid / nOut - 1))
-            else jobTable.readFiles(p.inputs.map(_.path))
+            else jobTable.scan(p.inputs, snap.physicalSchema)
               .select(zkeyCol.as("zkey"))
               .stat.approxQuantile("zkey", (1 until nOut).map(_.toDouble / nOut).toArray, 0.001)
               .map(_.toLong).toSeq

@@ -83,8 +83,7 @@ class DeleteJob(
     // from the delete files — O(delete rows), only when both exist)
     val droppedDead: Long =
       if (dropped.isEmpty || snap.deleteFiles.isEmpty) 0L
-      else table.spark.read.schema(table.deleteSchema)
-        .parquet(snap.deleteFiles.map(_.path): _*)
+      else table.scan(snap.deleteFiles, table.deleteSchema)
         .where(substring_index(col("file_path"), "/", -1)
           .isin(droppedNames.toSeq: _*))
         .count()
@@ -96,9 +95,7 @@ class DeleteJob(
     val (written, n, scanned, total) =
       if (kept.isEmpty) (Nil, 0L, 0, 0)
       else {
-        val (rel, index) = table.relationFor(snap, kept)
-        val base = org.apache.spark.sql.GraftBridge.ofRows(table.spark,
-          org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
+        val (base, index) = table.scanIndexed(kept, snap.physicalSchema)
         // defaults-aware: `delete where col = <default>` must hit the
         // pre-evolution rows the default makes match
         val live = table.decorateReadWithPos(base, snap, kept)

@@ -59,7 +59,7 @@ object JobPlanning {
   /** Project a writer's frame onto the snapshot's PHYSICAL schema (the
     * write-side half of metadata-only schema evolution). Columns may
     * arrive under logical names (user append/merge sources) or physical
-    * names (rewrite scans via `readFiles`); columns the input has under
+    * names (rewrite scans via `QTable.scan`); columns the input has under
     * neither (e.g. a MERGE source predating an addColumn) become typed
     * nulls. Every data file is written with physical (creation-time)
     * names — the invariant that makes renameColumn a pure metadata

@@ -62,11 +62,9 @@ object NdvStats {
     * (absent-in-file physical columns read as null, which the sketch agg
     * ignores — correct: that file stores no values of the column). */
   private[jobs] def readPhysical(t: QTable, fields: Seq[FieldDef],
-      paths: Seq[String]) = {
-    val schema = StructType(
-      fields.map(f => StructField(f.phys, f.sparkType, nullable = true)))
-    t.spark.read.schema(schema).parquet(paths: _*)
-  }
+      files: Seq[DataFileEntry]) =
+    t.scan(files, StructType(
+      fields.map(f => StructField(f.phys, f.sparkType, nullable = true))))
 
   /** An empty compact sketch — what an all-null (or absent) column in a
     * file records, so the file never re-enters the pending set. */
@@ -103,7 +101,7 @@ class NdvSketchJob(
     // per-batch Spark jobs bound the collected sketch volume on the
     // driver (files x cols x ~2 KB per batch), the gridBatchGroups move
     val computed = scala.collection.mutable.Map[String, Map[String, String]]()
-    pending.map(_.path).grouped(batchFiles).foreach { batch =>
+    pending.grouped(batchFiles).foreach { batch =>
       val aggs = fields.map(f =>
         hll_sketch_agg(col(f.phys), lit(lgK)).as(f.phys))
       val rows = NdvStats.readPhysical(table, fields, batch)
@@ -173,7 +171,7 @@ object NdvEstimate {
     val parts =
       if (unsketched.isEmpty) storedDf
       else {
-        val raw = NdvStats.readPhysical(table, fields, unsketched.map(_.path))
+        val raw = NdvStats.readPhysical(table, fields, unsketched)
         val scanned = fields.map { f =>
           raw.agg(hll_sketch_agg(col(f.phys), lit(12)).as("sk"))
             .select(lit(f.name).as("col"), col("sk"))

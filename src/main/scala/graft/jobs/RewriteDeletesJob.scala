@@ -38,8 +38,7 @@ class RewriteDeletesJob(
     val dels = snap.deleteFiles
     if (dels.size <= 1) return snap
 
-    val all = table.spark.read.schema(table.deleteSchema)
-      .parquet(dels.map(_.path): _*)
+    val all = table.scan(dels, table.deleteSchema)
       .select(col("file_path"), col("pos"))
       .distinct()
     val (written, n) = DeleteJob.writeDeleteFiles(table,

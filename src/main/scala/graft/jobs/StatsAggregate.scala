@@ -109,7 +109,7 @@ object StatsAggregate {
     val parts =
       if (scanFiles.isEmpty) metaDf
       else {
-        val scanned = table.readSubset(s, scanFiles.map(_.path))
+        val scanned = table.readSubset(s, scanFiles)
         val aggs = count(lit(1)).cast("long").as("count_star") +:
           fields.flatMap(f => Seq(
             count(col(f.name)).cast("long").as(s"${f.name}_count"),

@@ -70,9 +70,7 @@ class UpdateJob(
     // 1. discovery: stats-skipping scan, aggregated to (file, matches).
     // The index prunes files whose stats cannot satisfy the pushed
     // condition; the collect is one row per matched FILE.
-    val (rel, index) = table.relationFor(snap, all)
-    val base = org.apache.spark.sql.GraftBridge.ofRows(table.spark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
+    val (base, index) = table.scanIndexed(all, snap.physicalSchema)
     val live = table.decorateReadWithPos(base, snap, all)
     val logical = snap.schemaFields.map(f => col(f.phys).as(f.name)) :+
       col("__gpath")

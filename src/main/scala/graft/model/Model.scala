@@ -44,6 +44,15 @@ object ImageRow {
   * for the column. */
 final case class ColStat(kind: String, min: String, max: String)
 
+/** What a scan needs of any file a snapshot records — data, position-
+  * delete or equality-delete: its path and its commit-time size. Every
+  * table read plans from these (see [[graft.format.QTableFileIndex]]),
+  * so no read stats the filesystem to learn what the metadata holds. */
+sealed trait FileEntry {
+  def path: String
+  def byteCount: Long
+}
+
 /** Per-data-file entry recorded in a manifest. min/max column stats are
   * harvested from Parquet footers at commit time and drive scan pruning
   * (the analogue of the reference pushing date-range params into its HTTP
@@ -90,7 +99,7 @@ final case class DataFileEntry(
     // rollback refuses to cross the enable boundary — so a 0 from a
     // pre-lineage manifest is never read as an id. In-memory fresh
     // entries default to the [[DataFileEntry.UnstampedRowId]] sentinel.
-    firstRowId: Long = DataFileEntry.UnstampedRowId) {
+    firstRowId: Long = DataFileEntry.UnstampedRowId) extends FileEntry {
 
   /** Null-safe accessor: entries from pre-colStats manifests deserialize
     * with null here and resolve to empty (no stats = never pruned). */
@@ -153,7 +162,7 @@ final case class DeleteFileEntry(
     rowCount: Long,
     byteCount: Long,
     dataPathMin: String,
-    dataPathMax: String)
+    dataPathMax: String) extends FileEntry
 
 /** One EQUALITY-delete file (Iceberg v2's second delete flavor): a
   * parquet file of `image_id` keys, each killing EVERY older row of that
@@ -183,7 +192,7 @@ final case class EqDeleteFileEntry(
     byteCount: Long,
     idMin: String,
     idMax: String,
-    seq: Long)
+    seq: Long) extends FileEntry
 
 /** Manifest file metadata held in the snapshot (an inlined manifest list,
   * Iceberg-style): range stats allow skipping whole manifests. */

@@ -94,7 +94,7 @@ class QTableStreamSource(ctx: SQLContext, path: String,
     // — unless the column carries an initial default, which substitutes
     // per file exactly as in batch reads (a stream-static broadcast
     // lookup, no-op when every batch file postdates the defaults)
-    var df = table.readFiles(ents.map(_.path), baseSchema)
+    var df = table.scan(ents, baseSchema)
     if (withCommitTs)
       // capture the scan address BEFORE any join (Spark does not
       // resolve `_metadata` through one); the name->commit-ts lookup is

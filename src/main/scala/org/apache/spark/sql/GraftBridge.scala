@@ -10,6 +10,10 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The schema with every field (nested ones too) nullable — what
+    * Spark's own file sources declare for a user-given read schema. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** DataFrame over a custom relation plan (private[sql] Dataset.ofRows);
     * used to expose the qtable's stats-skipping FileIndex as a plain
     * declarative DataFrame. */

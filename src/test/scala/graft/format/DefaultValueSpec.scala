@@ -73,7 +73,7 @@ class DefaultValueSpec extends AnyFunSuite {
     assert(t.entries(c).forall(_.seq >= f.defaultSeq))
     // the default is now PHYSICAL: a raw undecorated scan of the
     // rewritten files (no substitution) shows the stored 7s
-    val raw = t.readFiles(t.entries(c).map(_.path), c.physicalSchema)
+    val raw = t.scan(t.entries(c), c.physicalSchema)
     assert(raw.where(col(f.phys) === 7).count() == 60)
     // and the decorated read is the identity pass-through again (no
     // broadcast seq-lookup join left in the plan)

@@ -64,7 +64,7 @@ class RowLineageSpec extends AnyFunSuite {
     val ext = org.apache.spark.sql.types.StructType(s.physicalSchema.fields :+
       org.apache.spark.sql.types.StructField("_row_id",
         org.apache.spark.sql.types.LongType, nullable = true))
-    val stored = t.readFiles(t.entries(s).map(_.path), ext)
+    val stored = t.scan(t.entries(s), ext)
     assert(stored.where(col("_row_id").isNull).count() == 0)
   }
 
