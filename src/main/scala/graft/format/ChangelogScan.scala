@@ -167,9 +167,9 @@ object ChangelogScan {
       val ents = t.entries(snap).filter(e => wanted.contains(e.path))
       val live =
         if (t.defaultsFor(to, ents).isEmpty)
-          t.applyDeletes(t.scan(ents, phys), snap, paths)
+          t.applyDeletes(t.scan(ents, phys), snap, ents)
         else t.applyDefaults(
-          t.applyDeletesWithPos(t.scan(ents, phys), snap, paths),
+          t.applyDeletesWithPos(t.scan(ents, phys), snap, ents),
           to, ents).drop("__gpath", "__gpos")
       live.select(col("image_id").as(key), struct(allCols.map(col): _*).as(row))
     }

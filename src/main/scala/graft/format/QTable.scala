@@ -198,7 +198,8 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * the scan's `_metadata.file_path` may qualify the same file with
     * different schemes, and names are immune. The delete side is
     * O(deleted-since-last-fold rows) and AQE broadcasts it when small
-    * (the steady-state case); `readPaths` prunes delete files whose
+    * (the steady-state case); the paths of `reads` (the snapshot
+    * entries the frame was scanned from) prune delete files whose
     * referenced-path range cannot overlap the scan, so a scoped rewrite
     * of one bucket never reads other buckets' delete files.
     *
@@ -207,10 +208,10 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     *
     * No-op (the unchanged `df`, preserving existing plans byte-for-byte)
     * when no delete of either flavor can apply. */
-  def applyDeletes(df: DataFrame, s: Snapshot, readPaths: Seq[String]): DataFrame = {
-    if (readPaths.isEmpty ||
-        (neededDeletes(s, readPaths).isEmpty && s.eqDeleteFiles.isEmpty)) df
-    else applyDeletesWithPos(df, s, readPaths)
+  def applyDeletes(df: DataFrame, s: Snapshot, reads: Seq[DataFileEntry]): DataFrame = {
+    if (reads.isEmpty ||
+        (neededDeletes(s, reads.map(_.path)).isEmpty && s.eqDeleteFiles.isEmpty)) df
+    else applyDeletesWithPos(df, s, reads)
       .drop("__gpath", "__gpos")
   }
 
@@ -220,12 +221,12 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * delete writers (DeleteJob, merge-on-read MERGE). The metadata
     * column must be captured BEFORE the anti-join: Spark does not
     * resolve `_metadata` through a join. */
-  def applyDeletesWithPos(df: DataFrame, s: Snapshot, readPaths: Seq[String]): DataFrame = {
+  def applyDeletesWithPos(df: DataFrame, s: Snapshot, reads: Seq[DataFileEntry]): DataFrame = {
     import org.apache.spark.sql.functions.{col, substring_index}
     val withPos = df
       .withColumn("__gpath", col("_metadata.file_path"))
       .withColumn("__gpos", col("_metadata.row_index"))
-    val needed = neededDeletes(s, readPaths)
+    val needed = neededDeletes(s, reads.map(_.path))
     val posApplied =
       if (needed.isEmpty) withPos
       else {
@@ -236,7 +237,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
           .join(delDf, Seq("__gname", "__gpos"), "left_anti")
           .drop("__gname")
       }
-    applyEqDeletes(posApplied, s, readPaths)
+    applyEqDeletes(posApplied, s, reads)
   }
 
   // ------------------------------------------------ initial defaults
@@ -297,9 +298,8 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * rewritten file's seq postdates the add-column commit). */
   def decorateRead(df: DataFrame, s: Snapshot,
       inputs: Seq[DataFileEntry]): DataFrame = {
-    val paths = inputs.map(_.path)
-    if (defaultsFor(s, inputs).isEmpty) applyDeletes(df, s, paths)
-    else applyDefaults(applyDeletesWithPos(df, s, paths), s, inputs)
+    if (defaultsFor(s, inputs).isEmpty) applyDeletes(df, s, inputs)
+    else applyDefaults(applyDeletesWithPos(df, s, inputs), s, inputs)
       .drop("__gpath", "__gpos")
   }
 
@@ -308,7 +308,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * merge-on-read MERGE). */
   def decorateReadWithPos(df: DataFrame, s: Snapshot,
       inputs: Seq[DataFileEntry]): DataFrame =
-    applyDefaults(applyDeletesWithPos(df, s, inputs.map(_.path)), s, inputs)
+    applyDefaults(applyDeletesWithPos(df, s, inputs), s, inputs)
 
   /** Defaults-only decoration of a RAW scan of `inputs` (no delete
     * application — for surfaces that read appended files as-written:
@@ -383,7 +383,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     val cols = s.schemaFields.map(f => col(f.phys).as(f.name)) :+
       col(QTable.RowIdCol)
     val withPos = applyDeletesWithPos(
-      scan(ents, physicalSchemaWithRowId(s)), s, ents.map(_.path))
+      scan(ents, physicalSchemaWithRowId(s)), s, ents)
     applyRowIds(applyDefaults(withPos, s, ents), ents)
       .drop("__gpath", "__gpos")
       .select(cols: _*)
@@ -410,7 +410,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     if (!s.rowLineage)
       return decorateReadWithPos(scan(inputs, s.physicalSchema), s, inputs)
     val withPos = applyDeletesWithPos(
-      scan(inputs, physicalSchemaWithRowId(s)), s, inputs.map(_.path))
+      scan(inputs, physicalSchemaWithRowId(s)), s, inputs)
     applyRowIds(applyDefaults(withPos, s, inputs), inputs)
   }
 
@@ -432,8 +432,8 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
       QTable.utf8Leq(f.imageIdMin, d.idMax)
 
   /** Apply a snapshot's live equality deletes to a frame (which must
-    * carry `__gpath`) scanned from `readPaths`: anti-join on the key
-    * with the per-row file seq strictly below the delete's seq.
+    * carry `__gpath`) scanned from the entries `reads`: anti-join on the
+    * key with the per-row file seq strictly below the delete's seq.
     *
     * Scale shape: the file-name → seq lookup is bounded by the READ's
     * file count (the same list scan planning already materializes, never
@@ -442,12 +442,10 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * folds the debt ([[retainEqDeletes]]). Entirely a no-op — plan
     * untouched — when no live delete can apply to the read set. */
   private def applyEqDeletes(df: DataFrame, s: Snapshot,
-      readPaths: Seq[String]): DataFrame = {
+      reads: Seq[DataFileEntry]): DataFrame = {
     import org.apache.spark.sql.functions._
     val eq = s.eqDeleteFiles
-    if (eq.isEmpty || readPaths.isEmpty) return df
-    val names = readPaths.map(QTable.fileName).toSet
-    val reads = entries(s).filter(e => names.contains(QTable.fileName(e.path)))
+    if (eq.isEmpty || reads.isEmpty) return df
     val applicable = eq.filter(d => reads.exists(f => eqApplies(d, f)))
     if (applicable.isEmpty) return df
     val spark = df.sparkSession

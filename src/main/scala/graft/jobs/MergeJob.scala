@@ -41,13 +41,26 @@ import org.apache.spark.sql.DataFrame
   * resolves it first with a row_number window over an explicit sequence
   * column (the q11 operator).
   *
+  * NULL source keys are rejected up front as well: a NULL matches no
+  * target row, and inserting it would commit a NULL `image_id`, which
+  * the table schema declares non-null.
+  *
+  * Planning is ONE driver collect of the source keys (and delete flags).
+  * Every planner scalar comes from it exactly: row count, NULL and
+  * multi-match checks, and the key bounds, in the UTF-8 order the
+  * manifest stats use, that prune candidate files by id range. A second
+  * collect joins the pruned candidates with a broadcast of those keys
+  * and returns the matched (id, file) pairs, O(matches); matched files,
+  * matched ids and the insert count all follow on the driver, with no
+  * further Spark job before the first write.
+  *
   * Copy-on-write (default): only data files that actually contain a
   * matched image_id are rewritten; every other file is carried into the
   * new snapshot by reference (a file whose matches are ALL deletes and
   * whose rewrite comes out empty simply contributes no output files).
-  * The matched-file scan broadcasts the (small) source to avoid
-  * shuffling the big table; candidate files are pruned first by
-  * manifest image_id ranges.
+  * Each partition group's rewrite joins a broadcast of the source; the
+  * inserts write is one more group of the same checkpointed pass, so it
+  * overlaps the rewrites.
   *
   * Merge-on-read (`mergeOnRead = true`): no data file is rewritten —
   * matched rows' old versions are POSITION-DELETED ([[DeleteJob]]
@@ -69,9 +82,12 @@ class MergeJob(
     notMatchedBySourceDelete: Boolean = false,
     insertUnmatched: Boolean = true) {
 
+  /** The checkpoint group name of the inserts write; partition groups
+    * are named `b<bucket>` or `d<day>-b<bucket>`, so it cannot collide. */
+  private val InsertsGroup = "inserts"
+
   def run(source0: DataFrame, failAfterGroups: Int = Int.MaxValue): Snapshot = {
     val snap = table.currentSnapshot
-    val all = table.entries(snap)
 
     // resolve the SET list against the snapshot schema up front: target
     // files carry PHYSICAL (creation-time) names, sources logical names
@@ -91,92 +107,93 @@ class MergeJob(
       s"source is missing update column $c"))
 
     val source = source0.cache()
-    // ONE aggregation job answers every scalar the planner needs — row
-    // count, multi-match check, id bounds for candidate pruning, and the
-    // delete-flag count — where rounds 1-5 ran four separate actions
-    // over the cached source (guide §1.2: per-task work after shape;
-    // each extra action is a full job round-trip on the driver).
-    val statCols = Seq(
-      count(lit(1)).as("n"), count(col("image_id")).as("nn"),
-      countDistinct(col("image_id")).as("nd"),
-      min("image_id").as("mn"), max("image_id").as("mx")) ++
-      deleteCol.map(c => sum(when(coalesce(col(c).cast("boolean"),
-        lit(false)), 1L).otherwise(0L)).as("ndel")).toSeq
-    val st = source.agg(statCols.head, statCols.tail: _*).head()
-    val srcCount = st.getLong(0)
+    try merge(snap, setFields, source, failAfterGroups)
+    finally source.unpersist()
+  }
+
+  private def merge(snap: Snapshot, setFields: Seq[FieldDef],
+      source: DataFrame, failAfterGroups: Int): Snapshot = {
+    val all = table.entries(snap)
+    val delFlag = deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
+
+    // 1. ONE driver collect of the source keys answers every scalar the
+    // planner needs, exactly. The discovery broadcast below gathers the
+    // same rows on the driver, so this sets no new scale limit.
+    val keyRows = source.select(col("image_id") +: delFlag.toSeq: _*).collect()
+    val ids = keyRows.map(_.getString(0))
+    val flagged = keyRows.map(r => delFlag.isDefined && r.getBoolean(1))
     // empty source: commit nothing, current snapshot is already correct —
     // UNLESS the mirror-sync clause is on, where an empty source means
     // "no key survives" and every live row deletes
-    if (srcCount == 0 && !notMatchedBySourceDelete) {
-      source.unpersist(); return snap
-    }
+    if (ids.isEmpty && !notMatchedBySourceDelete) return snap
+    require(!ids.contains(null),
+      "MERGE source has NULL image_id(s); the merge key image_id must be non-null")
     // ANSI MERGE multi-match check: one source row per key or error
-    // (non-null keys must be distinct; two NULL keys also collide)
-    require(st.getLong(1) == st.getLong(2) && srcCount - st.getLong(1) <= 1,
+    require(ids.distinct.length == ids.length,
       "MERGE source has duplicated image_id(s); resolve last-wins upstream")
 
-    // 1. prune candidate files by image_id range overlap with the source
-    // (with the NOT MATCHED BY SOURCE clause every live file is a
-    // candidate — an unmatched row can live anywhere, so range pruning
-    // only bounds the MATCHED side below)
+    // 2. prune candidate files by image_id range overlap with the source,
+    // compared in the unsigned UTF-8 order the manifest stats are
+    // harvested in (String's UTF-16 order disagrees on supplementary
+    // characters and would prune a file that holds a match). With the
+    // NOT MATCHED BY SOURCE clause every live file is a candidate — an
+    // unmatched row can live anywhere.
     val candidates =
-      if (srcCount == 0) Nil
+      if (ids.isEmpty) Nil
       else {
-        val (srcMin, srcMax) = (st.getString(3), st.getString(4))
-        all.filter(f => f.imageIdMax >= srcMin && f.imageIdMin <= srcMax)
+        val srcMin = ids.reduce((a, b) => if (QTable.utf8Leq(a, b)) a else b)
+        val srcMax = ids.reduce((a, b) => if (QTable.utf8Leq(a, b)) b else a)
+        all.filter(f => QTable.utf8Leq(srcMin, f.imageIdMax) &&
+          QTable.utf8Leq(f.imageIdMin, srcMax))
       }
 
-    // 2. find files containing matches: big-side scan, broadcast source
-    // keys. `_metadata.file_path` (not input_file_name) — the metadata
-    // column changes the scan output so a cached plain scan of the same
-    // files can never be substituted in (which would yield empty paths).
     // every table-side read below is delete-applied: a position-deleted
     // row must neither count as a match (else its file is needlessly
     // rewritten) nor suppress an INSERT of the same key (else the source
-    // row would vanish — the merge-on-read resurrect/lose bug)
+    // row would vanish — the merge-on-read resurrect/lose bug).
+    // Both variants are defaults-aware: a CoW rewrite of a matched
+    // pre-evolution file must bake the initial default in, not null
     def readLive(files: Seq[DataFileEntry]) =
       table.readEntriesForRewrite(snap, files)
     // position-keeping variant: `_metadata` must be captured before the
-    // delete anti-join (Spark does not resolve it through a join).
-    // Both variants are defaults-aware: a CoW rewrite of a matched
-    // pre-evolution file must bake the initial default in, not null
+    // delete anti-join (Spark does not resolve it through a join)
     def readLivePos(files: Seq[DataFileEntry]) =
       table.readEntriesForRewriteWithPos(snap, files)
-    val srcKeys = broadcast(source.select(col("image_id")))
-    // matched (source id, file) pairs from ONE candidate scan — shared
-    // below by the insert anti-join, which rounds 1-5 paid a SECOND
-    // column-pruned scan of the affected files for (guide §2.4). The
-    // cache is O(matches): bounded by source rows times their table
-    // copies, the same order as the broadcast source itself.
-    val matchedPairs: Option[org.apache.spark.sql.DataFrame] =
-      if (notMatchedBySourceDelete || candidates.isEmpty) None
-      else Some(readLivePos(candidates)
-        .select(col("image_id"), col("__gpath").as("_file"))
-        .join(srcKeys, Seq("image_id")).cache())
-    // NOT MATCHED BY SOURCE: one pass over EVERY live file classifies it
-    // by whether it holds matched rows, unmatched rows, or both — both
-    // kinds must rewrite (CoW) or contribute delete positions (MOR). The
-    // collect is one row per FILE (metadata-sized), not per row.
-    val (matchedFiles, unmatchedFiles): (Set[String], Set[String]) =
+    def keyFrame(keys: Seq[String]) = broadcast(
+      source.sparkSession.createDataFrame(keys.map(Tuple1(_))).toDF("image_id"))
+    val srcKeys = keyFrame(ids.toSeq)
+
+    // 3. find the matched (id, file) pairs with ONE collect: the scan's
+    // `__gpath` (= `_metadata.file_path`) names each row's file. The
+    // result is O(matches): source rows times their table copies.
+    // NOT MATCHED BY SOURCE instead classifies EVERY live file by whether
+    // it holds matched rows, unmatched rows, or both — both kinds must
+    // rewrite (CoW) or contribute delete positions (MOR); that collect is
+    // one row per FILE plus its matched ids.
+    val (matchedIds, matchedFiles, unmatchedFiles) =
       if (notMatchedBySourceDelete) {
-        if (all.isEmpty) (Set.empty, Set.empty) else {
-          val perFile = readLivePos(all)
-            .select(col("image_id"), col("__gpath").as("_file"))
-            .join(srcKeys.withColumn("_mm", lit(1)), Seq("image_id"), "left")
-            .groupBy("_file")
-            .agg(max(col("_mm")).as("m"),
-              sum(when(col("_mm").isNull, 1).otherwise(0)).as("u"))
+        val perFile =
+          if (all.isEmpty) Array.empty[org.apache.spark.sql.Row]
+          else readLivePos(all)
+            .select(col("image_id"), col("__gpath"))
+            .join(srcKeys.withColumn("_mm", lit(true)), Seq("image_id"), "left")
+            .groupBy("__gpath")
+            .agg(collect_set(when(col("_mm"), col("image_id"))).as("ids"),
+              count(when(col("_mm").isNull, 1)).as("u"))
             .collect()
-          (perFile.filter(r => !r.isNullAt(1))
-             .map(r => normalizePath(r.getString(0))).toSet,
-           perFile.filter(_.getLong(2) > 0)
-             .map(r => normalizePath(r.getString(0))).toSet)
-        }
-      } else matchedPairs match {
-        case None => (Set.empty[String], Set.empty[String])
-        case Some(mp) =>
-          (mp.select("_file").distinct().collect().map(_.getString(0))
-            .map(normalizePath).toSet, Set.empty[String])
+        (perFile.flatMap(_.getSeq[String](1)).toSet,
+         perFile.filter(_.getSeq[String](1).nonEmpty)
+           .map(r => normalizePath(r.getString(0))).toSet,
+         perFile.filter(_.getLong(2) > 0).map(r => normalizePath(r.getString(0))).toSet)
+      } else {
+        val pairs =
+          if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
+          else readLivePos(candidates)
+            .select(col("image_id"), col("__gpath"))
+            .join(srcKeys, Seq("image_id"))
+            .collect()
+        (pairs.map(_.getString(0)).toSet,
+         pairs.map(r => normalizePath(r.getString(1))).toSet, Set.empty[String])
       }
     val affected =
       if (notMatchedBySourceDelete)
@@ -186,49 +203,37 @@ class MergeJob(
         }
       else candidates.filter(f => matchedFiles.contains(normalizePath(f.path)))
 
-    // 3. inserts = source ids that matched nothing; a delete-flagged row
-    //    that matched nothing is a no-op, not an insert. The standard
-    //    path anti-joins against the matched ids ALREADY materialized by
-    //    the discovery scan (a source id present in any candidate file is
-    //    by definition in that set, and one absent from every candidate
-    //    is absent from the table) — no second scan of the affected
-    //    files. The mirror-sync clause keeps the explicit scan: its
-    //    per-file classification is not id-level.
-    val notDeleteFlagged = deleteCol
-      .map(c => !coalesce(col(c).cast("boolean"), lit(false)))
-      .getOrElse(lit(true))
-    // no WHEN NOT MATCHED clause (`insertUnmatched = false`): unmatched
-    // source rows are simply ignored, per ANSI — no anti-join runs
-    val insertBase = (if (insertUnmatched) source.where(notDeleteFlagged)
-      else source.limit(0))
-      .drop(deleteCol.toSeq: _*)
-    val inserts = (if (notMatchedBySourceDelete)
-        insertBase.join(readLive(affected).select("image_id"),
-          Seq("image_id"), "left_anti")
-      else matchedPairs match {
-        case Some(mp) =>
-          insertBase.join(mp.select("image_id"), Seq("image_id"), "left_anti")
-        case None => insertBase // no candidate file: every source row inserts
-      }).cache()
-    val insertCount = inserts.count()
-    matchedPairs.foreach(_.unpersist()) // discovery + inserts both materialized
-    val deleteFlagged =
-      if (deleteCol.isDefined) st.getLong(5) else 0L
-    // no matched ACTION at all (insert-only merge): matched files are
-    // discovered (the insert anti-join above is scoped by them) but
-    // never rewritten — the merge is a pure append of unmatched rows
+    // 4. inserts = source ids that matched nothing; a delete-flagged row
+    //    that matched nothing is a no-op, not an insert. With no WHEN NOT
+    //    MATCHED clause (`insertUnmatched = false`) unmatched source rows
+    //    are simply ignored, per ANSI. Counted on the driver; the rows
+    //    come from an anti-join against the matched ids, already known.
+    val matchedKey = ids.map(matchedIds.contains)
+    val insertCount =
+      if (!insertUnmatched) 0L
+      else ids.indices.count(i => !flagged(i) && !matchedKey(i)).toLong
+    val insertRows = if (insertCount == 0) None else Some {
+      val base = source.where(!delFlag.getOrElse(lit(false)))
+        .drop(deleteCol.toSeq: _*)
+      val rows =
+        if (matchedIds.isEmpty) base
+        else base.join(keyFrame(matchedIds.toSeq), Seq("image_id"), "left_anti")
+      JobPlanning.alignToPhysical(rows.withColumn("pbucket",
+        pmod(xxhash64(col("image_id")), lit(snap.buckets.toLong)).cast("int")), snap)
+    }
+    // no matched ACTION at all (insert-only merge): matched ids are
+    // discovered (the inserts exclude them) but their files are never
+    // rewritten — the merge is a pure append of unmatched rows
     val noMatchedAction =
       setFields.isEmpty && deleteCol.isEmpty && !notMatchedBySourceDelete
     val updatedRows =
-      if (noMatchedAction) 0L else srcCount - insertCount - deleteFlagged
+      if (noMatchedAction) 0L
+      else ids.indices.count(i => !flagged(i) && matchedKey(i)).toLong
 
-    val ckpt = new Checkpoint(table, jobId)
-    val already = ckpt.committed
-
-    // 4. rewrite affected files per partition group, checkpointed.
-    // Day-partitioned tables group per (day, bucket) — a CoW group's
-    // coalesced outputs read only same-day inputs, so the rewrite never
-    // writes a day-straddling file (same rule as CompactJob/ClusterJob)
+    // 5. partition groups of the affected files. Day-partitioned tables
+    // group per (day, bucket) — a CoW group's coalesced outputs read only
+    // same-day inputs, so the rewrite never writes a day-straddling file
+    // (same rule as CompactJob/ClusterJob)
     val dayF = graft.format.DayPartition.fieldOf(snap)
     val groups = affected
       .groupBy(e => (dayF.flatMap(f => graft.format.DayPartition.entryDay(f, e)),
@@ -242,8 +247,7 @@ class MergeJob(
     val updatesSrc = broadcast(source.select(
       col("image_id") +:
         (setFields.map(f => col(f.name).cast(f.sparkType).as(s"_new_${f.phys}")) ++
-          deleteCol.map(c =>
-            coalesce(col(c).cast("boolean"), lit(false)).as("_del")).toSeq ++
+          delFlag.map(_.as("_del")).toSeq ++
           // match indicator for the NOT MATCHED BY SOURCE filter: after
           // the left join, a null `_mm` row is an unmatched target row
           (if (notMatchedBySourceDelete) Seq(lit(true).as("_mm")) else Nil)): _*))
@@ -267,18 +271,8 @@ class MergeJob(
           }
           JobPlanning.alignToPhysical(p, snap)
         }
-      val insertRows =
-        if (insertCount == 0) None
-        else Some(JobPlanning.alignToPhysical(
-          inserts.withColumn("pbucket",
-            pmod(xxhash64(col("image_id")), lit(snap.buckets.toLong)).cast("int")),
-          snap))
       (postImages.toSeq ++ insertRows.toSeq).reduceOption(_.unionByName(_))
-        .foreach { df =>
-          try Constraints.enforce(Constraints.logicalView(df, snap), snap, "MERGE")
-          catch { case e: Throwable =>
-            source.unpersist(); inserts.unpersist(); throw e }
-        }
+        .foreach(df => Constraints.enforce(Constraints.logicalView(df, snap), snap, "MERGE"))
     }
 
     // ------------------------------------------------- merge-on-read
@@ -336,24 +330,20 @@ class MergeJob(
           }
           JobPlanning.alignToPhysical(p, snap)
         }
-        val insertRows = JobPlanning.alignToPhysical(
-          inserts.withColumn("pbucket",
-            pmod(xxhash64(col("image_id")), lit(snap.buckets.toLong)).cast("int")),
-          snap)
-        val newRows = patchedOpt.map(_.unionByName(insertRows)).getOrElse(insertRows)
-        val out = if (matchedCount + insertCount > 0) {
-          val dir = table.newDataDir(jobId, "rows")
-          cleanDir(dir)
-          graft.format.TableWrite.parquet(
-            JobPlanning.layoutNewRows(newRows, snap), dir)
-          table.harvest(dir)
-        } else Nil
-        source.unpersist(); inserts.unpersist()
+        val newRows = (patchedOpt.toSeq ++ insertRows.toSeq).reduceOption(_.unionByName(_))
+        val out = newRows match {
+          case Some(rows) if matchedCount + insertCount > 0 =>
+            val dir = table.newDataDir(jobId, "rows")
+            cleanDir(dir)
+            graft.format.TableWrite.parquet(JobPlanning.layoutNewRows(rows, snap), dir)
+            table.harvest(dir)
+          case _ => Nil
+        }
         if (matchedCount + unmatchedCount + insertCount == 0) return snap
         return table.commit(Some(snap), "merge", out, Map(
           "job-id" -> jobId,
           "strategy" -> "merge-on-read",
-          "source-rows" -> srcCount.toString,
+          "source-rows" -> ids.length.toString,
           "rows-updated" -> updatedRows.toString,
           "rows-inserted" -> insertCount.toString,
           "rows-deleted" ->
@@ -364,38 +354,60 @@ class MergeJob(
       } finally matched.foreach(_.unpersist())
     }
 
-    // delete files join the checkpoint input identity (see CompactJob):
-    // a group output predating a concurrent DELETE must not be reused
+    // 6. rewrite affected files per partition group and write the inserts
+    // as one more group, all checkpointed and run concurrently. Delete
+    // files join the checkpoint input identity (see CompactJob): a group
+    // output predating a concurrent DELETE must not be reused. The insert
+    // set depends on the affected files' LIVE rows, so its identity is
+    // those files plus their delete files — a stale inserts output
+    // (written against a different live view) re-runs instead of being
+    // silently reused.
     def groupInputs(files: Seq[DataFileEntry]): Seq[String] = {
       val paths = files.map(_.path)
       paths ++ table.deleteInputsFor(snap, paths) ++
         table.eqDeleteInputsFor(snap, files)
     }
     val rewriteSet = if (noMatchedAction) Nil else groups
-    val rewritten = GroupRunner.run[(String, Seq[DataFileEntry])](
-      rewriteSet, _._1, p => groupInputs(p._2), already, failAfterGroups, concurrency,
+    // nothing to rewrite, nothing to insert: the table is already the
+    // merge result — commit no version (insert-only merge whose source
+    // rows all matched, or a matched-delete that matched nothing)
+    val ckpt = new Checkpoint(table, jobId)
+    if (rewriteSet.isEmpty && insertRows.isEmpty) { ckpt.clear(); return snap }
+    // the inserts group goes first, so its small write starts in the first
+    // wave and overlaps the file rewrites
+    val insertGroup = insertRows.map(_ => InsertsGroup -> affected).toSeq
+    val outputs = GroupRunner.run[(String, Seq[DataFileEntry])](
+      insertGroup ++ rewriteSet, _._1, p => groupInputs(p._2), ckpt.committed,
+      failAfterGroups, concurrency,
       onFailure = gf => ckpt.commit(LineageEntry(jobId, "merge", gf.group,
         Nil, Nil, 0L, 0L, "failed", gf.attempts))) { case (group, files) =>
       val dir = table.newDataDir(jobId, group)
       cleanDir(dir)
-      // WHEN MATCHED: delete-flagged rows drop out, SET columns take the
-      // source value where non-null (left-join null = unmatched row,
-      // which the same coalesce leaves untouched)
-      var patched = readLive(files)
-        .join(updatesSrc, Seq("image_id"), "left")
-      // WHEN NOT MATCHED BY SOURCE THEN DELETE: only source-matched
-      // rows survive the rewrite
-      if (notMatchedBySourceDelete)
-        patched = patched.where(col("_mm") === true).drop("_mm")
-      if (deleteCol.isDefined)
-        patched = patched.where(!coalesce(col("_del"), lit(false))).drop("_del")
-      setFields.foreach { f =>
-        patched = patched
-          .withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys)))
-          .drop(s"_new_${f.phys}")
-      }
-      val df = JobPlanning.alignToPhysical(patched, snap)
-      graft.format.TableWrite.parquet(df.coalesce(math.max(1, files.size)), dir)
+      val df =
+        // inserts land in their hash buckets; the layout repartitions by
+        // bucket so a large batch spreads over the cluster (AQE coalesces
+        // the shuffle down to a few files when the batch is tiny)
+        if (group == InsertsGroup) JobPlanning.layoutNewRows(insertRows.get, snap)
+        else {
+          // WHEN MATCHED: delete-flagged rows drop out, SET columns take
+          // the source value where non-null (left-join null = unmatched
+          // row, which the same coalesce leaves untouched)
+          var patched = readLive(files)
+            .join(updatesSrc, Seq("image_id"), "left")
+          // WHEN NOT MATCHED BY SOURCE THEN DELETE: only source-matched
+          // rows survive the rewrite
+          if (notMatchedBySourceDelete)
+            patched = patched.where(col("_mm") === true).drop("_mm")
+          if (deleteCol.isDefined)
+            patched = patched.where(!coalesce(col("_del"), lit(false))).drop("_del")
+          setFields.foreach { f =>
+            patched = patched
+              .withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys)))
+              .drop(s"_new_${f.phys}")
+          }
+          JobPlanning.alignToPhysical(patched, snap).coalesce(math.max(1, files.size))
+        }
+      graft.format.TableWrite.parquet(df, dir)
       val out = table.harvest(dir)
       val entry = LineageEntry(jobId, "merge", group, groupInputs(files), out,
         out.map(_.rowCount).sum, out.map(_.byteCount).sum, "committed", 1)
@@ -403,58 +415,23 @@ class MergeJob(
       entry
     }
 
-    // 5. write inserts as new files in their hash buckets; repartition by
-    //    bucket so a large insert batch spreads over the cluster (AQE
-    //    coalesces the shuffle down to a few files when the batch is tiny)
-    val outputs = scala.collection.mutable.ArrayBuffer[LineageEntry](rewritten: _*)
-    if (insertCount > 0) {
-      val group = "inserts"
-      // the insert set depends on the affected files' LIVE rows, so its
-      // checkpoint identity is those files plus their delete files — a
-      // stale inserts output (written against a different live view)
-      // re-runs instead of being silently reused
-      val insertInputs = groupInputs(affected)
-      already.get(group).filter(_.inputFiles.toSet == insertInputs.toSet) match {
-        case Some(e) => outputs += e
-        case None =>
-          val dir = table.newDataDir(jobId, group)
-          cleanDir(dir)
-          graft.format.TableWrite.parquet(
-            JobPlanning.layoutNewRows(JobPlanning.alignToPhysical(
-              inserts.withColumn("pbucket",
-                pmod(xxhash64(col("image_id")), lit(snap.buckets.toLong)).cast("int")),
-              snap), snap), dir)
-          val out = table.harvest(dir)
-          val entry = LineageEntry(jobId, "merge", group, insertInputs, out,
-            out.map(_.rowCount).sum, out.map(_.byteCount).sum, "committed", 1)
-          ckpt.commit(entry)
-          outputs += entry
-      }
-    }
-
-    // nothing rewritten, nothing inserted: the table is already the
-    // merge result — commit no version (insert-only merge whose source
-    // rows all matched, or a matched-delete that matched nothing)
-    if (rewriteSet.isEmpty && insertCount == 0) {
-      source.unpersist(); inserts.unpersist(); ckpt.clear(); return snap
-    }
-    val rewrittenPaths = rewriteSet.flatMap(_._2).map(_.path).toSet
+    val rewrittenFiles = rewriteSet.flatMap(_._2)
+    val rewrittenPaths = rewrittenFiles.map(_.path).toSet
     val untouched = all.filterNot(f => rewrittenPaths.contains(f.path))
-    source.unpersist(); inserts.unpersist()
     // target rows removed by WHEN MATCHED DELETE = input-vs-output row
     // delta of the rewritten groups (updates preserve row counts; any
     // position deletes folded by the rewrite count here too — they left
     // the physical files in this commit)
-    val deletedRows = rewriteSet.flatMap(_._2).map(_.rowCount).sum -
-      rewritten.flatMap(_.outputFiles).map(_.rowCount).sum
+    val deletedRows = rewrittenFiles.map(_.rowCount).sum -
+      outputs.filter(_.group != InsertsGroup).map(_.rowCount).sum
     val committed = table.commit(Some(snap), "merge",
       untouched ++ outputs.flatMap(_.outputFiles), Map(
         "job-id" -> jobId,
-        "source-rows" -> srcCount.toString,
+        "source-rows" -> ids.length.toString,
         "rows-updated" -> updatedRows.toString,
         "rows-inserted" -> insertCount.toString,
         "rows-deleted" -> deletedRows.toString,
-        "files-rewritten" -> rewriteSet.flatMap(_._2).size.toString),
+        "files-rewritten" -> rewrittenFiles.size.toString),
       deletesOverride = Some(table.retainDeletes(snap,
         table.deletePairs(snap), untouched.map(_.path))),
       eqDeletesOverride = Some(table.retainEqDeletes(snap, untouched)))

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.TestListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole suite (scalatest runs suites in
   * one JVM; Spark local mode = driver-only). */
@@ -29,4 +33,25 @@ object TestSpark {
   /** file:-scheme URI variant: routes the table's metadata layer through
     * the Hadoop-FileSystem CommitIO impl instead of the java.nio one. */
   def tmpDirUri(prefix: String): String = "file:" + tmpDir(prefix)
+
+  /** The jobs started while `body` runs, as (description, task count of
+    * each stage). */
+  def jobsDuring[A](body: => A): (A, Seq[(String, Seq[Int])]) = {
+    val sc = spark.sparkContext
+    TestListenerBridge.drainListenerBus(sc)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        seen.add((desc, e.stageInfos.map(_.numTasks)))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      TestListenerBridge.drainListenerBus(sc)
+      (a, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,17 +1,14 @@
 package graft.format
 
 import graft.TestSpark
+import graft.TestSpark.jobsDuring
 import graft.jobs.{AppendJob, CompactJob}
 import graft.synth.DataGen
 import graft.verify.ScanEquivalence
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.TestListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** Every table read plans from manifest entries: building a read launches
   * no Spark job however many files the snapshot holds (no filesystem
@@ -30,27 +27,6 @@ class ManifestScanSpec extends AnyFunSuite {
     val n = t.entries(t.currentSnapshot).size
     assert(n > 32, s"need more files than the listing threshold, got $n")
     t
-  }
-
-  /** The jobs started while `body` runs, as (description, task count of
-    * each stage). */
-  private def jobsDuring[A](body: => A): (A, Seq[(String, Seq[Int])]) = {
-    val sc = spark.sparkContext
-    TestListenerBridge.drainListenerBus(sc)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        seen.add((desc, e.stageInfos.map(_.numTasks)))
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      TestListenerBridge.drainListenerBus(sc)
-      (a, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("building read(s) over more than 32 files launches no job") {

@@ -227,16 +227,79 @@ class MergeJobSpec extends AnyFunSuite {
     val t = freshTable(n)
     val corr = DataGen.correctionsDF(spark, n, 42L, inserts = 2).cache()
     val jobId = "merge-resume"
+    // the inserts write runs first, then one file-rewrite group
     intercept[RuntimeException] {
-      new MergeJob(t, jobId = jobId).run(corr, failAfterGroups = 1)
+      new MergeJob(t, jobId = jobId).run(corr, failAfterGroups = 2)
     }
     val before = new Checkpoint(t, jobId).committed
-    assert(before.nonEmpty)
+    assert(before.keySet.contains("inserts") && before.size == 2, before.keySet)
     val snap = new MergeJob(t, jobId = jobId).run(corr)
     val preDf = t.read(t.snapshotAt(snap.version - 1))
     val (ok, bad) = ScanEquivalence.checkMerged(preDf, t.read(snap), corr)
     assert(ok, s"$bad violations after resumed merge")
+    // the rerun reused both committed outputs instead of rewriting them
+    val live = t.entries(snap).map(_.path).toSet
+    before.values.flatMap(_.outputFiles).foreach(f =>
+      assert(live.contains(f.path), s"committed output ${f.path} was not reused"))
+    assert(snap.summary("rows-inserted") == "2")
     corr.unpersist()
+  }
+
+  test("planning launches at most 3 jobs before the first group write") {
+    val n = 800L
+    val t = freshTable(n)
+    val corr = DataGen.correctionsDF(spark, n, 42L, inserts = 4)
+    // failAfterGroups = 0 stops the run right before its first group
+    // write, so every job seen here is a planning job
+    val (_, jobs) = TestSpark.jobsDuring(intercept[RuntimeException] {
+      new MergeJob(t, jobId = "merge-plan-jobs").run(corr, failAfterGroups = 0)
+    })
+    assert(jobs.size <= 3, s"merge planning launched ${jobs.size} jobs: $jobs")
+    // the same merge still runs to a correct result
+    val pre = t.currentSnapshot
+    val snap = new MergeJob(t, jobId = "merge-plan-jobs").run(corr)
+    assert(snap.summary("rows-inserted") == "4")
+    assert(snap.summary("rows-updated").toLong > 0)
+    val (ok, bad) = ScanEquivalence.checkMerged(t.read(pre), t.read(snap), corr)
+    assert(ok, s"$bad violations vs merged expectation")
+  }
+
+  test("candidate pruning compares ids in UTF-8 order, as the manifest stats do") {
+    // U+1F600 sorts BELOW U+FFFF in UTF-16 code units but ABOVE it in
+    // UTF-8 bytes: a UTF-16 range check prunes the only file holding the
+    // matched id, and the update turns into a second row for that key
+    val smile = "x\uD83D\uDE00"
+    val t = QTable.create(TestSpark.tmpDir("merge-utf8"), spark, 1)
+    import spark.implicits._
+    val rows = DataGen.generate(spark, 2, 42L, 1).collect()
+    AppendJob.append(t, Seq(rows(0).copy(image_id = smile)).toDF(), filesPerBucket = 1)
+    assert(t.entries(t.currentSnapshot).size == 1)
+    val src = Seq(rows(0).copy(image_id = smile, caption = "fixed"),
+      rows(1).copy(image_id = "x\uFFFF")).toDF()
+    val snap = new MergeJob(t).run(src)
+    assert(snap.summary("rows-updated") == "1")
+    assert(snap.summary("rows-inserted") == "1")
+    val post = t.read(snap).select("image_id", "caption").as[(String, String)]
+      .collect().toSeq
+    assert(post.size == 2, post)
+    assert(post.toMap == Map(smile -> "fixed", "x\uFFFF" -> rows(1).caption))
+  }
+
+  test("NULL source keys are rejected up front, naming the key column") {
+    val t = freshTable(100, buckets = 2)
+    val v0 = t.currentVersion
+    import spark.implicits._
+    val row = t.read().limit(1).drop("pbucket").as[graft.model.ImageRow].head()
+    // alone (no non-null bound exists) and next to a normal update
+    val sources = Seq(
+      Seq(row.copy(image_id = null)),
+      Seq(row.copy(image_id = null), row.copy(caption = "patched")))
+    sources.foreach { rs =>
+      val ex = intercept[IllegalArgumentException] { new MergeJob(t).run(rs.toDF()) }
+      assert(ex.getMessage.contains("NULL image_id"), ex.getMessage)
+    }
+    assert(t.currentVersion == v0, "a rejected merge must not commit")
+    assert(t.read().where(col("image_id").isNull).count() == 0)
   }
 
   test("insertUnmatched=false: unmatched source rows are ignored (ANSI no-insert)") {
