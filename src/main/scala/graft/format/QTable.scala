@@ -640,7 +640,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     currentSnapshotOpt.map(_.storedSchema).getOrElse(ImageRow.storedSchema)
 
   /** Raw physical scan of some of the CURRENT snapshot's data files, by
-    * path (dev probes and the bench's warm-up read): files under their
+    * path (the bench's warm-up read): files under their
     * PHYSICAL names, no deletes or defaults applied. Planned from the
     * manifests like every other read; a path the snapshot does not
     * record is an error, never a silently shorter scan. */

@@ -35,6 +35,19 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** Every build-once [[Fixture]] of the pack, with the qtable
+    * directories under its root the query reads — what
+    * [[prewarmFixtures]] builds and warms. [[fixture]] registers each one
+    * as it is constructed, so the warm-up cannot miss a fixture. */
+  private val fixtures = scala.collection.mutable.ArrayBuffer.empty[(Fixture, Seq[String])]
+
+  private def fixture(name: String, version: Int, tables: Seq[String] = Seq("table"))(
+      build: (SparkSession, String) => Unit): Fixture = {
+    val f = Fixture(name, version)(build)
+    fixtures += f -> tables
+    f
+  }
+
   /** Heavy-per-row queries read through a round-robin repartition to the
     * session's core count: the sandbox tables are single parquet files
     * (one scan split), which would pin the expensive map stage (shingle
@@ -1068,67 +1081,43 @@ object Queries {
        |FROM w""".stripMargin
 
   // ----------------------------------------------------------- q26-q28
-  /** Root of the build-once 4-snapshot timeline qtable fixture shared by
-    * the time-travel / incremental-scan / snapshot-history queries:
+  /** The build-once 4-snapshot timeline qtable fixture shared by the
+    * time-travel / incremental-scan / snapshot-history queries:
     * v0 create -> v1 append batch1 -> v2 append batch2 -> v3 compact
     * (row-set-preserving rewrite). Fully synthetic (seeded DataGen), so
     * the path is keyed by fixture parameters, not by testdata dir; the
     * per-batch oracle inputs (image_id, w, h, fmt, caption, phash) are
-    * exported as parquet DuckDB reads by absolute path (the m1 pattern).
-    * Bump the version suffix when the fixture shape changes. */
-  private val TimelineRoot: String =
+    * exported as parquet DuckDB reads by absolute path (the m1 pattern). */
+  private val Timeline = fixture("timeline", 2) { (s, root) =>
     // v2: manifests carry colNulls (the q37 metadata-aggregate gate
     // needs them) — a v1 fixture from an older build must not be reused
-    s"${System.getProperty("java.io.tmpdir")}/graft_timeline_v2"
+    def batch(seed: Long, n: Long, tag: String) =
+      graft.synth.DataGen.generate(s, n, seed).toDF()
+        .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
+    val b1 = batch(101L, TimelineN1, "b1")
+    val b2 = batch(202L, TimelineN2, "b2")
+    b1.select(TimelineCols.head, TimelineCols.tail: _*)
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b1")
+    b2.select(TimelineCols.head, TimelineCols.tail: _*)
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    graft.jobs.AppendJob.append(t, b1, filesPerBucket = 2)
+    graft.jobs.AppendJob.append(t, b2, filesPerBucket = 2)
+    new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run()
+  }
   private val TimelineN1 = 120L
   private val TimelineN2 = 80L
   private val TimelineCols = Seq("image_id", "w", "h", "fmt", "caption", "phash")
 
-  private def timelineDir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(TimelineRoot, "_FIXTURE_READY")
-    if (Files.exists(ready)) return TimelineRoot
-    // cross-PROCESS exclusion (synchronized only covers this JVM): a test
-    // suite and a bench run sharing java.io.tmpdir must not rebuild the
-    // fixture under each other
-    val lockPath = Paths.get(TimelineRoot + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildTimeline(s)
-    } finally { lock.release(); ch.close() }
-    TimelineRoot
-  }
-
-  /** Build the per-query fixtures (timeline qtable, IVF index, date
-    * layout) OUTSIDE any timed window — Bench calls this untimed before
-    * the query-pack loop so the first q16/q20/q26-q28 timing never
-    * includes fixture synthesis. Idempotent (build-once markers). */
+  /** Build every registered fixture plus the three source-keyed ones (IVF
+    * index, q19 CSV, q20 date layout) OUTSIDE any timed window — Bench
+    * calls this untimed before the query-pack loop so no query's first
+    * timing includes fixture synthesis. Idempotent (build-once markers). */
   def prewarmFixtures(s: SparkSession, dir: String): Unit = {
-    timelineDir(s)
+    fixtures.foreach { case (f, _) => f.dir(s) }
     ivfIndexDir(s, dir)
     q19Fixture(s, dir)
     q20EventsByDayDir(s, dir)
-    q30Dir(s)
-    q31Dir(s)
-    q32Dir(s)
-    q33Dir(s)
-    q34Dir(s)
-    q35Dir(s)
-    q36Dir(s)
-    q38Dir(s)
-    q40Dir(s)
-    q41Dir(s)
-    q42Dir(s)
-    q43Dir(s)
-    q48Dir(s)
-    q49Dir(s)
-    q50Dir(s)
-    q51Dir(s)
-    q52Dir(s)
-    q53Dir(s)
-    q54Dir(s)
     // one untimed open+scan per fixture table (r5 verdict, "what's
     // wrong" #2): on a driver-fresh tmpdir the first open of each
     // fixture pays cold manifest/footer page-ins that the builder's
@@ -1137,41 +1126,13 @@ object Queries {
     // themselves — makes the timed reps measure the query, not the
     // first touch of the fixture's files. Failures are ignored: a
     // fixture this warm-up cannot read still fails loudly in its own
-    // timed query.
-    Seq(s"$TimelineRoot/table", s"$Q30Root/table", s"$Q31Root/table",
-      s"$Q32Root/table", s"$Q33Root/table", s"$Q34Root/table",
-      s"$Q35Root/table", s"$Q36Root/table", s"$Q38Root/table",
-      s"$Q40Root/table", s"$Q41Root/table", s"$Q42Root/table",
-      s"$Q43Root/table", s"$Q45Root/table", s"$Q46Root/table",
-      s"$Q47Root/table", s"$Q48Root/table", s"$Q49Root/table",
-      s"$Q50Root/table", s"$Q51Root/table", s"$Q52Root/table",
-      s"$Q53Root/table", s"$Q54Root/table").foreach { root =>
-      try graft.format.QTable(root, s).read().write
+    // timed query. Each one is reported, so a broken warm-up is seen.
+    for ((f, tables) <- fixtures; table <- tables) {
+      try graft.format.QTable(s"${f.root}/$table", s).read().write
         .mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
-    }
-  }
-
-  private def buildTimeline(s: SparkSession): Unit = {
-    val ready = java.nio.file.Paths.get(TimelineRoot, "_FIXTURE_READY")
-    locally {
-      // rebuild from scratch on a stale/partial dir (shared
-      // recursive-delete helper from the commit-IO layer)
-      new graft.format.LocalCommitIO().deleteRecursive(TimelineRoot)
-      def batch(seed: Long, n: Long, tag: String) =
-        graft.synth.DataGen.generate(s, n, seed).toDF()
-          .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
-      val b1 = batch(101L, TimelineN1, "b1")
-      val b2 = batch(202L, TimelineN2, "b2")
-      b1.select(TimelineCols.head, TimelineCols.tail: _*)
-        .coalesce(1).write.mode("overwrite").parquet(s"$TimelineRoot/exp/b1")
-      b2.select(TimelineCols.head, TimelineCols.tail: _*)
-        .coalesce(1).write.mode("overwrite").parquet(s"$TimelineRoot/exp/b2")
-      val t = graft.format.QTable.create(s"$TimelineRoot/table", s, buckets = 4)
-      graft.jobs.AppendJob.append(t, b1, filesPerBucket = 2)
-      graft.jobs.AppendJob.append(t, b2, filesPerBucket = 2)
-      new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run()
-      java.nio.file.Files.createFile(ready)
+      catch { case e: Throwable =>
+        System.err.println(s"[prewarm] warm-up read of ${f.root}/$table failed: $e")
+      }
     }
   }
 
@@ -1180,14 +1141,14 @@ object Queries {
     * row order artifacts. Snapshot isolation is what makes maintenance
     * safe to run under live readers at 100 TB. */
   def q26TimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val root = timelineDir(s)
+    val root = Timeline.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     t.read(t.snapshotAt(1)).select(TimelineCols.head, TimelineCols.tail: _*)
   }
 
   val q26Sql: String =
     s"""SELECT image_id, w, h, fmt, caption, phash
-       |FROM read_parquet('$TimelineRoot/exp/b1/*.parquet')""".stripMargin
+       |FROM read_parquet('${Timeline.root}/exp/b1/*.parquet')""".stripMargin
 
   /** Incremental append scan (CDC-style consumption): rows added in
     * (v1, v3] are exactly batch2, even though v3 is a compaction that
@@ -1195,28 +1156,28 @@ object Queries {
     * rewrites and diffs appends at MANIFEST level (O(appended metadata),
     * never O(table); appends carry parent manifests by reference). */
   def q27IncrementalScan(s: SparkSession, dir: String): DataFrame = {
-    val root = timelineDir(s)
+    val root = Timeline.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     t.readIncremental(1, 3).select(TimelineCols.head, TimelineCols.tail: _*)
   }
 
   val q27Sql: String =
     s"""SELECT image_id, w, h, fmt, caption, phash
-       |FROM read_parquet('$TimelineRoot/exp/b2/*.parquet')""".stripMargin
+       |FROM read_parquet('${Timeline.root}/exp/b2/*.parquet')""".stripMargin
 
   /** Snapshot-history metadata table (Iceberg `snapshots` analogue):
     * version / operation / cumulative row count per retained snapshot.
     * The oracle recomputes each total from the exported batches, so the
     * commit-summary bookkeeping itself is what is being checked. */
   def q28SnapshotHistory(s: SparkSession, dir: String): DataFrame = {
-    val root = timelineDir(s)
+    val root = Timeline.dir(s)
     graft.format.QTable(s"$root/table", s).historyDF
       .select(col("version"), col("operation"), col("total_rows"))
   }
 
   val q28Sql: String = {
-    val b1 = s"(SELECT COUNT(*) FROM read_parquet('$TimelineRoot/exp/b1/*.parquet'))"
-    val b2 = s"(SELECT COUNT(*) FROM read_parquet('$TimelineRoot/exp/b2/*.parquet'))"
+    val b1 = s"(SELECT COUNT(*) FROM read_parquet('${Timeline.root}/exp/b1/*.parquet'))"
+    val b2 = s"(SELECT COUNT(*) FROM read_parquet('${Timeline.root}/exp/b2/*.parquet'))"
     s"""SELECT CAST(0 AS BIGINT) AS version, 'create' AS operation, CAST(0 AS BIGINT) AS total_rows
        |UNION ALL SELECT 1, 'append', $b1
        |UNION ALL SELECT 2, 'append', $b1 + $b2
@@ -1224,7 +1185,7 @@ object Queries {
   }
 
   // ---------------------------------------------------------------- q30
-  /** Root of the build-once MERGE-with-DELETE fixture: a 400-row qtable
+  /** The build-once MERGE-with-DELETE fixture: a 400-row qtable
     * merged by the REAL generalized [[graft.jobs.MergeJob]] with a
     * multi-column SET (caption + w, some w NULL = partial update), a
     * WHEN MATCHED DELETE flag, an unmatched delete (must be a no-op) and
@@ -1233,28 +1194,9 @@ object Queries {
     * join + coalesce + delete filter — the whole CoW merge path
     * (manifest range pruning, matched-file scan, per-group rewrite,
     * delete drop-out, insert bucketing) sits under an exact external
-    * oracle. Bump the version suffix when the fixture shape changes. */
-  private val Q30Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_merge_delete_v1"
-  private val Q30N = 400L
-
-  private def q30Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q30Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q30Root
-    val lockPath = Paths.get(Q30Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ30(s)
-    } finally { lock.release(); ch.close() }
-    Q30Root
-  }
-
-  private def buildQ30(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q30Root)
-    val t = graft.format.QTable.create(s"$Q30Root/table", s, buckets = 4)
+    * oracle. */
+  private val Q30 = fixture("merge_delete", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, Q30N, 55L).toDF(), filesPerBucket = 2)
     val base = t.read()
@@ -1288,19 +1230,18 @@ object Queries {
     val corr = upd.union(del).union(ghost).union(ins)
 
     base.select("image_id", "caption", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q30Root/exp/pre")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
     corr.select("image_id", "caption", "w", "is_delete")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q30Root/exp/corr")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/corr")
     new graft.jobs.MergeJob(t, updateCols = Seq("caption", "w"),
       deleteCol = Some("is_delete")).run(corr)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q30Root, "_FIXTURE_READY"))
   }
+  private val Q30N = 400L
 
   /** The post-merge table state (key + both SET columns) after the real
     * CoW MERGE with updates, partial updates, deletes and inserts. */
   def q30MergeDelete(s: SparkSession, dir: String): DataFrame = {
-    val root = q30Dir(s)
+    val root = Q30.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "caption", "w")
   }
@@ -1309,13 +1250,13 @@ object Queries {
     s"""SELECT COALESCE(p.image_id, c.image_id) AS image_id,
        |       COALESCE(c.caption, p.caption) AS caption,
        |       COALESCE(c.w, p.w) AS w
-       |FROM read_parquet('$Q30Root/exp/pre/*.parquet') p
-       |FULL OUTER JOIN read_parquet('$Q30Root/exp/corr/*.parquet') c
+       |FROM read_parquet('${Q30.root}/exp/pre/*.parquet') p
+       |FULL OUTER JOIN read_parquet('${Q30.root}/exp/corr/*.parquet') c
        |ON p.image_id = c.image_id
        |WHERE NOT COALESCE(c.is_delete, false)""".stripMargin
 
   // ---------------------------------------------------------------- q31
-  /** Root of the build-once type-widening fixture: a qtable gains an int
+  /** The build-once type-widening fixture: a qtable gains an int
     * column (add-column), takes an int-valued append, widens the column
     * to long (metadata-only commit — zero files rewritten), then takes a
     * long-valued append whose values exceed Int range. The unified read
@@ -1323,30 +1264,9 @@ object Queries {
     * int64 files. Both batches' (image_id, views) are exported, so DuckDB
     * recomputes the union with an explicit CAST — the widen path
     * (metadata commit, physical-type promotion on read, writer cast on
-    * post-widen appends) sits under an exact external oracle. Bump the
-    * version suffix when the fixture shape changes. */
-  private val Q31Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_widen_scan_v1"
-  private val Q31N1 = 90L
-  private val Q31N2 = 60L
-
-  private def q31Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q31Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q31Root
-    val lockPath = Paths.get(Q31Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ31(s)
-    } finally { lock.release(); ch.close() }
-    Q31Root
-  }
-
-  private def buildQ31(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q31Root)
-    val t = graft.format.QTable.create(s"$Q31Root/table", s, buckets = 4)
+    * post-widen appends) sits under an exact external oracle. */
+  private val Q31 = fixture("widen_scan", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     t.addColumn("views", "int")
     def batch(seed: Long, n: Long, tag: String) =
       graft.synth.DataGen.generate(s, n, seed).toDF()
@@ -1361,30 +1281,30 @@ object Queries {
       lit(4000000000L) + pmod(xxhash64(col("image_id")), lit(100000L)))
     graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1)
     b1.select("image_id", "views")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q31Root/exp/b1")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b1")
     b2.select("image_id", "views")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q31Root/exp/b2")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q31Root, "_FIXTURE_READY"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
   }
+  private val Q31N1 = 90L
+  private val Q31N2 = 60L
 
   /** Unified scan across the widen boundary: one long-typed `views`
     * column over mixed int32/int64 physical files. */
   def q31WidenScan(s: SparkSession, dir: String): DataFrame = {
-    val root = q31Dir(s)
+    val root = Q31.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "views")
   }
 
   val q31Sql: String =
     s"""SELECT image_id, CAST(views AS BIGINT) AS views
-       |FROM read_parquet('$Q31Root/exp/b1/*.parquet')
+       |FROM read_parquet('${Q31.root}/exp/b1/*.parquet')
        |UNION ALL
        |SELECT image_id, views
-       |FROM read_parquet('$Q31Root/exp/b2/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q31.root}/exp/b2/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q32
-  /** Root of the build-once streaming-ingest fixture: a parquet directory
+  /** The build-once streaming-ingest fixture: a parquet directory
     * of synthesized rows is drained into a fresh qtable through the REAL
     * Structured Streaming path (readStream -> StreamingAppend's
     * foreachBatch sink, Trigger.AvailableNow, one file per micro-batch so
@@ -1393,57 +1313,37 @@ object Queries {
     * sink call and the streaming-checkpoint commit. The exactly-once
     * batch-id dedup must no-op the replay; a broken dedup duplicates
     * rows and fails the oracle, which is simply DuckDB reading the source
-    * directory. Bump the version suffix when the fixture shape changes. */
-  private val Q32Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_stream_ingest_v1"
-  private val Q32N = 180L
-
-  private def q32Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q32Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q32Root
-    val lockPath = Paths.get(Q32Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ32(s)
-    } finally { lock.release(); ch.close() }
-    Q32Root
-  }
-
-  private def buildQ32(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q32Root)
+    * directory. */
+  private val Q32 = fixture("stream_ingest", 1) { (s, root) =>
     graft.synth.DataGen.generate(s, Q32N, 88L).toDF()
-      .repartition(3).write.parquet(s"$Q32Root/src")
-    val t = graft.format.QTable.create(s"$Q32Root/table", s, buckets = 4)
+      .repartition(3).write.parquet(s"$root/src")
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     val src = s.readStream.schema(graft.model.ImageRow.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$Q32Root/src")
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
     val ingest = new graft.streaming.StreamingAppend(t, "q32-fixture")
-    val q = ingest.start(src, s"$Q32Root/ckpt",
+    val q = ingest.start(src, s"$root/ckpt",
       org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.awaitTermination()
     // crash-replay simulation: redeliver an already-committed batch id
     // with its data; the idempotent sink must skip it
-    ingest.sink(s.read.parquet(s"$Q32Root/src"), 0L)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q32Root, "_FIXTURE_READY"))
+    ingest.sink(s.read.parquet(s"$root/src"), 0L)
   }
+  private val Q32N = 180L
 
   /** The streamed table: must equal the source directory exactly —
     * micro-batch appends land every row once, the replayed batch none. */
   def q32StreamIngest(s: SparkSession, dir: String): DataFrame = {
-    val root = q32Dir(s)
+    val root = Q32.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "w", "h", "fmt", "caption", "phash")
   }
 
   val q32Sql: String =
     s"""SELECT image_id, w, h, fmt, caption, phash
-       |FROM read_parquet('$Q32Root/src/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q32.root}/src/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q33
-  /** Root of the build-once changelog (CDC) fixture: a qtable takes an
+  /** The build-once changelog (CDC) fixture: a qtable takes an
     * append, a compact (layout-only — must contribute NO change rows), a
     * generalized MERGE (updates + deletes + inserts), and a second
     * append; table state is exported at the range start and end. Each
@@ -1452,30 +1352,9 @@ object Queries {
     * pre/post diff — which DuckDB recomputes from the exports with three
     * joins. That puts the whole [[graft.format.ChangelogScan]] path —
     * append manifest-diff fast path, rewrite skipping, merge file-set
-    * diff with copied-row suppression — under an exact external oracle.
-    * Bump the version suffix when the fixture shape changes. */
-  private val Q33Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_changelog_v1"
-  private val Q33N1 = 160L
-  private val Q33N2 = 40L
-
-  private def q33Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q33Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q33Root
-    val lockPath = Paths.get(Q33Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ33(s)
-    } finally { lock.release(); ch.close() }
-    Q33Root
-  }
-
-  private def buildQ33(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q33Root)
-    val t = graft.format.QTable.create(s"$Q33Root/table", s, buckets = 4)
+    * diff with copied-row suppression — under an exact external oracle. */
+  private val Q33 = fixture("changelog", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     def batch(seed: Long, n: Long, tag: String) =
       graft.synth.DataGen.generate(s, n, seed).toDF()
         .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
@@ -1484,7 +1363,7 @@ object Queries {
     new graft.jobs.CompactJob(t, targetFileBytes = 64L << 20).run()  // v2
     val fromV = t.currentVersion
     val base = t.read()
-    base.coalesce(1).write.mode("overwrite").parquet(s"$Q33Root/exp/pre")
+    base.coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
     val hmod = pmod(mdHash64(col("image_id")), lit(10))
     val placeholder = Seq(
       lit(Array[Byte](0)).as("bytes"), lit(1).as("w"), lit(1).as("h"),
@@ -1504,16 +1383,16 @@ object Queries {
       deleteCol = Some("is_delete")).run(upd.union(del).union(ins))   // v3
     graft.jobs.AppendJob.append(t, batch(31L, Q33N2, "b2"),
       filesPerBucket = 1)                                             // v4
-    t.read().coalesce(1).write.mode("overwrite").parquet(s"$Q33Root/exp/post")
+    t.read().coalesce(1).write.mode("overwrite").parquet(s"$root/exp/post")
     require(fromV == 2L && t.currentVersion == 4L,
       s"fixture chain drifted: from=$fromV head=${t.currentVersion}")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q33Root, "_FIXTURE_READY"))
   }
+  private val Q33N1 = 160L
+  private val Q33N2 = 40L
 
   /** The row-level changelog across compact + merge + append. */
   def q33Changelog(s: SparkSession, dir: String): DataFrame = {
-    val root = q33Dir(s)
+    val root = Q33.dir(s)
     graft.format.QTable(s"$root/table", s).readChanges(2L, 4L)
       .select("image_id", "caption", "w", "h", "fmt", "phash", "_change_type")
   }
@@ -1521,8 +1400,8 @@ object Queries {
   val q33Sql: String = {
     val differ = Seq("caption", "bytes", "w", "h", "fmt", "phash")
       .map(c => s"p.$c IS DISTINCT FROM q.$c").mkString(" OR ")
-    s"""WITH pre AS (SELECT * FROM read_parquet('$Q33Root/exp/pre/*.parquet')),
-       |post AS (SELECT * FROM read_parquet('$Q33Root/exp/post/*.parquet'))
+    s"""WITH pre AS (SELECT * FROM read_parquet('${Q33.root}/exp/pre/*.parquet')),
+       |post AS (SELECT * FROM read_parquet('${Q33.root}/exp/post/*.parquet'))
        |SELECT q.image_id, q.caption, q.w, q.h, q.fmt, q.phash,
        |       'insert' AS _change_type
        |FROM post q LEFT JOIN pre p ON q.image_id = p.image_id
@@ -1544,7 +1423,7 @@ object Queries {
   }
 
   // ---------------------------------------------------------------- q34
-  /** Root of the build-once bloom-lookup fixture: a qtable is appended
+  /** The build-once bloom-lookup fixture: a qtable is appended
     * and Z-order clustered (so per-file image_id min/max ranges span the
     * id domain and range stats alone cannot prune), then read back
     * through the stats-skipping FileIndex with a point + IN-list + miss
@@ -1553,44 +1432,24 @@ object Queries {
     * [[graft.format.BloomIndex]]) sits under an exact external oracle
     * for CORRECTNESS (no false negatives drop a hit, the absent id
     * returns nothing); the PRUNING itself is asserted by BloomSkipSpec,
-    * which the oracle cannot see. Bump the suffix on shape changes. */
-  private val Q34Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lookup_v1"
-  private val Q34Ids = Seq("pl-img000000000123", "pl-img000000000321",
-    "pl-img000000000007", "pl-img000000000404-absent")
-
-  private def q34Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q34Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q34Root
-    val lockPath = Paths.get(Q34Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ34(s)
-    } finally { lock.release(); ch.close() }
-    Q34Root
-  }
-
-  private def buildQ34(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q34Root)
-    val t = graft.format.QTable.create(s"$Q34Root/table", s, buckets = 4)
+    * which the oracle cannot see. */
+  private val Q34 = fixture("lookup", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, 600, 13L).toDF()
         .withColumn("image_id", concat(lit("pl-"), col("image_id"))),
       filesPerBucket = 3)
     new graft.jobs.ClusterJob(t, targetFileBytes = 1L << 20).run()
     t.read().select("image_id", "caption", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q34Root/exp/all")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q34Root, "_FIXTURE_READY"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/all")
   }
+  private val Q34Ids = Seq("pl-img000000000123", "pl-img000000000321",
+    "pl-img000000000007", "pl-img000000000404-absent")
 
   /** IN-list point lookup through the bloom-tested FileIndex over a
     * clustered table (one listed id is absent by construction). */
   def q34PointLookup(s: SparkSession, dir: String): DataFrame = {
-    val root = q34Dir(s)
+    val root = Q34.dir(s)
     val (df, _) = graft.format.QTable(s"$root/table", s).readIndexed()
     df.where(col("image_id").isin(Q34Ids: _*))
       .select("image_id", "caption", "w")
@@ -1599,12 +1458,12 @@ object Queries {
   val q34Sql: String = {
     val inList = Q34Ids.map(id => s"'$id'").mkString(", ")
     s"""SELECT image_id, caption, w
-       |FROM read_parquet('$Q34Root/exp/all/*.parquet')
+       |FROM read_parquet('${Q34.root}/exp/all/*.parquet')
        |WHERE image_id IN ($inList)""".stripMargin
   }
 
   // ---------------------------------------------------------------- q35
-  /** Root of the build-once merge-on-read DELETE fixture: a qtable takes
+  /** The build-once merge-on-read DELETE fixture: a qtable takes
     * a position-delete commit ([[graft.jobs.DeleteJob]]) for a
     * deterministic md5-derived row class — no data file touched — and
     * then a SCOPED compact that folds only buckets {0,1}, so the read
@@ -1613,32 +1472,13 @@ object Queries {
     * exported; DuckDB recomputes the survivors with the same md5
     * predicate — the whole MOR pipeline (position-delete write,
     * delete-applied scan, partial fold, entry retention) sits under an
-    * exact external oracle. Bump the suffix on shape changes. */
-  private val Q35Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mor_delete_v1"
-  private val Q35N = 500L
-
-  private def q35Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q35Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q35Root
-    val lockPath = Paths.get(Q35Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ35(s)
-    } finally { lock.release(); ch.close() }
-    Q35Root
-  }
-
-  private def buildQ35(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q35Root)
-    val t = graft.format.QTable.create(s"$Q35Root/table", s, buckets = 4)
+    * exact external oracle. */
+  private val Q35 = fixture("mor_delete", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, Q35N, 66L).toDF(), filesPerBucket = 2)
     t.read().select("image_id", "caption")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q35Root/exp/pre")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
     new graft.jobs.DeleteJob(t).run(pmod(mdHash64(col("image_id")), lit(7)) === 3)
     // partial fold: buckets {0,1} rewrite delete-applied, the rest keep
     // their live delete entries — both read paths are under the oracle
@@ -1646,25 +1486,24 @@ object Queries {
       bucketScope = Some(Set(0, 1))).run()
     require(t.currentSnapshot.deleteFiles.nonEmpty,
       "q35 fixture must retain live delete entries after the scoped fold")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q35Root, "_FIXTURE_READY"))
   }
+  private val Q35N = 500L
 
   /** Survivors of a merge-on-read DELETE, read across folded and
     * still-deleting files alike. */
   def q35MorDelete(s: SparkSession, dir: String): DataFrame = {
-    val root = q35Dir(s)
+    val root = Q35.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "caption")
   }
 
   val q35Sql: String =
     s"""SELECT image_id, caption
-       |FROM read_parquet('$Q35Root/exp/pre/*.parquet')
+       |FROM read_parquet('${Q35.root}/exp/pre/*.parquet')
        |WHERE ${mdHash64Sql("image_id")} % 7 <> 3""".stripMargin
 
   // ---------------------------------------------------------------- q36
-  /** Root of the build-once merge-on-read MERGE fixture: the q30 shape
+  /** The build-once merge-on-read MERGE fixture: the q30 shape
     * (multi-column SET with NULL partial patches, WHEN MATCHED DELETE,
     * an unmatched delete no-op, fresh inserts) executed with
     * `mergeOnRead = true` — matched rows position-deleted, patched rows
@@ -1672,27 +1511,8 @@ object Queries {
     * coalesce recomputes the post-merge state, so CoW (q30) and MOR
     * (q36) are pinned to ONE external truth: any divergence between the
     * two strategies breaks one of the two hashes. */
-  private val Q36Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_mor_merge_v1"
-  private val Q36N = 400L
-
-  private def q36Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q36Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q36Root
-    val lockPath = Paths.get(Q36Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ36(s)
-    } finally { lock.release(); ch.close() }
-    Q36Root
-  }
-
-  private def buildQ36(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q36Root)
-    val t = graft.format.QTable.create(s"$Q36Root/table", s, buckets = 4)
+  private val Q36 = fixture("mor_merge", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, Q36N, 58L).toDF(), filesPerBucket = 2)
     val base = t.read()
@@ -1721,21 +1541,20 @@ object Queries {
     val corr = upd.union(del).union(ghost).union(ins)
 
     base.select("image_id", "caption", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q36Root/exp/pre")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
     corr.select("image_id", "caption", "w", "is_delete")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q36Root/exp/corr")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/corr")
     new graft.jobs.MergeJob(t, updateCols = Seq("caption", "w"),
       deleteCol = Some("is_delete"), mergeOnRead = true).run(corr)
     require(t.currentSnapshot.deleteFiles.nonEmpty,
       "q36 fixture must carry live position deletes (MOR commit shape)")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q36Root, "_FIXTURE_READY"))
   }
+  private val Q36N = 400L
 
   /** Post-merge state after a MERGE-ON-READ merge with updates, partial
     * updates, deletes and inserts — read through the delete anti-join. */
   def q36MorMerge(s: SparkSession, dir: String): DataFrame = {
-    val root = q36Dir(s)
+    val root = Q36.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "caption", "w")
   }
@@ -1744,13 +1563,13 @@ object Queries {
     s"""SELECT COALESCE(p.image_id, c.image_id) AS image_id,
        |       COALESCE(c.caption, p.caption) AS caption,
        |       COALESCE(c.w, p.w) AS w
-       |FROM read_parquet('$Q36Root/exp/pre/*.parquet') p
-       |FULL OUTER JOIN read_parquet('$Q36Root/exp/corr/*.parquet') c
+       |FROM read_parquet('${Q36.root}/exp/pre/*.parquet') p
+       |FULL OUTER JOIN read_parquet('${Q36.root}/exp/corr/*.parquet') c
        |ON p.image_id = c.image_id
        |WHERE NOT COALESCE(c.is_delete, false)""".stripMargin
 
   // ---------------------------------------------------------------- q41
-  /** Root of the build-once EQUALITY-delete upsert fixture: the table
+  /** The build-once EQUALITY-delete upsert fixture: the table
     * takes a 4-step history that exercises every edge of the
     * sequence-number rule — append base, scan-free whole-record upsert
     * u1 ([[graft.jobs.UpsertJob]]: replacements + flagged deletes +
@@ -1761,35 +1580,15 @@ object Queries {
     * the final state as nested "replace by key" set algebra — the whole
     * eq-delete read path (per-file seq lookup, key anti-join, strict-seq
     * survival) sits under an exact external oracle, with the delete debt
-    * still LIVE (no fold ran). Bump the version suffix when the fixture
-    * shape changes. */
-  private val Q41Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_q41_v1"
-  private val Q41N = 400L
-
-  private def q41Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q41Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q41Root
-    val lockPath = Paths.get(Q41Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ41(s)
-    } finally { lock.release(); ch.close() }
-    Q41Root
-  }
-
-  private def buildQ41(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q41Root)
-    val t = graft.format.QTable.create(s"$Q41Root/table", s, buckets = 4)
+    * still LIVE (no fold ran). */
+  private val Q41 = fixture("q41", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, Q41N, 60L).toDF(), filesPerBucket = 2)
     // snapshot-pinned base view: immutable across the commits below
     val base = t.read()
     def exp(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$Q41Root/exp/$name")
+      df.coalesce(1).write.mode("overwrite").parquet(s"$root/exp/$name")
     exp(base.select("image_id", "caption", "w"), "pre")
 
     // u1: whole-record replacements (~30%), flagged deletes (~10%),
@@ -1826,16 +1625,15 @@ object Queries {
         .withColumn("is_delete", lit(true)))
     exp(u2.select("image_id", "caption", "w", "is_delete"), "u2")
     new graft.jobs.UpsertJob(t, deleteCol = Some("is_delete")).run(u2)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q41Root, "_FIXTURE_READY"))
   }
+  private val Q41N = 400L
 
   /** Final table state after upsert -> re-append -> upsert, read THROUGH
     * the live equality-delete anti-joins (no fold ran — GATED on the
     * commit shape proving it: upsert commits rewrote zero files and the
     * key-delete debt is still live). */
   def q41EqUpsert(s: SparkSession, dir: String): DataFrame = {
-    val root = q41Dir(s)
+    val root = Q41.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val snap = t.currentSnapshot
     val out = t.read().select("image_id", "caption", "w")
@@ -1848,27 +1646,27 @@ object Queries {
   val q41Sql: String =
     s"""WITH s1 AS (
        |  SELECT p.image_id, p.caption, p.w
-       |  FROM read_parquet('$Q41Root/exp/pre/*.parquet') p
+       |  FROM read_parquet('${Q41.root}/exp/pre/*.parquet') p
        |  WHERE p.image_id NOT IN
-       |    (SELECT image_id FROM read_parquet('$Q41Root/exp/u1/*.parquet'))
+       |    (SELECT image_id FROM read_parquet('${Q41.root}/exp/u1/*.parquet'))
        |  UNION ALL
        |  SELECT image_id, caption, w
-       |  FROM read_parquet('$Q41Root/exp/u1/*.parquet') WHERE NOT is_delete
+       |  FROM read_parquet('${Q41.root}/exp/u1/*.parquet') WHERE NOT is_delete
        |), s2 AS (
        |  SELECT * FROM s1
        |  UNION ALL
        |  SELECT image_id, caption, w
-       |  FROM read_parquet('$Q41Root/exp/a2/*.parquet')
+       |  FROM read_parquet('${Q41.root}/exp/a2/*.parquet')
        |)
        |SELECT s2.image_id, s2.caption, s2.w FROM s2
        |WHERE s2.image_id NOT IN
-       |  (SELECT image_id FROM read_parquet('$Q41Root/exp/u2/*.parquet'))
+       |  (SELECT image_id FROM read_parquet('${Q41.root}/exp/u2/*.parquet'))
        |UNION ALL
        |SELECT image_id, caption, w
-       |FROM read_parquet('$Q41Root/exp/u2/*.parquet') WHERE NOT is_delete""".stripMargin
+       |FROM read_parquet('${Q41.root}/exp/u2/*.parquet') WHERE NOT is_delete""".stripMargin
 
   // ---------------------------------------------------------------- q42
-  /** Root of the build-once BRANCH + fast-forward fixture: main takes a
+  /** The build-once BRANCH + fast-forward fixture: main takes a
     * base append, a branch forks, the branch takes a scan-free upsert
     * (whole-record replacements + flagged deletes + inserts) and a
     * follow-up append — all invisible on main (asserted before the
@@ -1879,32 +1677,13 @@ object Queries {
     * branch lifecycle (ref-scoped commits, global version claims,
     * adopted delete sets, ancestry-checked publish) sits under an exact
     * external oracle. */
-  private val Q42Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_q42_v1"
-  private val Q42N = 300L
-
-  private def q42Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q42Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q42Root
-    val lockPath = Paths.get(Q42Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ42(s)
-    } finally { lock.release(); ch.close() }
-    Q42Root
-  }
-
-  private def buildQ42(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q42Root)
-    val t = graft.format.QTable.create(s"$Q42Root/table", s, buckets = 4)
+  private val Q42 = fixture("q42", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, Q42N, 70L).toDF(), filesPerBucket = 2)
     val base = t.read()
     def exp(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$Q42Root/exp/$name")
+      df.coalesce(1).write.mode("overwrite").parquet(s"$root/exp/$name")
     exp(base.select("image_id", "caption", "w"), "pre")
 
     graft.format.Branches.create(t, "fix")
@@ -1931,15 +1710,14 @@ object Queries {
     require(t.read().count() == Q42N,
       "branch commits leaked onto main before the fast-forward")
     new graft.jobs.FastForwardJob(t).run("fix")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q42Root, "_FIXTURE_READY"))
   }
+  private val Q42N = 300L
 
   /** Final MAIN state after branch-upsert -> branch-append ->
     * fast-forward, read through the adopted equality deletes — GATED on
     * the publish shape (a fast-forward head carrying live eq debt). */
   def q42BranchFf(s: SparkSession, dir: String): DataFrame = {
-    val root = q42Dir(s)
+    val root = Q42.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val snap = t.currentSnapshot
     val out = t.read().select("image_id", "caption", "w")
@@ -1951,15 +1729,15 @@ object Queries {
 
   val q42Sql: String =
     s"""SELECT p.image_id, p.caption, p.w
-       |FROM read_parquet('$Q42Root/exp/pre/*.parquet') p
+       |FROM read_parquet('${Q42.root}/exp/pre/*.parquet') p
        |WHERE p.image_id NOT IN
-       |  (SELECT image_id FROM read_parquet('$Q42Root/exp/u1/*.parquet'))
+       |  (SELECT image_id FROM read_parquet('${Q42.root}/exp/u1/*.parquet'))
        |UNION ALL
        |SELECT image_id, caption, w
-       |FROM read_parquet('$Q42Root/exp/u1/*.parquet') WHERE NOT is_delete
+       |FROM read_parquet('${Q42.root}/exp/u1/*.parquet') WHERE NOT is_delete
        |UNION ALL
        |SELECT image_id, caption, w
-       |FROM read_parquet('$Q42Root/exp/a2/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q42.root}/exp/a2/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q38
   /** Build-once fixture for the metadata-level DELETE: batch1 (mixed
@@ -1969,26 +1747,8 @@ object Queries {
     * metadata level ([[graft.jobs.StatsDelete]]): batch2's files drop
     * from the manifests, batch1's files are excluded by their fmt
     * stats, zero position-delete rows, zero data files opened. */
-  private val Q38Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_q38_v1"
-
-  private def q38Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q38Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q38Root
-    val lockPath = Paths.get(Q38Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ38(s)
-    } finally { lock.release(); ch.close() }
-    Q38Root
-  }
-
-  private def buildQ38(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q38Root)
-    val t = graft.format.QTable.create(s"$Q38Root/table", s, buckets = 4)
+  private val Q38 = fixture("q38", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     graft.jobs.AppendJob.append(t,
       graft.synth.DataGen.generate(s, 250, 81L, 4).toDF(), filesPerBucket = 2)
     graft.jobs.AppendJob.append(t,
@@ -1997,10 +1757,8 @@ object Queries {
         .withColumn("fmt", lit("bmp")),
       filesPerBucket = 2)
     t.read().select("image_id", "fmt", "caption")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q38Root/exp/pre")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
     new graft.jobs.DeleteJob(t).run(col("fmt") === "bmp")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q38Root, "_FIXTURE_READY"))
   }
 
   /** Post-delete state after a METADATA-level DELETE. GATED on the
@@ -2011,7 +1769,7 @@ object Queries {
     * deletes the right rows — the gate makes the driver's row count
     * catch it anyway. */
   def q38MetaDelete(s: SparkSession, dir: String): DataFrame = {
-    val root = q38Dir(s)
+    val root = Q38.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val snap = t.currentSnapshot
     val out = t.read().select("image_id", "fmt", "caption")
@@ -2025,7 +1783,7 @@ object Queries {
 
   val q38Sql: String =
     s"""SELECT image_id, fmt, caption
-       |FROM read_parquet('$Q38Root/exp/pre/*.parquet')
+       |FROM read_parquet('${Q38.root}/exp/pre/*.parquet')
        |WHERE fmt <> 'bmp'""".stripMargin
 
   // ---------------------------------------------------------------- q37
@@ -2041,7 +1799,7 @@ object Queries {
     * stat-truncation bound, which correctly forces a scan — that hybrid
     * path is spec-covered, not a metadata-only claim). */
   def q37MetaAgg(s: SparkSession, dir: String): DataFrame = {
-    val root = timelineDir(s)
+    val root = Timeline.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val r = graft.jobs.StatsAggregate.run(
       t, t.currentSnapshot, Seq("image_id", "w", "h", "fmt", "phash"))
@@ -2057,9 +1815,9 @@ object Queries {
        |  COUNT(fmt) AS fmt_count, MIN(fmt) AS fmt_min, MAX(fmt) AS fmt_max,
        |  COUNT(phash) AS phash_count,
        |  MIN(phash) AS phash_min, MAX(phash) AS phash_max
-       |FROM (SELECT * FROM read_parquet('$TimelineRoot/exp/b1/*.parquet')
+       |FROM (SELECT * FROM read_parquet('${Timeline.root}/exp/b1/*.parquet')
        |      UNION ALL
-       |      SELECT * FROM read_parquet('$TimelineRoot/exp/b2/*.parquet'))""".stripMargin
+       |      SELECT * FROM read_parquet('${Timeline.root}/exp/b2/*.parquet'))""".stripMargin
 
   // ---------------------------------------------------------------- q40
   /** Streaming-source read: `readStream.format("qtable")` follows the
@@ -2070,65 +1828,45 @@ object Queries {
     * emit-nothing rewrite rule live) and returns the sink's content:
     * exactly the appended rows, exactly once, which DuckDB recomputes
     * from the exported batches. */
-  private val Q40Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_q40_v1"
-
-  private def q40Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q40Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q40Root
-    val lockPath = Paths.get(Q40Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ40(s)
-    } finally { lock.release(); ch.close() }
-    Q40Root
-  }
-
-  private def q40Drain(s: SparkSession): Unit = {
-    val q = s.readStream.format("qtable").load(s"$Q40Root/table")
-      .writeStream.format("parquet")
-      .option("path", s"$Q40Root/out")
-      .option("checkpointLocation", s"$Q40Root/ckpt")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  private def buildQ40(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q40Root)
-    val t = graft.format.QTable.create(s"$Q40Root/table", s, buckets = 2)
+  private val Q40 = fixture("q40", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 2)
     def batch(seed: Long, n: Long, tag: String) =
       graft.synth.DataGen.generate(s, n, seed, 4).toDF()
         .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
     val b1 = batch(91L, 130L, "s1"); val b2 = batch(92L, 70L, "s2")
     b1.select("image_id", "w", "fmt", "caption", "phash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q40Root/exp/b1")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b1")
     b2.select("image_id", "w", "fmt", "caption", "phash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q40Root/exp/b2")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
     graft.jobs.AppendJob.append(t, b1, filesPerBucket = 2)
     graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1)
-    q40Drain(s)
+    q40Drain(s, root)
     // a row-preserving rewrite AFTER the drain: later invocations'
     // re-drains must emit nothing for it
     new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run()
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q40Root, "_FIXTURE_READY"))
+  }
+
+  private def q40Drain(s: SparkSession, root: String): Unit = {
+    val q = s.readStream.format("qtable").load(s"$root/table")
+      .writeStream.format("parquet")
+      .option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/ckpt")
+      .start()
+    try q.processAllAvailable() finally q.stop()
   }
 
   def q40StreamSource(s: SparkSession, dir: String): DataFrame = {
-    val root = q40Dir(s)
-    q40Drain(s) // live offset recovery against the consumed checkpoint
+    val root = Q40.dir(s)
+    q40Drain(s, root) // live offset recovery against the consumed checkpoint
     s.read.parquet(s"$root/out")
       .select("image_id", "w", "fmt", "caption", "phash")
   }
 
   val q40Sql: String =
     s"""SELECT image_id, w, fmt, caption, phash
-       |FROM (SELECT * FROM read_parquet('$Q40Root/exp/b1/*.parquet')
+       |FROM (SELECT * FROM read_parquet('${Q40.root}/exp/b1/*.parquet')
        |      UNION ALL
-       |      SELECT * FROM read_parquet('$Q40Root/exp/b2/*.parquet'))""".stripMargin
+       |      SELECT * FROM read_parquet('${Q40.root}/exp/b2/*.parquet'))""".stripMargin
 
   // ---------------------------------------------------------------- q39
   /** MULTIMODAL near-duplicate detection by perceptual hash: banded LSH
@@ -2159,7 +1897,7 @@ object Queries {
     * bands suit N ~ 10^5-10^6 per partition; a 10^12-row corpus runs
     * this per date/bucket partition or widens the bands. */
   def q39PhashNearDup(s: SparkSession, dir: String): DataFrame = {
-    val root = timelineDir(s)
+    val root = Timeline.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val e = t.read().select(col("image_id"), col("phash"))
     val bands0 = e.select(col("image_id"), col("phash"),
@@ -2188,9 +1926,9 @@ object Queries {
   val q39Sql: String =
     s"""WITH e AS (
        |  SELECT image_id, phash
-       |  FROM (SELECT * FROM read_parquet('$TimelineRoot/exp/b1/*.parquet')
+       |  FROM (SELECT * FROM read_parquet('${Timeline.root}/exp/b1/*.parquet')
        |        UNION ALL
-       |        SELECT * FROM read_parquet('$TimelineRoot/exp/b2/*.parquet'))),
+       |        SELECT * FROM read_parquet('${Timeline.root}/exp/b2/*.parquet'))),
        |bands0 AS (
        |  SELECT image_id, phash, b.band,
        |         (phash >> (16 * b.band)) & 65535 AS cell
@@ -2242,28 +1980,8 @@ object Queries {
     * day-isolated files, then a compact proves maintenance PRESERVES
     * the date layout (day-aware grouping). Live rows exported raw for
     * the DuckDB oracle. */
-  private val Q54Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_q54_v1"
-  private val Q54DayMs = 86400000L
-  private val Q54D0 = 20100L // fixture epoch-day origin
-
-  private def q54Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q54Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q54Root
-    val lockPath = Paths.get(Q54Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ54(s)
-    } finally { lock.release(); ch.close() }
-    Q54Root
-  }
-
-  private def buildQ54(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q54Root)
-    val t = graft.format.QTable.create(s"$Q54Root/table", s, buckets = 4)
+  private val Q54 = fixture("q54", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     t.addColumn("ts", "long")
     t.setProperties(Map(graft.format.DayPartition.Prop -> "ts"))
     def batch(seed: Long, n: Long, tag: String) =
@@ -2277,10 +1995,10 @@ object Queries {
     // day-aware compact: packs within days, never across them
     new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run()
     t.read().select("image_id", "w", "fmt", "caption", "phash", "ts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q54Root/exp/rows")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q54Root, "_FIXTURE_READY"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/rows")
   }
+  private val Q54DayMs = 86400000L
+  private val Q54D0 = 20100L // fixture epoch-day origin
 
   /** Date-range scan over the day-partitioned table. GATED on the spec's
     * two claims actually holding on the LIVE post-compact table: (a)
@@ -2292,7 +2010,7 @@ object Queries {
     * returns correct rows — the gate zeroes the row count so the driver
     * catches it. */
   def q54DayPruned(s: SparkSession, dir: String): DataFrame = {
-    val root = q54Dir(s)
+    val root = Q54.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val snap = t.currentSnapshot
     val f = graft.format.DayPartition.fieldOf(snap).get
@@ -2313,42 +2031,23 @@ object Queries {
 
   val q54Sql: String =
     s"""SELECT image_id, w, fmt, caption, phash, ts
-       |FROM read_parquet('$Q54Root/exp/rows/*.parquet')
+       |FROM read_parquet('${Q54.root}/exp/rows/*.parquet')
        |WHERE ts BETWEEN ${(Q54D0 + 1) * Q54DayMs} AND ${(Q54D0 + 3) * Q54DayMs - 1}""".stripMargin
-
-  // ------------------------------------------------------------ registry
 
   // ---------------------------------------------------------------- q43
   /** NDV-sketch fixture: a 4-bucket table of 2000 rows, fully analyzed
     * (`analyze-ndv` on image_id/fmt/w), its live rows exported raw for
     * the DuckDB oracle. Sketches are deterministic for fixed input, so
     * the within-tolerance flag is stable run-to-run. */
-  private val Q43Root: String =
+  private val Q43 = fixture("q43", 2) { (s, root) =>
     // v2: the export carries pbucket+phash too (q44's oracle groups by
     // bucket) — a v1 fixture from an older build must not be reused
-    s"${System.getProperty("java.io.tmpdir")}/graft_q43_v2"
-
-  private def q43Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q43Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q43Root
-    val lockPath = Paths.get(Q43Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) {
-        new graft.format.LocalCommitIO().deleteRecursive(Q43Root)
-        val t = graft.format.QTable.create(s"$Q43Root/table", s, buckets = 4)
-        graft.jobs.AppendJob.append(t,
-          graft.synth.DataGen.generate(s, 2000, 91L, 4).toDF(), filesPerBucket = 2)
-        new graft.jobs.NdvSketchJob(t, Seq("image_id", "fmt", "w")).run()
-        t.read().select("image_id", "fmt", "w", "pbucket", "phash")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q43Root/exp/rows")
-        Files.createFile(Paths.get(Q43Root, "_FIXTURE_READY"))
-      }
-    } finally { lock.release(); ch.close() }
-    Q43Root
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    graft.jobs.AppendJob.append(t,
+      graft.synth.DataGen.generate(s, 2000, 91L, 4).toDF(), filesPerBucket = 2)
+    new graft.jobs.NdvSketchJob(t, Seq("image_id", "fmt", "w")).run()
+    t.read().select("image_id", "fmt", "w", "pbucket", "phash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/rows")
   }
 
   /** Metadata-only approx-distinct ([[graft.jobs.NdvEstimate]]): merged
@@ -2361,7 +2060,7 @@ object Queries {
     * DuckDB's recompute from the exported rows hash-checks the table
     * content itself, not just the constant flag. */
   def q43NdvSketch(s: SparkSession, dir: String): DataFrame = {
-    val root = q43Dir(s)
+    val root = Q43.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val cols = Seq("image_id", "fmt", "w")
     val r = graft.jobs.NdvEstimate.run(t, t.currentSnapshot, cols)
@@ -2381,13 +2080,13 @@ object Queries {
 
   val q43Sql: String =
     s"""SELECT 'image_id' AS col_name, COUNT(DISTINCT image_id) AS exact_ndv, 1 AS within_5pct
-       |FROM read_parquet('$Q43Root/exp/rows/*.parquet')
+       |FROM read_parquet('${Q43.root}/exp/rows/*.parquet')
        |UNION ALL
        |SELECT 'fmt', COUNT(DISTINCT fmt), 1
-       |FROM read_parquet('$Q43Root/exp/rows/*.parquet')
+       |FROM read_parquet('${Q43.root}/exp/rows/*.parquet')
        |UNION ALL
        |SELECT 'w', COUNT(DISTINCT w), 1
-       |FROM read_parquet('$Q43Root/exp/rows/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q43.root}/exp/rows/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q44
   /** Files metadata table ([[graft.format.QTable.filesDF]], Iceberg
@@ -2400,7 +2099,7 @@ object Queries {
     * snapshots never rewrote a file, so the data dir holds exactly the
     * live files and the glob is the live set.) */
   def q44FilesStats(s: SparkSession, dir: String): DataFrame = {
-    val root = q43Dir(s)
+    val root = Q43.dir(s)
     graft.format.QTable(s"$root/table", s).filesDF
       .selectExpr("regexp_extract(path, '[^/]*$', 0) AS file",
         "row_count", "phash_min", "phash_max")
@@ -2410,7 +2109,7 @@ object Queries {
     s"""SELECT regexp_extract(filename, '[^/]*$$') AS file,
        |  COUNT(*) AS row_count,
        |  MIN(phash) AS phash_min, MAX(phash) AS phash_max
-       |FROM read_parquet('$Q43Root/table/data/**/*.parquet', filename=true)
+       |FROM read_parquet('${Q43.root}/table/data/**/*.parquet', filename=true)
        |GROUP BY 1""".stripMargin
 
   // ---------------------------------------------------------------- q45
@@ -2425,49 +2124,32 @@ object Queries {
     * values, explicit NULLs stay NULL (initial-default, not coalesce).
     * Both appends' rows are exported raw; the oracle recomputes the
     * expectation from them alone. */
-  private val Q45Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_default_scan_v1"
-  private val Q45PreV = 3L // create=0, append=1, add-column=2, append=3
-
-  private def q45Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q45Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q45Root
-    val lockPath = Paths.get(Q45Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) {
-        new graft.format.LocalCommitIO().deleteRecursive(Q45Root)
-        val t = graft.format.QTable.create(s"$Q45Root/table", s, buckets = 4)
-        def batch(seed: Long, n: Long, tag: String) =
-          graft.synth.DataGen.generate(s, n, seed).toDF()
-            .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
-        val b1 = batch(505L, 90L, "d1")
-        graft.jobs.AppendJob.append(t, b1, filesPerBucket = 1) // v1
-        t.addColumn("views", "int", Some("7")) // v2, metadata-only
-        val b2 = batch(606L, 60L, "d2").withColumn("views",
-          when(pmod(xxhash64(col("image_id")), lit(3)) === 0, lit(null))
-            .otherwise(pmod(xxhash64(col("image_id")), lit(1000L)))
-            .cast("int"))
-        graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1) // v3
-        new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run() // v4
-        b1.select("image_id")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q45Root/exp/b1")
-        b2.select("image_id", "views")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q45Root/exp/b2")
-        Files.createFile(Paths.get(Q45Root, "_FIXTURE_READY"))
-      }
-    } finally { lock.release(); ch.close() }
-    Q45Root
+  private val Q45 = fixture("default_scan", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    def batch(seed: Long, n: Long, tag: String) =
+      graft.synth.DataGen.generate(s, n, seed).toDF()
+        .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
+    val b1 = batch(505L, 90L, "d1")
+    graft.jobs.AppendJob.append(t, b1, filesPerBucket = 1) // v1
+    t.addColumn("views", "int", Some("7")) // v2, metadata-only
+    val b2 = batch(606L, 60L, "d2").withColumn("views",
+      when(pmod(xxhash64(col("image_id")), lit(3)) === 0, lit(null))
+        .otherwise(pmod(xxhash64(col("image_id")), lit(1000L)))
+        .cast("int"))
+    graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1) // v3
+    new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run() // v4
+    b1.select("image_id")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b1")
+    b2.select("image_id", "views")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
   }
+  private val Q45PreV = 3L // create=0, append=1, add-column=2, append=3
 
   /** Scan across the initial-default boundary at both lifecycle points:
     * phase `pre` = substitution read, phase `post` = after the rewrite
     * baked the default into data files. */
   def q45DefaultScan(s: SparkSession, dir: String): DataFrame = {
-    val root = q45Dir(s)
+    val root = Q45.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val pre = t.read(t.snapshotAt(Q45PreV))
       .select(lit("pre").as("phase"), col("image_id"), col("views"))
@@ -2479,9 +2161,9 @@ object Queries {
   val q45Sql: String =
     s"""WITH exp AS (
        |  SELECT image_id, CAST(7 AS INTEGER) AS views
-       |  FROM read_parquet('$Q45Root/exp/b1/*.parquet')
+       |  FROM read_parquet('${Q45.root}/exp/b1/*.parquet')
        |  UNION ALL
-       |  SELECT image_id, views FROM read_parquet('$Q45Root/exp/b2/*.parquet')
+       |  SELECT image_id, views FROM read_parquet('${Q45.root}/exp/b2/*.parquet')
        |)
        |SELECT 'pre' AS phase, image_id, views FROM exp
        |UNION ALL
@@ -2495,63 +2177,46 @@ object Queries {
     * base ∪ main-append ∪ picked-batch — the branch's merge must NOT
     * leak — and DuckDB recomputes that union from the three exported
     * batches alone. */
-  private val Q46Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cherry_pick_v1"
-
-  private def q46Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q46Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q46Root
-    val lockPath = Paths.get(Q46Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) {
-        new graft.format.LocalCommitIO().deleteRecursive(Q46Root)
-        val t = graft.format.QTable.create(s"$Q46Root/table", s, buckets = 4)
-        def batch(seed: Long, n: Long, tag: String) =
-          graft.synth.DataGen.generate(s, n, seed).toDF()
-            .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
-        val base = batch(707L, 120L, "b")
-        graft.jobs.AppendJob.append(t, base, filesPerBucket = 1) // v1
-        graft.format.Branches.create(t, "feed")
-        val dev = t.onBranch("feed")
-        val devBatch = batch(808L, 50L, "cp")
-        graft.jobs.AppendJob.append(dev, devBatch, filesPerBucket = 1) // v2
-        val pickV = dev.currentVersion
-        // a branch MERGE that must NOT leak through the pick
-        new graft.jobs.MergeJob(dev).run(
-          batch(809L, 10L, "cp").drop("pbucket")) // v3
-        val mainBatch = batch(909L, 40L, "m")
-        graft.jobs.AppendJob.append(t, mainBatch, filesPerBucket = 1) // v4
-        new graft.jobs.CherryPickJob(t).run(pickV) // v5
-        base.select("image_id", "caption")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q46Root/exp/base")
-        devBatch.select("image_id", "caption")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q46Root/exp/picked")
-        mainBatch.select("image_id", "caption")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q46Root/exp/main")
-        Files.createFile(Paths.get(Q46Root, "_FIXTURE_READY"))
-      }
-    } finally { lock.release(); ch.close() }
-    Q46Root
+  private val Q46 = fixture("cherry_pick", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    def batch(seed: Long, n: Long, tag: String) =
+      graft.synth.DataGen.generate(s, n, seed).toDF()
+        .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
+    val base = batch(707L, 120L, "b")
+    graft.jobs.AppendJob.append(t, base, filesPerBucket = 1) // v1
+    graft.format.Branches.create(t, "feed")
+    val dev = t.onBranch("feed")
+    val devBatch = batch(808L, 50L, "cp")
+    graft.jobs.AppendJob.append(dev, devBatch, filesPerBucket = 1) // v2
+    val pickV = dev.currentVersion
+    // a branch MERGE that must NOT leak through the pick
+    new graft.jobs.MergeJob(dev).run(
+      batch(809L, 10L, "cp").drop("pbucket")) // v3
+    val mainBatch = batch(909L, 40L, "m")
+    graft.jobs.AppendJob.append(t, mainBatch, filesPerBucket = 1) // v4
+    new graft.jobs.CherryPickJob(t).run(pickV) // v5
+    base.select("image_id", "caption")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/base")
+    devBatch.select("image_id", "caption")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/picked")
+    mainBatch.select("image_id", "caption")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/main")
   }
 
   /** Main's head after the cherry-pick: base + own append + the picked
     * branch append, nothing else. */
   def q46CherryPick(s: SparkSession, dir: String): DataFrame = {
-    val root = q46Dir(s)
+    val root = Q46.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "caption")
   }
 
   val q46Sql: String =
-    s"""SELECT image_id, caption FROM read_parquet('$Q46Root/exp/base/*.parquet')
+    s"""SELECT image_id, caption FROM read_parquet('${Q46.root}/exp/base/*.parquet')
        |UNION ALL
-       |SELECT image_id, caption FROM read_parquet('$Q46Root/exp/main/*.parquet')
+       |SELECT image_id, caption FROM read_parquet('${Q46.root}/exp/main/*.parquet')
        |UNION ALL
-       |SELECT image_id, caption FROM read_parquet('$Q46Root/exp/picked/*.parquet')""".stripMargin
+       |SELECT image_id, caption FROM read_parquet('${Q46.root}/exp/picked/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q47
   /** Row-lineage fixture (Iceberg v3 `_row_id` analogue): a table
@@ -2564,56 +2229,39 @@ object Queries {
     * the deleted row's id is gone). The q26 pattern: the export is an
     * engine output frozen BEFORE the operations under test, so any
     * id lost, duplicated, or moved by the rewrites hash-mismatches. */
-  private val Q47Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_row_lineage_v1"
-
-  private def q47Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q47Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q47Root
-    val lockPath = Paths.get(Q47Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) {
-        new graft.format.LocalCommitIO().deleteRecursive(Q47Root)
-        val t = graft.format.QTable.create(s"$Q47Root/table", s, buckets = 4)
-        def batch(seed: Long, n: Long, tag: String) =
-          graft.synth.DataGen.generate(s, n, seed).toDF()
-            .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
-        graft.jobs.AppendJob.append(t, batch(111L, 100L, "r1"), filesPerBucket = 2)
-        t.enableRowLineage()
-        graft.jobs.AppendJob.append(t, batch(222L, 60L, "r2"), filesPerBucket = 1)
-        val src = batch(111L, 100L, "r1").where(col("image_id").endsWith("1"))
-          .withColumn("caption", concat(lit("upd "), col("image_id")))
-          .withColumn("is_delete", col("image_id").endsWith("11"))
-          .drop("pbucket")
-          .unionByName(batch(333L, 8L, "ins").drop("pbucket")
-            .withColumn("is_delete", lit(false)))
-        new graft.jobs.MergeJob(t, deleteCol = Some("is_delete")).run(src)
-        // freeze the assignment, THEN re-sort the whole table twice
-        t.readWithRowId().select("image_id", "_row_id")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q47Root/exp/ids")
-        new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run()
-        new graft.jobs.ClusterJob(t, targetFileBytes = 8L << 20).run()
-        Files.createFile(Paths.get(Q47Root, "_FIXTURE_READY"))
-      }
-    } finally { lock.release(); ch.close() }
-    Q47Root
+  private val Q47 = fixture("row_lineage", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    def batch(seed: Long, n: Long, tag: String) =
+      graft.synth.DataGen.generate(s, n, seed).toDF()
+        .withColumn("image_id", concat(lit(tag + "-"), col("image_id")))
+    graft.jobs.AppendJob.append(t, batch(111L, 100L, "r1"), filesPerBucket = 2)
+    t.enableRowLineage()
+    graft.jobs.AppendJob.append(t, batch(222L, 60L, "r2"), filesPerBucket = 1)
+    val src = batch(111L, 100L, "r1").where(col("image_id").endsWith("1"))
+      .withColumn("caption", concat(lit("upd "), col("image_id")))
+      .withColumn("is_delete", col("image_id").endsWith("11"))
+      .drop("pbucket")
+      .unionByName(batch(333L, 8L, "ins").drop("pbucket")
+        .withColumn("is_delete", lit(false)))
+    new graft.jobs.MergeJob(t, deleteCol = Some("is_delete")).run(src)
+    // freeze the assignment, THEN re-sort the whole table twice
+    t.readWithRowId().select("image_id", "_row_id")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/ids")
+    new graft.jobs.CompactJob(t, targetFileBytes = 8L << 20).run()
+    new graft.jobs.ClusterJob(t, targetFileBytes = 8L << 20).run()
   }
 
   /** The head's (image_id, _row_id) after two whole-table rewrites —
     * must equal the pre-rewrite export exactly. */
   def q47RowLineage(s: SparkSession, dir: String): DataFrame = {
-    val root = q47Dir(s)
+    val root = Q47.dir(s)
     graft.format.QTable(s"$root/table", s).readWithRowId()
       .select(col("image_id"), col("_row_id").as("row_id"))
   }
 
   val q47Sql: String =
     s"""SELECT image_id, _row_id AS row_id
-       |FROM read_parquet('$Q47Root/exp/ids/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q47.root}/exp/ids/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q48
   /** Mirror-sync MERGE fixture (WHEN NOT MATCHED BY SOURCE THEN DELETE):
@@ -2623,50 +2271,33 @@ object Queries {
     * the table holds EXACTLY the source's keys, which DuckDB recomputes
     * as source LEFT JOIN pre with a caption coalesce — unmatched target
     * rows vanish by construction of the join shape. */
-  private val Q48Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_merge_sync_v1"
-
-  private def q48Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q48Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q48Root
-    val lockPath = Paths.get(Q48Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) {
-        new graft.format.LocalCommitIO().deleteRecursive(Q48Root)
-        val t = graft.format.QTable.create(s"$Q48Root/table", s, buckets = 4)
-        graft.jobs.AppendJob.append(t,
-          graft.synth.DataGen.generate(s, 400L, 66L).toDF(), filesPerBucket = 2)
-        val base = t.read()
-        // survivors: ~2/3 of the keys; 1 in 4 survivors sends a NULL
-        // caption (partial patch: the target's caption must survive)
-        val kept = base.where(pmod(mdHash64(col("image_id")), lit(3)) =!= 0)
-          .withColumn("caption",
-            when(pmod(mdHash64(col("image_id")), lit(4)) === 0,
-              lit(null).cast("string"))
-              .otherwise(concat(lit("q48-sync: "), col("image_id"))))
-          .drop("pbucket")
-        val ins = graft.synth.DataGen.generate(s, 6, 88L).toDF()
-          .withColumn("image_id", concat(lit("q48x-"), col("image_id")))
-          .drop("pbucket")
-        val src = kept.unionByName(ins)
-        base.select("image_id", "caption")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q48Root/exp/pre")
-        src.select("image_id", "caption")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q48Root/exp/src")
-        new graft.jobs.MergeJob(t, notMatchedBySourceDelete = true).run(src)
-        Files.createFile(Paths.get(Q48Root, "_FIXTURE_READY"))
-      }
-    } finally { lock.release(); ch.close() }
-    Q48Root
+  private val Q48 = fixture("merge_sync", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    graft.jobs.AppendJob.append(t,
+      graft.synth.DataGen.generate(s, 400L, 66L).toDF(), filesPerBucket = 2)
+    val base = t.read()
+    // survivors: ~2/3 of the keys; 1 in 4 survivors sends a NULL
+    // caption (partial patch: the target's caption must survive)
+    val kept = base.where(pmod(mdHash64(col("image_id")), lit(3)) =!= 0)
+      .withColumn("caption",
+        when(pmod(mdHash64(col("image_id")), lit(4)) === 0,
+          lit(null).cast("string"))
+          .otherwise(concat(lit("q48-sync: "), col("image_id"))))
+      .drop("pbucket")
+    val ins = graft.synth.DataGen.generate(s, 6, 88L).toDF()
+      .withColumn("image_id", concat(lit("q48x-"), col("image_id")))
+      .drop("pbucket")
+    val src = kept.unionByName(ins)
+    base.select("image_id", "caption")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
+    src.select("image_id", "caption")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/src")
+    new graft.jobs.MergeJob(t, notMatchedBySourceDelete = true).run(src)
   }
 
   /** Post-sync table state: exactly the source's keys, captions merged. */
   def q48MergeSync(s: SparkSession, dir: String): DataFrame = {
-    val root = q48Dir(s)
+    val root = Q48.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "caption")
   }
@@ -2674,8 +2305,8 @@ object Queries {
   val q48Sql: String =
     s"""SELECT s.image_id AS image_id,
        |       COALESCE(s.caption, p.caption) AS caption
-       |FROM read_parquet('$Q48Root/exp/src/*.parquet') s
-       |LEFT JOIN read_parquet('$Q48Root/exp/pre/*.parquet') p
+       |FROM read_parquet('${Q48.root}/exp/src/*.parquet') s
+       |LEFT JOIN read_parquet('${Q48.root}/exp/pre/*.parquet') p
        |ON s.image_id = p.image_id""".stripMargin
 
   // ---------------------------------------------------------------- q49
@@ -2687,40 +2318,23 @@ object Queries {
     * recomputes both from the exported pre-state as nested CASE WHENs,
     * putting discovery pruning, the CoW group rewrite, MOR position
     * deletes and the read-side anti-join under one exact oracle. */
-  private val Q49Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_update_dml_v1"
-
-  private def q49Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q49Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q49Root
-    val lockPath = Paths.get(Q49Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) {
-        new graft.format.LocalCommitIO().deleteRecursive(Q49Root)
-        val t = graft.format.QTable.create(s"$Q49Root/table", s, buckets = 4)
-        graft.jobs.AppendJob.append(t,
-          graft.synth.DataGen.generate(s, 400L, 99L).toDF(), filesPerBucket = 2)
-        t.read().select("image_id", "caption", "w", "h", "fmt")
-          .coalesce(1).write.mode("overwrite").parquet(s"$Q49Root/exp/pre")
-        new graft.jobs.UpdateJob(t).run(
-          Seq("caption" -> concat(lit("q49: "), col("image_id")),
-            "w" -> (col("w") + col("h"))),
-          col("fmt") === "png" || col("h") % 3 === 0)
-        new graft.jobs.UpdateJob(t, mergeOnRead = true).run(
-          Seq("caption" -> upper(col("caption"))), col("w") % 2 === 0)
-        Files.createFile(Paths.get(Q49Root, "_FIXTURE_READY"))
-      }
-    } finally { lock.release(); ch.close() }
-    Q49Root
+  private val Q49 = fixture("update_dml", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    graft.jobs.AppendJob.append(t,
+      graft.synth.DataGen.generate(s, 400L, 99L).toDF(), filesPerBucket = 2)
+    t.read().select("image_id", "caption", "w", "h", "fmt")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
+    new graft.jobs.UpdateJob(t).run(
+      Seq("caption" -> concat(lit("q49: "), col("image_id")),
+        "w" -> (col("w") + col("h"))),
+      col("fmt") === "png" || col("h") % 3 === 0)
+    new graft.jobs.UpdateJob(t, mergeOnRead = true).run(
+      Seq("caption" -> upper(col("caption"))), col("w") % 2 === 0)
   }
 
   /** Post-update table state after the CoW-then-MOR UPDATE chain. */
   def q49UpdateDml(s: SparkSession, dir: String): DataFrame = {
-    val root = q49Dir(s)
+    val root = Q49.dir(s)
     graft.format.QTable(s"$root/table", s).read()
       .select("image_id", "caption", "w", "h")
   }
@@ -2733,7 +2347,7 @@ object Queries {
        |    CASE WHEN fmt = 'png' OR (h % 3) = 0
        |         THEN w + h ELSE w END AS w,
        |    h
-       |  FROM read_parquet('$Q49Root/exp/pre/*.parquet'))
+       |  FROM read_parquet('${Q49.root}/exp/pre/*.parquet'))
        |SELECT image_id,
        |  CASE WHEN (w % 2) = 0 THEN upper(caption) ELSE caption END AS caption,
        |  w, h
@@ -2751,21 +2365,24 @@ object Queries {
     * engine can recompute: the final commit ran under sort-order w,h,
     * the property survived both commits, and the manifest-level w
     * spans actually tightened vs the recorded pre-cluster score. */
-  private val Q50Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cluster_by_v1"
-
-  private def q50Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q50Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q50Root
-    val lockPath = Paths.get(Q50Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ50(s)
-    } finally { lock.release(); ch.close() }
-    Q50Root
+  private val Q50 = fixture("cluster_by", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
+    graft.jobs.AppendJob.append(t,
+      graft.synth.DataGen.generate(s, 400L, 77L).toDF(), filesPerBucket = 4)
+    t.read().select("image_id", "caption", "w", "h")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/pre")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(root, "preW.txt"),
+      q50SpanScore(t, t.currentSnapshot).toString.getBytes)
+    new graft.jobs.ClusterJob(t, targetFileBytes = 48L << 10,
+      sortBy = Some(Seq("w", "h"))).run()
+    val b2 = graft.synth.DataGen.generate(s, 100L, 78L).toDF()
+      .withColumn("image_id", concat(lit("b2-"), col("image_id")))
+    graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1)
+    b2.select("image_id", "caption", "w", "h")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
+    // the DEFAULT run: no sortBy — must reuse the carried property
+    new graft.jobs.ClusterJob(t, targetFileBytes = 48L << 10).run()
   }
 
   /** Mean per-file w-span normalized by the table's w span — the
@@ -2778,32 +2395,9 @@ object Queries {
     rs.map { case (lo, hi) => (hi - lo) / span }.sum / rs.size
   }
 
-  private def buildQ50(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q50Root)
-    val t = graft.format.QTable.create(s"$Q50Root/table", s, buckets = 4)
-    graft.jobs.AppendJob.append(t,
-      graft.synth.DataGen.generate(s, 400L, 77L).toDF(), filesPerBucket = 4)
-    t.read().select("image_id", "caption", "w", "h")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q50Root/exp/pre")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(Q50Root, "preW.txt"),
-      q50SpanScore(t, t.currentSnapshot).toString.getBytes)
-    new graft.jobs.ClusterJob(t, targetFileBytes = 48L << 10,
-      sortBy = Some(Seq("w", "h"))).run()
-    val b2 = graft.synth.DataGen.generate(s, 100L, 78L).toDF()
-      .withColumn("image_id", concat(lit("b2-"), col("image_id")))
-    graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1)
-    b2.select("image_id", "caption", "w", "h")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q50Root/exp/b2")
-    // the DEFAULT run: no sortBy — must reuse the carried property
-    new graft.jobs.ClusterJob(t, targetFileBytes = 48L << 10).run()
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q50Root, "_FIXTURE_READY"))
-  }
-
   /** Post-cluster table state, gated on the --by layout claims. */
   def q50ClusterBy(s: SparkSession, dir: String): DataFrame = {
-    val root = q50Dir(s)
+    val root = Q50.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val snap = t.currentSnapshot
     val out = t.read().select("image_id", "caption", "w", "h")
@@ -2818,10 +2412,10 @@ object Queries {
 
   val q50Sql: String =
     s"""SELECT image_id, caption, w, h
-       |FROM read_parquet('$Q50Root/exp/pre/*.parquet')
+       |FROM read_parquet('${Q50.root}/exp/pre/*.parquet')
        |UNION ALL
        |SELECT image_id, caption, w, h
-       |FROM read_parquet('$Q50Root/exp/b2/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q50.root}/exp/b2/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q51
   /** CHECK-constraint fixture: a 300-row table gets two constraints
@@ -2833,30 +2427,12 @@ object Queries {
     * still in the head's properties, and zero violating rows live. A
     * regression that lets the bad batch through changes the row count
     * AND the hash (the 'bmp' rows appear). */
-  private val Q51Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_constraints_v1"
-
-  private def q51Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q51Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q51Root
-    val lockPath = Paths.get(Q51Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ51(s)
-    } finally { lock.release(); ch.close() }
-    Q51Root
-  }
-
-  private def buildQ51(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q51Root)
-    val t = graft.format.QTable.create(s"$Q51Root/table", s, buckets = 4)
+  private val Q51 = fixture("constraints", 1) { (s, root) =>
+    val t = graft.format.QTable.create(s"$root/table", s, buckets = 4)
     val b1 = graft.synth.DataGen.generate(s, 300L, 70L).toDF()
     graft.jobs.AppendJob.append(t, b1, filesPerBucket = 2)
     b1.select("image_id", "fmt", "w", "caption")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q51Root/exp/b1")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b1")
     graft.jobs.Constraints.set(t, "fmt-known", "fmt IN ('png','jpeg')")
     graft.jobs.Constraints.set(t, "w-pos", "w > 0")
     val vBefore = t.currentSnapshot.version
@@ -2870,19 +2446,17 @@ object Queries {
       } catch { case _: IllegalStateException => true }
     if (refused && t.currentSnapshot.version == vBefore)
       java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(Q51Root, "_GATE_REFUSED"))
+        java.nio.file.Paths.get(root, "_GATE_REFUSED"))
     val b2 = graft.synth.DataGen.generate(s, 60L, 72L).toDF()
       .withColumn("image_id", concat(lit("ok-"), col("image_id")))
     graft.jobs.AppendJob.append(t, b2, filesPerBucket = 1)
     b2.select("image_id", "fmt", "w", "caption")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q51Root/exp/b2")
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q51Root, "_FIXTURE_READY"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
   }
 
   /** Post-enforcement table state, gated on the refusal evidence. */
   def q51Constraints(s: SparkSession, dir: String): DataFrame = {
-    val root = q51Dir(s)
+    val root = Q51.dir(s)
     val t = graft.format.QTable(s"$root/table", s)
     val snap = t.currentSnapshot
     val out = t.read().select("image_id", "fmt", "w", "caption")
@@ -2895,10 +2469,10 @@ object Queries {
 
   val q51Sql: String =
     s"""SELECT image_id, fmt, w, caption
-       |FROM read_parquet('$Q51Root/exp/b1/*.parquet')
+       |FROM read_parquet('${Q51.root}/exp/b1/*.parquet')
        |UNION ALL
        |SELECT image_id, fmt, w, caption
-       |FROM read_parquet('$Q51Root/exp/b2/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q51.root}/exp/b2/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q52
   /** Shallow-clone fixture ([[graft.format.QTable.cloneTo]]): a 300-row
@@ -2910,37 +2484,19 @@ object Queries {
     * every one of them still exists on disk, and the source still reads
     * 300 rows at its original version — a guard regression deletes
     * source bytes and the gate empties the result. */
-  private val Q52Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_clone_v1"
-
-  private def q52Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q52Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q52Root
-    val lockPath = Paths.get(Q52Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ52(s)
-    } finally { lock.release(); ch.close() }
-    Q52Root
-  }
-
-  private def buildQ52(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q52Root)
-    val src = graft.format.QTable.create(s"$Q52Root/src", s, buckets = 4)
+  private val Q52 = fixture("clone", 1, Seq("clone")) { (s, root) =>
+    val src = graft.format.QTable.create(s"$root/src", s, buckets = 4)
     val b1 = graft.synth.DataGen.generate(s, 300L, 90L).toDF()
     graft.jobs.AppendJob.append(src, b1, filesPerBucket = 2)
     b1.select("image_id", "fmt", "w", "caption")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q52Root/exp/b1")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b1")
     val srcFiles = src.entries(src.currentSnapshot).map(_.path)
-    val clone = src.cloneTo(s"$Q52Root/clone")
+    val clone = src.cloneTo(s"$root/clone")
     val b2 = graft.synth.DataGen.generate(s, 60L, 91L).toDF()
       .withColumn("image_id", concat(lit("c-"), col("image_id")))
     graft.jobs.AppendJob.append(clone, b2, filesPerBucket = 1)
     b2.select("image_id", "fmt", "w", "caption")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q52Root/exp/b2")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/b2")
     new graft.jobs.CompactJob(clone, targetFileBytes = 8L << 20).run()
     val res = new graft.jobs.ExpireSnapshotsJob(clone).run(keepLast = 1)
     val conf = s.sessionState.newHadoopConf()
@@ -2956,14 +2512,12 @@ object Queries {
     if (res.externalSkipped == expectedExternal && sourceIntact &&
       src.read().count() == 300)
       java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(Q52Root, "_GATE_GUARDED"))
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q52Root, "_FIXTURE_READY"))
+        java.nio.file.Paths.get(root, "_GATE_GUARDED"))
   }
 
   /** The clone's post-maintenance state, gated on the ownership guard. */
   def q52Clone(s: SparkSession, dir: String): DataFrame = {
-    val root = q52Dir(s)
+    val root = Q52.dir(s)
     val t = graft.format.QTable(s"$root/clone", s)
     val out = t.read().select("image_id", "fmt", "w", "caption")
     val guarded = java.nio.file.Files.exists(
@@ -2974,10 +2528,10 @@ object Queries {
 
   val q52Sql: String =
     s"""SELECT image_id, fmt, w, caption
-       |FROM read_parquet('$Q52Root/exp/b1/*.parquet')
+       |FROM read_parquet('${Q52.root}/exp/b1/*.parquet')
        |UNION ALL
        |SELECT image_id, fmt, w, caption
-       |FROM read_parquet('$Q52Root/exp/b2/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q52.root}/exp/b2/*.parquet')""".stripMargin
 
   // ---------------------------------------------------------------- q53
   /** Sorted-append fixture (`write.sort-on-append`): the SAME batch
@@ -2987,21 +2541,19 @@ object Queries {
     * phash spans (unsigned domain) tightened vs the plain twin, and a
     * key-range probe through the stats-skipping index reads fewer files.
     * DuckDB recomputes the rows from the export. */
-  private val Q53Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_sorted_append_v1"
-
-  private def q53Dir(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val ready = Paths.get(Q53Root, "_FIXTURE_READY")
-    if (Files.exists(ready)) return Q53Root
-    val lockPath = Paths.get(Q53Root + ".lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try {
-      if (!Files.exists(ready)) buildQ53(s)
-    } finally { lock.release(); ch.close() }
-    Q53Root
+  private val Q53 = fixture("sorted_append", 1, Seq("sorted")) { (s, root) =>
+    val plain = graft.format.QTable.create(s"$root/plain", s, buckets = 2)
+    val sorted = graft.format.QTable.create(s"$root/sorted", s, buckets = 2)
+    sorted.setProperties(Map("write.sort-on-append" -> "true"))
+    val batch = graft.synth.DataGen.generate(s, 600L, 93L).toDF()
+    graft.jobs.AppendJob.append(plain, batch, filesPerBucket = 16)
+    graft.jobs.AppendJob.append(sorted, batch, filesPerBucket = 16)
+    batch.select("image_id", "fmt", "w", "caption", "phash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/exp/batch")
+    if (q53Span(sorted) < q53Span(plain) * 0.7 &&
+      q53FilesProbed(sorted) < q53FilesProbed(plain))
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(root, "_GATE_TIGHT"))
   }
 
   private def q53Span(t: graft.format.QTable): Double = {
@@ -3016,27 +2568,9 @@ object Queries {
     idx.lastSelection._1.toInt
   }
 
-  private def buildQ53(s: SparkSession): Unit = {
-    new graft.format.LocalCommitIO().deleteRecursive(Q53Root)
-    val plain = graft.format.QTable.create(s"$Q53Root/plain", s, buckets = 2)
-    val sorted = graft.format.QTable.create(s"$Q53Root/sorted", s, buckets = 2)
-    sorted.setProperties(Map("write.sort-on-append" -> "true"))
-    val batch = graft.synth.DataGen.generate(s, 600L, 93L).toDF()
-    graft.jobs.AppendJob.append(plain, batch, filesPerBucket = 16)
-    graft.jobs.AppendJob.append(sorted, batch, filesPerBucket = 16)
-    batch.select("image_id", "fmt", "w", "caption", "phash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$Q53Root/exp/batch")
-    if (q53Span(sorted) < q53Span(plain) * 0.7 &&
-      q53FilesProbed(sorted) < q53FilesProbed(plain))
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(Q53Root, "_GATE_TIGHT"))
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(Q53Root, "_FIXTURE_READY"))
-  }
-
   /** The sorted table's rows, gated on the layout evidence. */
   def q53SortedAppend(s: SparkSession, dir: String): DataFrame = {
-    val root = q53Dir(s)
+    val root = Q53.dir(s)
     val t = graft.format.QTable(s"$root/sorted", s)
     val out = t.read().select("image_id", "fmt", "w", "caption", "phash")
     if (java.nio.file.Files.exists(
@@ -3045,7 +2579,7 @@ object Queries {
 
   val q53Sql: String =
     s"""SELECT image_id, fmt, w, caption, phash
-       |FROM read_parquet('$Q53Root/exp/batch/*.parquet')""".stripMargin
+       |FROM read_parquet('${Q53.root}/exp/batch/*.parquet')""".stripMargin
 
   val withOracle: Map[String, ((SparkSession, String) => DataFrame, String)] = Map(
     "q01_manifest_stats" -> ((q01ManifestStats _, q01Sql)),
