@@ -244,19 +244,22 @@ object ParquetStats {
     listParquetWithMtime(dir, conf).map(_._1)
 
   /** Recursive parquet listing with modification times (one listing call
-    * carries the mtime — no per-file getFileStatus round trips). */
+    * carries the mtime — no per-file getFileStatus round trips). A
+    * `listStatus` walk, not `fs.listFiles`: the latter's
+    * `LocatedFileStatus` copies owner and permissions, which a local
+    * filesystem without libhadoop loads by forking `ls -ld` per file. */
   def listParquetWithMtime(dir: String, conf: Configuration): Seq[(String, Long)] = {
     val hp = new HPath(dir)
     val fs = hp.getFileSystem(conf)
     if (!fs.exists(hp)) return Nil
-    val it = fs.listFiles(hp, true)
     val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    while (it.hasNext) {
-      val f = it.next()
+    def walk(p: HPath): Unit = fs.listStatus(p).foreach { f =>
       val n = f.getPath.getName
-      if (f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+      if (f.isDirectory) walk(f.getPath)
+      else if (f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
         out += ((f.getPath.toUri.getPath, f.getModificationTime))
     }
+    walk(hp)
     out.toSeq.sortBy(_._1)
   }
 }

@@ -50,8 +50,10 @@ object ScanEquivalence {
     val joined = l.join(r, Seq("image_id"), "full_outer")
     val issue = when(col("pre_bytes").isNull, lit("missing_in_pre"))
       .when(col("post_bytes").isNull, lit("missing_in_post"))
-      .when(col("pre_caption") =!= col("post_caption"), lit("caption_mismatch"))
-      .when(col("pre_fmt") =!= col("post_fmt"), lit("fmt_mismatch"))
+      // null-safe: a caption or fmt that turns NULL (or stops being
+      // NULL) is a mismatch, where `=!=` would yield NULL and pass it
+      .when(!(col("pre_caption") <=> col("post_caption")), lit("caption_mismatch"))
+      .when(!(col("pre_fmt") <=> col("post_fmt")), lit("fmt_mismatch"))
       .when(col("pre_fmt") === "png" && col("pre_bytes") =!= col("post_bytes"),
         lit("png_bytes_mismatch"))
       .when(col("pre_fmt") =!= "png" &&

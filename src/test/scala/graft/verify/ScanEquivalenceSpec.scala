@@ -61,4 +61,20 @@ class ScanEquivalenceSpec extends AnyFunSuite {
     assert(!ok2 && bad2 == 1)
     df.unpersist()
   }
+
+  test("a caption or fmt that turns NULL, or stops being NULL, is a mismatch") {
+    val df = rows(200)
+    val Seq(a, b, c) = df.select("image_id").orderBy("image_id").head(3).map(_.getString(0)).toSeq
+    def nulled(column: String, ids: String*) = df.withColumn(column,
+      when(col("image_id").isin(ids: _*), lit(null).cast("string")).otherwise(col(column)))
+    def issues(pre: org.apache.spark.sql.DataFrame, post: org.apache.spark.sql.DataFrame) =
+      ScanEquivalence.violations(pre, post).collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    val noCaptionA = nulled("caption", a)
+    assert(issues(df, noCaptionA) == Set(a -> "caption_mismatch"), "value -> NULL")
+    assert(issues(noCaptionA, df) == Set(a -> "caption_mismatch"), "NULL -> value")
+    assert(issues(noCaptionA, noCaptionA).isEmpty, "NULL on both sides is equal")
+    assert(ScanEquivalence.check(df, nulled("caption", b, c)) == ((false, 2L)))
+    assert(issues(df, nulled("fmt", a)) == Set(a -> "fmt_mismatch"), "fmt value -> NULL")
+    df.unpersist()
+  }
 }
