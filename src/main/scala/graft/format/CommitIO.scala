@@ -3,7 +3,7 @@ package graft.format
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
 
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Storage abstraction for the qtable METADATA layer (snapshots,
@@ -46,8 +46,8 @@ trait CommitIO extends Serializable {
 }
 
 object CommitIO {
-  /** Scheme-less paths use the java.nio impl (atomic CREATE_NEW +
-    * ATOMIC_MOVE); any URI with a scheme (`file:`, `hdfs:`, ...) resolves
+  /** Scheme-less paths and `file:` URIs use the java.nio impl (atomic
+    * CREATE_NEW + ATOMIC_MOVE); any other scheme (`hdfs:`, ...) resolves
     * through Hadoop `FileSystem` — with the create-new CLAIM specialized
     * per store, because that is exactly the primitive whose atomicity is
     * store-specific (HDFS create is atomic; local POSIX needs O_EXCL;
@@ -55,7 +55,7 @@ object CommitIO {
   def forPath(root: String, conf: => Configuration): CommitIO =
     new HPath(root).toUri.getScheme match {
       case null => new LocalCommitIO
-      case "file" => new LocalFileHadoopCommitIO(conf)
+      case "file" => new LocalFileCommitIO
       case _ => new HadoopCommitIO(conf)
     }
 }
@@ -63,7 +63,8 @@ object CommitIO {
 /** Default impl for plain local paths: `java.nio` gives truly atomic
   * CREATE_NEW and ATOMIC_MOVE on POSIX. */
 class LocalCommitIO extends CommitIO {
-  private def p(s: String) = Paths.get(s)
+  /** The local file a metadata path names. */
+  protected def p(s: String): Path = Paths.get(s)
 
   override def readBytes(path: String): Array[Byte] = Files.readAllBytes(p(path))
 
@@ -211,19 +212,13 @@ class HadoopCommitIO(@transient conf: Configuration) extends CommitIO {
   }
 }
 
-/** `file:`-scheme variant: all I/O through Hadoop `FileSystem`, but the
-  * create-new CLAIM through POSIX `O_CREAT|O_EXCL` (java.nio CREATE_NEW) —
+/** `file:`-scheme roots: the java.nio impl on the URI's path. Hadoop's
+  * local filesystem, without libhadoop, forks a `chmod` for every file
+  * and directory it creates and a `readlink` for each side of a rename;
+  * here create, mkdir and the ATOMIC_MOVE publish stay in-process, and
+  * the create-new claim is POSIX `O_CREAT|O_EXCL`, where
   * `RawLocalFileSystem.create(overwrite = false)` is an exists-check
-  * followed by a create, a race window two concurrent committers can both
-  * slip through. Each store supplies its own atomic claim; this is the
-  * local store's. */
-class LocalFileHadoopCommitIO(conf: Configuration) extends HadoopCommitIO(conf) {
-  override def writeNew(path: String, bytes: Array[Byte]): Boolean = {
-    val local = Paths.get(new HPath(path).toUri.getPath)
-    Files.createDirectories(local.getParent)
-    try {
-      Files.write(local, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-  }
+  * followed by a create that two concurrent committers can both pass. */
+class LocalFileCommitIO extends LocalCommitIO {
+  override protected def p(s: String): Path = Paths.get(new HPath(s).toUri.getPath)
 }

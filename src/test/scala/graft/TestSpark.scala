@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.TestListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
@@ -52,6 +52,23 @@ object TestSpark {
       val a = body
       TestListenerBridge.drainListenerBus(sc)
       (a, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Bytes the tasks that end while `body` runs write to shuffle. */
+  def shuffleBytesDuring[A](body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    TestListenerBridge.drainListenerBus(sc)
+    val written = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      TestListenerBridge.drainListenerBus(sc)
+      (a, written.get)
     } finally sc.removeSparkListener(listener)
   }
 }

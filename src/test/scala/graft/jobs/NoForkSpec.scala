@@ -50,6 +50,11 @@ class NoForkSpec extends AnyFunSuite {
     } finally { rec.close(); Files.deleteIfExists(out) }
   }
 
+  /** The first few recorded starts, each with its command and stack. */
+  private def shown(events: Seq[RecordedEvent]): String =
+    events.take(3).map(e => e.getString("command") + "\n  " +
+      frames(e).take(24).mkString("\n  ")).mkString("\n")
+
   private def mode(p: Path): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
@@ -90,11 +95,23 @@ class NoForkSpec extends AnyFunSuite {
     assert(probe.size == 1 && frames(probe.head).exists(_.startsWith(getClass.getName)),
       s"the recording did not capture the probe process with its stack: $probe")
     val engine = rest.filter(e => frames(e).exists(engineFrame))
-    assert(engine.size == 0,
-      "process starts from the write/harvest path, e.g.:\n" +
-        engine.take(3).map(e => e.getString("command") + "\n  " +
-          frames(e).take(24).mkString("\n  ")).mkString("\n"))
+    assert(engine.size == 0, "process starts from the write/harvest path, e.g.:\n" + shown(engine))
     assert(t.read().count() == n + 64 + 3)
+  }
+
+  test("a file: root's metadata writes start no process") {
+    // warm the session and classes outside the recording
+    AppendJob.append(QTable.create(TestSpark.tmpDirUri("nofork-warm"), spark, buckets = 2),
+      DataGen.generate(spark, 100, 45L, 2).toDF(), 2)
+    var t: QTable = null
+    val events = processStarts {
+      t = QTable.create(TestSpark.tmpDirUri("nofork-uri"), spark, buckets = 2)
+      AppendJob.append(t, DataGen.generate(spark, 100, 45L, 2).toDF(), 3)
+      new CompactJob(t, targetFileBytes = 8L << 20, minGroupBytes = 1L).run()
+    }
+    val engine = events.filter(e => frames(e).exists(engineFrame))
+    assert(engine.isEmpty, "process starts on a file: root, e.g.:\n" + shown(engine))
+    assert(t.root.startsWith("file:") && t.read().count() == 100)
   }
 
   test("in-process permissions set the modes Hadoop's chmod sets") {
