@@ -28,6 +28,9 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
 
 class QTable(val root: String, val spark: SparkSession) extends Serializable {
 
+  // single-task id lookups of this table's reads answer on the driver
+  graft.spark.PointLookupStrategy.register(spark)
+
   /** Metadata storage (snapshots/manifests/hint/checkpoints) behind the
     * pluggable [[CommitIO]] commit protocol: plain paths use atomic
     * java.nio primitives, URI-scheme'd roots (file:, hdfs:, ...) resolve

@@ -48,6 +48,9 @@ class QTableExtensions extends (SparkSessionExtensions => Unit) {
     // hint rules (Spark 4.1), so under spark-sql/Hive session state the
     // same expansion must happen even earlier: at parse time
     e.injectParser((s, delegate) => new QTableSqlParser(s, delegate))
+    // SQL point lookups answer on the driver, as DataFrame ones do once
+    // a QTable has registered the same strategy
+    e.injectPlannerStrategy(_ => PointLookupStrategy)
   }
 }
 

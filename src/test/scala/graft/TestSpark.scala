@@ -7,9 +7,17 @@ import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole suite (scalatest runs suites in
-  * one JVM; Spark local mode = driver-only). */
+  * one JVM; Spark local mode = driver-only). A spec that stops it gets a
+  * fresh one on the next call. */
 object TestSpark {
-  lazy val spark: SparkSession = {
+  private var session: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (session == null || session.sparkContext.isStopped) session = build()
+    session
+  }
+
+  private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-tests")

@@ -14,12 +14,13 @@ import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
-/** The engine writes and harvests table files without starting a
-  * process. On a host without libhadoop, Hadoop's local filesystem forks
-  * a `chmod` for every file, `.crc` sidecar and directory it creates and
-  * an `ls -ld` for every file a located listing returns; a JFR recording
-  * of `jdk.ProcessStart` events over a maintenance sequence pins that
-  * none of those forks comes back. The files the engine writes keep the
+/** The engine writes and harvests table files, and reads a driver
+  * lookup's file, without starting a process. On a host without
+  * libhadoop, Hadoop's local filesystem forks a `chmod` for every file,
+  * `.crc` sidecar and directory it creates and an `ls -ld` for every
+  * file a located listing returns; a JFR recording of
+  * `jdk.ProcessStart` events over a maintenance sequence pins that none
+  * of those forks comes back. The files the engine writes keep the
   * modes and checksum sidecars of a plain Spark parquet write. */
 class NoForkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -75,6 +76,15 @@ class NoForkSpec extends AnyFunSuite {
     (parts.map(mode).toSet, all.filter(Files.isDirectory(_)).map(mode).toSet)
   }
 
+  /** An id lookup answered on the driver, which opens the data file in
+    * this JVM rather than in a task. */
+  private def driverLookup(t: QTable, i: Long): Unit = {
+    val q = t.readIndexed()._1.where(col("image_id") === f"img$i%012d").select("caption")
+    assert(q.collect().length == 1)
+    assert(q.queryExecution.executedPlan.exists(_.isInstanceOf[graft.spark.PointLookupExec]),
+      "the lookup did not answer on the driver")
+  }
+
   test("append, compact, cluster, merge and remove-orphans start no process") {
     val t = QTable.create(TestSpark.tmpDir("nofork"), spark, buckets = 2)
     val n = 400L
@@ -90,6 +100,7 @@ class NoForkSpec extends AnyFunSuite {
       new ClusterJob(t, targetFileBytes = 64L << 10, minGroupBytes = 1L).run()
       new MergeJob(t).run(DataGen.correctionsDF(spark, n + 64, 42L, inserts = 3))
       new RemoveOrphanFilesJob(t, graceMs = 0L).run()
+      driverLookup(t, 5)
     }
     val (probe, rest) = events.partition(_.getString("command").contains(ProbeArg))
     assert(probe.size == 1 && frames(probe.head).exists(_.startsWith(getClass.getName)),
@@ -108,6 +119,7 @@ class NoForkSpec extends AnyFunSuite {
       t = QTable.create(TestSpark.tmpDirUri("nofork-uri"), spark, buckets = 2)
       AppendJob.append(t, DataGen.generate(spark, 100, 45L, 2).toDF(), 3)
       new CompactJob(t, targetFileBytes = 8L << 20, minGroupBytes = 1L).run()
+      driverLookup(t, 5)
     }
     val engine = events.filter(e => frames(e).exists(engineFrame))
     assert(engine.isEmpty, "process starts on a file: root, e.g.:\n" + shown(engine))

@@ -361,6 +361,21 @@ class QTableSourceSpec extends AnyFunSuite {
       s"source scan read $read of $total files — manifest index not engaged")
   }
 
+  test("SQL: an id lookup on a qtable view plans PointLookupExec and answers without a job") {
+    val t = fresh(200)
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW qsrc_lookup USING qtable " +
+      s"OPTIONS (path '${t.root}')")
+    val id = "img000000000042"
+    val q = spark.sql(s"SELECT caption FROM qsrc_lookup WHERE image_id = '$id'")
+    val (rows, jobs) = TestSpark.jobsDuring(q.collect().toSeq)
+    assert(q.queryExecution.executedPlan.exists(_.isInstanceOf[PointLookupExec]),
+      q.queryExecution.executedPlan.toString)
+    assert(jobs.isEmpty, s"the lookup launched $jobs")
+    assert(rows.map(_.getString(0)) == Seq(DataGen.caption(42, 42L)))
+    assert(rows == t.read().where(col("image_id") === id).select("caption").rdd.collect().toSeq)
+    spark.catalog.dropTempView("qsrc_lookup")
+  }
+
   test("write side: mode(append).save is an AppendJob commit; other modes refused") {
     val t = fresh(100)                                         // v1
     import spark.implicits._
