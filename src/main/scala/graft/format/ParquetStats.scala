@@ -2,7 +2,8 @@ package graft.format
 
 import graft.model.DataFileEntry
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
@@ -15,14 +16,31 @@ import scala.jdk.CollectionConverters._
   */
 object ParquetStats {
 
+  /** A listed part file: the path a manifest records (scheme-stripped)
+    * with the length and mtime its listing returned. */
+  final case class Listed(path: String, len: Long, mtime: Long)
+
+  /** The read options `ParquetFileReader.open(InputFile)` would build
+    * for every file. Building them reads a fresh Hadoop `Configuration`,
+    * so a batch of footer reads shares one set. */
+  private def readOptions(): ParquetReadOptions = ParquetReadOptions.builder().build()
+
+  /** One file's entry, with its own status call and read options. */
   def entryFor(pathStr: String, conf: Configuration): DataFileEntry = {
+    val hp = new HPath(pathStr)
+    val st = hp.getFileSystem(conf).getFileStatus(hp)
+    entryFor(Listed(pathStr, st.getLen, st.getModificationTime), conf, readOptions())
+  }
+
+  /** One file's entry from its listing: no status call per file. */
+  private def entryFor(file: Listed, conf: Configuration,
+      options: ParquetReadOptions): DataFileEntry = {
     import graft.model.ColStat
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val hp = new HPath(pathStr)
-    val fs = hp.getFileSystem(conf)
-    val size = fs.getFileStatus(hp).getLen
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(hp, conf))
+    val pathStr = file.path
+    val status = new FileStatus(file.len, false, 1, 0L, file.mtime, new HPath(pathStr))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf), options)
     try {
       val footer = reader.getFooter
       var rows = 0L
@@ -110,7 +128,7 @@ object ParquetStats {
       DataFileEntry(
         path = pathStr,
         rowCount = rows,
-        byteCount = size,
+        byteCount = file.len,
         pbucketMin = if (pbMin == Int.MaxValue) 0 else pbMin,
         pbucketMax = if (pbMax == Int.MinValue) 0 else pbMax,
         phashMin = phMin,
@@ -199,30 +217,32 @@ object ParquetStats {
     * footer I/O through one node). */
   val DistributeThreshold = 64
 
-  /** Footer reads for a batch of files, parallelized on the driver (cheap
-    * metadata I/O for per-group output batches). */
-  def entriesFor(paths: Seq[String], conf: Configuration): Seq[DataFileEntry] =
-    paths.par.map(p => entryFor(p, conf)).seq.sortBy(_.path)
+  /** Footer reads for a batch of listed files, parallelized on the
+    * driver (cheap metadata I/O for per-group output batches) with one
+    * set of read options. */
+  def entriesFor(files: Seq[Listed], conf: Configuration): Seq[DataFileEntry] = {
+    val options = readOptions()
+    files.par.map(f => entryFor(f, conf, options)).seq.sortBy(_.path)
+  }
 
   /** Footer reads sized by batch: small batches stay a driver loop, large
-    * ones run as a small Spark job over the path list — O(files/executors)
+    * ones run as a small Spark job over the file list — O(files/executors)
     * wall time at cluster scale. */
-  def entriesFor(paths: Seq[String], spark: org.apache.spark.sql.SparkSession,
-      threshold: Int = DistributeThreshold): Seq[DataFileEntry] = {
-    val conf = spark.sessionState.newHadoopConf()
-    if (paths.size < threshold) entriesFor(paths, conf)
+  def entriesFor(files: Seq[Listed], spark: org.apache.spark.sql.SparkSession,
+      conf: Configuration, threshold: Int = DistributeThreshold): Seq[DataFileEntry] =
+    if (files.size < threshold) entriesFor(files, conf)
     else {
       val props = confProps(conf)
-      val slices = math.min(paths.size,
+      val slices = math.min(files.size,
         math.max(2, spark.sparkContext.defaultParallelism * 2))
-      spark.sparkContext.parallelize(paths, slices)
+      spark.sparkContext.parallelize(files, slices)
         .mapPartitions { it =>
           val c = confFromProps(props)
-          it.map(p => entryFor(p, c))
+          val options = readOptions()
+          it.map(f => entryFor(f, c, options))
         }
         .collect().toSeq.sortBy(_.path)
     }
-  }
 
   /** Hadoop Configuration is not java-serializable; ship its effective
     * key/values and rebuild executor-side. */
@@ -241,25 +261,30 @@ object ParquetStats {
 
   /** List the part-*.parquet files under a directory (recursive). */
   def listParquet(dir: String, conf: Configuration): Seq[String] =
-    listParquetWithMtime(dir, conf).map(_._1)
+    listParquetFiles(dir, conf).map(_.path)
 
-  /** Recursive parquet listing with modification times (one listing call
-    * carries the mtime — no per-file getFileStatus round trips). A
-    * `listStatus` walk, not `fs.listFiles`: the latter's
+  def listParquetWithMtime(dir: String, conf: Configuration): Seq[(String, Long)] =
+    listParquetFiles(dir, conf).map(f => (f.path, f.mtime))
+
+  /** Recursive parquet listing with each file's length and mtime (one
+    * listing call carries both — no per-file getFileStatus round trips).
+    * A `listStatus` walk, not `fs.listFiles`: the latter's
     * `LocatedFileStatus` copies owner and permissions, which a local
-    * filesystem without libhadoop loads by forking `ls -ld` per file. */
-  def listParquetWithMtime(dir: String, conf: Configuration): Seq[(String, Long)] = {
+    * filesystem without libhadoop loads by forking `ls -ld` per file.
+    * Names starting with `_` or `.` are skipped: writers stage files
+    * under such names until they are complete. */
+  def listParquetFiles(dir: String, conf: Configuration): Seq[Listed] = {
     val hp = new HPath(dir)
     val fs = hp.getFileSystem(conf)
     if (!fs.exists(hp)) return Nil
-    val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+    val out = scala.collection.mutable.ArrayBuffer[Listed]()
     def walk(p: HPath): Unit = fs.listStatus(p).foreach { f =>
       val n = f.getPath.getName
       if (f.isDirectory) walk(f.getPath)
       else if (f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        out += ((f.getPath.toUri.getPath, f.getModificationTime))
+        out += Listed(f.getPath.toUri.getPath, f.getLen, f.getModificationTime)
     }
     walk(hp)
-    out.toSeq.sortBy(_._1)
+    out.toSeq.sortBy(_.path)
   }
 }

@@ -1367,14 +1367,16 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   /** Stats-harvest every parquet file a job just wrote under `dir` —
     * driver-parallel for per-group batches, a Spark job above the
     * distribute threshold (whole-table rewrites at cluster scale). */
-  def harvest(dir: String): Seq[DataFileEntry] =
+  def harvest(dir: String): Seq[DataFileEntry] = {
+    val conf = hadoopConf
     // zero-row part files (Spark's writer emits one for partition 0 of
     // an exact-binned shuffle whose first bin is empty) carry no data
     // and no stats: committing them would pollute manifests with
     // entries every planner must special-case — skip them; the orphan
     // sweep reclaims the bytes
-    ParquetStats.entriesFor(ParquetStats.listParquet(dir, hadoopConf), spark)
+    ParquetStats.entriesFor(ParquetStats.listParquetFiles(dir, conf), spark, conf)
       .filter(_.rowCount > 0L)
+  }
 }
 
 object QTable {

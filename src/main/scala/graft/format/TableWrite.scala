@@ -1,6 +1,16 @@
 package graft.format
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.{FileOutputCommitter, FileOutputFormat}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, GraftBridge, RuntimeConfig, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
+
+import java.util.UUID
 
 /** The one data-file write path: every job funnels here so table files
   * uniformly carry the image_id bloom (sized by `spark.graft.bloom.ndv`,
@@ -25,10 +35,10 @@ object TableWrite {
     * sibling write is in flight. Keyed weakly by session so short-lived
     * job sessions do not accumulate. */
   private val inFlight =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+    new java.util.WeakHashMap[SparkSession,
       (Array[Int], Option[String])]()
 
-  private def enterTs(s: org.apache.spark.sql.SparkSession): Unit =
+  private def enterTs(s: SparkSession): Unit =
     inFlight.synchronized {
       val st = Option(inFlight.get(s)).getOrElse {
         val fresh = (Array(0), s.conf.getOption(tsKey))
@@ -38,7 +48,7 @@ object TableWrite {
       st._1(0) += 1
     }
 
-  private def exitTs(s: org.apache.spark.sql.SparkSession): Unit =
+  private def exitTs(s: SparkSession): Unit =
     inFlight.synchronized {
       Option(inFlight.get(s)).foreach { st =>
         st._1(0) -= 1
@@ -52,43 +62,95 @@ object TableWrite {
       }
     }
 
-  def parquet(df: DataFrame, dir: String): Unit = {
-    val conf = df.sparkSession.conf
-    // the engine's files store timestamps as INT64 micros, never the
-    // legacy INT96: parquet-mr writes NO usable stats for INT96, which
-    // would blind the footer harvest — and with it stats skipping and
-    // the days(ts) partition pruning — on any timestamp column. Session
-    // conf (no per-write option exists); reference-counted set/restore
-    // (see [[enterTs]]), and rewrites of old INT96 files migrate them
-    // to micros.
-    enterTs(df.sparkSession)
-    try {
-      // `file:` and scheme-less outputs: part files, .crc sidecars and
-      // directories get their modes in-process, not from a forked chmod
-      // each. Spark copies write options into the job's Hadoop conf; the
-      // FileSystem cache is JVM-wide and keyed by scheme, so it is
-      // bypassed or the first `file:` instance would serve every write
-      var w = df.write
-        .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
-        .option("fs.file.impl.disable.cache", "true")
+  /** Runs one table write with TIMESTAMP_MICROS set: the engine's files
+    * store timestamps as INT64 micros, never the legacy INT96. parquet-mr
+    * writes NO usable stats for INT96, which would blind the footer
+    * harvest — and with it stats skipping and the days(ts) partition
+    * pruning — on any timestamp column. Session conf (no per-write
+    * option exists); reference-counted set/restore (see [[enterTs]]),
+    * and rewrites of old INT96 files migrate them to micros. */
+  private def withMicros[A](s: SparkSession)(write: => A): A = {
+    enterTs(s)
+    try write finally exitTs(s)
+  }
+
+  /** The options every table file is written with, by a Spark job or
+    * on the driver. */
+  def writeOptions(conf: RuntimeConfig): Map[String, String] = {
+    // `file:` and scheme-less outputs: part files, .crc sidecars and
+    // directories get their modes in-process, not from a forked chmod
+    // each. Spark copies write options into the job's Hadoop conf; the
+    // FileSystem cache is JVM-wide and keyed by scheme, so it is
+    // bypassed or the first `file:` instance would serve every write
+    val fs = Map(
+      "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val bloom =
       if (conf.get("spark.graft.bloom.enabled", "true").toBoolean &&
           !sys.env.get("GRAFT_BLOOM_OFF").contains("1"))
-        w = w.option("parquet.bloom.filter.enabled#image_id", "true")
-          .option("parquet.bloom.filter.expected.ndv#image_id",
-            conf.get("spark.graft.bloom.ndv", "4096"))
-      // zstd effort dial (`spark.graft.parquet.zstd.level`, env
-      // GRAFT_ZSTD_LEVEL for A/B runs; default 1): parquet-mr's default
-      // level 3 spends compression search on the fat `bytes` column,
-      // which holds ALREADY-COMPRESSED image payloads where no level
-      // finds anything — measured on the 1.1 GiB bench table, level 1
-      // cuts compact write wall ~8-12% for +1.8% output size
-      // (OPTIMIZATION_r06.md, guide §6). Deployments with compressible
-      // payloads can raise it per-table economics via the conf.
-      val zl = sys.env.get("GRAFT_ZSTD_LEVEL")
-        .orElse(conf.getOption("spark.graft.parquet.zstd.level"))
-        .getOrElse("1")
-      w = w.option("parquet.compression.codec.zstd.level", zl)
-      w.parquet(dir)
-    } finally exitTs(df.sparkSession)
+        Map("parquet.bloom.filter.enabled#image_id" -> "true",
+          "parquet.bloom.filter.expected.ndv#image_id" -> conf.get("spark.graft.bloom.ndv", "4096"))
+      else Map.empty[String, String]
+    // zstd effort dial (`spark.graft.parquet.zstd.level`, env
+    // GRAFT_ZSTD_LEVEL for A/B runs; default 1): parquet-mr's default
+    // level 3 spends compression search on the fat `bytes` column,
+    // which holds ALREADY-COMPRESSED image payloads where no level
+    // finds anything — measured on the 1.1 GiB bench table, level 1
+    // cuts compact write wall ~8-12% for +1.8% output size
+    // (OPTIMIZATION_r06.md, guide §6). Deployments with compressible
+    // payloads can raise it per-table economics via the conf.
+    val zl = sys.env.get("GRAFT_ZSTD_LEVEL")
+      .orElse(conf.getOption("spark.graft.parquet.zstd.level"))
+      .getOrElse("1")
+    fs ++ bloom + ("parquet.compression.codec.zstd.level" -> zl)
+  }
+
+  def parquet(df: DataFrame, dir: String): Unit =
+    withMicros(df.sparkSession) {
+      df.write.options(writeOptions(df.sparkSession.conf)).parquet(dir)
+    }
+
+  /** Writes part files into the new directory `dir` on the driver, with
+    * the Parquet writer, options and Hadoop conf a Spark write job uses:
+    * `files` holds each file's task partition index and rows of
+    * `schema`. The files get a job's names, bytes, modes, `.crc`
+    * sidecars and `_SUCCESS` marker. Each is written under a hidden
+    * name, which listings skip, and renamed into place once closed. An
+    * existing `dir` is refused, as the job's `ErrorIfExists` save mode
+    * does. */
+  def parquetOnDriver(spark: SparkSession, schema: StructType, dir: String,
+      files: Seq[(Int, Iterator[InternalRow])]): Unit = withMicros(spark) {
+    val options = writeOptions(spark.conf)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
+    val out = new HPath(dir)
+    val fs = out.getFileSystem(job.getConfiguration)
+    val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    if (fs.exists(qualified)) throw GraftBridge.outputPathExists(qualified)
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    FileOutputFormat.setOutputPath(job, qualified)
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, CaseInsensitiveMap(options), schema)
+    val conf = job.getConfiguration
+    fs.mkdirs(qualified)
+    val jobUuid = UUID.randomUUID().toString
+    val jobId = new JobID(jobUuid.take(8), 0)
+    files.foreach { case (p, rows) =>
+      val task = new TaskAttemptContextImpl(conf,
+        new TaskAttemptID(new TaskID(jobId, TaskType.MAP, p), 0))
+      val name = f"part-$p%05d-$jobUuid-c000" + factory.getFileExtension(task)
+      val staged = new HPath(qualified, "." + name)
+      val w = factory.newInstance(staged.toString, schema, task)
+      try rows.foreach(w.write)
+      catch { case e: Throwable =>
+        try { w.close(); fs.delete(staged, false) } catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
+      }
+      w.close()
+      if (!fs.rename(staged, new HPath(qualified, name)))
+        throw new java.io.IOException(s"could not rename $staged to $name")
+    }
+    if (conf.getBoolean(FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, true))
+      fs.create(new HPath(qualified, FileOutputCommitter.SUCCEEDED_FILE_NAME), true).close()
   }
 }

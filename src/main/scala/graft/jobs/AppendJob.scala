@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
   * initial file granularity; tests deliberately write MANY small files so
   * the maintenance jobs have real work (FIXTURES.md §1).
   *
+  * A batch is range-partitioned into `buckets x filesPerBucket` files.
+  * A small batch of one input partition is laid out and written on the
+  * driver ([[LocalAppend]]), with no Spark job but the collect; the
+  * files are the ones the range shuffle and write job would write.
+  *
   * `write.sort-on-append = true` (Iceberg `write.sort-order` analogue):
   * each batch is range-partitioned and sorted WITHIN the batch by the
   * table's sort key — the `sort.order` columns lexicographically, or the
@@ -41,7 +46,13 @@ object AppendJob {
   }
 
   def append(table: QTable, rows: DataFrame, filesPerBucket: Int = 1,
-      jobId: String = java.util.UUID.randomUUID().toString): Snapshot = {
+      jobId: String = java.util.UUID.randomUUID().toString): Snapshot =
+    write(table, rows, filesPerBucket, jobId, onDriver = true)
+
+  /** [[append]], with the driver path ([[LocalAppend]]) allowed or not:
+    * both write the same files. */
+  private[graft] def write(table: QTable, rows: DataFrame, filesPerBucket: Int,
+      jobId: String, onDriver: Boolean): Snapshot = {
     val snap = table.currentSnapshot
     val b = snap.buckets
     val dir = table.newDataDir(jobId, "append")
@@ -52,10 +63,15 @@ object AppendJob {
       snap)
     // CHECK constraints veto the batch before any write (streaming
     // ingest and SQL INSERT route through here, so they are covered)
+    val constrained = Constraints.of(snap).nonEmpty
     Constraints.enforce(Constraints.logicalView(aligned, snap), snap, "append")
     val sortOn = snap.props.get("write.sort-on-append").contains("true")
-    val dayField = graft.format.DayPartition.fieldOf(snap)
-    val laidOut = dayField match {
+    // range files on (pbucket, image_id), or on pbucket and the sort
+    // key: a file holds a contiguous key range, so it may straddle two
+    // buckets where a bucket splits across files
+    val keys =
+      if (sortOn) col("pbucket") +: sortKeys(snap) else Seq(col("pbucket"), col("image_id"))
+    graft.format.DayPartition.fieldOf(snap) match {
       case Some(f) =>
         // days(ts) spec: EXACT-bin the batch on (day, bucket, subfile)
         // so no output file ever straddles a day — that per-file
@@ -66,7 +82,7 @@ object AppendJob {
         // extra column-pruned pass computes the batch's day span
         // (JobPlanning.dayBins — shared with the merge/update/upsert
         // writers so no job erodes the date layout).
-        JobPlanning.dayBins(aligned, f, b, filesPerBucket) match {
+        val laidOut = JobPlanning.dayBins(aligned, f, b, filesPerBucket) match {
           case None =>
             // all-null partition source: no day to isolate, plain layout
             aligned.repartitionByRange(nFiles, col("pbucket"), col("image_id"))
@@ -76,17 +92,16 @@ object AppendJob {
             if (sortOn) binned.sortWithinPartitions(sortKeys(snap): _*)
             else binned.sortWithinPartitions(col("image_id"))
         }
+        graft.format.TableWrite.parquet(laidOut, dir)
       case None =>
-        if (!sortOn)
-          // range-partition on (pbucket, image_id): files align with
-          // buckets, splitting each bucket into ~filesPerBucket files
-          aligned.repartitionByRange(nFiles, col("pbucket"), col("image_id"))
-        else {
-          val all = col("pbucket") +: sortKeys(snap)
-          aligned.repartitionByRange(nFiles, all: _*).sortWithinPartitions(all: _*)
+        // a small one-partition batch is laid out and written on the
+        // driver; anything else runs the range shuffle and a write job
+        if (!(onDriver && !constrained && LocalAppend.write(aligned, keys, sortOn, nFiles, dir))) {
+          val ranged = aligned.repartitionByRange(nFiles, keys: _*)
+          graft.format.TableWrite.parquet(
+            if (sortOn) ranged.sortWithinPartitions(keys: _*) else ranged, dir)
         }
     }
-    graft.format.TableWrite.parquet(laidOut, dir)
     val files = table.harvest(dir)
     // append-only commit: parent manifests carried by reference, new files
     // land in fresh manifests — O(append) metadata, not O(table)

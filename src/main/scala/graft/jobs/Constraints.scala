@@ -42,8 +42,9 @@ object Constraints {
 
   /** Validate new rows (logical column names) against every table
     * constraint in one aggregate pass; throws listing each violated
-    * constraint with its violation count. No-op when none are set. */
-  def enforce(rows: DataFrame, snap: Snapshot, context: String): Unit = {
+    * constraint with its violation count. No-op when none are set:
+    * `rows` is then never built. */
+  def enforce(rows: => DataFrame, snap: Snapshot, context: String): Unit = {
     val cs = of(snap)
     if (cs.isEmpty) return
     // positional aliases: constraint names need no column-name hygiene

@@ -1,10 +1,16 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Public bridge to the `private[sql]` Column <-> Expression converters
   * (the standard technique third-party Spark extensions use to expose
-  * custom Catalyst expressions as user-facing Columns on Spark 4.x).
+  * custom Catalyst expressions as user-facing Columns on Spark 4.x),
+  * and to the `private[spark]` pieces of Spark's own write path that
+  * the driver append reuses.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -44,4 +50,16 @@ object GraftBridge {
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd.map(_.copy()), df.schema, isStreaming = false)
   }
+
+  /** Spark's range-partition bounds (`RangePartitioner.determineBounds`)
+    * over weighted candidate keys: at most `partitions - 1` bounds. */
+  def rangeBounds(candidates: ArrayBuffer[(InternalRow, Float)], partitions: Int,
+      ordering: Ordering[InternalRow]): Array[InternalRow] =
+    org.apache.spark.RangePartitioner.determineBounds(candidates, partitions)(
+      ordering, scala.reflect.classTag[InternalRow])
+
+  /** The error a write with the `ErrorIfExists` save mode raises when its
+    * output path exists. */
+  def outputPathExists(path: Path): Throwable =
+    errors.QueryCompilationErrors.outputPathAlreadyExistsError(path)
 }

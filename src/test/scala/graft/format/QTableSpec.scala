@@ -65,14 +65,15 @@ class QTableSpec extends AnyFunSuite {
     val root = TestSpark.tmpDirUri("qtable-dharv")
     val t = QTable.create(root, spark, buckets = 4)
     AppendJob.append(t, DataGen.generate(spark, 200, 42L, 4).toDF(), filesPerBucket = 4)
-    val paths = ParquetStats.listParquet(t.dataDir, t.hadoopConf)
-    assert(paths.size >= 16)
-    val driverSide = ParquetStats.entriesFor(paths, t.hadoopConf)
+    val conf = t.hadoopConf
+    val files = ParquetStats.listParquetFiles(t.dataDir, conf)
+    assert(files.size >= 16)
+    val driverSide = ParquetStats.entriesFor(files, conf)
     // threshold forced below the batch size => the Spark-job path runs
-    val sparkSide = ParquetStats.entriesFor(paths, spark, threshold = 4)
+    val sparkSide = ParquetStats.entriesFor(files, spark, conf, threshold = 4)
     assert(sparkSide == driverSide)
     // and above the batch size => the driver path runs, same answer
-    assert(ParquetStats.entriesFor(paths, spark, threshold = 10000) == driverSide)
+    assert(ParquetStats.entriesFor(files, spark, conf, threshold = 10000) == driverSide)
   }
 
   test("version listing and snapshot lineage chain") {

@@ -14,8 +14,8 @@ import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
-/** The engine writes and harvests table files, and reads a driver
-  * lookup's file, without starting a process. On a host without
+/** The engine writes and harvests table files, on the driver too, and
+  * reads a driver lookup's file, without starting a process. On a host without
   * libhadoop, Hadoop's local filesystem forks a `chmod` for every file,
   * `.crc` sidecar and directory it creates and an `ls -ld` for every
   * file a located listing returns; a JFR recording of
@@ -85,6 +85,15 @@ class NoForkSpec extends AnyFunSuite {
       "the lookup did not answer on the driver")
   }
 
+  /** 16 rows from id `from` in one input partition: an append the
+    * driver lays out and writes itself, with one job (the collect). */
+  private def driverAppend(t: QTable, from: Long): Unit = {
+    import spark.implicits._
+    val rows = spark.range(from, from + 16, 1, 1).map(i => DataGen.imageRow(i, 48L)).toDF()
+    val jobs = TestSpark.jobsDuring(AppendJob.append(t, rows, 2))._2
+    assert(jobs.size == 1, s"the append did not run on the driver: $jobs")
+  }
+
   test("append, compact, cluster, merge and remove-orphans start no process") {
     val t = QTable.create(TestSpark.tmpDir("nofork"), spark, buckets = 2)
     val n = 400L
@@ -96,6 +105,7 @@ class NoForkSpec extends AnyFunSuite {
       new ProcessBuilder("true", ProbeArg).start().waitFor()
       AppendJob.append(t, DataGen.generate(spark, n + 64, 43L, 2).toDF()
         .where(col("image_id") >= f"img$n%012d"), 3)
+      driverAppend(t, n + 100)
       new CompactJob(t, targetFileBytes = 8L << 20, minGroupBytes = 1L).run()
       new ClusterJob(t, targetFileBytes = 64L << 10, minGroupBytes = 1L).run()
       new MergeJob(t).run(DataGen.correctionsDF(spark, n + 64, 42L, inserts = 3))
@@ -107,7 +117,7 @@ class NoForkSpec extends AnyFunSuite {
       s"the recording did not capture the probe process with its stack: $probe")
     val engine = rest.filter(e => frames(e).exists(engineFrame))
     assert(engine.size == 0, "process starts from the write/harvest path, e.g.:\n" + shown(engine))
-    assert(t.read().count() == n + 64 + 3)
+    assert(t.read().count() == n + 64 + 16 + 3)
   }
 
   test("a file: root's metadata writes start no process") {
@@ -118,12 +128,13 @@ class NoForkSpec extends AnyFunSuite {
     val events = processStarts {
       t = QTable.create(TestSpark.tmpDirUri("nofork-uri"), spark, buckets = 2)
       AppendJob.append(t, DataGen.generate(spark, 100, 45L, 2).toDF(), 3)
+      driverAppend(t, 100)
       new CompactJob(t, targetFileBytes = 8L << 20, minGroupBytes = 1L).run()
       driverLookup(t, 5)
     }
     val engine = events.filter(e => frames(e).exists(engineFrame))
     assert(engine.isEmpty, "process starts on a file: root, e.g.:\n" + shown(engine))
-    assert(t.root.startsWith("file:") && t.read().count() == 100)
+    assert(t.root.startsWith("file:") && t.read().count() == 116)
   }
 
   test("in-process permissions set the modes Hadoop's chmod sets") {
@@ -146,6 +157,7 @@ class NoForkSpec extends AnyFunSuite {
     val t = QTable.create(TestSpark.tmpDir("nofork-modes"), spark, buckets = 2)
     AppendJob.append(t, DataGen.generate(spark, 200, 44L, 4).toDF(), 3)
     new CompactJob(t, targetFileBytes = 8L << 20, minGroupBytes = 1L).run()
+    driverAppend(t, 200)
     val sibling = Paths.get(TestSpark.tmpDir("nofork-plain"))
     DataGen.generate(spark, 200, 44L, 4).toDF().repartition(3)
       .write.parquet(sibling.resolve("plain").toString)
