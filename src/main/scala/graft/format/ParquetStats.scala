@@ -263,9 +263,6 @@ object ParquetStats {
   def listParquet(dir: String, conf: Configuration): Seq[String] =
     listParquetFiles(dir, conf).map(_.path)
 
-  def listParquetWithMtime(dir: String, conf: Configuration): Seq[(String, Long)] =
-    listParquetFiles(dir, conf).map(f => (f.path, f.mtime))
-
   /** Recursive parquet listing with each file's length and mtime (one
     * listing call carries both — no per-file getFileStatus round trips).
     * A `listStatus` walk, not `fs.listFiles`: the latter's

@@ -1403,7 +1403,7 @@ object QTable {
 
   /** True iff `path` lives under `root` on the SAME filesystem
     * (scheme + authority + path-prefix). Harvested entry paths are
-    * recorded scheme-stripped ([[ParquetStats.listParquetWithMtime]]
+    * recorded scheme-stripped ([[ParquetStats.listParquetFiles]]
     * records `getPath.toUri.getPath`), so an entry WITHOUT a scheme is
     * compared path-only against the root: a scheme-qualified table root
     * (`file:///x`, `s3a://...`) must still own its own harvested files —

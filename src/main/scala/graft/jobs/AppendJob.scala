@@ -63,7 +63,6 @@ object AppendJob {
       snap)
     // CHECK constraints veto the batch before any write (streaming
     // ingest and SQL INSERT route through here, so they are covered)
-    val constrained = Constraints.of(snap).nonEmpty
     Constraints.enforce(Constraints.logicalView(aligned, snap), snap, "append")
     val sortOn = snap.props.get("write.sort-on-append").contains("true")
     // range files on (pbucket, image_id), or on pbucket and the sort
@@ -96,7 +95,7 @@ object AppendJob {
       case None =>
         // a small one-partition batch is laid out and written on the
         // driver; anything else runs the range shuffle and a write job
-        if (!(onDriver && !constrained && LocalAppend.write(aligned, keys, sortOn, nFiles, dir))) {
+        if (!(onDriver && LocalAppend.write(aligned, keys, sortOn, nFiles, dir))) {
           val ranged = aligned.repartitionByRange(nFiles, keys: _*)
           graft.format.TableWrite.parquet(
             if (sortOn) ranged.sortWithinPartitions(keys: _*) else ranged, dir)

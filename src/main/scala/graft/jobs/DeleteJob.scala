@@ -177,8 +177,7 @@ object DeleteJob {
           .sortWithinPartitions("file_path", "pos"), dir)
 
       val conf = table.hadoopConf
-      val sizes = graft.format.ParquetStats
-        .listParquetWithMtime(dir, conf).map(_._1)
+      val sizes = graft.format.ParquetStats.listParquet(dir, conf)
         .map(p => QTable.fileName(p) -> p).toMap
       val entries = table.spark.read.schema(table.deleteSchema).parquet(dir)
         .groupBy(col("_metadata.file_path").as("p"))

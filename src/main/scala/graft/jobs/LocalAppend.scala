@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable.ArrayBuffer
@@ -28,7 +30,10 @@ import scala.collection.mutable.ArrayBuffer
 object LocalAppend {
 
   /** The largest batch, by Spark's size estimate of its plan, that the
-    * driver collects and writes itself. */
+    * driver collects and writes itself. It bounds what the driver holds;
+    * it is not a crossover. On 4 cores the driver path took 0.42-0.74x the
+    * job path's time for one-partition batches of about 7 MiB, and
+    * 0.51-0.79x at 11-26 MiB, into 4, 64 and 128 files (`BENCH/NOTES.md`). */
   val MaxEstimateBytes: Long = 8L << 20
 
   /** The most rows Spark's range sample over `nFiles` partitions holds
@@ -40,16 +45,21 @@ object LocalAppend {
   /** Writes `aligned` into `dir` as `nFiles` range files by `keys` (each
     * sorted by `keys` when `sorted`), as the job path would. Returns false,
     * having written nothing, when the batch does not qualify: its estimate
-    * is over [[MaxEstimateBytes]], its plan has more than one input
-    * partition, or it is empty or larger than the range sample. */
+    * is over [[MaxEstimateBytes]], its plan shuffles or has more than one
+    * input partition, or it is empty or larger than the range sample. */
   def write(aligned: DataFrame, keys: Seq[Column], sorted: Boolean, nFiles: Int,
       dir: String): Boolean = {
     val spark = aligned.sparkSession
     if (aligned.queryExecution.optimizedPlan.stats.sizeInBytes > MaxEstimateBytes) return false
     val plan = aligned.select(col("*") +: keys: _*).queryExecution.executedPlan
-    if (plan.execute().getNumPartitions != 1) return false
-    val rows = plan.executeCollect()
+    // a plan that shuffles keeps the job path: an adaptive plan would run
+    // its shuffle stages on execute(), and may still end in several
+    // partitions
+    if (plan.isInstanceOf[AdaptiveSparkPlanExec] || plan.exists(_.isInstanceOf[Exchange]) ||
+      plan.execute().getNumPartitions != 1) return false
     val bound = sampleBound(spark.sessionState.conf.rangeExchangeSampleSizePerPartition, nFiles)
+    // one more row than the sample holds is enough to refuse the batch
+    val rows = if (nFiles > 1) plan.executeTake(math.toIntExact(bound + 1)) else plan.executeCollect()
     if (rows.isEmpty || (nFiles > 1 && rows.length > bound)) return false
 
     val n = plan.output.size - keys.size

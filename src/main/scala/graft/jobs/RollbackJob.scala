@@ -260,8 +260,8 @@ class RemoveOrphanFilesJob(table: QTable, graceMs: Long = 24L * 3600 * 1000,
 
     if (jobDirs.size < distributeThreshold) {
       // driver path: one recursive listing (mtime piggybacked), Set probe
-      val onDisk = ParquetStats.listParquetWithMtime(table.dataDir, conf)
-        .collect { case (p, mtime) if mtime <= cutoff => p }
+      val onDisk = ParquetStats.listParquetFiles(table.dataDir, conf)
+        .collect { case f if f.mtime <= cutoff => f.path }
       val keep = (referenced ++ inFlight).toSet
       var deleted = 0
       onDisk.foreach { p =>
@@ -284,7 +284,7 @@ class RemoveOrphanFilesJob(table: QTable, graceMs: Long = 24L * 3600 * 1000,
       val onDisk = spark.sparkContext.parallelize(jobDirs, slices)
         .mapPartitions { it =>
           val c = ParquetStats.confFromProps(props)
-          it.flatMap(d => ParquetStats.listParquetWithMtime(d, c))
+          it.flatMap(d => ParquetStats.listParquetFiles(d, c).map(f => (f.path, f.mtime)))
         }
         .toDF("path", "mtime")
         .where(org.apache.spark.sql.functions.col("mtime") <= cutoff)

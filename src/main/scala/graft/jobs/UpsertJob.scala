@@ -138,8 +138,7 @@ object UpsertJob {
         keys.repartitionByRange(nOut, org.apache.spark.sql.functions.col("image_id"))
           .sortWithinPartitions("image_id"), dir)
       val conf = table.hadoopConf
-      val byName = graft.format.ParquetStats
-        .listParquetWithMtime(dir, conf).map(_._1)
+      val byName = graft.format.ParquetStats.listParquet(dir, conf)
         .map(p => QTable.fileName(p) -> p).toMap
       val entries = table.spark.read.schema(table.eqDeleteSchema).parquet(dir)
         .groupBy(col("_metadata.file_path").as("p"))

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
 /** A lint written as a test: the engine lists table files with a plain
-  * `listStatus` walk ([[ParquetStats.listParquetWithMtime]]), never with
+  * `listStatus` walk ([[ParquetStats.listParquetFiles]]), never with
   * Hadoop's `FileSystem.listFiles(path, recursive)` or
   * `listLocatedStatus`. Their `LocatedFileStatus` copies each file's
   * owner and permissions, which Hadoop's local filesystem loads by
@@ -88,7 +88,7 @@ class ListingLintSpec extends AnyFunSuite {
     val allowed = found.filter { case (f, isDef, _) => f == Exception && isDef }
     val violations = found.diff(allowed)
     assert(violations.isEmpty,
-      "located listings (use ParquetStats.listParquetWithMtime or a listStatus " +
+      "located listings (use ParquetStats.listParquetFiles or a listStatus " +
         "walk): " + violations.map { case (f, _, l) => s"$f:$l" }.mkString(", "))
     // a moved or renamed override would leave the exception stale
     assert(allowed.size == 1, s"$Exception no longer overrides FileIndex.listFiles")

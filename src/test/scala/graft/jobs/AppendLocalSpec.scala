@@ -89,6 +89,34 @@ class AppendLocalSpec extends AnyFunSuite {
     assert(jobs(AppendJob.append(local, input, 1)) == 1)
     assert(jobs(AppendJob.write(job, input, 1, "j", onDriver = false)) == 3)
     assert(local.read().count() == 16 && entries(local) == entries(job))
+    // a CHECK constraint runs its aggregate, then the driver path
+    val (checked, unchecked) = (table("al-check"), table("al-check-job"))
+    Constraints.set(checked, "w-positive", "w > 0")
+    assert(jobs(AppendJob.append(checked, batch(16, 13L), 1)) == 1 + 1)
+    AppendJob.write(unchecked, batch(16, 13L), 1, "c", onDriver = false)
+    assert(checked.read().count() == 16 && entries(checked) == entries(unchecked))
+  }
+
+  test("an INSERT ... SELECT with an aggregate keeps the job path without running its input") {
+    batch(16, 21L, parts = 2).createOrReplaceTempView("al_src")
+    val select = "SELECT image_id, max(bytes), max(w), max(h), max(fmt), max(caption), " +
+      "max(phash) FROM al_src GROUP BY image_id"
+    val grouped = spark.sql(select).toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    // the shuffling plan is refused before any of its stages runs
+    val dir = s"${TestSpark.tmpDir("al-agg")}/out"
+    assert(jobs(assert(!LocalAppend.write(grouped, Seq(col("image_id")), sorted = false, 4, dir))) == 0)
+    assert(!Files.exists(Paths.get(dir)))
+    // through SQL, the insert starts the jobs the job path starts
+    val (viaSql, viaJob) = (table("al-agg-sql"), table("al-agg-job"))
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW al_dst USING qtable OPTIONS (path '${viaSql.root}')")
+    try {
+      val inserted = jobs(spark.sql(s"INSERT INTO al_dst $select"))
+      assert(inserted == jobs(AppendJob.write(viaJob, grouped, 1, "g", onDriver = false)))
+      assert(viaSql.read().count() == 16 && entries(viaSql).keySet == entries(viaJob).keySet)
+    } finally {
+      spark.catalog.dropTempView("al_dst")
+      spark.catalog.dropTempView("al_src")
+    }
   }
 
   test("other batches keep the job path") {
@@ -117,10 +145,6 @@ class AppendLocalSpec extends AnyFunSuite {
     days.setProperties(Map(DayPartition.Prop -> "ts"))
     assert(jobs(AppendJob.append(days, batch(16, 12L).withColumn("ts", lit(86400000L)), 1)) > 1)
     assert(days.read().count() == 16)
-    // a CHECK constraint: its aggregate, then the job path
-    val checked = table("al-check")
-    Constraints.set(checked, "w-positive", "w > 0")
-    assert(jobs(AppendJob.append(checked, batch(16, 13L), 1)) == 1 + 3)
     // an empty batch
     val empty = table("al-empty")
     AppendJob.append(empty, batch(16, 14L).where(lit(false)), 1)
