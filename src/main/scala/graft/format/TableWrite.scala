@@ -1,5 +1,6 @@
 package graft.format
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.output.{FileOutputCommitter, FileOutputFormat}
@@ -11,6 +12,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 import java.util.UUID
+import scala.jdk.CollectionConverters._
 
 /** The one data-file write path: every job funnels here so table files
   * uniformly carry the image_id bloom (sized by `spark.graft.bloom.ndv`,
@@ -105,10 +107,34 @@ object TableWrite {
     fs ++ bloom + ("parquet.compression.codec.zstd.level" -> zl)
   }
 
+  /** Writes `df` into the new directory `dir` with a Spark write job:
+    * the files, `.crc` sidecars, `_SUCCESS` marker and modes of
+    * `df.write.options(writeOptions).parquet(dir)`, whose Hadoop conf
+    * each write task would deserialize twice (job and stats tracker) at
+    * over a thousand keys; this job carries [[leanHadoopConf]]. */
   def parquet(df: DataFrame, dir: String): Unit =
     withMicros(df.sparkSession) {
-      df.write.options(writeOptions(df.sparkSession.conf)).parquet(dir)
+      val options = writeOptions(df.sparkSession.conf)
+      GraftBridge.writeParquet(df, dir, options, leanHadoopConf(df.sparkSession, options))
     }
+
+  /** The session's Hadoop conf with `options`, less the keys whose only
+    * sources are Hadoop's bundled `*-default.xml` resources: keys set
+    * programmatically, by Spark, by `options` or in a `*-site.xml` stay.
+    * The one semantic edge: a key known only from a `*-default.xml`
+    * reaches the write's driver side and tasks unset, so Hadoop code reads
+    * its code default there, not the XML value. The conf loads no
+    * default resources itself. */
+  def leanHadoopConf(spark: SparkSession, options: Map[String, String]): Configuration = {
+    val full = spark.sessionState.newHadoopConfWithOptions(options)
+    val lean = new Configuration(false)
+    full.iterator().asScala.foreach { e =>
+      val sources = full.getPropertySources(e.getKey)
+      if (sources == null || !sources.forall(_.endsWith("-default.xml")))
+        lean.set(e.getKey, e.getValue)
+    }
+    lean
+  }
 
   /** Writes part files into the new directory `dir` on the driver, with
     * the Parquet writer, options and Hadoop conf a Spark write job uses:

@@ -172,8 +172,8 @@ class ClusterJob(
   private val QuantileGrid = 128
 
   /** ONE column-pruned pass over a FILE SAMPLE of the snapshot computes a
-    * per-group zkey quantile grid: scan only (pbucket, phash, w, h,
-    * image_id) — never the fat `bytes` column — and aggregate percentile
+    * per-group zkey quantile grid: scan only (phash, w, h, image_id) and
+    * the file name — never the fat `bytes` column — and aggregate percentile
     * sketches grouped by rewrite group. Per-group boundary jobs would
     * cost one extra Spark job per group; this is O(1) jobs regardless of
     * group count, the kind of constant that matters with 10^5 groups at
@@ -182,7 +182,7 @@ class ClusterJob(
     * key components are independent of the slicing key — each file is a
     * near-uniform sample of its group's key distribution; boundary error
     * only skews output file sizes a few percent, never correctness. */
-  private def boundsByGroup(snap: Snapshot, plans: Seq[Plan],
+  private[jobs] def boundsByGroup(snap: Snapshot, plans: Seq[Plan],
       zkeyCol: Column, sampleEvery: Int): Map[String, Array[Long]] = {
     // every 8th file per group (min 1): pre-cluster files are id-range
     // slices independent of the key components, so each is a near-uniform
@@ -194,13 +194,15 @@ class ClusterJob(
     // write.sort-on-append the premise inverts — appended files are KEY
     // slices, so skipping files skips key ranges — and the caller passes
     // sampleEvery = 1 (every file; the pass is still column-pruned).
-    val sampled = plans.flatMap(_.inputs.sortBy(_.path).zipWithIndex
-      .collect { case (f, i) if i % sampleEvery == 0 => f })
+    // Each sampled row feeds the grid of the group that owns its file:
+    // a file may straddle a bucket edge, so two groups can share a bucket
+    val sampled = plans.flatMap(p => p.inputs.sortBy(_.path).zipWithIndex
+      .collect { case (f, i) if i % sampleEvery == 0 => f -> p.group })
     val grid = (1 until QuantileGrid).map(_.toDouble / QuantileGrid).toArray
-    val rows = table.scan(sampled, snap.physicalSchema)
-      .select(col("pbucket"), zkeyCol.as("zkey"))
-    ClusterJob.groupQuantiles(rows, ClusterJob.bucketGroupLookup(plans.map(p =>
-      (p.group, p.inputs.map(_.pbucketMin).min, p.inputs.map(_.pbucketMax).max))), grid)
+    val rows = table.scan(sampled.map(_._1), snap.physicalSchema)
+      .select(col("_metadata.file_name").as("file"), zkeyCol.as("zkey"))
+    ClusterJob.groupQuantiles(rows,
+      sampled.map { case (f, g) => QTable.fileName(f.path) -> g }, grid)
   }
 
   def run(failAfterGroups: Int = Int.MaxValue): Snapshot = {
@@ -234,11 +236,8 @@ class ClusterJob(
     val zkeyCol = sortKeyFor(snap, plans.flatMap(_.inputs))
     val sampleEvery =
       if (snap.props.get("write.sort-on-append").contains("true")) 1 else 8
-    // batches never span day compartments: the bucket->group quantile
-    // lookup assumes one group per bucket within a pass, and two days'
-    // groups share bucket ranges — a mixed batch would pool both days'
-    // rows into each group's grid (sizes skew; the per-compartment pass
-    // stays exact because it scans only that compartment's files)
+    // batches follow day compartments, so each pass scans one
+    // compartment's files
     val outputs = plans.groupBy(_.compartment).toSeq.sortBy(_._1)
       .flatMap(_._2.grouped(math.max(1, gridBatchGroups)))
       .flatMap { batch =>
@@ -365,31 +364,23 @@ object ClusterJob {
     * ~batch x 127 longs (~4 MB) regardless of total group count. */
   val GridBatchGroups = 4096
 
-  /** (pbucket -> group) rows for a broadcast lookup join. Groups are
-    * disjoint contiguous bucket ranges, so the expansion is exactly one
-    * row per bucket — small data (a 10^5-bucket table is ~10^5 rows of
-    * (int, short string), a few MB broadcast). A `when`-chain expression
-    * over the same mapping would be one nested CASE per group: at the
-    * 10^5-group scale the 100 TB estimate implies, a 10^5-deep Catalyst
-    * expression tree blows analysis/codegen stack limits long before data
-    * volume matters — the join keeps the PLAN O(1) in group count. */
-  private[jobs] def bucketGroupLookup(
-      groups: Seq[(String, Int, Int)]): Seq[(Int, String)] =
-    groups.flatMap { case (g, lo, hi) => (lo to hi).map(b => (b, g)) }
-
-  /** Per-group zkey quantile grids via ONE aggregation: join the (pbucket,
-    * zkey) rows against the small broadcast bucket->group lookup, then
-    * percentile sketches grouped by group name. Plan size is independent
-    * of group count. */
+  /** Per-group zkey quantile grids via ONE aggregation: join the (file,
+    * zkey) rows against the small broadcast (file name -> group) lookup,
+    * one row per sampled file, then percentile sketches grouped by group
+    * name. A `when`-chain expression over the same mapping would be one
+    * nested CASE per group: at the 10^5-group scale the 100 TB estimate
+    * implies, a 10^5-deep Catalyst expression tree blows analysis/codegen
+    * stack limits long before data volume matters — the join keeps the
+    * PLAN O(1) in group count. */
   private[jobs] def groupQuantiles(
       rows: org.apache.spark.sql.DataFrame,
-      lookup: Seq[(Int, String)],
+      lookup: Seq[(String, String)],
       grid: Array[Double]): Map[String, Array[Long]] = {
     import org.apache.spark.sql.functions.{percentile_approx => pctApprox}
     val spark = rows.sparkSession
     val lookupDf = broadcast(
-      spark.createDataFrame(lookup).toDF("pbucket", "g"))
-    rows.join(lookupDf, Seq("pbucket"))
+      spark.createDataFrame(lookup).toDF("file", "g"))
+    rows.join(lookupDf, Seq("file"))
       .groupBy("g")
       .agg(pctApprox(col("zkey"), lit(grid), lit(10000)).as("q"))
       .collect()

@@ -3,7 +3,8 @@ package graft.jobs
 import graft.format.TableWrite
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder, UnsafeProjection}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -29,9 +30,12 @@ import scala.collection.mutable.ArrayBuffer
   */
 object LocalAppend {
 
-  /** The largest batch, by Spark's size estimate of its plan, that the
-    * driver collects and writes itself. It bounds what the driver holds;
-    * it is not a crossover. On 4 cores the driver path took 0.42-0.74x the
+  /** The largest batch, by Spark's size estimate of its plan and by the
+    * `UnsafeRow` bytes its collect gathers, that the driver collects and
+    * writes itself. The estimate of a typed `map` plan counts default
+    * field sizes, not the payload, so the collect stops once its rows pass
+    * this many bytes. It bounds what the driver holds; it is not a
+    * crossover. On 4 cores the driver path took 0.42-0.74x the
     * job path's time for one-partition batches of about 7 MiB, and
     * 0.51-0.79x at 11-26 MiB, into 4, 64 and 128 files (`BENCH/NOTES.md`). */
   val MaxEstimateBytes: Long = 8L << 20
@@ -46,7 +50,8 @@ object LocalAppend {
     * sorted by `keys` when `sorted`), as the job path would. Returns false,
     * having written nothing, when the batch does not qualify: its estimate
     * is over [[MaxEstimateBytes]], its plan shuffles or has more than one
-    * input partition, or it is empty or larger than the range sample. */
+    * input partition, or it is empty, larger than the range sample or
+    * collects over [[MaxEstimateBytes]]. */
   def write(aligned: DataFrame, keys: Seq[Column], sorted: Boolean, nFiles: Int,
       dir: String): Boolean = {
     val spark = aligned.sparkSession
@@ -55,11 +60,15 @@ object LocalAppend {
     // a plan that shuffles keeps the job path: an adaptive plan would run
     // its shuffle stages on execute(), and may still end in several
     // partitions
-    if (plan.isInstanceOf[AdaptiveSparkPlanExec] || plan.exists(_.isInstanceOf[Exchange]) ||
-      plan.execute().getNumPartitions != 1) return false
+    if (plan.isInstanceOf[AdaptiveSparkPlanExec] || plan.exists(_.isInstanceOf[Exchange])) return false
+    val input = plan.execute()
+    if (input.getNumPartitions != 1) return false
     val bound = sampleBound(spark.sessionState.conf.rangeExchangeSampleSizePerPartition, nFiles)
     // one more row than the sample holds is enough to refuse the batch
-    val rows = if (nFiles > 1) plan.executeTake(math.toIntExact(bound + 1)) else plan.executeCollect()
+    val rows = collectCapped(input, if (nFiles > 1) bound + 1 else Long.MaxValue) match {
+      case Some(r) => r
+      case None => return false
+    }
     if (rows.isEmpty || (nFiles > 1 && rows.length > bound)) return false
 
     val n = plan.output.size - keys.size
@@ -86,6 +95,23 @@ object LocalAppend {
     TableWrite.parquetOnDriver(spark, DataTypeUtils.fromAttributes(plan.output.take(n)),
       dir, laidOut)
     true
+  }
+
+  /** At most `limit` rows of the one partition of `input`, in order, or
+    * None once their bytes pass [[MaxEstimateBytes]]: the task stops
+    * there, so the driver never receives more. */
+  private def collectCapped(input: RDD[InternalRow], limit: Long): Option[Array[InternalRow]] = {
+    val cap = MaxEstimateBytes
+    input.sparkContext.runJob(input, (it: Iterator[InternalRow]) => {
+      val rows = ArrayBuffer.empty[InternalRow]
+      var bytes = 0L
+      while (bytes <= cap && rows.length < limit && it.hasNext) {
+        val r = it.next().asInstanceOf[UnsafeRow].copy()
+        bytes += r.getSizeInBytes
+        rows += r
+      }
+      if (bytes > cap) None else Some(rows.toArray)
+    }).head
   }
 
   /** `RangePartitioner.getPartition`: the number of bounds below `key`. */

@@ -1,8 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -62,4 +68,34 @@ object GraftBridge {
     * output path exists. */
   def outputPathExists(path: Path): Throwable =
     errors.QueryCompilationErrors.outputPathAlreadyExistsError(path)
+
+  /** Writes `df` into the new directory `dir` as
+    * `df.write.options(options).parquet(dir)` does: a fresh plan of the
+    * frame, one SQL execution, the session's committer class, file names,
+    * `_SUCCESS` marker and `ErrorIfExists` refusal, through Spark's own
+    * `FileFormatWriter`.
+    * The one difference: the job and its stats tracker carry `hadoopConf`,
+    * which every write task deserializes, where the save command builds
+    * the session's full Hadoop conf with `options`. */
+  def writeParquet(df: DataFrame, dir: String, options: Map[String, String],
+      hadoopConf: Configuration): Unit = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val out = new Path(dir)
+    val fs = out.getFileSystem(hadoopConf)
+    val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    if (fs.exists(qualified)) throw outputPathExists(qualified)
+    val qe = spark.sessionState.executePlan(df.queryExecution.analyzed)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val committer = FileCommitProtocol.instantiate(
+        spark.sessionState.conf.fileCommitProtocolClass,
+        jobId = java.util.UUID.randomUUID().toString,
+        outputPath = qualified.toString)
+      FileFormatWriter.write(spark, qe.executedPlan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(qualified.toString, Map.empty, qe.optimizedPlan.output),
+        hadoopConf, partitionColumns = Nil, bucketSpec = None,
+        statsTrackers = Seq(new BasicWriteJobStatsTracker(
+          new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics)),
+        options = options + ("path" -> dir))
+    }
+  }
 }

@@ -187,6 +187,32 @@ class AppendLocalSpec extends AnyFunSuite {
     assert(harvested.head.rowCount == 1)
   }
 
+  test("a batch whose collected rows pass the cap takes the job path, holding at most the cap") {
+    // a typed `map` plan is estimated by default field sizes, far below
+    // its image payload
+    val rows = DataGen.generate(spark, 600, 21L, 1, Array(96, 128)).toDF()
+    assert(rows.queryExecution.optimizedPlan.stats.sizeInBytes < LocalAppend.MaxEstimateBytes / 8)
+    assert(rows.agg(sum(length(col("bytes")))).head().getLong(0) > LocalAppend.MaxEstimateBytes)
+    val (local, job) = (table("al-cap-local"), table("al-cap-job"))
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => results.add(m.resultSize))
+    }
+    org.apache.spark.TestListenerBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try assert(jobs(AppendJob.append(local, rows, 1, "a")) == 1 + 3)
+    finally {
+      org.apache.spark.TestListenerBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(results.asScala.max <= LocalAppend.MaxEstimateBytes, results)
+    assert(jobs(AppendJob.write(job, rows, 1, "a", onDriver = false)) == 3)
+    val (l, j) = (written(local.newDataDir("a", "append")), written(job.newDataDir("a", "append")))
+    assert(l.keySet == j.keySet && l.forall { case (n, b) => java.util.Arrays.equals(b, j(n)) })
+    assert(local.read().count() == 600)
+  }
+
   test("a timestamp column is written as INT64 micros with stats") {
     val t = table("al-ts")
     val before = spark.conf.getOption("spark.sql.parquet.outputTimestampType")

@@ -114,23 +114,47 @@ class ClusterJobSpec extends AnyFunSuite {
 
   test("boundary planning at 5000 groups: broadcast lookup join, no plan blowup") {
     import org.apache.spark.sql.functions._
-    // 5000 contiguous single-bucket groups — the 100 TB group-count shape.
+    // 5000 groups of one sampled file each — the 100 TB group-count shape.
     // The old when-chain built a 5000-deep nested CASE here and died in
     // analysis; the lookup join keeps plan size O(1) in group count.
     val nGroups = 5000
-    val lookup = ClusterJob.bucketGroupLookup(
-      (0 until nGroups).map(g => (s"b$g", g, g)))
-    assert(lookup.size == nGroups)
+    val lookup = (0 until nGroups).map(g => (s"f$g", s"b$g"))
     val rows = spark.range(0, 50000)
-      .select((col("id") % nGroups).cast("int").as("pbucket"),
+      .select(concat(lit("f"), (col("id") % nGroups).cast("string")).as("file"),
         (col("id") * 2654435761L).as("zkey"))
     val grid = Array(0.25, 0.5, 0.75)
     val q = ClusterJob.groupQuantiles(rows, lookup, grid)
     assert(q.size == nGroups)
     assert(q.values.forall(_.length == grid.length))
     // spot-check one group's quantiles are within that group's domain
-    val g0 = rows.where(col("pbucket") === 0).agg(min("zkey"), max("zkey")).head()
+    val g0 = rows.where(col("file") === "f0").agg(min("zkey"), max("zkey")).head()
     assert(q("b0").forall(v => v >= g0.getLong(0) && v <= g0.getLong(1)))
+  }
+
+  test("quantile grids: each group's grid is the grid of its own sampled files alone") {
+    import org.apache.spark.sql.functions.col
+    // range-appended files straddle bucket edges, so with one group per
+    // bucket a bucket holds rows of two groups' files
+    val t = QTable.create(TestSpark.tmpDir("cluster-grid"), spark, 8)
+    AppendJob.append(t, DataGen.generate(spark, 1200, 42L, 8).toDF(), filesPerBucket = 2)
+    val snap = t.currentSnapshot
+    val job = new ClusterJob(t, targetFileBytes = 60L << 10, minGroupBytes = 1L)
+    val plans = job.plan(snap)
+    val groupsOfBucket = plans.flatMap(p => p.inputs
+      .flatMap(e => e.pbucketMin to e.pbucketMax).distinct.map(_ -> p.group))
+      .groupBy(_._1)
+    assert(plans.size == 8 && groupsOfBucket.values.exists(_.size > 1),
+      "the layout has no bucket shared by two groups")
+    val zkey = graft.expr.zfunctions.imageZKey(
+      col("phash"), col("w"), col("h"), col("image_id"), false)
+    for (every <- Seq(1, 2)) {
+      val grids = job.boundsByGroup(snap, plans, zkey, every)
+      assert(grids.keySet == plans.map(_.group).toSet)
+      plans.foreach { p =>
+        val own = job.boundsByGroup(snap, Seq(p), zkey, every)(p.group)
+        assert(grids(p.group).toSeq == own.toSeq, s"grid of ${p.group}, every $every")
+      }
+    }
   }
 
   test("grid batching: tiny gridBatchGroups gives the same clustering as one batch") {
