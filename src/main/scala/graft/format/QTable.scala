@@ -7,7 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout:
   * {{{
-  *   <root>/data/<jobId>/part-*.parquet        immutable data files
+  *   <root>/data/<jobId>/<group>/<attempt>/part-*.parquet
+  *                                             immutable data and delete
+  *                                             files, one fresh directory
+  *                                             per write attempt (appends:
+  *                                             <root>/data/<jobId>/append)
   *   <root>/metadata/v<N>.json                 snapshot (incl. manifest list)
   *   <root>/metadata/manifest-<uuid>.json      data-file manifests
   *   <root>/metadata/version-hint.text         current version pointer
@@ -1357,9 +1361,19 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
       "operation", "committed_at_ms", "n_files", "total_rows", "total_bytes")
   }
 
-  /** Allocate a fresh immutable data directory for a job/group write. */
+  /** The data directory of a job's group: `data/<jobId>/<group>`. */
   def newDataDir(jobId: String, group: String): String =
     s"$dataDir/$jobId/$group"
+
+  /** A fresh directory for one write attempt of a job's group,
+    * `data/<jobId>/<group>/<attempt-uuid>`. No two attempts share one —
+    * not a retry, a resume or a reused job id — so no writer deletes
+    * before it writes: a crashed attempt's partial output is an orphan
+    * that [[graft.jobs.RemoveOrphanFilesJob]] reclaims, and
+    * [[TableWrite]]'s refusal of an existing directory is the only
+    * guard. */
+  def newAttemptDir(jobId: String, group: String): String =
+    s"${newDataDir(jobId, group)}/${java.util.UUID.randomUUID()}"
 
   def hadoopConf: org.apache.hadoop.conf.Configuration =
     spark.sessionState.newHadoopConf()

@@ -3,7 +3,6 @@ package graft.jobs
 import graft.expr.zfunctions._
 import graft.format.QTable
 import graft.model._
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -47,6 +46,7 @@ class ClusterJob(
   final case class Plan(group: String, inputs: Seq[DataFileEntry],
       compartment: String = "") {
     def bytes: Long = inputs.map(_.byteCount).sum
+    def rewriteGroup: RewriteGroup = RewriteGroup(group, inputs)
   }
 
   /** `bucketScope` restricts the rewrite to the named buckets — the
@@ -69,21 +69,13 @@ class ClusterJob(
     val inScope = table.entries(snap)
       .filter(e => bucketScope.forall(_.contains(e.pbucketMin)))
       .filterNot(e => lastRun.contains(QTable.fileName(e.path)))
-    def groupsOf(sub: Seq[DataFileEntry], prefix: String): Seq[Plan] = {
-      val perBucket = sub.groupBy(_.pbucketMin).toSeq.sortBy(_._1)
-      JobPlanning.coalesceGroups(perBucket, targetFileBytes, minGroupBytes)
-        .map { case (name, fs) => Plan(prefix + name, fs, prefix) }
-    }
     // days(ts) spec: the clustering sort runs WITHIN each day (group
     // per (day, bucket)) — Iceberg's partition-outer / sort-order-inner
     // composition, so a full cluster never erodes date pruning
-    graft.format.DayPartition.fieldOf(snap) match {
-      case None => groupsOf(inScope, "")
-      case Some(f) =>
-        inScope.groupBy(e => graft.format.DayPartition.entryDay(f, e)).toSeq
-          .sortBy(_._1.getOrElse(Long.MinValue))
-          .flatMap { case (d, fs) =>
-            groupsOf(fs, d.map(x => s"d$x-").getOrElse("dx-")) }
+    JobPlanning.dayCompartments(snap, inScope).flatMap { case (prefix, sub) =>
+      val perBucket = sub.groupBy(_.pbucketMin).toSeq.sortBy(_._1)
+      JobPlanning.coalesceGroups(perBucket, targetFileBytes, minGroupBytes)
+        .map { case (name, fs) => Plan(prefix + name, fs, prefix) }
     }
   }
 
@@ -209,13 +201,10 @@ class ClusterJob(
     val snap = table.currentSnapshot
     val plans = plan(snap)
     if (plans.isEmpty) return snap
-    // position-delete fold input: which delete entries reference which
-    // files (cluster rewrites every in-scope file, so in-scope deletes
-    // fold; quantile sampling stays delete-oblivious — dead rows skew
-    // boundary estimates marginally, never correctness)
-    val delPairs = table.deletePairs(snap)
-
-    val ckpt = new Checkpoint(table, jobId)
+    // in-scope position deletes fold (cluster rewrites every in-scope
+    // file); quantile sampling stays delete-oblivious — dead rows skew
+    // boundary estimates marginally, never correctness
+    val rewrite = new GroupRewrite(table, snap, jobId, jobType)
     // isolated session with AQE off for the group rewrites: the exact-bin
     // shuffle already pins its partitioning (AQE cannot coalesce or
     // skew-split it), so AQE's per-stage materialize-and-replan barrier on
@@ -241,120 +230,58 @@ class ClusterJob(
     val outputs = plans.groupBy(_.compartment).toSeq.sortBy(_._1)
       .flatMap(_._2.grouped(math.max(1, gridBatchGroups)))
       .flatMap { batch =>
-      val tB0 = System.nanoTime()
-      val grids = boundsByGroup(snap, batch, zkeyCol, sampleEvery)
-      if (sys.env.contains("GRAFT_TIMING"))
-        System.err.println(f"[timing] cluster-bounds ${(System.nanoTime() - tB0) / 1e9}%6.2fs (${batch.size} groups)")
-      runBatch(snap, batch, grids, zkeyCol, ckpt, jobTable, failAfterGroups)
-    }.toSeq
+        val tB0 = System.nanoTime()
+        val grids = boundsByGroup(snap, batch, zkeyCol, sampleEvery)
+        if (sys.env.contains("GRAFT_TIMING"))
+          System.err.println(f"[timing] cluster-bounds ${(System.nanoTime() - tB0) / 1e9}%6.2fs (${batch.size} groups)")
+        rewrite.run(batch.map(_.rewriteGroup), concurrency,
+          failAfterGroups)(g => clustered(snap, g, grids, zkeyCol, jobTable))
+      }
 
     // out-of-scope files (bucketScope) carry by reference — an unscoped
-    // run's plan covers every entry, making this the empty set
-    val rewrittenInputs = plans.flatMap(_.inputs.map(_.path)).toSet
-    val untouched = table.entries(snap)
-      .filterNot(f => rewrittenInputs.contains(f.path))
-    val committed = table.commit(Some(snap), jobType,
-      untouched ++ outputs.flatMap(_.outputFiles), Map(
-        "job-id" -> jobId,
-        "bytes-rewritten" -> plans.map(_.bytes).sum.toString,
-        "groups" -> plans.size.toString,
-        "sort-order" -> effectiveSortCols(snap).map(_.mkString(",")).getOrElse("image-zkey")),
-      deletesOverride =
-        Some(table.retainDeletes(snap, delPairs, untouched.map(_.path))),
-      eqDeletesOverride = Some(table.retainEqDeletes(snap, untouched)),
+    // run's plan covers every entry
+    rewrite.commit(plans.map(_.rewriteGroup), outputs, Map(
+      "bytes-rewritten" -> plans.map(_.bytes).sum.toString,
+      "groups" -> plans.size.toString,
+      "sort-order" -> effectiveSortCols(snap).map(_.mkString(",")).getOrElse("image-zkey")),
       // an explicit --by becomes the table-carried sort order, so the
       // next default run (and maintain --auto, and analyze's overlap
       // metric) keep clustering the same way
       propertiesOverride = sortBy.map(cs => snap.props + ("sort.order" -> cs.mkString(","))))
-    ckpt.clear()
-    committed
   }
 
-  private def runBatch(snap: Snapshot, batch: Seq[Plan],
+  /** A group's rows binned into ~targetFileBytes outputs by clustering
+    * key and sorted within each. */
+  private def clustered(snap: Snapshot, g: RewriteGroup,
       grids: Map[String, Array[Long]], zkeyCol: Column,
-      ckpt: Checkpoint, jobTable: graft.format.QTable,
-      failAfterGroups: Int): Seq[LineageEntry] = {
-    // live file names of the snapshot being rewritten: cleanDir refuses
-    // to delete them (see [[cleanDir]])
-    val liveNames = table.entries(snap).map(e => QTable.fileName(e.path)).toSet
-    // delete files join the checkpoint input identity (see CompactJob):
-    // a group output predating a concurrent DELETE must not be reused
-    def groupInputs(p: Plan): Seq[String] = {
-      val paths = p.inputs.map(_.path)
-      paths ++ table.deleteInputsFor(snap, paths) ++
-        table.eqDeleteInputsFor(snap, p.inputs)
-    }
-    GroupRunner.run[Plan](batch, _.group, groupInputs,
-      ckpt.committed, failAfterGroups, concurrency,
-      onFailure = gf => ckpt.commit(LineageEntry(jobId, jobType, gf.group,
-        Nil, Nil, 0L, 0L, "failed", gf.attempts)),
-      sizeOf = _.bytes) { p =>
-      val dir = table.newDataDir(jobId, p.group)
-      cleanDir(dir, liveNames)
-      val nOut = math.max(1, math.round(p.bytes.toDouble / targetFileBytes).toInt)
-      // decorated read: the rewrite folds position deletes away and
-      // bakes initial defaults in (see CompactJob)
-      val keyed = jobTable.readEntriesForRewrite(snap, p.inputs)
-        .withColumn("zkey", zkeyCol)
-        .withColumn("tiebreak", xxhash64(col("image_id")))
-
-      val t0 = System.nanoTime()
-      val clustered =
-        if (nOut == 1) keyed.coalesce(1)
-        else {
-          // boundaries for nOut bins read off the precomputed grid (or a
-          // direct per-group quantile job for the rare nOut > grid case)
-          // a group absent from the grid (no rows in its sampled files —
-          // only possible for a degenerate near-empty group) degrades to
-          // a single bin, which is the correct layout for it anyway
-          val grid = grids.getOrElse(p.group, Array.fill(QuantileGrid - 1)(Long.MaxValue))
-          val bounds: Seq[Long] =
-            if (nOut <= QuantileGrid)
-              (1 until nOut).map(i => grid(i * QuantileGrid / nOut - 1))
-            else jobTable.scan(p.inputs, snap.physicalSchema)
-              .select(zkeyCol.as("zkey"))
-              .stat.approxQuantile("zkey", (1 until nOut).map(_.toDouble / nOut).toArray, 0.001)
-              .map(_.toLong).toSeq
-          ExactShuffle.repartitionByBin(
-            keyed.withColumn("__bin", ExactShuffle.binByBounds(col("zkey"), bounds)),
-            nOut, col("__bin")).drop("__bin")
-        }
-      graft.format.TableWrite.parquet(clustered
-        .sortWithinPartitions(col("zkey"), col("tiebreak"))
-        .drop("zkey", "tiebreak"), dir)
-      val t1 = System.nanoTime()
-      val files = table.harvest(dir)
-      val t2 = System.nanoTime()
-      Timing.record("cluster", p.group, (t1 - t0) / 1e9)
-      if (sys.env.contains("GRAFT_TIMING"))
-        System.err.println(f"[timing] cluster ${p.group}%-8s files=${p.inputs.size}%3d " +
-          f"bytes=${p.bytes / (1 << 20)}%5d MiB nOut=$nOut%3d " +
-          f"write=${(t1 - t0) / 1e9}%7.2fs harvest=${(t2 - t1) / 1e9}%6.2fs")
-      val entry = LineageEntry(jobId, jobType,
-        p.group, groupInputs(p), files,
-        files.map(_.rowCount).sum, files.map(_.byteCount).sum,
-        "committed", attempt = 1)
-      ckpt.commit(entry)
-      entry
-    }
-  }
-
-  /** Clear a group's output dir before (re)writing it — refusing to
-    * delete files the current snapshot references (a job-id reused
-    * after its first run committed points here at the table's LIVE
-    * files; see [[CompactJob.cleanDir]] for the full hazard note).
-    * Genuine kill/resume passes: uncommitted partials are never live. */
-  private def cleanDir(dir: String, liveNames: Set[String]): Unit = {
-    val hp = new HPath(dir)
-    val fs = hp.getFileSystem(table.hadoopConf)
-    if (fs.exists(hp)) {
-      fs.listStatus(hp).map(_.getPath.getName).find(liveNames.contains)
-        .foreach { f => throw new IllegalStateException(
-          s"refusing to clear $dir: it holds live table file $f — " +
-            s"job-id '$jobId' collides with a previously COMMITTED run's " +
-            "output directory; re-run with a fresh job-id") }
-      fs.delete(hp, true)
-    }
+      jobTable: QTable): org.apache.spark.sql.DataFrame = {
+    val nOut = math.max(1, math.round(g.bytes.toDouble / targetFileBytes).toInt)
+    // decorated read: the rewrite folds position deletes away and
+    // bakes initial defaults in (see CompactJob)
+    val keyed = jobTable.readEntriesForRewrite(snap, g.replaces)
+      .withColumn("zkey", zkeyCol)
+      .withColumn("tiebreak", xxhash64(col("image_id")))
+    val binned =
+      if (nOut == 1) keyed.coalesce(1)
+      else {
+        // boundaries for nOut bins read off the precomputed grid (or a
+        // direct per-group quantile job for the rare nOut > grid case)
+        // a group absent from the grid (no rows in its sampled files —
+        // only possible for a degenerate near-empty group) degrades to
+        // a single bin, which is the correct layout for it anyway
+        val grid = grids.getOrElse(g.name, Array.fill(QuantileGrid - 1)(Long.MaxValue))
+        val bounds: Seq[Long] =
+          if (nOut <= QuantileGrid)
+            (1 until nOut).map(i => grid(i * QuantileGrid / nOut - 1))
+          else jobTable.scan(g.replaces, snap.physicalSchema)
+            .select(zkeyCol.as("zkey"))
+            .stat.approxQuantile("zkey", (1 until nOut).map(_.toDouble / nOut).toArray, 0.001)
+            .map(_.toLong).toSeq
+        ExactShuffle.repartitionByBin(
+          keyed.withColumn("__bin", ExactShuffle.binByBounds(col("zkey"), bounds)),
+          nOut, col("__bin")).drop("__bin")
+      }
+    binned.sortWithinPartitions(col("zkey"), col("tiebreak")).drop("zkey", "tiebreak")
   }
 }
 

@@ -2,7 +2,6 @@ package graft.jobs
 
 import graft.format.QTable
 import graft.model._
-import org.apache.hadoop.fs.{Path => HPath}
 
 /** Small-file compaction: bin-pack files below the small-file threshold
   * into ~targetFileBytes outputs, one partition group (pbucket range) at a
@@ -33,10 +32,6 @@ class CompactJob(
 
   private val threshold = (targetFileBytes * smallFileFraction).toLong
 
-  final case class Plan(group: String, inputs: Seq[DataFileEntry]) {
-    def bytes: Long = inputs.map(_.byteCount).sum
-  }
-
   /** Groups of small files keyed by partition bucket; only groups with
     * >= 2 small files have compaction work. Adjacent bucket groups are
     * coalesced until each carries enough bytes that per-group job
@@ -48,7 +43,7 @@ class CompactJob(
     * 100 TB nobody compacts the whole table in one run — maintenance
     * rolls bucket ranges across scheduler windows, and the analyze
     * report says which buckets carry the debt. */
-  def plan(snap: Snapshot): Seq[Plan] = plan(snap, table.deletePairs(snap))
+  def plan(snap: Snapshot): Seq[RewriteGroup] = plan(snap, table.deletePairs(snap))
 
   /** `delPairs` = [[QTable.deletePairs]] of `snap`: files carrying
     * position deletes are MANDATORY compaction work regardless of size —
@@ -61,7 +56,7 @@ class CompactJob(
     * same reason: the rewrite reads delete-applied and its outputs get
     * a fresh seq above every live delete, which is what lets
     * [[QTable.retainEqDeletes]] drop the entries. */
-  def plan(snap: Snapshot, delPairs: Seq[(String, String)]): Seq[Plan] = {
+  def plan(snap: Snapshot, delPairs: Seq[(String, String)]): Seq[RewriteGroup] = {
     val entries = table.entries(snap)
     val delRef = delPairs.map(_._2).toSet ++
       table.eqAffectedNames(snap, entries)
@@ -76,25 +71,17 @@ class CompactJob(
     val small = entries
       .filter(e => e.byteCount < threshold || hasDeletes(e) || isExternal(e))
       .filter(e => bucketScope.forall(_.contains(e.pbucketMin)))
-    def groupsOf(sub: Seq[DataFileEntry], prefix: String): Seq[Plan] = {
+    // days(ts) partition spec: never merge files across days — group
+    // work per (day, bucket) so compaction PRESERVES the date layout
+    // (same-day files pack together; pre-spec straddlers form their own
+    // compartment and stay straddlers until a spec-aware re-append)
+    JobPlanning.dayCompartments(snap, small).flatMap { case (prefix, sub) =>
       val perBucket = sub.groupBy(_.pbucketMin).toSeq
         .filter { case (_, fs) =>
           fs.size >= 2 || fs.exists(hasDeletes) || fs.exists(isExternal) }
         .sortBy(_._1)
       JobPlanning.coalesceGroups(perBucket, targetFileBytes, minGroupBytes)
-        .map { case (name, fs) => Plan(prefix + name, fs) }
-    }
-    // days(ts) partition spec: never merge files across days — group
-    // work per (day, bucket) so compaction PRESERVES the date layout
-    // (same-day files pack together; pre-spec straddlers form their own
-    // compartment and stay straddlers until a spec-aware re-append)
-    graft.format.DayPartition.fieldOf(snap) match {
-      case None => groupsOf(small, "")
-      case Some(f) =>
-        small.groupBy(e => graft.format.DayPartition.entryDay(f, e)).toSeq
-          .sortBy(_._1.getOrElse(Long.MinValue))
-          .flatMap { case (d, fs) =>
-            groupsOf(fs, d.map(x => s"d$x-").getOrElse("dx-")) }
+        .map { case (name, fs) => RewriteGroup(prefix + name, fs) }
     }
   }
 
@@ -102,100 +89,29 @@ class CompactJob(
     * driver after k committed groups. Returns the new snapshot. */
   def run(failAfterGroups: Int = Int.MaxValue): Snapshot = {
     val snap = table.currentSnapshot
-    val delPairs = table.deletePairs(snap)
-    val plans = plan(snap, delPairs)
+    val rewrite = new GroupRewrite(table, snap, jobId, "compact")
+    val plans = plan(snap, rewrite.deletePairs)
     if (plans.isEmpty) return snap
 
-    val ckpt = new Checkpoint(table, jobId)
-    // live file names of the snapshot being rewritten: cleanDir refuses
-    // to delete them (see [[cleanDir]]) — part names carry write UUIDs,
-    // so name membership is exact file identity
-    val liveNames = table.entries(snap).map(e => QTable.fileName(e.path)).toSet
     // isolated session: split-size confs are session-scoped, so pinning
     // them here can never race another job planning scans on the shared
     // session (e.g. a concurrent MERGE under CommitRetry)
     val jobTable = new graft.format.QTable(table.root, table.spark.newSession())
-    // checkpoint input identity includes the group's applicable delete
-    // files: a resumed run whose snapshot gained deletes since a group's
-    // output was written must re-run it (the output did not fold them)
-    def groupInputs(p: Plan): Seq[String] = {
-      val paths = p.inputs.map(_.path)
-      paths ++ table.deleteInputsFor(snap, paths) ++
-        table.eqDeleteInputsFor(snap, p.inputs)
-    }
     val outputs = JobPlanning.withScanSplitBytes(jobTable.spark, targetFileBytes) {
-      GroupRunner.run[Plan](plans, _.group, groupInputs, ckpt.committed,
-        failAfterGroups, concurrency,
-        onFailure = gf => ckpt.commit(LineageEntry(jobId, "compact", gf.group,
-          Nil, Nil, 0L, 0L, "failed", gf.attempts)),
-        sizeOf = _.bytes) { p =>
-        val dir = table.newDataDir(jobId, p.group)
-        cleanDir(dir, liveNames) // crashed partial attempt is overwritten
-        // decorated read: rewriting a file folds its position deletes
-        // into the output (a no-op join when the set is empty) and BAKES
-        // initial defaults in — a raw scan would overwrite a live
-        // default with stored nulls (the output file's seq postdates
-        // the add-column commit)
-        val df = jobTable.readEntriesForRewrite(snap, p.inputs)
-        val t0 = System.nanoTime()
-        graft.format.TableWrite.parquet(df, dir)
-        val t1 = System.nanoTime()
-        val files = table.harvest(dir)
-        val t2 = System.nanoTime()
-        Timing.record("compact", p.group, (t1 - t0) / 1e9)
-        if (sys.env.contains("GRAFT_TIMING"))
-          System.err.println(f"[timing] compact ${p.group}%-8s files=${p.inputs.size}%3d " +
-            f"bytes=${p.bytes / (1 << 20)}%5d MiB nOut=${files.size}%3d " +
-            f"write=${(t1 - t0) / 1e9}%7.2fs harvest=${(t2 - t1) / 1e9}%6.2fs")
-        val entry = LineageEntry(jobId, "compact", p.group,
-          groupInputs(p), files,
-          files.map(_.rowCount).sum, files.map(_.byteCount).sum,
-          "committed", attempt = 1)
-        ckpt.commit(entry)
-        entry
-      }
+      // decorated read: rewriting a file folds its position deletes into
+      // the output (a no-op join when the set is empty) and BAKES initial
+      // defaults in — a raw scan would overwrite a live default with
+      // stored nulls (the output file's seq postdates the add-column
+      // commit)
+      rewrite.run(plans, concurrency, failAfterGroups)(g =>
+        jobTable.readEntriesForRewrite(snap, g.replaces))
     }
-
-    val rewrittenInputs = plans.flatMap(_.inputs.map(_.path)).toSet
-    val untouched = table.entries(snap).filterNot(f => rewrittenInputs.contains(f.path))
-    val newFiles = untouched ++ outputs.flatMap(_.outputFiles)
     // fold position deletes: every delete-referenced file in scope was
     // rewritten (delete-applied), so only entries still referencing a
     // surviving out-of-scope file stay — an unscoped run clears the set
-    val committed = table.commit(Some(snap), "compact", newFiles, Map(
-      "job-id" -> jobId,
-      "files-rewritten" -> rewrittenInputs.size.toString,
+    rewrite.commit(plans, outputs, Map(
+      "files-rewritten" -> plans.map(_.replaces.size).sum.toString,
       "bytes-rewritten" -> plans.map(_.bytes).sum.toString,
-      "groups" -> plans.size.toString),
-      deletesOverride =
-        Some(table.retainDeletes(snap, delPairs, untouched.map(_.path))),
-      eqDeletesOverride = Some(table.retainEqDeletes(snap, untouched)))
-    ckpt.clear() // finished jobIds must not be resumable against later snapshots
-    committed
-  }
-
-  /** Clear a group's output dir before (re)writing it. Deleting is only
-    * ever correct for a CRASHED PARTIAL attempt of THIS job — never for
-    * files the current snapshot references. That case is reachable: a
-    * job-id reused after its first run COMMITTED points newDataDir at
-    * the directory now holding the table's LIVE files (the checkpoint
-    * was cleared on commit, so nothing else distinguishes the reuse
-    * from a fresh run), and an unguarded delete destroys them before
-    * the group's read even starts — silent data loss from a plain CLI
-    * sequence (`compact --job-id X` twice). Refuse loudly instead.
-    * A genuine kill/resume passes: uncommitted partial outputs are by
-    * definition not in the snapshot, and committed groups are skipped
-    * by the checkpoint before this runs. */
-  private def cleanDir(dir: String, liveNames: Set[String]): Unit = {
-    val hp = new HPath(dir)
-    val fs = hp.getFileSystem(table.hadoopConf)
-    if (fs.exists(hp)) {
-      fs.listStatus(hp).map(_.getPath.getName).find(liveNames.contains)
-        .foreach { f => throw new IllegalStateException(
-          s"refusing to clear $dir: it holds live table file $f — " +
-            s"job-id '$jobId' collides with a previously COMMITTED run's " +
-            "output directory; re-run with a fresh job-id") }
-      fs.delete(hp, true)
-    }
+      "groups" -> plans.size.toString))
   }
 }

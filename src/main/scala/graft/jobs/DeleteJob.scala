@@ -104,7 +104,7 @@ class DeleteJob(
         val hits = live.select(logical: _*).where(condition)
           .select(col("__gpath").as("file_path"), col("__gpos").as("pos"))
         val (w, cnt) = DeleteJob.writeDeleteFiles(table,
-          hits, table.newDataDir(jobId, "deletes"))
+          hits, table.newAttemptDir(jobId, "deletes"))
         // observability (and the pruning's test hook): how many files
         // the stats-skipping index actually opened for this predicate
         val (sc, tot) = index.lastSelection
@@ -154,43 +154,49 @@ object DeleteJob {
     * files land well under data-file size). */
   val TargetDeleteFileRows: Long = 4L * 1000 * 1000
 
-  /** Write a `(file_path, pos)` frame as position-delete files under
-    * `dir`, sorted by (file_path, pos) so a pruned read touches few row
-    * groups, and return (entries, total rows). Per-file stats (rows +
-    * referenced-path range) come from one small job over the written
-    * files — O(delete rows), metadata-sized result. Writes nothing and
-    * returns (Nil, 0) for an empty frame. */
-  def writeDeleteFiles(table: QTable, hits0: DataFrame, dir: String,
+  /** Write a `(file_path, pos)` frame as position-delete files into the
+    * new directory `dir` ([[QTable.newAttemptDir]]), sorted by
+    * (file_path, pos), and return (entries, total rows); see
+    * [[writeSorted]]. */
+  def writeDeleteFiles(table: QTable, hits: DataFrame, dir: String,
       targetRows: Long = TargetDeleteFileRows): (Seq[DeleteFileEntry], Long) = {
-    val hits = hits0.cache()
-    try {
-      val n = hits.count()
-      if (n == 0) return (Nil, 0L)
-      // a retried attempt (commit conflict, crash) overwrites its own
-      // job-scoped dir — same contract as every rewrite job's cleanDir
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      val fs = hp.getFileSystem(table.hadoopConf)
-      if (fs.exists(hp)) fs.delete(hp, true)
-      val nOut = math.max(1, (n / targetRows).toInt)
-      graft.format.TableWrite.parquet(
-        hits.repartitionByRange(nOut, col("file_path"), col("pos"))
-          .sortWithinPartitions("file_path", "pos"), dir)
+    val (written, n) = writeSorted(table, hits, table.deleteSchema,
+      Seq("file_path", "pos"), dir, targetRows)
+    (written.map(w => DeleteFileEntry(path = w.path, rowCount = w.rows,
+      byteCount = w.bytes, dataPathMin = w.lo, dataPathMax = w.hi)), n)
+  }
 
-      val conf = table.hadoopConf
-      val sizes = graft.format.ParquetStats.listParquet(dir, conf)
-        .map(p => QTable.fileName(p) -> p).toMap
-      val entries = table.spark.read.schema(table.deleteSchema).parquet(dir)
-        .groupBy(col("_metadata.file_path").as("p"))
-        .agg(count(lit(1)).as("n"), min("file_path").as("lo"),
-          max("file_path").as("hi"))
+  /** One written delete file: rows, bytes and its first sort column's
+    * range. */
+  private[jobs] final case class Written(path: String, rows: Long, bytes: Long,
+      lo: String, hi: String)
+
+  /** Writes `rows0` into the new directory `dir`, range-partitioned and
+    * sorted on `sortCols` at about `targetRows` rows a file, so a pruned
+    * read touches few row groups. Returns each file and the row total;
+    * the per-file ranges come from one small job over the written
+    * files — O(rows), metadata-sized result. Writes nothing and returns
+    * (Nil, 0) for an empty frame. */
+  private[jobs] def writeSorted(table: QTable, rows0: DataFrame,
+      schema: org.apache.spark.sql.types.StructType, sortCols: Seq[String],
+      dir: String, targetRows: Long): (Seq[Written], Long) = {
+    val rows = rows0.cache()
+    try {
+      val n = rows.count()
+      if (n == 0) return (Nil, 0L)
+      val nOut = math.max(1, (n / targetRows).toInt)
+      graft.format.TableWrite.parquet(rows.repartitionByRange(nOut, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*), dir)
+      val listed = graft.format.ParquetStats.listParquetFiles(dir, table.hadoopConf)
+        .map(f => QTable.fileName(f.path) -> f).toMap
+      val written = table.spark.read.schema(schema).parquet(dir)
+        .groupBy(col("_metadata.file_path"))
+        .agg(count(lit(1)), min(sortCols.head), max(sortCols.head))
         .collect().map { r =>
-          val path = sizes(QTable.fileName(r.getString(0)))
-          val hp = new org.apache.hadoop.fs.Path(path)
-          DeleteFileEntry(path = path, rowCount = r.getLong(1),
-            byteCount = hp.getFileSystem(conf).getFileStatus(hp).getLen,
-            dataPathMin = r.getString(2), dataPathMax = r.getString(3))
+          val f = listed(QTable.fileName(r.getString(0)))
+          Written(f.path, r.getLong(1), f.len, r.getString(2), r.getString(3))
         }.toSeq
-      (entries, n)
-    } finally hits.unpersist()
+      (written, n)
+    } finally rows.unpersist()
   }
 }

@@ -56,6 +56,16 @@ object JobPlanning {
       .getOrElse(aligned.repartition(col("pbucket")))
   }
 
+  /** Writes `aligned` laid out by [[layoutNewRows]] into a fresh attempt
+    * directory of the job's `rows` group and harvests the files. */
+  def writeNewRows(table: graft.format.QTable, jobId: String,
+      aligned: org.apache.spark.sql.DataFrame,
+      snap: graft.model.Snapshot): Seq[DataFileEntry] = {
+    val dir = table.newAttemptDir(jobId, "rows")
+    graft.format.TableWrite.parquet(layoutNewRows(aligned, snap), dir)
+    table.harvest(dir)
+  }
+
   /** Project a writer's frame onto the snapshot's PHYSICAL schema (the
     * write-side half of metadata-only schema evolution). Columns may
     * arrive under logical names (user append/merge sources) or physical
@@ -127,6 +137,19 @@ object JobPlanning {
       case (k, None) => conf.unset(k)
     }
   }
+
+  /** `files` per day on a day-partitioned table, each day with its
+    * group-name prefix (`d<day>-`, or `dx-` for files with no single
+    * day) in day order; else one compartment with prefix "". */
+  def dayCompartments(snap: graft.model.Snapshot,
+      files: Seq[DataFileEntry]): Seq[(String, Seq[DataFileEntry])] =
+    graft.format.DayPartition.fieldOf(snap) match {
+      case None => Seq("" -> files)
+      case Some(f) =>
+        files.groupBy(e => graft.format.DayPartition.entryDay(f, e)).toSeq
+          .sortBy(_._1.getOrElse(Long.MinValue))
+          .map { case (d, fs) => d.map(x => s"d$x-").getOrElse("dx-") -> fs }
+    }
 
   /** Coalesce per-bucket file groups into rewrite groups that each carry
     * at least ~4x the target file size (so one group = one Spark job

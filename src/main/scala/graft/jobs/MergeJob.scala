@@ -2,7 +2,6 @@ package graft.jobs
 
 import graft.format.QTable
 import graft.model._
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -230,18 +229,6 @@ class MergeJob(
       if (noMatchedAction) 0L
       else ids.indices.count(i => !flagged(i) && matchedKey(i)).toLong
 
-    // 5. partition groups of the affected files. Day-partitioned tables
-    // group per (day, bucket) — a CoW group's coalesced outputs read only
-    // same-day inputs, so the rewrite never writes a day-straddling file
-    // (same rule as CompactJob/ClusterJob)
-    val dayF = graft.format.DayPartition.fieldOf(snap)
-    val groups = affected
-      .groupBy(e => (dayF.flatMap(f => graft.format.DayPartition.entryDay(f, e)),
-        e.pbucketMin)).toSeq
-      .map { case ((d, b), fs) =>
-        (d.map(x => s"d$x-").getOrElse(if (dayF.isEmpty) "" else "dx-") + s"b$b",
-          fs.sortBy(_.path)) }
-      .sortBy(_._1)
     // broadcast payload: key, one `_new_<phys>` per SET column (cast to
     // the declared type), and the delete flag (null-safe, default false)
     val updatesSrc = broadcast(source.select(
@@ -309,12 +296,12 @@ class MergeJob(
         val (delEntriesM, matchedCount) = matchedPosOpt match {
           case None => (Nil, 0L)
           case Some(p) => DeleteJob.writeDeleteFiles(table, p,
-            table.newDataDir(jobId, "deletes"))
+            table.newAttemptDir(jobId, "deletes"))
         }
         val (delEntriesU, unmatchedCount) = unmatchedPosOpt match {
           case None => (Nil, 0L)
           case Some(p) => DeleteJob.writeDeleteFiles(table, p,
-            table.newDataDir(jobId, "nmbs-deletes"))
+            table.newAttemptDir(jobId, "nmbs-deletes"))
         }
         val delEntries = delEntriesM ++ delEntriesU
         // patched post-images of non-delete-flagged matches (same SET
@@ -333,10 +320,7 @@ class MergeJob(
         val newRows = (patchedOpt.toSeq ++ insertRows.toSeq).reduceOption(_.unionByName(_))
         val out = newRows match {
           case Some(rows) if matchedCount + insertCount > 0 =>
-            val dir = table.newDataDir(jobId, "rows")
-            cleanDir(dir)
-            graft.format.TableWrite.parquet(JobPlanning.layoutNewRows(rows, snap), dir)
-            table.harvest(dir)
+            JobPlanning.writeNewRows(table, jobId, rows, snap)
           case _ => Nil
         }
         if (matchedCount + unmatchedCount + insertCount == 0) return snap
@@ -354,89 +338,64 @@ class MergeJob(
       } finally matched.foreach(_.unpersist())
     }
 
-    // 6. rewrite affected files per partition group and write the inserts
-    // as one more group, all checkpointed and run concurrently. Delete
-    // files join the checkpoint input identity (see CompactJob): a group
-    // output predating a concurrent DELETE must not be reused. The insert
-    // set depends on the affected files' LIVE rows, so its identity is
-    // those files plus their delete files — a stale inserts output
-    // (written against a different live view) re-runs instead of being
-    // silently reused.
-    def groupInputs(files: Seq[DataFileEntry]): Seq[String] = {
-      val paths = files.map(_.path)
-      paths ++ table.deleteInputsFor(snap, paths) ++
-        table.eqDeleteInputsFor(snap, files)
-    }
-    val rewriteSet = if (noMatchedAction) Nil else groups
+    // 5. rewrite affected files per partition group and write the inserts
+    // as one more group, all checkpointed and run concurrently. The insert
+    // set depends on the affected files' LIVE rows, so that group reads
+    // (and is identified by) those files while it replaces none — a stale
+    // inserts output (written against a different live view) re-runs
+    // instead of being silently reused.
+    val rewriteSet =
+      if (noMatchedAction) Nil else RewriteGroup.perBucket(affected, snap)
     // nothing to rewrite, nothing to insert: the table is already the
     // merge result — commit no version (insert-only merge whose source
     // rows all matched, or a matched-delete that matched nothing)
-    val ckpt = new Checkpoint(table, jobId)
-    if (rewriteSet.isEmpty && insertRows.isEmpty) { ckpt.clear(); return snap }
-    // the inserts group goes first, so its small write starts in the first
-    // wave and overlaps the file rewrites
-    val insertGroup = insertRows.map(_ => InsertsGroup -> affected).toSeq
-    val outputs = GroupRunner.run[(String, Seq[DataFileEntry])](
-      insertGroup ++ rewriteSet, _._1, p => groupInputs(p._2), ckpt.committed,
-      failAfterGroups, concurrency,
-      onFailure = gf => ckpt.commit(LineageEntry(jobId, "merge", gf.group,
-        Nil, Nil, 0L, 0L, "failed", gf.attempts))) { case (group, files) =>
-      val dir = table.newDataDir(jobId, group)
-      cleanDir(dir)
-      val df =
-        // inserts land in their hash buckets; the layout repartitions by
-        // bucket so a large batch spreads over the cluster (AQE coalesces
-        // the shuffle down to a few files when the batch is tiny)
-        if (group == InsertsGroup) JobPlanning.layoutNewRows(insertRows.get, snap)
-        else {
-          // WHEN MATCHED: delete-flagged rows drop out, SET columns take
-          // the source value where non-null (left-join null = unmatched
-          // row, which the same coalesce leaves untouched)
-          var patched = readLive(files)
-            .join(updatesSrc, Seq("image_id"), "left")
-          // WHEN NOT MATCHED BY SOURCE THEN DELETE: only source-matched
-          // rows survive the rewrite
-          if (notMatchedBySourceDelete)
-            patched = patched.where(col("_mm") === true).drop("_mm")
-          if (deleteCol.isDefined)
-            patched = patched.where(!coalesce(col("_del"), lit(false))).drop("_del")
-          setFields.foreach { f =>
-            patched = patched
-              .withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys)))
-              .drop(s"_new_${f.phys}")
-          }
-          JobPlanning.alignToPhysical(patched, snap).coalesce(math.max(1, files.size))
+    if (rewriteSet.isEmpty && insertRows.isEmpty) {
+      new Checkpoint(table, jobId).clear(); return snap
+    }
+    // the inserts group reads every affected file, so it starts in the
+    // first wave and overlaps the file rewrites
+    val insertGroup = insertRows.map(_ => RewriteGroup(InsertsGroup, Nil, affected)).toSeq
+    val rewrite = new GroupRewrite(table, snap, jobId, "merge")
+    val outputs = rewrite.run(insertGroup ++ rewriteSet, concurrency,
+      failAfterGroups) { g =>
+      // inserts land in their hash buckets; the layout repartitions by
+      // bucket so a large batch spreads over the cluster (AQE coalesces
+      // the shuffle down to a few files when the batch is tiny)
+      if (g.name == InsertsGroup) JobPlanning.layoutNewRows(insertRows.get, snap)
+      else {
+        // WHEN MATCHED: delete-flagged rows drop out, SET columns take
+        // the source value where non-null (left-join null = unmatched
+        // row, which the same coalesce leaves untouched)
+        var patched = readLive(g.replaces)
+          .join(updatesSrc, Seq("image_id"), "left")
+        // WHEN NOT MATCHED BY SOURCE THEN DELETE: only source-matched
+        // rows survive the rewrite
+        if (notMatchedBySourceDelete)
+          patched = patched.where(col("_mm") === true).drop("_mm")
+        if (deleteCol.isDefined)
+          patched = patched.where(!coalesce(col("_del"), lit(false))).drop("_del")
+        setFields.foreach { f =>
+          patched = patched
+            .withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys)))
+            .drop(s"_new_${f.phys}")
         }
-      graft.format.TableWrite.parquet(df, dir)
-      val out = table.harvest(dir)
-      val entry = LineageEntry(jobId, "merge", group, groupInputs(files), out,
-        out.map(_.rowCount).sum, out.map(_.byteCount).sum, "committed", 1)
-      ckpt.commit(entry)
-      entry
+        JobPlanning.alignToPhysical(patched, snap).coalesce(math.max(1, g.replaces.size))
+      }
     }
 
-    val rewrittenFiles = rewriteSet.flatMap(_._2)
-    val rewrittenPaths = rewrittenFiles.map(_.path).toSet
-    val untouched = all.filterNot(f => rewrittenPaths.contains(f.path))
+    val rewrittenFiles = rewriteSet.flatMap(_.replaces)
     // target rows removed by WHEN MATCHED DELETE = input-vs-output row
     // delta of the rewritten groups (updates preserve row counts; any
     // position deletes folded by the rewrite count here too — they left
     // the physical files in this commit)
     val deletedRows = rewrittenFiles.map(_.rowCount).sum -
       outputs.filter(_.group != InsertsGroup).map(_.rowCount).sum
-    val committed = table.commit(Some(snap), "merge",
-      untouched ++ outputs.flatMap(_.outputFiles), Map(
-        "job-id" -> jobId,
-        "source-rows" -> ids.length.toString,
-        "rows-updated" -> updatedRows.toString,
-        "rows-inserted" -> insertCount.toString,
-        "rows-deleted" -> deletedRows.toString,
-        "files-rewritten" -> rewrittenFiles.size.toString),
-      deletesOverride = Some(table.retainDeletes(snap,
-        table.deletePairs(snap), untouched.map(_.path))),
-      eqDeletesOverride = Some(table.retainEqDeletes(snap, untouched)))
-    ckpt.clear()
-    committed
+    rewrite.commit(insertGroup ++ rewriteSet, outputs, Map(
+      "source-rows" -> ids.length.toString,
+      "rows-updated" -> updatedRows.toString,
+      "rows-inserted" -> insertCount.toString,
+      "rows-deleted" -> deletedRows.toString,
+      "files-rewritten" -> rewrittenFiles.size.toString))
   }
 
   /** Data file names are UUID-unique (Spark part files), so matching on
@@ -444,10 +403,4 @@ class MergeJob(
     * `input_file_name()` URIs and manifest paths. */
   private def normalizePath(p: String): String =
     p.substring(p.lastIndexOf('/') + 1)
-
-  private def cleanDir(dir: String): Unit = {
-    val hp = new HPath(dir)
-    val fs = hp.getFileSystem(table.hadoopConf)
-    if (fs.exists(hp)) fs.delete(hp, true)
-  }
 }

@@ -2,7 +2,6 @@ package graft.jobs
 
 import graft.format.QTable
 import graft.model._
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 
 /** Partition-spec evolution: rewrite the table into a different hash
@@ -19,8 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Unlike compact/cluster this is inherently a whole-table rewrite with
   * one global shuffle, so lineage is a single group: resume of a killed
-  * run restarts the write (outputs are job-scoped and overwritten), and
-  * the commit is still atomic + conflict-checked.
+  * run restarts the write in a fresh attempt directory (the killed
+  * attempt's files are orphans), and the commit is still atomic +
+  * conflict-checked.
   */
 class RebucketJob(
     table: QTable,
@@ -44,21 +44,15 @@ class RebucketJob(
       math.round(totalBytes.toDouble / newBuckets / targetFileBytes).toInt)
     val nOut = newBuckets * subPerBucket
 
-    val ckpt = new Checkpoint(table, jobId)
-    val inputs = entries.map(_.path)
-    // delete files join the checkpoint input identity (see CompactJob)
-    val ckptInputs = inputs ++ table.deleteInputsFor(snap, inputs) ++
-      table.eqDeleteInputsFor(snap, entries)
-    val outputs = GroupRunner.run[Seq[String]](Seq(inputs), _ => "all",
-      _ => ckptInputs,
-      ckpt.committed, Int.MaxValue, concurrency = 1) { paths =>
-      val dir = table.newDataDir(jobId, "all")
-      cleanDir(dir)
+    // one group: the whole table, read and replaced
+    val all = RewriteGroup("all", entries)
+    val rewrite = new GroupRewrite(table, snap, jobId, "rebucket")
+    val outputs = rewrite.run(Seq(all), concurrency = 1) { _ =>
       val bucket = pmod(xxhash64(col("image_id")), lit(newBuckets.toLong)).cast("int")
       val sub = pmod(xxhash64(col("image_id"), lit("sub")), lit(subPerBucket.toLong)).cast("int")
       // decorated whole-table read: the rewrite folds every live
-      // position delete (the commit below clears the set) and bakes
-      // initial defaults in (see CompactJob)
+      // position and equality delete (the commit keeps none, no file
+      // survives) and bakes initial defaults in (see CompactJob)
       val df = table.readEntriesForRewrite(snap, entries)
         .withColumn("pbucket", bucket)
       // day-partitioned tables re-bin on (day, newBucket, sub) so the
@@ -74,31 +68,11 @@ class RebucketJob(
             nOut, col("__bin"))
             .drop("__bin")
             .sortWithinPartitions("pbucket", "phash"))
-      graft.format.TableWrite.parquet(
-        JobPlanning.alignToPhysical(laid, snap), dir)
-      val files = table.harvest(dir)
-      val entry = LineageEntry(jobId, "rebucket", "all", ckptInputs, files,
-        files.map(_.rowCount).sum, files.map(_.byteCount).sum, "committed", 1)
-      ckpt.commit(entry)
-      entry
+      JobPlanning.alignToPhysical(laid, snap)
     }
-
-    val committed = table.commit(Some(snap), "rebucket",
-      outputs.flatMap(_.outputFiles).toSeq, Map(
-        "job-id" -> jobId,
-        "buckets-before" -> snap.buckets.toString,
-        "bytes-rewritten" -> totalBytes.toString),
-      bucketsOverride = Some(newBuckets),
-      // whole-table rewrite folds all deletes, both flavors
-      deletesOverride = Some(Nil),
-      eqDeletesOverride = Some(Nil))
-    ckpt.clear()
-    committed
-  }
-
-  private def cleanDir(dir: String): Unit = {
-    val hp = new HPath(dir)
-    val fs = hp.getFileSystem(table.hadoopConf)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    rewrite.commit(Seq(all), outputs, Map(
+      "buckets-before" -> snap.buckets.toString,
+      "bytes-rewritten" -> totalBytes.toString),
+      bucketsOverride = Some(newBuckets))
   }
 }

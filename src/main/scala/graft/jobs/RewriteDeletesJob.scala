@@ -42,7 +42,7 @@ class RewriteDeletesJob(
       .select(col("file_path"), col("pos"))
       .distinct()
     val (written, n) = DeleteJob.writeDeleteFiles(table,
-      all, table.newDataDir(jobId, "deletes"))
+      all, table.newAttemptDir(jobId, "deletes"))
     if (written.size >= dels.size) return snap // nothing gained
 
     table.commit(Some(snap), "rewrite-deletes", Nil,

@@ -224,9 +224,14 @@ class CherryPickJob(table: QTable) {
   * exists, so a zero-grace sweep racing that group would delete data
   * mid-write. Default grace is 24h; tests pass 0 on quiesced tables.
   *
-  * Scale: `<root>/data` is laid out as one directory per (jobId, group),
-  * so above `distributeThreshold` job directories the listing fans out
-  * as a Spark job (one task lists one job dir) and candidates resolve
+  * Crashed and retried write attempts are what this sweep reclaims:
+  * every attempt writes its own `data/<jobId>/<group>/<attempt-uuid>`
+  * directory ([[QTable.newAttemptDir]]), and no writer deletes one.
+  *
+  * Scale: `<root>/data` holds one directory per job id, each listed
+  * recursively, so above `distributeThreshold` job directories the
+  * listing fans out as a Spark job (one task lists one job dir) and
+  * candidates resolve
   * via an anti-join against the referenced/in-flight paths instead of a
   * driver-side Set — the sweep never materializes the file list on one
   * node. Deletes run in the same distributed pass.

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.format.QTable
-import graft.model.{DataFileEntry, LineageEntry, Snapshot}
+import graft.model.Snapshot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -124,14 +124,10 @@ class UpdateJob(
       try {
         val (delEntries, nDel) = DeleteJob.writeDeleteFiles(table,
           matched.select(col("__gpath").as("file_path"), col("__gpos").as("pos")),
-          table.newDataDir(jobId, "deletes"))
+          table.newAttemptDir(jobId, "deletes"))
         val patched = JobPlanning.alignToPhysical(
           applySets(matched, lit(true)).drop("__gpath", "__gpos"), snap)
-        val dir = table.newDataDir(jobId, "rows")
-        cleanDir(dir)
-        graft.format.TableWrite.parquet(
-          JobPlanning.layoutNewRows(patched, snap), dir)
-        val out = table.harvest(dir)
+        val out = JobPlanning.writeNewRows(table, jobId, patched, snap)
         return table.commit(Some(snap), "update", out,
           summaryBase ++ Map(
             "strategy" -> "merge-on-read",
@@ -144,57 +140,15 @@ class UpdateJob(
     }
 
     // ------------------------------------------------- copy-on-write
-    val ckpt = new Checkpoint(table, jobId)
-    val already = ckpt.committed
-    def groupInputs(files: Seq[DataFileEntry]): Seq[String] = {
-      val paths = files.map(_.path)
-      paths ++ table.deleteInputsFor(snap, paths) ++
-        table.eqDeleteInputsFor(snap, files)
+    val groups = RewriteGroup.perBucket(affected, snap)
+    val rewrite = new GroupRewrite(table, snap, jobId, "update")
+    val rewritten = rewrite.run(groups, concurrency, failAfterGroups) { g =>
+      JobPlanning.alignToPhysical(applySets(
+        toLogical(table.readEntriesForRewrite(snap, g.replaces)), condition), snap)
+        .coalesce(math.max(1, g.replaces.size))
     }
-    // day-partitioned tables: per-(day, bucket) groups so the CoW
-    // rewrite never writes a day-straddling file (CompactJob's rule)
-    val dayF = graft.format.DayPartition.fieldOf(snap)
-    val groups = affected
-      .groupBy(e => (dayF.flatMap(f => graft.format.DayPartition.entryDay(f, e)),
-        e.pbucketMin)).toSeq
-      .map { case ((d, b), fs) =>
-        (d.map(x => s"d$x-").getOrElse(if (dayF.isEmpty) "" else "dx-") + s"b$b",
-          fs.sortBy(_.path)) }
-      .sortBy(_._1)
-    val rewritten = GroupRunner.run[(String, Seq[DataFileEntry])](
-      groups, _._1, p => groupInputs(p._2), already, failAfterGroups, concurrency,
-      onFailure = gf => ckpt.commit(LineageEntry(jobId, "update", gf.group,
-        Nil, Nil, 0L, 0L, "failed", gf.attempts))) { case (group, files) =>
-      val dir = table.newDataDir(jobId, group)
-      cleanDir(dir)
-      val patched = applySets(
-        toLogical(table.readEntriesForRewrite(snap, files)), condition)
-      val df = JobPlanning.alignToPhysical(patched, snap)
-      graft.format.TableWrite.parquet(df.coalesce(math.max(1, files.size)), dir)
-      val out = table.harvest(dir)
-      val entry = LineageEntry(jobId, "update", group, groupInputs(files), out,
-        out.map(_.rowCount).sum, out.map(_.byteCount).sum, "committed", 1)
-      ckpt.commit(entry)
-      entry
-    }
-
-    val affectedPaths = affected.map(_.path).toSet
-    val untouched = all.filterNot(f => affectedPaths.contains(f.path))
-    val committed = table.commit(Some(snap), "update",
-      untouched ++ rewritten.flatMap(_.outputFiles),
-      summaryBase ++ Map(
-        "strategy" -> "copy-on-write",
-        "files-rewritten" -> affected.size.toString),
-      deletesOverride = Some(table.retainDeletes(snap,
-        table.deletePairs(snap), untouched.map(_.path))),
-      eqDeletesOverride = Some(table.retainEqDeletes(snap, untouched)))
-    ckpt.clear()
-    committed
-  }
-
-  private def cleanDir(dir: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val fs = hp.getFileSystem(table.hadoopConf)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    rewrite.commit(groups, rewritten, summaryBase ++ Map(
+      "strategy" -> "copy-on-write",
+      "files-rewritten" -> affected.size.toString))
   }
 }

@@ -68,7 +68,7 @@ class UpsertJob(
       val (eqEntries, nKeys) =
         if (!anyOverlap) (Nil, 0L)
         else UpsertJob.writeEqDeleteFiles(table,
-          source.select("image_id"), table.newDataDir(jobId, "eq-deletes"))
+          source.select("image_id"), table.newAttemptDir(jobId, "eq-deletes"))
 
       // 2. appended rows: full records, hash-bucketed like any append;
       // the small-batch shuffle AQE-coalesces down to a few files
@@ -82,11 +82,7 @@ class UpsertJob(
         snap)
       // CHECK constraints veto the batch's live records before any write
       Constraints.enforce(Constraints.logicalView(rows, snap), snap, "upsert")
-      val dir = table.newDataDir(jobId, "rows")
-      cleanDir(dir)
-      graft.format.TableWrite.parquet(
-        JobPlanning.layoutNewRows(rows, snap), dir)
-      val out = table.harvest(dir)
+      val out = JobPlanning.writeNewRows(table, jobId, rows, snap)
       val flagged = srcCount - source.where(notDeleteFlagged).count()
 
       // 3. append-style commit: O(batch) metadata, deletes carried, the
@@ -102,12 +98,6 @@ class UpsertJob(
         eqDeletesOverride = Some(snap.eqDeleteFiles ++ eqEntries))
     } finally source.unpersist()
   }
-
-  private def cleanDir(dir: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val fs = hp.getFileSystem(table.hadoopConf)
-    if (fs.exists(hp)) fs.delete(hp, true)
-  }
 }
 
 object UpsertJob {
@@ -119,40 +109,17 @@ object UpsertJob {
     * changes nothing in the strict-seq rule). */
   val TargetKeysPerFile: Long = 4L * 1000 * 1000
 
-  /** Write an `image_id` key frame as equality-delete files under `dir`
-    * (range-sorted, so a pruned read touches few row groups) and return
-    * (entries, key count). Entries carry the seq SENTINEL —
+  /** Write an `image_id` key frame as equality-delete files into the new
+    * directory `dir`, range-sorted ([[DeleteJob.writeSorted]]), and
+    * return (entries, key count). Entries carry the seq SENTINEL —
     * [[QTable.commit]] stamps the committing version. (Nil, 0) for an
     * empty frame. */
-  def writeEqDeleteFiles(table: QTable, keys0: DataFrame,
+  def writeEqDeleteFiles(table: QTable, keys: DataFrame,
       dir: String, targetRows: Long = TargetKeysPerFile): (Seq[EqDeleteFileEntry], Long) = {
-    val keys = keys0.cache()
-    try {
-      val n = keys.count()
-      if (n == 0) return (Nil, 0L)
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      val fs = hp.getFileSystem(table.hadoopConf)
-      if (fs.exists(hp)) fs.delete(hp, true)
-      val nOut = math.max(1, (n / targetRows).toInt)
-      graft.format.TableWrite.parquet(
-        keys.repartitionByRange(nOut, org.apache.spark.sql.functions.col("image_id"))
-          .sortWithinPartitions("image_id"), dir)
-      val conf = table.hadoopConf
-      val byName = graft.format.ParquetStats.listParquet(dir, conf)
-        .map(p => QTable.fileName(p) -> p).toMap
-      val entries = table.spark.read.schema(table.eqDeleteSchema).parquet(dir)
-        .groupBy(col("_metadata.file_path").as("p"))
-        .agg(count(lit(1)).as("n"), min("image_id").as("lo"),
-          max("image_id").as("hi"))
-        .collect().map { r =>
-          val path = byName(QTable.fileName(r.getString(0)))
-          val fhp = new org.apache.hadoop.fs.Path(path)
-          EqDeleteFileEntry(path = path, rowCount = r.getLong(1),
-            byteCount = fhp.getFileSystem(conf).getFileStatus(fhp).getLen,
-            idMin = r.getString(2), idMax = r.getString(3),
-            seq = DataFileEntry.UnstampedSeq)
-        }.toSeq
-      (entries, n)
-    } finally keys.unpersist()
+    val (written, n) = DeleteJob.writeSorted(table, keys, table.eqDeleteSchema,
+      Seq("image_id"), dir, targetRows)
+    (written.map(w => EqDeleteFileEntry(path = w.path, rowCount = w.rows,
+      byteCount = w.bytes, idMin = w.lo, idMax = w.hi,
+      seq = DataFileEntry.UnstampedSeq)), n)
   }
 }

@@ -4,6 +4,10 @@ import org.apache.spark.TestListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole suite (scalatest runs suites in
@@ -32,10 +36,35 @@ object TestSpark {
     s
   }
 
+  /** A fresh temporary directory, deleted with everything in it when the
+    * JVM exits. */
   def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
+    val d = Files.createTempDirectory(prefix)
+    tmpTrees.add(d)
     d.toString
+  }
+
+  /** The [[tmpDir]] trees, deleted recursively by one shutdown hook
+    * (`File.deleteOnExit` deletes only empty directories). The walk
+    * never enters a build-once query fixture root (`graft_q*_v*`). */
+  private val tmpTrees = new ConcurrentLinkedQueue[Path]()
+  private val FixtureRoot = "graft_q.*_v[0-9]+".r
+  sys.addShutdownHook(tmpTrees.forEach(deleteTree(_)))
+
+  private def deleteTree(root: Path): Unit =
+    try Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult =
+        if (FixtureRoot.matches(d.getFileName.toString)) FileVisitResult.SKIP_SUBTREE
+        else FileVisitResult.CONTINUE
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = quietly(f)
+      override def visitFileFailed(f: Path, e: IOException): FileVisitResult =
+        FileVisitResult.CONTINUE
+      override def postVisitDirectory(d: Path, e: IOException): FileVisitResult = quietly(d)
+    }) catch { case _: IOException => }
+
+  private def quietly(p: Path): FileVisitResult = {
+    try Files.deleteIfExists(p) catch { case _: IOException => }
+    FileVisitResult.CONTINUE
   }
 
   /** file:-scheme URI variant: routes the table's metadata layer through

@@ -16,11 +16,10 @@ class ScanLintSpec extends AnyFunSuite {
   private val Packages = Seq("format", "jobs", "verify", "streaming")
 
   /** (file, enclosing def) of each permitted path-based read: the
-    * delete writers read back the files they just wrote to learn each
-    * file's row count and key range before committing them. */
-  private val Allowed = Set(
-    ("DeleteJob.scala", "writeDeleteFiles"),
-    ("UpsertJob.scala", "writeEqDeleteFiles"))
+    * position- and equality-delete writers' one write path reads back
+    * the files it just wrote to learn each file's row count and key
+    * range before they are committed. */
+  private val Allowed = Set(("DeleteJob.scala", "writeSorted"))
 
   /** `read` (or `readStream`) followed by a chain of `.method(args)`
     * calls ending in `.parquet(` — across line breaks, one level of

@@ -92,26 +92,6 @@ class ClusterJobSpec extends AnyFunSuite {
     assert(t.entries(snap).map(_.rowCount).sum == 600)
   }
 
-  test("reused job-id after a COMMITTED run refuses instead of deleting live files") {
-    // same hazard as CompactJobSpec's: a cluster ALWAYS rewrites every
-    // in-scope file, so re-running a committed job-id collides whenever
-    // the replan keeps the group name — pinned here via a single bucket
-    // and minGroupBytes=1 ("b0" both runs)
-    val t = freshTable(600, buckets = 1)
-    val jobId = "reused-cluster-id"
-    val s1 = new ClusterJob(t, targetFileBytes = 8L << 20, jobId = jobId,
-      minGroupBytes = 1L).run()
-    assert(s1.operation == "cluster-zorder")
-    val ex = intercept[Exception] {
-      new ClusterJob(t, targetFileBytes = 8L << 20, jobId = jobId,
-        minGroupBytes = 1L).run()
-    }
-    assert(ex.getMessage.contains("refusing to clear"),
-      s"expected the live-file guard, got: ${ex.getMessage}")
-    assert(t.read(t.currentSnapshot).count() == 600,
-      "the refused run must not delete live files")
-  }
-
   test("boundary planning at 5000 groups: broadcast lookup join, no plan blowup") {
     import org.apache.spark.sql.functions._
     // 5000 groups of one sampled file each — the 100 TB group-count shape.
