@@ -10,29 +10,29 @@ import org.apache.spark.sql.SparkSession
   * the reference's flow-per-pipeline deployment layout, `prefect.yaml`
   * deployments — each job independently schedulable).
   *
+  * The maintenance verbs `CALL qtable.*` shares — compact, cluster,
+  * expire, rewrite-manifests, remove-orphans, analyze, maintain, the
+  * constraint, property and tag verbs, clone, rollback and the catalog
+  * verbs — run through [[Procedures]], which lists their arguments:
+  *   spark-submit --class graft.Main <jar> compact --table T --target-mb 4 --scope 0,1
+  * The CLI-only verbs read their arguments through the same helpers.
+  * Every verb prints one JSON line per result, `job` first.
+  *
   * Usage:
   *   spark-submit --class graft.Main <jar> synth   --table T --rows N [--buckets B] [--files-per-bucket F] [--seed S]
-  *   spark-submit --class graft.Main <jar> compact --table T [--target-mb M] [--job-id J] [--scope B1,B2]
-  *   spark-submit --class graft.Main <jar> cluster --table T [--target-mb M] [--hilbert] [--incremental] [--by c1,c2] [--job-id J] [--scope B1,B2]   (--by: cluster by 1-3 stats-covered columns; persists as the sort.order table property)
   *   spark-submit --class graft.Main <jar> merge   --table T (--source DIR | --rows N [--inserts K]) [--set c1,c2] [--delete-col C] [--mor] [--sync] [--job-id J]   (--sync = WHEN NOT MATCHED BY SOURCE THEN DELETE)
   *   spark-submit --class graft.Main <jar> upsert  --table T (--source DIR | --rows N [--inserts K]) [--delete-col C] [--job-id J]   (scan-free whole-record upsert via equality deletes)
   *   spark-submit --class graft.Main <jar> delete  --table T --where 'SQL predicate'   (merge-on-read position deletes)
   *   spark-submit --class graft.Main <jar> update  --table T --set 'c1 = expr[; c2 = expr]' [--where 'SQL predicate'] [--mor]   (condition-driven UPDATE: CoW matched files, or MOR with --mor)
   *   spark-submit --class graft.Main <jar> stream  --table T (--source DIR | --rows N) [--follow] [--checkpoint D]
   *   spark-submit --class graft.Main <jar> stream  --table T --upsert [--eq] (--source DIR | --rows N) [--set c1,c2] [--delete-col C] [--seq-col C]   (streaming upsert per micro-batch: MOR MERGE, or scan-free equality deletes with --eq)
-  *   spark-submit --class graft.Main <jar> expire  --table T [--keep K] [--older-than-hours H] [--dry-run]   (dry-run prices the reclaim, deletes nothing)
   *   spark-submit --class graft.Main <jar> rebucket --table T --buckets B [--target-mb M]
   *   spark-submit --class graft.Main <jar> add-column --table T --name N [--type string] [--default V]   (--default: Iceberg-v3-style initial default for pre-existing rows)
   *   spark-submit --class graft.Main <jar> rename-column --table T --from OLD --to NEW
   *   spark-submit --class graft.Main <jar> drop-column --table T --name N
   *   spark-submit --class graft.Main <jar> widen-column --table T --name N --type long
   *   spark-submit --class graft.Main <jar> enable-row-lineage --table T   (stable per-row _row_id; rewrites preserve ids by materializing them)
-  *   spark-submit --class graft.Main <jar> rollback --table T [--to V | --tag N | --as-of-ts T]
-  *   spark-submit --class graft.Main <jar> remove-orphans --table T [--dry-run] [--grace-hours H]
-  *   spark-submit --class graft.Main <jar> rewrite-manifests --table T
   *   spark-submit --class graft.Main <jar> rewrite-deletes --table T   (consolidate position-delete files)
-  *   spark-submit --class graft.Main <jar> maintain --table T [--target-mb M] [--hilbert] [--incremental] [--keep K] [--dry-run] [--scope B1,B2]
-  *   spark-submit --class graft.Main <jar> maintain --table T --auto [--small-debt-ratio R] [--delete-row-ratio R] [--max-delete-files N] [--overlap-threshold X] [--max-versions V]   (debt-driven tick: only over-threshold jobs run; clean table = no commits)
   *   spark-submit --class graft.Main <jar> verify  --table T [--against V | --against-tag N | --against-table DIR] [--sample F] [--staged]   (--against-table: cross-table equivalence, the shallow-clone audit)
   *   spark-submit --class graft.Main <jar> lookup  --table T --id IMG_ID
   *   spark-submit --class graft.Main <jar> history --table T
@@ -41,21 +41,13 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.Main <jar> partitions --table T [--version V | --tag N] [--branch B] [--out DIR]   (per-bucket totals + phash span — the skew report)
   *   spark-submit --class graft.Main <jar> incremental --table T --from V [--to V]
   *   spark-submit --class graft.Main <jar> changes --table T (--from V | --from-tag N) [--to V | --to-tag N] [--out DIR]
-  *   spark-submit --class graft.Main <jar> analyze --table T [--target-mb M]
   *   spark-submit --class graft.Main <jar> agg     --table T [--cols c1,c2] [--ndv c1,c2] [--version V | --tag N | --as-of-ts T]   (metadata-only count/min/max; --ndv = approx distinct from manifest HLL sketches; T = epoch ms or ISO-8601 instant)
   *   spark-submit --class graft.Main <jar> analyze-ndv --table T --cols c1,c2 [--lgk K]   (ANALYZE: attach per-file NDV sketches, reads only unsketched files)
   *   spark-submit --class graft.Main <jar> <compact|cluster|merge|rebucket|rewrite-manifests|...> --staged   (write-audit-publish)
   *   spark-submit --class graft.Main <jar> publish --table T
   *   spark-submit --class graft.Main <jar> abort-staged --table T
-  *   spark-submit --class graft.Main <jar> set-property --table T --key K --value V   (table-carried policy: write.target-mb, retention.keep-last, ndv.columns, write.update.mode/write.merge.mode = merge-on-read, ...)
-  *   spark-submit --class graft.Main <jar> unset-property --table T --key K
-  *   spark-submit --class graft.Main <jar> clone --table SRC --target DST   (shallow clone: zero-copy independent table; expiry never deletes files outside its own root)
-  *   spark-submit --class graft.Main <jar> set-constraint --table T --name N --expr 'SQL predicate'   (CHECK constraint: refused if existing data violates; enforced on every new-row writer)
-  *   spark-submit --class graft.Main <jar> drop-constraint --table T --name N
   *   spark-submit --class graft.Main <jar> constraints --table T
   *   spark-submit --class graft.Main <jar> properties --table T
-  *   spark-submit --class graft.Main <jar> tag     --table T --name N [--version V]
-  *   spark-submit --class graft.Main <jar> untag   --table T --name N
   *   spark-submit --class graft.Main <jar> tags    --table T
   *   spark-submit --class graft.Main <jar> branch  --table T --name N [--at V]   (writable ref; pass --branch N to any job to commit against it)
   *   spark-submit --class graft.Main <jar> branches --table T
@@ -63,9 +55,6 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.Main <jar> fast-forward --table T --branch N   (publish the branch to main; main must be an ancestor)
   *   spark-submit --class graft.Main <jar> cherry-pick --table T --version V    (apply one append commit's files to main without publishing its branch)
   *   spark-submit --class graft.Main <jar> describe --table T
-  *   spark-submit --class graft.Main <jar> register --name N --table DIR [--catalog DIR]   (persistent catalog: name -> table root; thereafter any --table accepts the bare name)
-  *   spark-submit --class graft.Main <jar> unregister --name N [--catalog DIR]
-  *   spark-submit --class graft.Main <jar> tables [--catalog DIR]   (catalog root: --catalog > spark.graft.catalog conf > GRAFT_CATALOG env)
   */
 object Main {
 
@@ -91,58 +80,21 @@ object Main {
     // --catalog DIR on ANY command scopes name resolution to that
     // catalog for the run (same key the session conf / env set)
     opts.get("catalog").foreach(spark.conf.set(graft.format.Catalog.ConfKey, _))
-
-    // --staged: the job claims its commit but the version hint stays put
-    // (write-audit-publish) — audit with `verify --against <staged>`,
-    // then `publish` or `abort-staged`
-    // --branch N: read and commit against the named branch ref instead
-    // of main (create one first with `branch --name N`); --staged gates
-    // the main head (the two do not compose — a branch IS an audited,
-    // unpublished line of history)
-    // --table accepts a PATH or a catalog NAME (a bare value without a
-    // path separator, resolved through the spark.graft.catalog /
-    // GRAFT_CATALOG pointer directory — see graft.format.Catalog and
-    // the register/unregister/tables subcommands)
-    def tableRoot = graft.format.Catalog.resolveTableArg(spark, req(opts, "table"))
-    def table = {
-      val t0 = QTable(tableRoot, spark)
-      val t = opts.get("branch")
-        .filterNot(_ => cmd == "branch" || cmd == "fast-forward")
-        .map(t0.onBranch).getOrElse(t0)
-      if (opts.contains("staged")) t.staged else t
-    }
-    // table-property read for flag defaults; None when the table does not
-    // exist yet (synth) or the command carries no --table
-    def tableProp(k: String): Option[String] =
-      try QTable(tableRoot, spark).currentSnapshotOpt
-        .flatMap(_.props.get(k))
-      catch { case _: Exception => None }
-    // precedence: explicit flag > table property > built-in default —
-    // a table CARRIES its write target (set-property write.target-mb)
-    def targetBytes = opts.get("target-mb")
-      .orElse(tableProp("write.target-mb"))
-      .map(_.toLong << 20).getOrElse(128L << 20)
-    // val, not def: CommitRetry re-enters the job body on conflict, and a
-    // fresh UUID per attempt would orphan the losing attempt's checkpoint
-    // (the retry is supposed to RESUME it, skipping committed groups)
-    val jobId = opts.getOrElse("job-id", java.util.UUID.randomUUID().toString)
-    // group fan-out: defaults to the session's core count (the reference's
-    // semaphore caps, SURVEY 2.7 D1, re-expressed over Spark jobs)
-    def concurrency = opts.get("concurrency").map(_.toInt)
-      .getOrElse(math.max(2, spark.sparkContext.defaultParallelism))
-    // --scope 0,3,5: restrict a rewrite to the named buckets (rolling
-    // maintenance — at 100 TB the whole table is never one run; distinct
-    // from --buckets, which is a bucket COUNT on synth/rebucket)
-    def bucketScope = opts.get("scope")
-      .map(_.split(",").map(_.trim.toInt).toSet)
+    // --table (a path or a catalog name), --branch, --staged, --job-id,
+    // --concurrency, --scope and the flag > table property > default
+    // precedence read through the registry's helpers
+    val a = new Procedures.Args(cmd, opts, spark)
 
     try cmd match {
+      case shared if Procedures.verbs.contains(shared) =>
+        report(cmd, Procedures.run(cmd, opts, spark))
+
       case "synth" =>
-        val rows = req(opts, "rows").toLong
+        val rows = a.req("rows").toLong
         val buckets = opts.getOrElse("buckets", "8").toInt
         val fpb = opts.getOrElse("files-per-bucket", "8").toInt
         val seed = opts.getOrElse("seed", "42").toLong
-        val root = req(opts, "table")
+        val root = a.req("table")
         val t0 = QTable(root, spark)
         val tc = if (t0.currentVersion >= 0) t0 else QTable.create(root, spark, buckets)
         // --branch: append against the named ref (synth resolves its own
@@ -152,44 +104,24 @@ object Main {
           AppendJob.append(t, DataGen.generate(spark, rows, seed).toDF(), fpb))
         report("synth", snap.summary ++ Map("version" -> snap.version.toString))
 
-      case "compact" =>
-        val snap = CommitRetry.withCommitRetry()(new CompactJob(table, targetBytes,
-          jobId = jobId, concurrency = concurrency,
-          bucketScope = bucketScope).run())
-        report("compact", snap.summary ++ Map("version" -> snap.version.toString))
-
-      case "cluster" =>
-        // --incremental: sort only files added since the last cluster
-        // commit into a NEW sorted run (LSM-style); previous runs carry
-        // by reference. A periodic full run merges the runs.
-        // --by c1,c2: cluster by 1-3 user columns instead of the image
-        // zkey (range-normalized from manifest stats; becomes the
-        // table-carried sort.order property for future runs)
-        val snap = CommitRetry.withCommitRetry()(new ClusterJob(table, targetBytes,
-          hilbert = opts.contains("hilbert"), jobId = jobId,
-          concurrency = concurrency, bucketScope = bucketScope,
-          incremental = opts.contains("incremental"),
-          sortBy = opts.get("by").map(_.split(",").toSeq.map(_.trim))).run())
-        report("cluster", snap.summary ++ Map("version" -> snap.version.toString))
-
       case "merge" =>
         // source: --source <parquet dir> (real corrections), else the
         // synthetic fixture; --set col1,col2 picks the UPDATE SET list,
         // --delete-col names a boolean source column for MATCHED deletes
         val corr = opts.get("source") match {
           case Some(p) => spark.read.parquet(p)
-          case None => DataGen.correctionsDF(spark, req(opts, "rows").toLong,
+          case None => DataGen.correctionsDF(spark, a.req("rows").toLong,
             opts.getOrElse("seed", "42").toLong,
             opts.getOrElse("inserts", "5").toInt)
         }
         val setCols = opts.get("set").map(_.split(",").toSeq.map(_.trim))
           .getOrElse(Seq("caption"))
         val snap = CommitRetry.withCommitRetry()(
-          new MergeJob(table, jobId, concurrency = concurrency,
+          new MergeJob(a.table, a.jobId, concurrency = a.concurrency,
             updateCols = setCols, deleteCol = opts.get("delete-col"),
-            mergeOnRead = opts.contains("mor") ||
-              tableProp("write.merge.mode").contains("merge-on-read"),
-            notMatchedBySourceDelete = opts.contains("sync")).run(corr))
+            mergeOnRead = a.flag("mor") ||
+              a.tableProp("write.merge.mode").contains("merge-on-read"),
+            notMatchedBySourceDelete = a.flag("sync")).run(corr))
         report("merge", snap.summary ++ Map("version" -> snap.version.toString))
 
       case "upsert" =>
@@ -199,21 +131,21 @@ object Main {
         // reads; compact folds the key-delete debt
         val src = opts.get("source") match {
           case Some(p) => spark.read.parquet(p)
-          case None => DataGen.correctionsDF(spark, req(opts, "rows").toLong,
+          case None => DataGen.correctionsDF(spark, a.req("rows").toLong,
             opts.getOrElse("seed", "42").toLong,
             opts.getOrElse("inserts", "5").toInt)
         }
         val snap = CommitRetry.withCommitRetry()(
-          new UpsertJob(table, jobId, deleteCol = opts.get("delete-col")).run(src))
+          new UpsertJob(a.table, a.jobId, deleteCol = opts.get("delete-col")).run(src))
         report("upsert", snap.summary ++ Map("version" -> snap.version.toString))
 
       case "delete" =>
         // merge-on-read row deletes: --where is a SQL predicate over the
         // table's logical columns; commit cost is O(matched rows) — the
         // data files holding them are untouched until a compact folds
-        val cond = org.apache.spark.sql.functions.expr(req(opts, "where"))
+        val cond = org.apache.spark.sql.functions.expr(a.req("where"))
         val snap = CommitRetry.withCommitRetry()(
-          new DeleteJob(table, jobId).run(cond))
+          new DeleteJob(a.table, a.jobId).run(cond))
         report("delete", snap.summary ++ Map("version" -> snap.version.toString))
 
       case "update" =>
@@ -221,19 +153,19 @@ object Main {
         // expr]" assignments over logical columns, --where gates rows;
         // CoW by default (only matched files rewrite), --mor position-
         // deletes old versions and appends post-images (O(changed rows))
-        val sets = req(opts, "set").split(";").toSeq.map { a =>
+        val sets = a.req("set").split(";").toSeq.map { asg =>
           val m = "^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*=(.+)$".r
-            .findFirstMatchIn(a).getOrElse(throw new IllegalArgumentException(
-              s"malformed assignment '$a' (want: col = expr)"))
+            .findFirstMatchIn(asg).getOrElse(throw new IllegalArgumentException(
+              s"malformed assignment '$asg' (want: col = expr)"))
           m.group(1) -> org.apache.spark.sql.functions.expr(m.group(2))
         }
         val cond = opts.get("where")
           .map(org.apache.spark.sql.functions.expr)
           .getOrElse(org.apache.spark.sql.functions.lit(true))
         val snap = CommitRetry.withCommitRetry()(
-          new UpdateJob(table, jobId, concurrency = concurrency,
-            mergeOnRead = opts.contains("mor") ||
-              tableProp("write.update.mode").contains("merge-on-read"))
+          new UpdateJob(a.table, a.jobId, concurrency = a.concurrency,
+            mergeOnRead = a.flag("mor") ||
+              a.tableProp("write.update.mode").contains("merge-on-read"))
             .run(sets, cond))
         report("update", snap.summary ++ Map("version" -> snap.version.toString))
 
@@ -242,7 +174,7 @@ object Main {
         // files into the table (AvailableNow = drain-and-stop backfill;
         // --follow tails until killed). Without --source, synthesize
         // --rows into a temp dir first so the surface is self-driving.
-        val root = req(opts, "table")
+        val root = a.req("table")
         val t0 = QTable(root, spark)
         val tc = if (t0.currentVersion >= 0) t0
           else QTable.create(root, spark, opts.getOrElse("buckets", "8").toInt)
@@ -252,11 +184,11 @@ object Main {
           // append mode streams fresh rows; upsert mode streams a
           // corrections feed (updates to existing ids + a few inserts)
           val rows =
-            if (opts.contains("upsert"))
-              DataGen.correctionsDF(spark, req(opts, "rows").toLong,
+            if (a.flag("upsert"))
+              DataGen.correctionsDF(spark, a.req("rows").toLong,
                 opts.getOrElse("seed", "42").toLong,
                 opts.getOrElse("inserts", "5").toInt)
-            else DataGen.generate(spark, req(opts, "rows").toLong,
+            else DataGen.generate(spark, a.req("rows").toLong,
               opts.getOrElse("seed", "42").toLong).toDF()
           rows.write.mode("overwrite").parquet(d)
           d
@@ -268,13 +200,13 @@ object Main {
           .parquet(srcDir)
         val streamName = opts.getOrElse("name", "cli-stream")
         def mkSink: (org.apache.spark.sql.DataFrame, Long) => Unit =
-          if (opts.contains("upsert"))
+          if (a.flag("upsert"))
             new graft.streaming.StreamingUpsert(t, streamName,
               updateCols = opts.get("set").map(_.split(",").toSeq.map(_.trim))
                 .getOrElse(Nil),
               deleteCol = opts.get("delete-col"),
               seqCol = opts.get("seq-col"),
-              equality = opts.contains("eq")).sink
+              equality = a.flag("eq")).sink
           else new graft.streaming.StreamingAppend(t, streamName,
             filesPerBucket = opts.getOrElse("files-per-bucket", "1").toInt).sink
         // resume-able checkpoint only makes sense for a REAL --source; a
@@ -283,7 +215,7 @@ object Main {
           if (opts.contains("source")) s"$root/_stream_ckpt"
           else java.nio.file.Files.createTempDirectory("graft-stream-ckpt").toString)
         val trigger =
-          if (opts.contains("follow"))
+          if (a.flag("follow"))
             org.apache.spark.sql.streaming.Trigger.ProcessingTime(1000L)
           else org.apache.spark.sql.streaming.Trigger.AvailableNow()
         val q = src.writeStream
@@ -297,46 +229,15 @@ object Main {
         report("stream", cur.summary ++ Map("version" -> cur.version.toString,
           "batches" -> q.recentProgress.length.toString))
 
-      case "expire" =>
-        // --older-than-hours H: age-based retention on top of --keep —
-        // commits younger than the cutoff never expire
-        val cutoff = opts.get("older-than-hours").map(h =>
-          System.currentTimeMillis() - (h.toDouble * 3600 * 1000).toLong)
-        // --dry-run: price the reclaim (versions, files, bytes) from
-        // metadata only, delete nothing. Retention default can live on
-        // the table (set-property retention.keep-last)
-        val res = new ExpireSnapshotsJob(table)
-          .run(opts.get("keep").orElse(tableProp("retention.keep-last"))
-            .getOrElse("2").toInt, cutoff,
-            dryRun = opts.contains("dry-run"))
-        report("expire", Map(
-          "dry-run" -> res.dryRun.toString,
-          "expired-versions" -> res.expiredVersions.mkString(","),
-          (if (res.dryRun) "dead-data-files" else "deleted-data-files") ->
-            res.deletedDataFiles.toString,
-          (if (res.dryRun) "dead-manifests" else "deleted-manifests") ->
-            res.deletedManifests.toString,
-          "reclaimable-bytes" -> res.reclaimableBytes.toString) ++
-          (if (res.externalSkipped == 0) Map.empty[String, String]
-          else Map("external-files-skipped" -> res.externalSkipped.toString)))
-
-      case "clone" =>
-        // SHALLOW CLONE: zero-copy independent table at --target; see
-        // QTable.cloneTo for version-floor + ownership semantics
-        val c = table.cloneTo(req(opts, "target"))
-        val cs = c.currentSnapshot
-        report("clone", cs.summary ++ Map("version" -> cs.version.toString,
-          "target" -> req(opts, "target")))
-
       case "rebucket" =>
-        val snap = CommitRetry.withCommitRetry()(new RebucketJob(table,
-          req(opts, "buckets").toInt, targetBytes, jobId).run())
+        val snap = CommitRetry.withCommitRetry()(new RebucketJob(a.table,
+          a.req("buckets").toInt, a.targetBytes, a.jobId).run())
         report("rebucket", snap.summary ++ Map("version" -> snap.version.toString,
           "buckets" -> snap.buckets.toString))
 
       case "add-column" =>
         val snap = CommitRetry.withCommitRetry()(
-          table.addColumn(req(opts, "name"), opts.getOrElse("type", "string"),
+          a.table.addColumn(a.req("name"), opts.getOrElse("type", "string"),
             opts.get("default")))
         report("add-column", snap.summary ++ Map("version" -> snap.version.toString,
           "schema" -> snap.schemaFields.map(f => s"${f.name}:${f.dtype}").mkString(",")))
@@ -345,48 +246,33 @@ object Main {
         // stable per-row ids (Iceberg v3 row lineage): one metadata
         // commit stamps every live file's id range; rewrites thereafter
         // materialize _row_id so ids survive re-sorts
-        val snap = CommitRetry.withCommitRetry()(table.enableRowLineage())
+        val snap = CommitRetry.withCommitRetry()(a.table.enableRowLineage())
         report("enable-row-lineage", snap.summary ++ Map(
           "version" -> snap.version.toString,
           "next-row-id" -> snap.nextRowId.toString))
 
       case "rename-column" =>
         val snap = CommitRetry.withCommitRetry()(
-          table.renameColumn(req(opts, "from"), req(opts, "to")))
+          a.table.renameColumn(a.req("from"), a.req("to")))
         report("rename-column", snap.summary ++ Map("version" -> snap.version.toString,
           "schema" -> snap.schemaFields.map(f => s"${f.name}:${f.dtype}").mkString(",")))
 
       case "drop-column" =>
-        val snap = CommitRetry.withCommitRetry()(table.dropColumn(req(opts, "name")))
+        val snap = CommitRetry.withCommitRetry()(a.table.dropColumn(a.req("name")))
         report("drop-column", snap.summary ++ Map("version" -> snap.version.toString,
           "schema" -> snap.schemaFields.map(f => s"${f.name}:${f.dtype}").mkString(",")))
 
       case "widen-column" =>
         val snap = CommitRetry.withCommitRetry()(
-          table.widenColumn(req(opts, "name"), req(opts, "type")))
+          a.table.widenColumn(a.req("name"), a.req("type")))
         report("widen-column", snap.summary ++ Map("version" -> snap.version.toString,
           "schema" -> snap.schemaFields.map(f => s"${f.name}:${f.dtype}").mkString(",")))
-
-      case "rollback" =>
-        val toVersion = RollbackJob.resolveTarget(
-          table, opts.get("to"), opts.get("tag"), opts.get("as-of-ts"))
-        val snap = new RollbackJob(table).run(toVersion)
-        report("rollback", snap.summary ++ Map("version" -> snap.version.toString,
-          "rolled-back-to" -> toVersion.toString))
-
-      case "remove-orphans" =>
-        val graceMs = opts.getOrElse("grace-hours", "24").toLong * 3600L * 1000L
-        val res = new RemoveOrphanFilesJob(table, graceMs).run(opts.contains("dry-run"))
-        report("remove-orphans", Map(
-          "deleted" -> res.deleted.toString, "kept" -> res.kept.toString,
-          "grace-hours" -> opts.getOrElse("grace-hours", "24"),
-          "dry-run" -> opts.contains("dry-run").toString))
 
       case "lookup" =>
         // point lookup THROUGH the stats-skipping FileIndex: the filter is
         // pushed into the scan and manifest ranges prune the files read
-        val id = req(opts, "id")
-        val (df, index) = table.readIndexed()
+        val id = a.req("id")
+        val (df, index) = a.table.readIndexed()
         val rows = df.where(org.apache.spark.sql.functions.col("image_id") === id)
           .selectExpr("image_id", "w", "h", "fmt", "phash", "pbucket",
             "length(bytes) AS n_bytes")
@@ -406,18 +292,11 @@ object Main {
           sys.exit(1)
         }
 
-      case "rewrite-manifests" =>
-        val snap = CommitRetry.withCommitRetry()(new RewriteManifestsJob(table).run(
-          opts.getOrElse("entries-per-manifest", "512").toInt))
-        report("rewrite-manifests",
-          snap.summary ++ Map("version" -> snap.version.toString,
-            "manifests-after" -> snap.manifests.size.toString))
-
       case "rewrite-deletes" =>
         // consolidate accumulated position-delete files (metadata-only
         // for the data; O(delete rows) total work)
         val snap = CommitRetry.withCommitRetry()(
-          new RewriteDeletesJob(table, jobId).run())
+          new RewriteDeletesJob(a.table, a.jobId).run())
         report("rewrite-deletes",
           snap.summary ++ Map("version" -> snap.version.toString))
 
@@ -425,10 +304,10 @@ object Main {
         // --branch: audit a branch head before fast-forwarding it (the
         // branch workflow's gate); --staged: audit the claimed-but-
         // unpublished snapshot (the WAP gate) — else the published head
-        val t0 = QTable(tableRoot, spark)
+        val t0 = QTable(a.tableRoot, spark)
         val t = opts.get("branch").map(t0.onBranch).getOrElse(t0)
         val cur =
-          if (opts.contains("staged"))
+          if (a.flag("staged"))
             t.snapshotAt(t.stagedVersion.getOrElse(
               throw new IllegalStateException("nothing staged to verify")))
           else t.currentSnapshot
@@ -458,116 +337,11 @@ object Main {
           "violations" -> bad.toString))
         if (!ok) sys.exit(1)
 
-      case "maintain" if opts.contains("auto") =>
-        // debt-driven tick: analyze (metadata-only) -> launch ONLY the
-        // jobs whose debt crossed threshold -> gate -> destructive tail.
-        // A clean table commits NOTHING, so this can run every scheduler
-        // tick at 10^12-row scale (each tick costs O(outstanding debt)).
-        require(!opts.contains("staged"),
-          "maintain does not compose with --staged; stage individual jobs")
-        // every dial is table-carried (set-property auto.<dial>) with the
-        // usual precedence: explicit flag > table property > built-in
-        def dial(flag: String, dflt: String): String =
-          opts.get(flag).orElse(tableProp(s"auto.$flag")).getOrElse(dflt)
-        val cfg = AutoMaintain.Config(
-          smallDebtRatio = dial("small-debt-ratio", "0.10").toDouble,
-          deleteRowRatio = dial("delete-row-ratio", "0.02").toDouble,
-          maxDeleteFiles = dial("max-delete-files", "16").toInt,
-          overlapThreshold = dial("overlap-threshold", "1.5").toDouble,
-          entriesPerManifest = dial("entries-per-manifest", "512").toInt,
-          maxRetainedVersions = dial("max-versions", "12").toInt)
-        val res =
-          try AutoMaintain.run(table, targetBytes, cfg, jobId, concurrency,
-            bucketScope, hilbert = opts.contains("hilbert"),
-            keep = opts.getOrElse("keep", "2").toInt,
-            graceMs = opts.getOrElse("grace-hours", "24").toLong * 3600L * 1000L,
-            dryRun = opts.contains("dry-run"))
-          catch {
-            case e: IllegalStateException =>
-              report("maintain", Map("auto" -> "true",
-                "scan-equivalent" -> "false", "note" -> e.getMessage))
-              sys.exit(1)
-          }
-        report("maintain", Map(
-          "auto" -> "true",
-          "actions" -> (if (res.plan.isNoop) "(none)"
-            else res.plan.actions.mkString(",")),
-          "reasons" -> (if (res.plan.reasons.isEmpty) "(table clean)"
-            else res.plan.reasons.mkString("; ")),
-          "pre-version" -> res.preVersion.toString,
-          "version" -> res.postVersion.toString,
-          "scan-equivalent" -> res.scanEquivalent.map(_.toString)
-            .getOrElse("(no rewrites)"),
-          "expired-versions" -> (if (res.expiredVersions.isEmpty) "(none)"
-            else res.expiredVersions.mkString(",")),
-          "orphans-deleted" -> res.orphansDeleted.toString,
-          "dry-run" -> opts.contains("dry-run").toString))
-
-      case "maintain" =>
-        // the composite chains commits; a staged first commit would hold
-        // the claim the second needs — stage individual jobs instead
-        require(!opts.contains("staged"),
-          "maintain does not compose with --staged (its own verify gate " +
-            "audits before the destructive tail); stage individual jobs")
-        // composite maintenance pass (the reference's EP1 flow shape, and
-        // the OPTIMIZE+VACUUM analogue): compact -> cluster ->
-        // rewrite-manifests -> [gate] -> expire -> orphan sweep, each
-        // step its own commit under a step-scoped jobId so a killed run
-        // resumes the step it died in. The rewrites are NON-destructive
-        // (old snapshots stay rollback targets); the scan-equivalence
-        // gate must pass BEFORE the destructive tail runs — on a gate
-        // failure the pre-maintenance snapshot is still intact and
-        // `rollback --to` restores it. `--dry-run` keeps the whole pass
-        // non-destructive: expiry is skipped and the orphan sweep only
-        // counts.
-        val t = table
-        val pre = t.currentSnapshot
-        // --scope rolls the whole pass over a bucket subset: both
-        // rewrites take it, the verify gate still checks the full table
-        val snapC = CommitRetry.withCommitRetry()(new CompactJob(t, targetBytes,
-          jobId = s"$jobId-compact", concurrency = concurrency,
-          bucketScope = bucketScope).run())
-        // --incremental composes: compact only touches small/delete-
-        // carrying files, and the incremental cluster then sorts exactly
-        // compact's outputs + other post-cluster debt into a new run,
-        // leaving the previous sorted runs untouched — a rolling
-        // maintenance tick that never re-sorts the table
-        val snapZ = CommitRetry.withCommitRetry()(new ClusterJob(t, targetBytes,
-          hilbert = opts.contains("hilbert"), jobId = s"$jobId-cluster",
-          concurrency = concurrency, bucketScope = bucketScope,
-          incremental = opts.contains("incremental")).run())
-        val snapM = CommitRetry.withCommitRetry()(new RewriteManifestsJob(t).run(
-          opts.getOrElse("entries-per-manifest", "512").toInt))
-        val (okV, badV) = ScanEquivalence.check(t.read(pre), t.read(snapM))
-        if (!okV) {
-          report("maintain", Map(
-            "scan-equivalent" -> "false", "violations" -> badV.toString,
-            "rollback-target" -> pre.version.toString,
-            "note" -> "destructive tail skipped; rollback --to restores the pre-maintenance snapshot"))
-          sys.exit(1)
-        }
-        val dryRun = opts.contains("dry-run")
-        val ex =
-          if (dryRun) None
-          else Some(new ExpireSnapshotsJob(t).run(opts.getOrElse("keep", "2").toInt))
-        val orph = new RemoveOrphanFilesJob(t,
-          opts.getOrElse("grace-hours", "24").toLong * 3600L * 1000L)
-          .run(dryRun)
-        report("maintain", snapM.summary ++ Map(
-          "version" -> snapM.version.toString,
-          "compact-version" -> snapC.version.toString,
-          "cluster-version" -> snapZ.version.toString,
-          "scan-equivalent" -> okV.toString,
-          "violations" -> badV.toString,
-          "dry-run" -> dryRun.toString,
-          "expired-versions" -> ex.map(_.expiredVersions.mkString(",")).getOrElse("(dry-run)"),
-          "orphans-deleted" -> orph.deleted.toString))
-
       case "files" | "manifests" | "partitions" =>
         // metadata tables (Iceberg table$files / table$manifests /
         // table$partitions): layout inspection with zero data-file opens
         // — summary line here, full rows to --out parquet for ad-hoc SQL
-        val t = table
+        val t = a.table
         val metaSnap = opts.get("version").map(v => t.snapshotAt(v.toLong))
           .orElse(opts.get("tag").map(n =>
             t.snapshotAt(graft.format.Tags.ref(t, n).version)))
@@ -593,7 +367,7 @@ object Main {
 
       case "history" =>
         // snapshot-history metadata table (Iceberg `snapshots` analogue)
-        table.historyDF.orderBy("version").collect().foreach { r =>
+        a.table.historyDF.orderBy("version").collect().foreach { r =>
           report("history", Map(
             "version" -> r.getLong(0).toString,
             "parent-version" -> r.getLong(1).toString,
@@ -606,8 +380,8 @@ object Main {
 
       case "incremental" =>
         // CDC-style incremental append scan over (from, to]
-        val t = table
-        val from = req(opts, "from").toLong
+        val t = a.table
+        val from = a.req("from").toLong
         val to = opts.get("to").map(_.toLong).getOrElse(t.currentVersion)
         val added = t.addedEntries(from, to)
         report("incremental", Map(
@@ -617,43 +391,15 @@ object Main {
           "added-bytes" -> added.map(_.byteCount).sum.toString))
 
       case "publish" =>
-        val snap = QTable(tableRoot, spark).publishStaged()
+        val snap = QTable(a.tableRoot, spark).publishStaged()
         report("publish", snap.summary ++ Map(
           "version" -> snap.version.toString,
           "operation" -> snap.operation))
 
       case "abort-staged" =>
-        val aborted = QTable(tableRoot, spark).abortStaged()
+        val aborted = QTable(a.tableRoot, spark).abortStaged()
         report("abort-staged", Map(
           "aborted-version" -> aborted.map(_.toString).getOrElse("none")))
-
-      case "analyze" =>
-        // maintenance-debt report from metadata only — no data reads;
-        // cheap enough for every scheduler tick
-        val r = new AnalyzeJob(table, targetBytes).run()
-        report("analyze", Map(
-          "version" -> r.version.toString,
-          "operation" -> r.operation,
-          "retained-versions" -> r.retainedVersions.toString,
-          "tags" -> r.tags.toString,
-          "files" -> r.files.toString,
-          "total-bytes" -> r.totalBytes.toString,
-          "avg-file-bytes" -> r.avgFileBytes.toString,
-          "small-files" -> r.smallFiles.toString,
-          "small-file-debt-bytes" -> r.smallFileDebtBytes.toString,
-          "manifests" -> r.manifests.toString,
-          "avg-entries-per-manifest" -> r.avgEntriesPerManifest.toString,
-          "bloom-coverage" -> f"${r.bloomCoverage}%.3f",
-          "ndv-coverage" -> f"${r.ndvCoverage}%.3f",
-          "cluster-overlap" -> f"${r.clusterOverlap}%.2f",
-          "worst-bucket-overlap" -> f"${r.worstBucketOverlap}%.2f",
-          "schema-fields" -> r.schemaFields.toString,
-          "delete-files" -> r.deleteFiles.toString,
-          "delete-rows" -> r.deleteRows.toString,
-          "eq-delete-files" -> r.eqDeleteFiles.toString,
-          "eq-delete-keys" -> r.eqDeleteKeys.toString,
-          "external-files" -> r.externalFiles.toString,
-          "external-bytes" -> r.externalBytes.toString))
 
       case "agg" =>
         // metadata-only COUNT/MIN/MAX from manifest stats; hybrid
@@ -663,7 +409,7 @@ object Main {
           .getOrElse(Seq.empty)
         // --version V / --tag N / --as-of-ts T: aggregate a pinned
         // snapshot (version, tag, or timestamp time travel)
-        val t = table
+        val t = a.table
         val aggSnap = opts.get("version").map(v => t.snapshotAt(v.toLong))
           .orElse(opts.get("tag").map(n =>
             t.snapshotAt(graft.format.Tags.ref(t, n).version)))
@@ -706,11 +452,11 @@ object Main {
         // on-demand ANALYZE: attach per-file HLL sketches for the named
         // columns; only not-yet-sketched files are read (O(new data)).
         // Column list can live on the table (set-property ndv.columns)
-        val cols = opts.get("cols").orElse(tableProp("ndv.columns"))
+        val cols = opts.get("cols").orElse(a.tableProp("ndv.columns"))
           .getOrElse(throw new IllegalArgumentException(
             "pass --cols c1,c2 or set-property --key ndv.columns"))
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val t = table
+        val t = a.table
         val preV = t.currentVersion
         val snap = CommitRetry.withCommitRetry()(new NdvSketchJob(t, cols,
           lgK = opts.getOrElse("lgk", "12").toInt).run())
@@ -722,69 +468,36 @@ object Main {
           "ndv-cols" -> (if (noop) "(already analyzed)"
             else snap.summary.getOrElse("ndv-cols", ""))))
 
-      case "set-property" =>
-        // ALTER TABLE SET TBLPROPERTIES analogue: metadata-only commit;
-        // properties ride every later commit like the schema. Known
-        // policy keys: write.target-mb (rewrite targets),
-        // retention.keep-last (expire default), ndv.columns (analyze-ndv
-        // default) — arbitrary keys allowed for operator bookkeeping.
-        val snap = CommitRetry.withCommitRetry()(
-          table.setProperties(Map(req(opts, "key") -> req(opts, "value"))))
-        report("set-property", Map("version" -> snap.version.toString,
-          "key" -> req(opts, "key"), "value" -> req(opts, "value")))
-
-      case "unset-property" =>
-        val snap = CommitRetry.withCommitRetry()(
-          table.unsetProperties(Seq(req(opts, "key"))))
-        report("unset-property", Map("version" -> snap.version.toString,
-          "key" -> req(opts, "key")))
-
       case "properties" =>
-        report("properties", table.currentSnapshot.props)
-
-      case "set-constraint" =>
-        // ALTER TABLE ADD CONSTRAINT ... CHECK analogue: refused unless
-        // existing data satisfies it; thereafter every new-row writer
-        // (append/merge/update/upsert + streaming/SQL surfaces) vetoes
-        // violating batches. SQL-standard 3VL: only FALSE violates.
-        val snap = CommitRetry.withCommitRetry()(Constraints.set(
-          table, req(opts, "name"), req(opts, "expr")))
-        report("set-constraint", Map("version" -> snap.version.toString,
-          "name" -> req(opts, "name"), "expr" -> req(opts, "expr")))
-
-      case "drop-constraint" =>
-        val snap = CommitRetry.withCommitRetry()(
-          Constraints.drop(table, req(opts, "name")))
-        report("drop-constraint", Map("version" -> snap.version.toString,
-          "name" -> req(opts, "name")))
+        report("properties", a.table.currentSnapshot.props)
 
       case "constraints" =>
-        report("constraints", Constraints.of(table.currentSnapshot).toMap)
+        report("constraints", Constraints.of(a.table.currentSnapshot).toMap)
 
       case "branch" =>
         // writable named ref (Iceberg branch): fork at --at (default:
         // main head); commit to it by passing --branch N to any job
-        val name = req(opts, "name")
-        val ref = graft.format.Branches.create(table, name,
+        val name = a.req("name")
+        val ref = graft.format.Branches.create(a.table, name,
           opts.get("at").map(_.toLong).getOrElse(-1L))
         report("branch", Map("name" -> ref.name,
           "version" -> ref.version.toString))
 
       case "branches" =>
-        graft.format.Branches.list(table).foreach(r =>
+        graft.format.Branches.list(a.table).foreach(r =>
           report("branches", Map("name" -> r.name,
             "version" -> r.version.toString)))
 
       case "drop-branch" =>
-        val name = req(opts, "name")
-        val existed = graft.format.Branches.delete(table, name)
+        val name = a.req("name")
+        val existed = graft.format.Branches.delete(a.table, name)
         report("drop-branch", Map("name" -> name, "deleted" -> existed.toString))
 
       case "fast-forward" =>
         // publish a branch to main (main must be an ancestor of the
         // branch head — a metadata-only forward commit)
         val snap = CommitRetry.withCommitRetry()(
-          new FastForwardJob(table).run(req(opts, "branch")))
+          new FastForwardJob(a.table).run(a.req("branch")))
         report("fast-forward", snap.summary ++ Map(
           "version" -> snap.version.toString))
 
@@ -793,26 +506,12 @@ object Main {
         // without publishing the whole branch — metadata-only adoption
         // of its added files, re-stamped as new rows of this commit
         val snap = CommitRetry.withCommitRetry()(
-          new CherryPickJob(table).run(req(opts, "version").toLong))
+          new CherryPickJob(a.table).run(a.req("version").toLong))
         report("cherry-pick", snap.summary ++ Map(
           "version" -> snap.version.toString))
 
-      case "tag" =>
-        // immutable named snapshot ref; survives expiry until untagged
-        val name = req(opts, "name")
-        val ref = graft.format.Tags.create(table, name,
-          opts.get("version").map(_.toLong).getOrElse(-1L))
-        report("tag", Map("name" -> ref.name,
-          "version" -> ref.version.toString,
-          "created-at-ms" -> ref.createdAtMs.toString))
-
-      case "untag" =>
-        val name = req(opts, "name")
-        val existed = graft.format.Tags.delete(table, name)
-        report("untag", Map("name" -> name, "deleted" -> existed.toString))
-
       case "tags" =>
-        graft.format.Tags.list(table).foreach(r =>
+        graft.format.Tags.list(a.table).foreach(r =>
           report("tags", Map("name" -> r.name,
             "version" -> r.version.toString,
             "created-at-ms" -> r.createdAtMs.toString)))
@@ -822,10 +521,10 @@ object Main {
         // unlike `incremental` (which refuses them by design); endpoints
         // address by version or by tag name ("what changed since the
         // last training release")
-        val t = table
+        val t = a.table
         val from = opts.get("from-tag")
           .map(n => graft.format.Tags.ref(t, n).version)
-          .getOrElse(req(opts, "from").toLong)
+          .getOrElse(a.req("from").toLong)
         val to = opts.get("to-tag")
           .map(n => graft.format.Tags.ref(t, n).version)
           .orElse(opts.get("to").map(_.toLong))
@@ -843,7 +542,7 @@ object Main {
           "written" -> opts.getOrElse("out", "")))
 
       case "describe" =>
-        val t = table
+        val t = a.table
         val s = t.currentSnapshot
         val es = t.entries(s)
         report("describe", s.summary ++ Map(
@@ -855,45 +554,30 @@ object Main {
             (if (es.isEmpty) "0" else (es.map(_.byteCount).sum / es.size).toString),
           "versions" -> t.listVersions.mkString(",")))
 
-      // ---- persistent catalog: name -> table-root pointers (see
-      //      graft.format.Catalog; root from --catalog, the
-      //      spark.graft.catalog conf, or GRAFT_CATALOG)
-      case "register" =>
-        val root = opts.get("catalog")
-          .orElse(graft.format.Catalog.rootFor(spark)).getOrElse(
-            sys.error("no catalog configured: pass --catalog DIR or set GRAFT_CATALOG"))
-        graft.format.Catalog.register(root, req(opts, "name"),
-          req(opts, "table"), spark)
-        report("register", Map("catalog" -> root,
-          "name" -> req(opts, "name"), "table" -> req(opts, "table")))
-
-      case "unregister" =>
-        val root = opts.get("catalog")
-          .orElse(graft.format.Catalog.rootFor(spark)).getOrElse(
-            sys.error("no catalog configured: pass --catalog DIR or set GRAFT_CATALOG"))
-        val removed = graft.format.Catalog.unregister(root, req(opts, "name"), spark)
-        report("unregister", Map("catalog" -> root,
-          "name" -> req(opts, "name"), "removed" -> removed.toString))
-
-      case "tables" =>
-        val root = opts.get("catalog")
-          .orElse(graft.format.Catalog.rootFor(spark)).getOrElse(
-            sys.error("no catalog configured: pass --catalog DIR or set GRAFT_CATALOG"))
-        graft.format.Catalog.list(root, spark).foreach { case (n, t) =>
-          report("tables", Map("name" -> n, "table" -> t)) }
-
       case other =>
         System.err.println(s"unknown command: $other\n$usage"); sys.exit(2)
+    } catch {
+      case f: Procedures.GateFailed => report(cmd, f.summary); sys.exit(1)
     } finally spark.stop()
   }
 
-  private def report(cmd: String, kv: Map[String, String]): Unit = {
-    val body = kv.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString(",")
-    println(s"""{"job":"$cmd",$body}""")
+  /** One JSON line: `job` first, then the keys in sorted order. */
+  private[graft] def render(cmd: String, kv: Map[String, String]): String = {
+    val out = new java.io.StringWriter()
+    val g = graft.format.Json.mapper.getFactory.createGenerator(out)
+    g.writeStartObject()
+    g.writeStringField("job", cmd)
+    kv.toSeq.sortBy(_._1).foreach { case (k, v) => g.writeStringField(k, v) }
+    g.writeEndObject()
+    g.close()
+    out.toString
   }
 
-  private def parseOpts(args: Array[String]): Map[String, String] = {
+  private def report(cmd: String, kv: Map[String, String]): Unit =
+    println(render(cmd, kv))
+
+  /** `--k v` pairs; a `--k` with no value reads "true". */
+  private[graft] def parseOpts(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map[String, String]()
     var i = 0
     while (i < args.length) {
@@ -907,9 +591,14 @@ object Main {
     m.toMap
   }
 
-  private def req(opts: Map[String, String], k: String): String =
-    opts.getOrElse(k, throw new IllegalArgumentException(s"missing --$k\n$usage"))
+  private val cliVerbs = Seq("synth", "merge", "upsert", "delete", "update",
+    "rewrite-deletes", "stream", "rebucket", "add-column", "rename-column",
+    "drop-column", "widen-column", "enable-row-lineage", "verify", "lookup",
+    "history", "incremental", "changes", "analyze-ndv", "agg", "files",
+    "manifests", "partitions", "properties", "constraints", "tags", "branch",
+    "branches", "drop-branch", "fast-forward", "cherry-pick", "publish",
+    "abort-staged", "describe")
 
-  private val usage =
-    """usage: graft.Main <synth|compact|cluster|merge|upsert|delete|rewrite-deletes|stream|expire|rebucket|add-column|rename-column|drop-column|widen-column|enable-row-lineage|rollback|remove-orphans|rewrite-manifests|maintain|verify|lookup|history|incremental|changes|analyze|analyze-ndv|agg|files|manifests|partitions|set-property|unset-property|properties|tag|untag|tags|branch|branches|drop-branch|fast-forward|cherry-pick|publish|abort-staged|describe> --table PATH [options]"""
+  private val usage = "usage: graft.Main <" +
+    (cliVerbs ++ Procedures.verbs).mkString("|") + "> --table PATH [options]"
 }

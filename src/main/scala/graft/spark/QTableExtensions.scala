@@ -308,8 +308,11 @@ case class MergeIntoQTableCommand(
     val proj = col(srcKey).as("image_id") +:
       (updates.map { case (tc, sc) => col(sc).as(tc) } ++
         passThrough ++ delFlagCol.toSeq)
+    // fixed outside the retry: a fresh id per attempt would orphan the
+    // losing attempt's checkpoint instead of resuming it
+    val jobId = java.util.UUID.randomUUID().toString
     graft.jobs.CommitRetry.withCommitRetry()(
-      new graft.jobs.MergeJob(t,
+      new graft.jobs.MergeJob(t, jobId,
         updateCols = updates.map(_._1),
         deleteCol = delFlagCol.map(_ => "_graft_del"),
         insertUnmatched = insertStar,
@@ -364,8 +367,9 @@ case class UpdateQTableCommand(root: String, sets: Seq[(String, String)],
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions.{expr, lit}
     val t = QTable(root, spark)
+    val jobId = java.util.UUID.randomUUID().toString // see MergeIntoQTableCommand
     graft.jobs.CommitRetry.withCommitRetry()(
-      new graft.jobs.UpdateJob(t,
+      new graft.jobs.UpdateJob(t, jobId,
         mergeOnRead = t.property("write.update.mode").contains("merge-on-read"))
         .run(
           sets.map { case (c, s) => c -> expr(s) },
@@ -406,8 +410,9 @@ case class DeleteFromQTableCommand(root: String, condSql: String)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val t = QTable(root, spark)
+    val jobId = java.util.UUID.randomUUID().toString // see MergeIntoQTableCommand
     graft.jobs.CommitRetry.withCommitRetry()(
-      new graft.jobs.DeleteJob(t).run(org.apache.spark.sql.functions.expr(condSql)))
+      new graft.jobs.DeleteJob(t, jobId).run(org.apache.spark.sql.functions.expr(condSql)))
     Seq.empty
   }
 }
@@ -416,8 +421,8 @@ object QTableExtensions {
 
   /** SQL maintenance procedures (the Iceberg `CALL catalog.system.*`
     * stored-procedure analogue): `CALL qtable.<verb>(name => value,
-    * ...)` dispatches to the engine's jobs — every maintenance
-    * operation reachable from pure SQL, not just the DML statements.
+    * ...)` dispatches through [[graft.Procedures]], the registry the
+    * CLI shares — the maintenance verbs reachable from pure SQL.
     * Intercepted at PARSE time (qtable views are temp views, not
     * catalog procedures, so Spark's own CALL resolution can never
     * apply); the statement must match the `qtable.` namespace exactly
@@ -673,22 +678,13 @@ case class AppendToQTableCommand(
 }
 
 /** `CALL qtable.<verb>(...)` — SQL maintenance procedures over a table
-  * path (Iceberg stored-procedure analogue). Every verb takes
-  * `table => '/path'` (plus `branch => 'name'` to address a branch) and
-  * returns the job's summary as (key, value) rows:
-  *
-  *  - compact / cluster (`target_mb`, cluster: `by`, `hilbert`,
-  *    `incremental`) — the rewrite jobs, commit-retried
-  *  - expire (`keep`, `older_than_hours`, `dry_run`)
-  *  - rewrite_manifests; remove_orphans (`grace_hours`, `dry_run`)
-  *  - analyze (`target_mb`) — the metadata-only debt report
-  *  - maintain — one debt-driven auto tick (built-in dial defaults)
-  *  - set_constraint (`name`, `expr`) / drop_constraint (`name`)
-  *  - set_property (`key`, `value`) / unset_property (`key`)
-  *  - clone (`target`); tag / untag (`name`); rollback (`to`)
-  *
-  * Flag precedence matches the CLI: explicit argument beats the
-  * table-carried property beats the built-in default. */
+  * path or catalog name (Iceberg stored-procedure analogue). An adapter
+  * over [[graft.Procedures]], which holds the one implementation of
+  * every verb and lists its arguments: argument and verb names map
+  * `snake_case` to the CLI's `kebab-case` (`target_mb => 4` is
+  * `--target-mb 4`, `rewrite_manifests` is `rewrite-manifests`), and
+  * the summary comes back as sorted (key, value) rows. `maintain` is
+  * the debt-driven tick here (`auto` defaults to true). */
 final case class QTableCallCommand(verb: String, args: Map[String, String])
   extends LeafRunnableCommand {
   import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -699,128 +695,13 @@ final case class QTableCallCommand(verb: String, args: Map[String, String])
       AttributeReference("value", StringType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import graft.jobs._
-    def req(k: String): String = args.getOrElse(k,
-      throw new IllegalArgumentException(
-        s"CALL qtable.$verb requires $k => ..."))
-    // catalog procedures run BEFORE table resolution (`tables` has no
-    // table argument at all; `register` points a name at a raw path)
-    def catalogRoot: String = args.get("catalog")
-      .orElse(graft.format.Catalog.rootFor(spark)).getOrElse(throw
-        new IllegalArgumentException("no catalog configured: pass " +
-          s"catalog => '<dir>' or set ${graft.format.Catalog.ConfKey}"))
-    verb match {
-      case "register" =>
-        graft.format.Catalog.register(catalogRoot, req("name"), req("table"), spark)
-        return Seq(Row("registered", req("name")), Row("table", req("table")))
-      case "unregister" =>
-        val removed = graft.format.Catalog.unregister(catalogRoot, req("name"), spark)
-        return Seq(Row("unregistered", req("name")), Row("removed", removed.toString))
-      case "tables" =>
-        return graft.format.Catalog.list(catalogRoot, spark)
-          .map { case (n, r) => Row(n, r) }
-      case _ => ()
-    }
-    // `table =>` takes a path or a catalog name (bare value, resolved
-    // through spark.graft.catalog / GRAFT_CATALOG — graft.format.Catalog)
-    val t0 = QTable(
-      graft.format.Catalog.resolveTableArg(spark, req("table")), spark)
-    val t = args.get("branch").map(t0.onBranch).getOrElse(t0)
-    def prop(k: String): Option[String] =
-      t.currentSnapshotOpt.flatMap(_.props.get(k))
-    def targetBytes: Long = args.get("target_mb")
-      .orElse(prop("write.target-mb")).map(_.toLong << 20)
-      .getOrElse(128L << 20)
-    def flag(k: String): Boolean = args.get(k).exists(_.toBoolean)
-    def summaryOf(s: graft.model.Snapshot): Map[String, String] =
-      s.summary + ("version" -> s.version.toString)
-
-    val result: Map[String, String] = verb match {
-      case "compact" =>
-        summaryOf(CommitRetry.withCommitRetry()(
-          new CompactJob(t, targetBytes).run()))
-      case "cluster" =>
-        summaryOf(CommitRetry.withCommitRetry()(new ClusterJob(t, targetBytes,
-          hilbert = flag("hilbert"), incremental = flag("incremental"),
-          sortBy = args.get("by").map(_.split(",").toSeq.map(_.trim))).run()))
-      case "expire" =>
-        val cutoff = args.get("older_than_hours").map(h =>
-          System.currentTimeMillis() - (h.toDouble * 3600 * 1000).toLong)
-        val r = new ExpireSnapshotsJob(t).run(
-          args.get("keep").orElse(prop("retention.keep-last"))
-            .getOrElse("2").toInt, cutoff, dryRun = flag("dry_run"))
-        Map(
-          "expired-versions" -> r.expiredVersions.mkString(","),
-          "deleted-data-files" -> r.deletedDataFiles.toString,
-          "deleted-manifests" -> r.deletedManifests.toString,
-          "reclaimable-bytes" -> r.reclaimableBytes.toString,
-          "dry-run" -> r.dryRun.toString) ++
-          (if (r.externalSkipped == 0) Map.empty[String, String]
-          else Map("external-files-skipped" -> r.externalSkipped.toString))
-      case "rewrite_manifests" =>
-        summaryOf(CommitRetry.withCommitRetry()(new RewriteManifestsJob(t).run()))
-      case "remove_orphans" =>
-        val r = new RemoveOrphanFilesJob(t, graceMs = args.get("grace_hours")
-          .map(h => (h.toDouble * 3600 * 1000).toLong)
-          .getOrElse(24L * 3600 * 1000)).run(flag("dry_run"))
-        Map("deleted" -> r.deleted.toString, "kept" -> r.kept.toString,
-          "dry-run" -> flag("dry_run").toString)
-      case "analyze" =>
-        val r = new AnalyzeJob(t, targetBytes).run()
-        Map(
-          "version" -> r.version.toString,
-          "files" -> r.files.toString,
-          "total-bytes" -> r.totalBytes.toString,
-          "small-files" -> r.smallFiles.toString,
-          "small-file-debt-bytes" -> r.smallFileDebtBytes.toString,
-          "manifests" -> r.manifests.toString,
-          "cluster-overlap" -> f"${r.clusterOverlap}%.2f",
-          "delete-files" -> r.deleteFiles.toString,
-          "delete-rows" -> r.deleteRows.toString,
-          "eq-delete-files" -> r.eqDeleteFiles.toString,
-          "retained-versions" -> r.retainedVersions.toString)
-      case "maintain" =>
-        val r = AutoMaintain.run(t, targetBytes)
-        Map(
-          "actions" -> (if (r.plan.isNoop) "(none)"
-            else r.plan.actions.mkString(",")),
-          "pre-version" -> r.preVersion.toString,
-          "version" -> r.postVersion.toString,
-          "scan-equivalent" -> r.scanEquivalent.map(_.toString)
-            .getOrElse("(no rewrite)"))
-      case "set_constraint" =>
-        summaryOf(CommitRetry.withCommitRetry()(
-          Constraints.set(t, req("name"), req("expr"))))
-      case "drop_constraint" =>
-        summaryOf(CommitRetry.withCommitRetry()(
-          Constraints.drop(t, req("name"))))
-      case "set_property" =>
-        summaryOf(CommitRetry.withCommitRetry()(
-          t.setProperties(Map(req("key") -> req("value")))))
-      case "unset_property" =>
-        summaryOf(CommitRetry.withCommitRetry()(
-          t.unsetProperties(Seq(req("key")))))
-      case "clone" =>
-        val c = t.cloneTo(req("target"))
-        summaryOf(c.currentSnapshot) + ("target" -> req("target"))
-      case "tag" =>
-        graft.format.Tags.create(t, req("name"),
-          args.get("version").map(_.toLong).getOrElse(t.currentVersion))
-        Map("tag" -> req("name"))
-      case "untag" =>
-        require(graft.format.Tags.delete(t, req("name")),
-          s"no such tag: ${req("name")}")
-        Map("untagged" -> req("name"))
-      case "rollback" =>
-        summaryOf(CommitRetry.withCommitRetry()(
-          new RollbackJob(t).run(req("to").toLong)))
-      case other => throw new IllegalArgumentException(
-        s"unknown procedure: CALL qtable.$other — supported: compact, " +
-          "cluster, expire, rewrite_manifests, remove_orphans, analyze, " +
-          "maintain, set_constraint, drop_constraint, set_property, " +
-          "unset_property, clone, tag, untag, rollback, register, " +
-          "unregister, tables")
-    }
-    result.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
+    val name = verb.replace('_', '-')
+    require(graft.Procedures.verbs.contains(name),
+      s"unknown procedure: CALL qtable.$verb — supported: " +
+        graft.Procedures.verbs.map(_.replace('-', '_')).mkString(", "))
+    val opts = args.map { case (k, v) => k.replace('_', '-') -> v }
+    val defaults = if (name == "maintain") Map("auto" -> "true") else Map.empty[String, String]
+    graft.Procedures.run(name, defaults ++ opts, spark)
+      .toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
   }
 }

@@ -40,7 +40,6 @@ class DeleteLintSpec extends AnyFunSuite {
       "a failed driver write removes its own hidden staged file",
     "Branches.delete" -> "drop-branch removes a ref file, never a table file",
     "Tags.delete" -> "untag removes a tag file, never a table file",
-    "QTableCallCommand.run" -> "CALL untag, through Tags.delete",
     "Catalog.unregister" -> "unregister removes a catalog pointer, never a table file")
 
   private val Delete = """(\.\s*delete|\bdeleteRecursive)\s*\(""".r
