@@ -21,26 +21,26 @@ object ParquetStats {
   final case class Listed(path: String, len: Long, mtime: Long)
 
   /** The read options `ParquetFileReader.open(InputFile)` would build
-    * for every file. Building them reads a fresh Hadoop `Configuration`,
-    * so a batch of footer reads shares one set. */
-  private def readOptions(): ParquetReadOptions = ParquetReadOptions.builder().build()
+    * for every file, built once per JVM: building them reads a fresh
+    * default Hadoop `Configuration`, which parses `core-default.xml` and
+    * `core-site.xml` again each time. */
+  private lazy val readOptions: ParquetReadOptions = ParquetReadOptions.builder().build()
 
-  /** One file's entry, with its own status call and read options. */
+  /** One file's entry, with its own status call. */
   def entryFor(pathStr: String, conf: Configuration): DataFileEntry = {
     val hp = new HPath(pathStr)
     val st = hp.getFileSystem(conf).getFileStatus(hp)
-    entryFor(Listed(pathStr, st.getLen, st.getModificationTime), conf, readOptions())
+    entryFor(Listed(pathStr, st.getLen, st.getModificationTime), conf)
   }
 
   /** One file's entry from its listing: no status call per file. */
-  private def entryFor(file: Listed, conf: Configuration,
-      options: ParquetReadOptions): DataFileEntry = {
+  private def entryFor(file: Listed, conf: Configuration): DataFileEntry = {
     import graft.model.ColStat
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val pathStr = file.path
     val status = new FileStatus(file.len, false, 1, 0L, file.mtime, new HPath(pathStr))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf), options)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf), readOptions)
     try {
       val footer = reader.getFooter
       var rows = 0L
@@ -218,11 +218,9 @@ object ParquetStats {
   val DistributeThreshold = 64
 
   /** Footer reads for a batch of listed files, parallelized on the
-    * driver (cheap metadata I/O for per-group output batches) with one
-    * set of read options. */
+    * driver (cheap metadata I/O for per-group output batches). */
   def entriesFor(files: Seq[Listed], conf: Configuration): Seq[DataFileEntry] = {
-    val options = readOptions()
-    files.par.map(f => entryFor(f, conf, options)).seq.sortBy(_.path)
+    files.par.map(f => entryFor(f, conf)).seq.sortBy(_.path)
   }
 
   /** Footer reads sized by batch: small batches stay a driver loop, large
@@ -238,8 +236,7 @@ object ParquetStats {
       spark.sparkContext.parallelize(files, slices)
         .mapPartitions { it =>
           val c = confFromProps(props)
-          val options = readOptions()
-          it.map(f => entryFor(f, c, options))
+          it.map(f => entryFor(f, c))
         }
         .collect().toSeq.sortBy(_.path)
     }

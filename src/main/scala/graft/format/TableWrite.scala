@@ -1,17 +1,8 @@
 package graft.format
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.lib.output.{FileOutputCommitter, FileOutputFormat}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, GraftBridge, RuntimeConfig, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
 
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 /** The one data-file write path: every job funnels here so table files
@@ -71,7 +62,7 @@ object TableWrite {
     * pruning — on any timestamp column. Session conf (no per-write
     * option exists); reference-counted set/restore (see [[enterTs]]),
     * and rewrites of old INT96 files migrate them to micros. */
-  private def withMicros[A](s: SparkSession)(write: => A): A = {
+  private[format] def withMicros[A](s: SparkSession)(write: => A): A = {
     enterTs(s)
     try write finally exitTs(s)
   }
@@ -134,49 +125,5 @@ object TableWrite {
         lean.set(e.getKey, e.getValue)
     }
     lean
-  }
-
-  /** Writes part files into the new directory `dir` on the driver, with
-    * the Parquet writer, options and Hadoop conf a Spark write job uses:
-    * `files` holds each file's task partition index and rows of
-    * `schema`. The files get a job's names, bytes, modes, `.crc`
-    * sidecars and `_SUCCESS` marker. Each is written under a hidden
-    * name, which listings skip, and renamed into place once closed. An
-    * existing `dir` is refused, as the job's `ErrorIfExists` save mode
-    * does. */
-  def parquetOnDriver(spark: SparkSession, schema: StructType, dir: String,
-      files: Seq[(Int, Iterator[InternalRow])]): Unit = withMicros(spark) {
-    val options = writeOptions(spark.conf)
-    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
-    val out = new HPath(dir)
-    val fs = out.getFileSystem(job.getConfiguration)
-    val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
-    if (fs.exists(qualified)) throw GraftBridge.outputPathExists(qualified)
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[InternalRow])
-    FileOutputFormat.setOutputPath(job, qualified)
-    val factory = new ParquetFileFormat()
-      .prepareWrite(spark, job, CaseInsensitiveMap(options), schema)
-    val conf = job.getConfiguration
-    fs.mkdirs(qualified)
-    val jobUuid = UUID.randomUUID().toString
-    val jobId = new JobID(jobUuid.take(8), 0)
-    files.foreach { case (p, rows) =>
-      val task = new TaskAttemptContextImpl(conf,
-        new TaskAttemptID(new TaskID(jobId, TaskType.MAP, p), 0))
-      val name = f"part-$p%05d-$jobUuid-c000" + factory.getFileExtension(task)
-      val staged = new HPath(qualified, "." + name)
-      val w = factory.newInstance(staged.toString, schema, task)
-      try rows.foreach(w.write)
-      catch { case e: Throwable =>
-        try { w.close(); fs.delete(staged, false) } catch { case s: Throwable => e.addSuppressed(s) }
-        throw e
-      }
-      w.close()
-      if (!fs.rename(staged, new HPath(qualified, name)))
-        throw new java.io.IOException(s"could not rename $staged to $name")
-    }
-    if (conf.getBoolean(FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, true))
-      fs.create(new HPath(qualified, FileOutputCommitter.SUCCEEDED_FILE_NAME), true).close()
   }
 }

@@ -1,9 +1,14 @@
 package graft.jobs
 
 import graft.expr.zfunctions._
-import graft.format.QTable
+import graft.format.{DriverIO, QTable}
 import graft.model._
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile.PercentileDigest
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 
 /** Z-order / Hilbert clustering rewrite.
@@ -13,7 +18,10 @@ import org.apache.spark.sql.functions._
   *     image_id), never touching the fat `bytes` column — computes
   *     approximate quantiles of the clustering key (the same
   *     sketch-based boundary estimation `repartitionByRange` would do,
-  *     but over ~1% of the bytes);
+  *     but over ~1% of the bytes). When the sampled files fit
+  *     [[DriverIO.Cap]] the pass reads them on the driver and folds
+  *     each group into Spark's own `percentile_approx` digest; above
+  *     the cap it is one aggregation job;
   *  2. the single FULL scan computes the key with the custom Catalyst
   *     expression [[graft.expr.ZOrderKey]], assigns each row its
   *     quantile bin, and [[ExactShuffle.repartitionByBin]] moves it in
@@ -23,6 +31,12 @@ import org.apache.spark.sql.functions._
   *  3. sortWithinPartitions(zkey, tiebreak) + write: ~targetFileBytes
   *     files whose narrow per-file phash ranges land in the rewritten
   *     manifests and drive scan pruning.
+  * A group whose read is a plain scan (no live deletes, initial
+  * defaults or row lineage) and whose rows fit [[DriverIO.Cap]] runs 2
+  * and 3 on the driver instead: the same bins and sort, and files
+  * written under the names the shuffle's partitions would give them,
+  * with no job. Groups with more bins than the quantile grid holds, a
+  * `maxRecordsPerFile` limit, or rows over the cap keep the job path.
   *
   * Skew: phash is heavily skewed (near-duplicate clusters — by design in
   * the synthetic data, and in any real image corpus). Fixed-width zkey
@@ -175,7 +189,7 @@ class ClusterJob(
     * near-uniform sample of its group's key distribution; boundary error
     * only skews output file sizes a few percent, never correctness. */
   private[jobs] def boundsByGroup(snap: Snapshot, plans: Seq[Plan],
-      zkeyCol: Column, sampleEvery: Int): Map[String, Array[Long]] = {
+      zkeyCol: Column, sampleEvery: Int, onDriver: Boolean = true): Map[String, Array[Long]] = {
     // every 8th file per group (min 1): pre-cluster files are id-range
     // slices independent of the key components, so each is a near-uniform
     // sample; one ~17k-row file per group is ample for a 128-point grid
@@ -188,16 +202,32 @@ class ClusterJob(
     // sampleEvery = 1 (every file; the pass is still column-pruned).
     // Each sampled row feeds the grid of the group that owns its file:
     // a file may straddle a bucket edge, so two groups can share a bucket
+    val t0 = System.nanoTime()
     val sampled = plans.flatMap(p => p.inputs.sortBy(_.path).zipWithIndex
       .collect { case (f, i) if i % sampleEvery == 0 => f -> p.group })
     val grid = (1 until QuantileGrid).map(_.toDouble / QuantileGrid).toArray
+    val groupOf = sampled.map { case (f, g) => QTable.fileName(f.path) -> g }
     val rows = table.scan(sampled.map(_._1), snap.physicalSchema)
-      .select(col("_metadata.file_name").as("file"), zkeyCol.as("zkey"))
-    ClusterJob.groupQuantiles(rows,
-      sampled.map { case (f, g) => QTable.fileName(f.path) -> g }, grid)
+    val onDriverPlan =
+      if (onDriver && sampled.map(_._1.byteCount).sum <= DriverIO.Cap)
+        DriverIO.plain(rows.select(zkeyCol.as("zkey")).queryExecution.sparkPlan)
+      else None
+    val grids = onDriverPlan match {
+      case Some(p) => ClusterJob.driverQuantiles(p, groupOf.toMap, grid)
+      case None => ClusterJob.groupQuantiles(
+        rows.select(col("_metadata.file_name").as("file"), zkeyCol.as("zkey")), groupOf, grid)
+    }
+    if (sys.env.contains("GRAFT_TIMING"))
+      System.err.println(f"[timing] cluster-bounds ${(System.nanoTime() - t0) / 1e9}%6.2fs " +
+        s"(${plans.size} groups, path=${if (onDriverPlan.isDefined) "driver" else "job"})")
+    grids
   }
 
-  def run(failAfterGroups: Int = Int.MaxValue): Snapshot = {
+  def run(failAfterGroups: Int = Int.MaxValue): Snapshot = run(failAfterGroups, onDriver = true)
+
+  /** [[run]], with the driver paths (the bounds pass and the groups)
+    * allowed or not: both write the same files. */
+  private[graft] def run(failAfterGroups: Int, onDriver: Boolean): Snapshot = {
     val snap = table.currentSnapshot
     val plans = plan(snap)
     if (plans.isEmpty) return snap
@@ -230,12 +260,11 @@ class ClusterJob(
     val outputs = plans.groupBy(_.compartment).toSeq.sortBy(_._1)
       .flatMap(_._2.grouped(math.max(1, gridBatchGroups)))
       .flatMap { batch =>
-        val tB0 = System.nanoTime()
-        val grids = boundsByGroup(snap, batch, zkeyCol, sampleEvery)
-        if (sys.env.contains("GRAFT_TIMING"))
-          System.err.println(f"[timing] cluster-bounds ${(System.nanoTime() - tB0) / 1e9}%6.2fs (${batch.size} groups)")
-        rewrite.run(batch.map(_.rewriteGroup), concurrency,
-          failAfterGroups)(g => clustered(snap, g, grids, zkeyCol, jobTable))
+        val grids = boundsByGroup(snap, batch, zkeyCol, sampleEvery, onDriver)
+        rewrite.run(batch.map(_.rewriteGroup), concurrency, failAfterGroups,
+          onDriver = (g, dir) =>
+            onDriver && clusteredOnDriver(snap, g, grids, zkeyCol, jobTable, dir))(
+          g => clustered(snap, g, grids, zkeyCol, jobTable))
       }
 
     // out-of-scope files (bucketScope) carry by reference — an unscoped
@@ -250,38 +279,95 @@ class ClusterJob(
       propertiesOverride = sortBy.map(cs => snap.props + ("sort.order" -> cs.mkString(","))))
   }
 
+  /** The number of ~targetFileBytes outputs of a group. */
+  private def outputsOf(g: RewriteGroup): Int =
+    math.max(1, math.round(g.bytes.toDouble / targetFileBytes).toInt)
+
+  /** A group's decorated rows (the rewrite folds position deletes away
+    * and bakes initial defaults in, see CompactJob) with their
+    * clustering key and tiebreak as the last two columns. */
+  private def keyed(snap: Snapshot, g: RewriteGroup, zkeyCol: Column,
+      jobTable: QTable): org.apache.spark.sql.DataFrame =
+    jobTable.readEntriesForRewrite(snap, g.replaces)
+      .withColumn("zkey", zkeyCol)
+      .withColumn("tiebreak", xxhash64(col("image_id")))
+
+  /** The upper bounds of a group's `nOut <= QuantileGrid` bins, read off
+    * its grid. A group absent from the grid (no rows in its sampled
+    * files — only possible for a degenerate near-empty group) degrades
+    * to a single bin, which is the correct layout for it anyway. */
+  private def binBounds(g: RewriteGroup, nOut: Int,
+      grids: Map[String, Array[Long]]): Seq[Long] = {
+    val grid = grids.getOrElse(g.name, Array.fill(QuantileGrid - 1)(Long.MaxValue))
+    (1 until nOut).map(i => grid(i * QuantileGrid / nOut - 1))
+  }
+
   /** A group's rows binned into ~targetFileBytes outputs by clustering
     * key and sorted within each. */
   private def clustered(snap: Snapshot, g: RewriteGroup,
       grids: Map[String, Array[Long]], zkeyCol: Column,
       jobTable: QTable): org.apache.spark.sql.DataFrame = {
-    val nOut = math.max(1, math.round(g.bytes.toDouble / targetFileBytes).toInt)
-    // decorated read: the rewrite folds position deletes away and
-    // bakes initial defaults in (see CompactJob)
-    val keyed = jobTable.readEntriesForRewrite(snap, g.replaces)
-      .withColumn("zkey", zkeyCol)
-      .withColumn("tiebreak", xxhash64(col("image_id")))
+    val nOut = outputsOf(g)
+    val rows = keyed(snap, g, zkeyCol, jobTable)
     val binned =
-      if (nOut == 1) keyed.coalesce(1)
+      if (nOut == 1) rows.coalesce(1)
       else {
         // boundaries for nOut bins read off the precomputed grid (or a
         // direct per-group quantile job for the rare nOut > grid case)
-        // a group absent from the grid (no rows in its sampled files —
-        // only possible for a degenerate near-empty group) degrades to
-        // a single bin, which is the correct layout for it anyway
-        val grid = grids.getOrElse(g.name, Array.fill(QuantileGrid - 1)(Long.MaxValue))
         val bounds: Seq[Long] =
-          if (nOut <= QuantileGrid)
-            (1 until nOut).map(i => grid(i * QuantileGrid / nOut - 1))
+          if (nOut <= QuantileGrid) binBounds(g, nOut, grids)
           else jobTable.scan(g.replaces, snap.physicalSchema)
             .select(zkeyCol.as("zkey"))
             .stat.approxQuantile("zkey", (1 until nOut).map(_.toDouble / nOut).toArray, 0.001)
             .map(_.toLong).toSeq
         ExactShuffle.repartitionByBin(
-          keyed.withColumn("__bin", ExactShuffle.binByBounds(col("zkey"), bounds)),
+          rows.withColumn("__bin", ExactShuffle.binByBounds(col("zkey"), bounds)),
           nOut, col("__bin")).drop("__bin")
       }
     binned.sortWithinPartitions(col("zkey"), col("tiebreak")).drop("zkey", "tiebreak")
+  }
+
+  /** [[clustered]]'s files, laid out and written into `dir` on the
+    * driver ([[DriverIO]]): each row goes to its bin as
+    * [[ExactShuffle.binByBounds]] places it (a NULL key in the last bin),
+    * each bin is stably sorted by (zkey, tiebreak) with Spark's own
+    * ordering, and bin `p` is written as task partition `p`, so the files
+    * get the names, rows and bytes the exact shuffle and write job give
+    * them (partition 0 is written even when empty, as the job writes it).
+    * Returns false, having written nothing, for a group with more bins
+    * than the grid, under a `maxRecordsPerFile` limit, whose files or
+    * collected rows pass [[DriverIO.Cap]], or whose read is not a plain
+    * scan (live deletes, initial defaults, row lineage). */
+  private def clusteredOnDriver(snap: Snapshot, g: RewriteGroup,
+      grids: Map[String, Array[Long]], zkeyCol: Column, jobTable: QTable,
+      dir: String): Boolean = {
+    val nOut = outputsOf(g)
+    if (nOut > QuantileGrid || g.bytes > DriverIO.Cap ||
+        jobTable.spark.sessionState.conf.maxRecordsPerFile > 0) return false
+    val (output, rows) = DriverIO.collect(keyed(snap, g, zkeyCol, jobTable)) match {
+      case Some(c) => c
+      case None => return false
+    }
+    val n = output.size - 2
+    val bounds = binBounds(g, nOut, grids).toArray
+    val bins = Array.fill(nOut)(scala.collection.mutable.ArrayBuffer.empty[InternalRow])
+    rows.foreach { r =>
+      val bin =
+        if (r.isNullAt(n)) bounds.length
+        else {
+          val key = r.getLong(n)
+          val i = bounds.indexWhere(key <= _)
+          if (i < 0) bounds.length else i
+        }
+      bins(bin) += r
+    }
+    val refs = output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) }
+    val ordering = new LazilyGeneratedOrdering(refs.drop(n).map(SortOrder(_, Ascending)))
+    val data = UnsafeProjection.create(refs.take(n))
+    DriverIO.write(jobTable.spark, DataTypeUtils.fromAttributes(output.take(n)), dir,
+      bins.indices.filter(p => p == 0 || bins(p).nonEmpty)
+        .map(p => p -> bins(p).sorted(ordering).iterator.map(data)))
+    true
   }
 }
 
@@ -313,5 +399,23 @@ object ClusterJob {
       .collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1).toArray)
       .toMap
+  }
+
+  /** [[groupQuantiles]] on the driver: `keys` is a [[DriverIO]] plan
+    * whose one output column is the zkey, and each non-null key of a
+    * file feeds its group's `PercentileDigest`, as `percentile_approx`
+    * at accuracy 10000 folds it (relative error 1/10000, values added as
+    * doubles, results read back as longs). A group with no key gets no
+    * grid, as it gets no aggregate row. */
+  private[jobs] def driverQuantiles(keys: DriverIO.Plain, groupOf: Map[String, String],
+      grid: Array[Double]): Map[String, Array[Long]] = {
+    val digests = scala.collection.mutable.LinkedHashMap.empty[String, PercentileDigest]
+    keys.read(keys.partitions.flatMap(_.files)) { (f, r) =>
+      if (!r.isNullAt(0))
+        digests.getOrElseUpdate(groupOf(f.toPath.getName), new PercentileDigest(1.0 / 10000))
+          .add(r.getLong(0).toDouble)
+      true
+    }
+    digests.map { case (g, d) => g -> d.getPercentiles(grid).map(_.toLong).toArray }.toMap
   }
 }

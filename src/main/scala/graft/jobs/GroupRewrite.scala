@@ -33,8 +33,10 @@ object RewriteGroup {
   *  1. [[run]] hands the groups to [[GroupRunner]] — concurrent,
   *     retried, largest first, and skipped where a `committed` lineage
   *     entry has the group's current identity;
-  *  2. each attempt writes the frame the job builds for its group into
-  *     its own fresh directory ([[QTable.newAttemptDir]]), harvests it
+  *  2. each attempt writes its group into its own fresh directory
+  *     ([[QTable.newAttemptDir]]), on the driver where the job's driver
+  *     writer takes the group, else from the frame the job builds for
+  *     it with a write job; it harvests the directory
   *     and records `committed` lineage; a group that exhausts its
   *     retries records `failed` lineage. Nothing is deleted before a
   *     write: a crashed attempt's output is an orphan;
@@ -62,10 +64,14 @@ class GroupRewrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
       table.eqDeleteInputsFor(snap, g.reads)
   }
 
-  /** Rewrites each group from the frame `rows` builds for it.
-    * `failAfterGroups` is [[GroupRunner]]'s kill/resume test hook. */
+  /** Rewrites each group from the frame `rows` builds for it, or on the
+    * driver where `onDriver` writes the group's files into the attempt
+    * directory it is given (returning false, having written nothing,
+    * where it does not). `failAfterGroups` is [[GroupRunner]]'s
+    * kill/resume test hook. */
   def run(groups: Seq[RewriteGroup], concurrency: Int,
-      failAfterGroups: Int = Int.MaxValue)(
+      failAfterGroups: Int = Int.MaxValue,
+      onDriver: (RewriteGroup, String) => Boolean = (_, _) => false)(
       rows: RewriteGroup => DataFrame): Seq[LineageEntry] =
     GroupRunner.run[RewriteGroup](groups, _.name, identity, ckpt.committed,
       failAfterGroups, concurrency,
@@ -73,16 +79,20 @@ class GroupRewrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
         Nil, Nil, 0L, 0L, "failed", gf.attempts)),
       sizeOf = _.bytes) { g =>
       val dir = table.newAttemptDir(jobId, g.name)
-      val df = rows(g)
-      val t0 = System.nanoTime()
-      TableWrite.parquet(df, dir)
+      // the write time is the driver write's, or the write job's without
+      // the frame's planning
+      val tDriver = System.nanoTime()
+      val job = if (onDriver(g, dir)) None else Some(rows(g))
+      val t0 = if (job.isEmpty) tDriver else System.nanoTime()
+      job.foreach(TableWrite.parquet(_, dir))
       val t1 = System.nanoTime()
+      val path = if (job.isEmpty) "driver" else "job"
       val files = table.harvest(dir)
       val t2 = System.nanoTime()
       Timing.record(family, g.name, (t1 - t0) / 1e9)
       if (sys.env.contains("GRAFT_TIMING"))
         System.err.println(f"[timing] $family ${g.name}%-8s files=${g.reads.size}%3d " +
-          f"bytes=${g.bytes / (1 << 20)}%5d MiB nOut=${files.size}%3d " +
+          f"bytes=${g.bytes / (1 << 20)}%5d MiB nOut=${files.size}%3d path=$path%-6s " +
           f"write=${(t1 - t0) / 1e9}%7.2fs harvest=${(t2 - t1) / 1e9}%6.2fs")
       val entry = LineageEntry(jobId, op, g.name, identity(g), files,
         files.map(_.rowCount).sum, files.map(_.byteCount).sum,

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.format.TableWrite
+import graft.format.DriverIO
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.rdd.RDD
@@ -23,22 +23,12 @@ import scala.collection.mutable.ArrayBuffer
   * exact. Here one collect brings the rows and their keys to the driver,
   * Spark's own `determineBounds` and tie rule place each row in a file,
   * and Spark's Parquet writer writes the files in this JVM
-  * ([[TableWrite.parquetOnDriver]]). A file keeps its rows in input
+  * ([[DriverIO.write]]). A file keeps its rows in input
   * order, as the shuffle from one map task does, or in a stable sort by
   * the keys, as `sortWithinPartitions` does. So the files have the rows,
   * order, stats and bytes the job path writes.
   */
 object LocalAppend {
-
-  /** The largest batch, by Spark's size estimate of its plan and by the
-    * `UnsafeRow` bytes its collect gathers, that the driver collects and
-    * writes itself. The estimate of a typed `map` plan counts default
-    * field sizes, not the payload, so the collect stops once its rows pass
-    * this many bytes. It bounds what the driver holds; it is not a
-    * crossover. On 4 cores the driver path took 0.42-0.74x the
-    * job path's time for one-partition batches of about 7 MiB, and
-    * 0.51-0.79x at 11-26 MiB, into 4, 64 and 128 files (`BENCH/NOTES.md`). */
-  val MaxEstimateBytes: Long = 8L << 20
 
   /** The most rows Spark's range sample over `nFiles` partitions holds
     * from an input of one partition: its per-partition reservoir size
@@ -49,13 +39,13 @@ object LocalAppend {
   /** Writes `aligned` into `dir` as `nFiles` range files by `keys` (each
     * sorted by `keys` when `sorted`), as the job path would. Returns false,
     * having written nothing, when the batch does not qualify: its estimate
-    * is over [[MaxEstimateBytes]], its plan shuffles or has more than one
+    * is over [[DriverIO.Cap]], its plan shuffles or has more than one
     * input partition, or it is empty, larger than the range sample or
-    * collects over [[MaxEstimateBytes]]. */
+    * collects over [[DriverIO.Cap]]. */
   def write(aligned: DataFrame, keys: Seq[Column], sorted: Boolean, nFiles: Int,
       dir: String): Boolean = {
     val spark = aligned.sparkSession
-    if (aligned.queryExecution.optimizedPlan.stats.sizeInBytes > MaxEstimateBytes) return false
+    if (aligned.queryExecution.optimizedPlan.stats.sizeInBytes > DriverIO.Cap) return false
     val plan = aligned.select(col("*") +: keys: _*).queryExecution.executedPlan
     // a plan that shuffles keeps the job path: an adaptive plan would run
     // its shuffle stages on execute(), and may still end in several
@@ -92,25 +82,24 @@ object LocalAppend {
       val order = if (sorted) files(p).sortBy(keyed(_))(ordering) else files(p)
       p -> order.iterator.map(i => data(rows(i)))
     }
-    TableWrite.parquetOnDriver(spark, DataTypeUtils.fromAttributes(plan.output.take(n)),
+    DriverIO.write(spark, DataTypeUtils.fromAttributes(plan.output.take(n)),
       dir, laidOut)
     true
   }
 
   /** At most `limit` rows of the one partition of `input`, in order, or
-    * None once their bytes pass [[MaxEstimateBytes]]: the task stops
+    * None once their bytes pass [[DriverIO.Cap]]: the task stops
     * there, so the driver never receives more. */
   private def collectCapped(input: RDD[InternalRow], limit: Long): Option[Array[InternalRow]] = {
-    val cap = MaxEstimateBytes
     input.sparkContext.runJob(input, (it: Iterator[InternalRow]) => {
       val rows = ArrayBuffer.empty[InternalRow]
       var bytes = 0L
-      while (bytes <= cap && rows.length < limit && it.hasNext) {
+      while (bytes <= DriverIO.Cap && rows.length < limit && it.hasNext) {
         val r = it.next().asInstanceOf[UnsafeRow].copy()
         bytes += r.getSizeInBytes
         rows += r
       }
-      if (bytes > cap) None else Some(rows.toArray)
+      if (bytes > DriverIO.Cap) None else Some(rows.toArray)
     }).head
   }
 

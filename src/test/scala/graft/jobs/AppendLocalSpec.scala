@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.TestSpark
-import graft.format.{DayPartition, ParquetStats, QTable, TableWrite}
+import graft.format.{DayPartition, DriverIO, ParquetStats, QTable}
 import graft.model.DataFileEntry
 import graft.synth.DataGen
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -127,7 +127,7 @@ class AppendLocalSpec extends AnyFunSuite {
     val rdd = batch(16, 9L)
     val opaque = spark.createDataFrame(rdd.rdd, rdd.schema)
     assert(opaque.rdd.getNumPartitions == 1)
-    assert(opaque.queryExecution.optimizedPlan.stats.sizeInBytes > LocalAppend.MaxEstimateBytes)
+    assert(opaque.queryExecution.optimizedPlan.stats.sizeInBytes > DriverIO.Cap)
     assert(jobs(AppendJob.append(table("al-estimate"), opaque, 1)) == 3)
     // more rows than the range sample holds: collected, then refused
     val key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
@@ -174,7 +174,7 @@ class AppendLocalSpec extends AnyFunSuite {
     // the second file fails half-way: its staged file is removed and the
     // first, complete file is the only one listed
     val e = intercept[IllegalStateException] {
-      TableWrite.parquetOnDriver(spark, schema, dir, Seq(0 -> Iterator(row), 1 -> failing))
+      DriverIO.write(spark, schema, dir, Seq(0 -> Iterator(row), 1 -> failing))
     }
     assert(e.getMessage == "boom")
     val names = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSeq
@@ -191,8 +191,8 @@ class AppendLocalSpec extends AnyFunSuite {
     // a typed `map` plan is estimated by default field sizes, far below
     // its image payload
     val rows = DataGen.generate(spark, 600, 21L, 1, Array(96, 128)).toDF()
-    assert(rows.queryExecution.optimizedPlan.stats.sizeInBytes < LocalAppend.MaxEstimateBytes / 8)
-    assert(rows.agg(sum(length(col("bytes")))).head().getLong(0) > LocalAppend.MaxEstimateBytes)
+    assert(rows.queryExecution.optimizedPlan.stats.sizeInBytes < DriverIO.Cap / 8)
+    assert(rows.agg(sum(length(col("bytes")))).head().getLong(0) > DriverIO.Cap)
     val (local, job) = (table("al-cap-local"), table("al-cap-job"))
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -206,7 +206,7 @@ class AppendLocalSpec extends AnyFunSuite {
       org.apache.spark.TestListenerBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(results.asScala.max <= LocalAppend.MaxEstimateBytes, results)
+    assert(results.asScala.max <= DriverIO.Cap, results)
     assert(jobs(AppendJob.write(job, rows, 1, "a", onDriver = false)) == 3)
     val (l, j) = (written(local.newDataDir("a", "append")), written(job.newDataDir("a", "append")))
     assert(l.keySet == j.keySet && l.forall { case (n, b) => java.util.Arrays.equals(b, j(n)) })

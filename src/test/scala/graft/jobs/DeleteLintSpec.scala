@@ -36,7 +36,7 @@ class DeleteLintSpec extends AnyFunSuite {
     "HadoopCommitIO.deleteRecursive" -> "the metadata store's primitive",
     "ObjectStoreCommitIO.delete" -> "the metadata store's primitive",
     "ObjectStoreCommitIO.deleteRecursive" -> "the metadata store's primitive",
-    "TableWrite.parquetOnDriver" ->
+    "DriverIO.write" ->
       "a failed driver write removes its own hidden staged file",
     "Branches.delete" -> "drop-branch removes a ref file, never a table file",
     "Tags.delete" -> "untag removes a tag file, never a table file",
