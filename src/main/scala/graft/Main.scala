@@ -119,8 +119,7 @@ object Main {
         val snap = CommitRetry.withCommitRetry()(
           new MergeJob(a.table, a.jobId, concurrency = a.concurrency,
             updateCols = setCols, deleteCol = opts.get("delete-col"),
-            mergeOnRead = a.flag("mor") ||
-              a.tableProp("write.merge.mode").contains("merge-on-read"),
+            mergeOnRead = a.flag("mor") || RowLevelWrite.mergeOnRead(a.tableProp, "merge"),
             notMatchedBySourceDelete = a.flag("sync")).run(corr))
         report("merge", snap.summary ++ Map("version" -> snap.version.toString))
 
@@ -164,8 +163,7 @@ object Main {
           .getOrElse(org.apache.spark.sql.functions.lit(true))
         val snap = CommitRetry.withCommitRetry()(
           new UpdateJob(a.table, a.jobId, concurrency = a.concurrency,
-            mergeOnRead = a.flag("mor") ||
-              a.tableProp("write.update.mode").contains("merge-on-read"))
+            mergeOnRead = a.flag("mor") || RowLevelWrite.mergeOnRead(a.tableProp, "update"))
             .run(sets, cond))
         report("update", snap.summary ++ Map("version" -> snap.version.toString))
 

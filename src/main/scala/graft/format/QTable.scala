@@ -413,12 +413,18 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   /** [[readEntriesForRewrite]] keeping the `__gpath`/`__gpos` address
     * columns (merge-on-read MERGE needs positions). */
   def readEntriesForRewriteWithPos(s: Snapshot,
-      inputs: Seq[DataFileEntry]): DataFrame = {
-    if (!s.rowLineage)
-      return decorateReadWithPos(scan(inputs, s.physicalSchema), s, inputs)
-    val withPos = applyDeletesWithPos(
-      scan(inputs, physicalSchemaWithRowId(s)), s, inputs)
-    applyRowIds(applyDefaults(withPos, s, inputs), inputs)
+      inputs: Seq[DataFileEntry]): DataFrame =
+    readEntriesForRewriteIndexed(s, inputs)._1
+
+  /** [[readEntriesForRewriteWithPos]] and its scan's stats-skipping
+    * index, whose `lastSelection` counts the files a pushed predicate
+    * opened (the row-level writes report it). */
+  def readEntriesForRewriteIndexed(s: Snapshot,
+      inputs: Seq[DataFileEntry]): (DataFrame, QTableFileIndex) = {
+    val (df, index) = scanIndexed(inputs,
+      if (s.rowLineage) physicalSchemaWithRowId(s) else s.physicalSchema)
+    val live = decorateReadWithPos(df, s, inputs)
+    (if (s.rowLineage) applyRowIds(live, inputs) else live, index)
   }
 
   // ----------------------------------------------------- equality deletes
@@ -559,11 +565,17 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     s.deleteFiles.filter(d => liveDeleteNames.contains(QTable.fileName(d.path)))
   }
 
-  /** Alias a physical-schema frame to the snapshot's logical names. */
-  private def toLogical(df: DataFrame, s: Snapshot): DataFrame =
+  /** Alias a physical-schema frame to the snapshot's logical names;
+    * columns outside the schema (scan address, `_row_id`) pass through.
+    * A no-op when nothing was renamed. */
+  def toLogical(df: DataFrame, s: Snapshot): DataFrame =
     if (!s.hasRenames) df
-    else df.select(s.schemaFields.map(f =>
-      org.apache.spark.sql.functions.col(f.phys).as(f.name)): _*)
+    else {
+      import org.apache.spark.sql.functions.col
+      val phys = s.schemaFields.map(_.phys).toSet
+      df.select(s.schemaFields.map(f => col(f.phys).as(f.name)) ++
+        df.columns.filterNot(phys.contains).map(col): _*)
+    }
 
   /** THE table-read primitive: a parquet scan of recorded file entries
     * (data, position-delete or equality-delete) under a declared schema,

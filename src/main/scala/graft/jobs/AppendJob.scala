@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Append rows to a qtable as a new snapshot.
   *
-  * The bucket partition column is `pbucket = pmod(xxhash64(image_id), B)`
+  * The bucket partition column is `pbucket` ([[JobPlanning.bucketOf]])
   * — an Iceberg-style hash-bucket transform, derived (never user-set) so
   * it can always be recomputed from the key. `filesPerBucket` controls
   * initial file granularity; tests deliberately write MANY small files so
@@ -58,8 +58,7 @@ object AppendJob {
     val dir = table.newDataDir(jobId, "append")
     val nFiles = math.max(1, b * filesPerBucket)
     val aligned = JobPlanning.alignToPhysical(
-      rows.withColumn("pbucket",
-        pmod(xxhash64(col("image_id")), lit(b.toLong)).cast("int")),
+      rows.withColumn("pbucket", JobPlanning.bucketOf(b)),
       snap)
     // CHECK constraints veto the batch before any write (streaming
     // ingest and SQL INSERT route through here, so they are covered)

@@ -16,10 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Enforcement: every NEW-ROW writer validates its new row content in
   * ONE extra aggregate pass before any write — [[AppendJob]] (which the
-  * streaming ingest sink and SQL INSERT route through), [[MergeJob]]
-  * (matched post-images with the SET applied, plus inserts, on both
-  * CoW and MOR strategies), [[UpdateJob]] (post-images), and
-  * [[UpsertJob]] (the appended records). Pure-layout rewrites
+  * streaming ingest sink and SQL INSERT route through) and
+  * [[RowLevelWrite]] (the patched rows and inserts of MERGE, UPDATE and
+  * upsert, on both strategies). Pure-layout rewrites
   * (compact / cluster / rebucket / rewrite-manifests) move rows without
   * changing them and are deliberately NOT re-validated: with
   * [[Constraints.set]] refusing a constraint the existing data

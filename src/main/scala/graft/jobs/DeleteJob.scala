@@ -5,28 +5,20 @@ import graft.model.{DeleteFileEntry, Snapshot}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Merge-on-read DELETE: mark the rows matching a predicate deleted by
-  * writing POSITION-DELETE files — `(file_path, pos)` rows — instead of
-  * rewriting the data files that contain them (the copy-on-write path
-  * MergeJob takes by default). Commit cost is O(matched rows), not
-  * O(matched files' bytes): deleting 40 rows spread over 400 half-GB
-  * files writes a few-KB delete file where CoW would rewrite 200 GB —
-  * the difference between an interactive DELETE and a maintenance
-  * window at 100 TB.
+/** DELETE: mark the rows matching a predicate deleted, always
+  * merge-on-read ([[RowLevelWrite]]): position deletes for the matched
+  * rows instead of rewriting the files that hold them — commit cost
+  * O(matched rows), not O(matched files' bytes). Deleting 40 rows spread
+  * over 400 half-GB files writes a few-KB delete file where a rewrite
+  * would move 200 GB: the difference between an interactive DELETE and
+  * a maintenance window at 100 TB.
   *
   * Above the row path sits the METADATA fast path ([[StatsDelete]]):
   * files whose manifest stats prove every row matches the predicate are
   * dropped from the manifests without writing a delete row or reading a
-  * byte — only manifests containing dropped entries are rewritten, the
-  * rest carry by reference. A whole-partition DELETE (a date range, a
-  * format class) on a clustered table is then pure metadata work, with
-  * only the range-boundary files paying position deletes.
-  *
-  * The read side pays instead: every scan anti-joins the live delete
-  * set ([[QTable.applyDeletes]]) until a rewrite job folds the deletes
-  * into fresh data files (CompactJob plans delete-referenced files as
-  * mandatory work; any full rewrite clears the set). That read/write
-  * trade is exactly Iceberg v2's merge-on-read contract.
+  * byte. A whole-partition DELETE (a date range, a format class) on a
+  * clustered table is then pure metadata work, with only the
+  * range-boundary files paying position deletes.
   *
   * The predicate sees LOGICAL column names (schema evolution applies)
   * and runs against the delete-applied live view, so re-deleting an
@@ -89,62 +81,23 @@ class DeleteJob(
         .count()
     val droppedLive = dropped.map(_.rowCount).sum - droppedDead
 
-    // stats-skipping scan of the KEPT files with positions; apply
-    // EXISTING deletes (already-dead rows must not be re-recorded),
-    // then evaluate the predicate over logical names
-    val (written, n, scanned, total) =
-      if (kept.isEmpty) (Nil, 0L, 0, 0)
-      else {
-        val (base, index) = table.scanIndexed(kept, snap.physicalSchema)
-        // defaults-aware: `delete where col = <default>` must hit the
-        // pre-evolution rows the default makes match
-        val live = table.decorateReadWithPos(base, snap, kept)
-        val logical = snap.schemaFields.map(f => col(f.phys).as(f.name)) ++
-          Seq(col("__gpath"), col("__gpos"))
-        val hits = live.select(logical: _*).where(condition)
-          .select(col("__gpath").as("file_path"), col("__gpos").as("pos"))
-        val (w, cnt) = DeleteJob.writeDeleteFiles(table,
-          hits, table.newAttemptDir(jobId, "deletes"))
-        // observability (and the pruning's test hook): how many files
-        // the stats-skipping index actually opened for this predicate
-        val (sc, tot) = index.lastSelection
-        (w, cnt, sc, tot)
-      }
-    if (n == 0 && dropped.isEmpty) return snap
-
-    // delete entries whose referenced files ALL dropped fold away with
-    // them; entries still touching a kept file are retained (their rows
-    // against dropped files anti-join nothing — same rule rewrites use)
-    val retained =
-      if (dropped.isEmpty) snap.deleteFiles
-      else table.retainDeletes(snap, table.deletePairs(snap), kept.map(_.path))
-
-    // manifests: reuse every manifest untouched by the drops; rewrite
-    // only touched ones minus their dropped entries — O(touched), the
-    // shape that keeps a surgical DELETE cheap at 10^6 manifests
-    val (reuse, rewritten) =
-      if (dropped.isEmpty) (snap.manifests, Nil)
-      else {
-        val perManifest = snap.manifests.map(m => m -> table.readManifest(m).files)
-        val (clean, touched) = perManifest.partition { case (_, fs) =>
-          !fs.exists(f => droppedNames.contains(QTable.fileName(f.path)))
-        }
-        (clean.map(_._1), touched.flatMap(_._2)
-          .filterNot(f => droppedNames.contains(QTable.fileName(f.path))))
-      }
-
-    table.commit(Some(snap), "delete", rewritten,
-      Map("job-id" -> jobId,
-        "deleted-rows" -> (droppedLive + n).toString,
+    // the KEPT files' matching rows become position deletes: the scan
+    // applies EXISTING deletes (already-dead rows must not be recorded
+    // again) and initial defaults (`delete where col = <default>` must
+    // hit the pre-evolution rows), then the predicate runs over logical
+    // names and pushes into the stats-skipping scan
+    def postImage(live: DataFrame): DataFrame =
+      table.toLogical(live, snap).where(condition)
+        .select(col("__gpath"), col("__gpos"), lit(RowLevelWrite.Dropped).as(RowLevelWrite.Status))
+    new RowLevelWrite(table, snap, jobId, "delete").write(
+      RowChange(kept, Some(postImage _), dropped = dropped), mergeOnRead = true) { c =>
+      Map("deleted-rows" -> (droppedLive + c.positions).toString,
         "files-dropped" -> dropped.size.toString,
         "rows-dropped-with-files" -> droppedLive.toString,
-        "new-delete-files" -> written.size.toString,
-        "files-scanned" -> scanned.toString,
-        "files-total" -> total.toString),
-      reuseManifests = reuse,
-      deletesOverride = Some(retained ++ written),
-      // eq entries applicable only to dropped files fold with them
-      eqDeletesOverride = Some(table.retainEqDeletes(snap, kept)))
+        "new-delete-files" -> c.deleteFiles.toString,
+        "files-scanned" -> c.filesScanned.toString,
+        "files-total" -> c.filesTotal.toString)
+    }
   }
 }
 

@@ -28,8 +28,8 @@ object RewriteGroup {
     }
 }
 
-/** The checkpointed group rewrite that compact, cluster, copy-on-write
-  * UPDATE and MERGE, and rebucket run over one snapshot:
+/** The checkpointed group rewrite that compact, cluster, rebucket and
+  * the copy-on-write side of [[RowLevelWrite]] run over one snapshot:
   *  1. [[run]] hands the groups to [[GroupRunner]] — concurrent,
   *     retried, largest first, and skipped where a `committed` lineage
   *     entry has the group's current identity;

@@ -6,6 +6,13 @@ import org.apache.spark.sql.SparkSession
 /** Shared planning helpers for the maintenance jobs. */
 object JobPlanning {
 
+  /** The bucket of each row over `buckets` buckets, the format's one
+    * hash layout: `pbucket = pmod(xxhash64(image_id), buckets)`. */
+  def bucketOf(buckets: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    pmod(xxhash64(col("image_id")), lit(buckets.toLong)).cast("int")
+  }
+
   /** Exact (day, bucket, subfile) bins for a PHYSICAL-schema frame on a
     * day-partitioned table ([[graft.format.DayPartition]]): every
     * output partition covers exactly one (day, bucket) cell, so no

@@ -5,7 +5,7 @@ import graft.model._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
-/** Copy-on-write MERGE INTO keyed by image_id.
+/** MERGE INTO keyed by image_id.
   *
   * Semantics (ANSI MERGE, the engine analogue of the reference's
   * deterministic-path last-writer-wins upsert, SURVEY §2.2 K5 and EP2):
@@ -53,23 +53,13 @@ import org.apache.spark.sql.DataFrame
   * matched ids and the insert count all follow on the driver, with no
   * further Spark job before the first write.
   *
-  * Copy-on-write (default): only data files that actually contain a
-  * matched image_id are rewritten; every other file is carried into the
-  * new snapshot by reference (a file whose matches are ALL deletes and
-  * whose rewrite comes out empty simply contributes no output files).
-  * Each partition group's rewrite joins a broadcast of the source; the
-  * inserts write is one more group of the same checkpointed pass, so it
-  * overlaps the rewrites.
-  *
-  * Merge-on-read (`mergeOnRead = true`): no data file is rewritten —
-  * matched rows' old versions are POSITION-DELETED ([[DeleteJob]]
-  * machinery) and the patched/inserted rows appended as new files, so
-  * commit cost is O(changed rows) instead of O(matched files' bytes).
-  * The right strategy when matches are sparse across huge files (the
-  * 100 TB steady state); reads pay the delete anti-join until a
-  * compact/cluster run folds the deletes. Both strategies produce the
-  * same logical table (spec-asserted) — the trade is pure write-vs-read
-  * amplification, Iceberg v2's CoW/MOR dial re-derived.
+  * The matched files and one post-image over their live rows (SET
+  * applied, delete-flagged and unmatched-by-source rows dropped) go to
+  * [[RowLevelWrite]], which writes them copy-on-write (default: only
+  * files holding a matched row rewrite, the inserts as one more group
+  * of the same checkpointed pass) or merge-on-read (`mergeOnRead =
+  * true`: matched rows position-deleted, post-images and inserts
+  * appended).
   */
 class MergeJob(
     table: QTable,
@@ -80,10 +70,6 @@ class MergeJob(
     mergeOnRead: Boolean = false,
     notMatchedBySourceDelete: Boolean = false,
     insertUnmatched: Boolean = true) {
-
-  /** The checkpoint group name of the inserts write; partition groups
-    * are named `b<bucket>` or `d<day>-b<bucket>`, so it cannot collide. */
-  private val InsertsGroup = "inserts"
 
   def run(source0: DataFrame, failAfterGroups: Int = Int.MaxValue): Snapshot = {
     val snap = table.currentSnapshot
@@ -146,16 +132,12 @@ class MergeJob(
           QTable.utf8Leq(f.imageIdMin, srcMax))
       }
 
-    // every table-side read below is delete-applied: a position-deleted
-    // row must neither count as a match (else its file is needlessly
-    // rewritten) nor suppress an INSERT of the same key (else the source
-    // row would vanish — the merge-on-read resurrect/lose bug).
-    // Both variants are defaults-aware: a CoW rewrite of a matched
-    // pre-evolution file must bake the initial default in, not null
-    def readLive(files: Seq[DataFileEntry]) =
-      table.readEntriesForRewrite(snap, files)
-    // position-keeping variant: `_metadata` must be captured before the
-    // delete anti-join (Spark does not resolve it through a join)
+    // the discovery read is delete-applied: a position-deleted row must
+    // neither count as a match (else its file is needlessly rewritten)
+    // nor suppress an INSERT of the same key (else the source row would
+    // vanish — the merge-on-read resurrect/lose bug). `_metadata` must be
+    // captured before the delete anti-join (Spark does not resolve it
+    // through a join)
     def readLivePos(files: Seq[DataFileEntry]) =
       table.readEntriesForRewriteWithPos(snap, files)
     def keyFrame(keys: Seq[String]) = broadcast(
@@ -182,8 +164,8 @@ class MergeJob(
             .collect()
         (perFile.flatMap(_.getSeq[String](1)).toSet,
          perFile.filter(_.getSeq[String](1).nonEmpty)
-           .map(r => normalizePath(r.getString(0))).toSet,
-         perFile.filter(_.getLong(2) > 0).map(r => normalizePath(r.getString(0))).toSet)
+           .map(r => QTable.fileName(r.getString(0))).toSet,
+         perFile.filter(_.getLong(2) > 0).map(r => QTable.fileName(r.getString(0))).toSet)
       } else {
         val pairs =
           if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
@@ -192,15 +174,15 @@ class MergeJob(
             .join(srcKeys, Seq("image_id"))
             .collect()
         (pairs.map(_.getString(0)).toSet,
-         pairs.map(r => normalizePath(r.getString(1))).toSet, Set.empty[String])
+         pairs.map(r => QTable.fileName(r.getString(1))).toSet, Set.empty[String])
       }
     val affected =
       if (notMatchedBySourceDelete)
         all.filter { f =>
-          val n = normalizePath(f.path)
+          val n = QTable.fileName(f.path)
           matchedFiles.contains(n) || unmatchedFiles.contains(n)
         }
-      else candidates.filter(f => matchedFiles.contains(normalizePath(f.path)))
+      else candidates.filter(f => matchedFiles.contains(QTable.fileName(f.path)))
 
     // 4. inserts = source ids that matched nothing; a delete-flagged row
     //    that matched nothing is a no-op, not an insert. With no WHEN NOT
@@ -217,8 +199,8 @@ class MergeJob(
       val rows =
         if (matchedIds.isEmpty) base
         else base.join(keyFrame(matchedIds.toSeq), Seq("image_id"), "left_anti")
-      JobPlanning.alignToPhysical(rows.withColumn("pbucket",
-        pmod(xxhash64(col("image_id")), lit(snap.buckets.toLong)).cast("int")), snap)
+      JobPlanning.alignToPhysical(
+        rows.withColumn("pbucket", JobPlanning.bucketOf(snap.buckets)), snap)
     }
     // no matched ACTION at all (insert-only merge): matched ids are
     // discovered (the inserts exclude them) but their files are never
@@ -230,177 +212,36 @@ class MergeJob(
       else ids.indices.count(i => !flagged(i) && matchedKey(i)).toLong
 
     // broadcast payload: key, one `_new_<phys>` per SET column (cast to
-    // the declared type), and the delete flag (null-safe, default false)
+    // the declared type), the delete flag (null-safe, default false) and
+    // the match indicator `_mm` (null after the left join = no source row)
     val updatesSrc = broadcast(source.select(
       col("image_id") +:
         (setFields.map(f => col(f.name).cast(f.sparkType).as(s"_new_${f.phys}")) ++
-          delFlag.map(_.as("_del")).toSeq ++
-          // match indicator for the NOT MATCHED BY SOURCE filter: after
-          // the left join, a null `_mm` row is an unmatched target row
-          (if (notMatchedBySourceDelete) Seq(lit(true).as("_mm")) else Nil)): _*))
+          delFlag.map(_.as("_del")).toSeq :+ lit(true).as("_mm")): _*))
 
-    // CHECK constraints veto the merge's NEW row content — matched
-    // post-images (SET applied, delete-flagged rows excluded) plus
-    // inserts — before either strategy writes anything. One extra pass
-    // over the affected files + batch, only when constraints exist.
-    if (Constraints.of(snap).nonEmpty) {
-      val postImages =
-        if (noMatchedAction || affected.isEmpty) None
-        else Some {
-          var p = readLive(affected).join(updatesSrc, Seq("image_id"))
-          if (deleteCol.isDefined)
-            p = p.where(!coalesce(col("_del"), lit(false))).drop("_del")
-          if (notMatchedBySourceDelete) p = p.drop("_mm")
-          setFields.foreach { f =>
-            p = p.withColumn(f.phys,
-              coalesce(col(s"_new_${f.phys}"), col(f.phys)))
-              .drop(s"_new_${f.phys}")
-          }
-          JobPlanning.alignToPhysical(p, snap)
-        }
-      (postImages.toSeq ++ insertRows.toSeq).reduceOption(_.unionByName(_))
-        .foreach(df => Constraints.enforce(Constraints.logicalView(df, snap), snap, "MERGE"))
+    // WHEN MATCHED: delete-flagged rows drop, SET columns take the source
+    // value where non-null; WHEN NOT MATCHED BY SOURCE THEN DELETE drops
+    // every unmatched row; other unmatched rows are kept untouched
+    def postImage(live: DataFrame): DataFrame = {
+      val matched = col("_mm").isNotNull
+      val dropped = (deleteCol.map(_ => matched && col("_del")).toSeq ++
+        Seq(!matched).filter(_ => notMatchedBySourceDelete)).reduceOption(_ || _)
+      val marked = RowLevelWrite.mark(live.join(updatesSrc, Seq("image_id"), "left"),
+        dropped.getOrElse(lit(false)), matched)
+      setFields.foldLeft(marked)((p, f) =>
+        p.withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys))))
+        .drop(setFields.map(f => s"_new_${f.phys}") ++ Seq("_del", "_mm"): _*)
     }
 
-    // ------------------------------------------------- merge-on-read
-    // MOR strategy: instead of rewriting every matched file, position-
-    // delete the matched rows' OLD versions and append the patched/
-    // inserted rows as new files — commit cost O(changed rows), the only
-    // viable MERGE shape when matches are sparse across huge files. Data
-    // manifests are carried by reference (append-style); reads pay the
-    // delete anti-join until maintenance folds it. No per-group
-    // checkpoint: the writes are small and the commit atomic — a killed
-    // run leaves only orphans for the sweep.
-    if (mergeOnRead) {
-      // matched rows (with positions) exist only when some file matched;
-      // an inserts-only merge skips straight to the append side
-      val matched = if (affected.isEmpty || noMatchedAction) None else Some(
-        readLivePos(affected)
-          .join(updatesSrc, Seq("image_id"))
-          .cache())
-      try {
-        val matchedPosOpt = matched.map(_.select(
-          col("__gpath").as("file_path"), col("__gpos").as("pos")))
-        // NOT MATCHED BY SOURCE under MOR: the unmatched rows' positions
-        // delete too (and are never re-appended) — commit stays
-        // O(changed rows) even when the clause empties most of a file
-        val unmatchedPosOpt =
-          if (!notMatchedBySourceDelete) None
-          else {
-            val uf = all.filter(f => unmatchedFiles.contains(normalizePath(f.path)))
-            if (uf.isEmpty) None
-            else Some(readLivePos(uf)
-              .join(srcKeys, Seq("image_id"), "left_anti")
-              .select(col("__gpath").as("file_path"), col("__gpos").as("pos")))
-          }
-        val (delEntriesM, matchedCount) = matchedPosOpt match {
-          case None => (Nil, 0L)
-          case Some(p) => DeleteJob.writeDeleteFiles(table, p,
-            table.newAttemptDir(jobId, "deletes"))
-        }
-        val (delEntriesU, unmatchedCount) = unmatchedPosOpt match {
-          case None => (Nil, 0L)
-          case Some(p) => DeleteJob.writeDeleteFiles(table, p,
-            table.newAttemptDir(jobId, "nmbs-deletes"))
-        }
-        val delEntries = delEntriesM ++ delEntriesU
-        // patched post-images of non-delete-flagged matches (same SET
-        // semantics as the CoW rewrite: null source value keeps target)
-        val patchedOpt = matched.map { m =>
-          var p = (if (deleteCol.isDefined)
-              m.where(!coalesce(col("_del"), lit(false))).drop("_del")
-            else m)
-            .drop("__gpath", "__gpos", "_mm")
-          setFields.foreach { f =>
-            p = p.withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys)))
-              .drop(s"_new_${f.phys}")
-          }
-          JobPlanning.alignToPhysical(p, snap)
-        }
-        val newRows = (patchedOpt.toSeq ++ insertRows.toSeq).reduceOption(_.unionByName(_))
-        val out = newRows match {
-          case Some(rows) if matchedCount + insertCount > 0 =>
-            JobPlanning.writeNewRows(table, jobId, rows, snap)
-          case _ => Nil
-        }
-        if (matchedCount + unmatchedCount + insertCount == 0) return snap
-        return table.commit(Some(snap), "merge", out, Map(
-          "job-id" -> jobId,
-          "strategy" -> "merge-on-read",
-          "source-rows" -> ids.length.toString,
-          "rows-updated" -> updatedRows.toString,
-          "rows-inserted" -> insertCount.toString,
-          "rows-deleted" ->
-            (matchedCount + unmatchedCount - updatedRows).toString,
-          "files-rewritten" -> "0"),
-          reuseManifests = snap.manifests,
-          deletesOverride = Some(snap.deleteFiles ++ delEntries))
-      } finally matched.foreach(_.unpersist())
+    new RowLevelWrite(table, snap, jobId, "merge").write(
+      RowChange(affected, Some(postImage _).filter(_ => !noMatchedAction), insertRows),
+      mergeOnRead, concurrency, failAfterGroups) { c =>
+      Map("source-rows" -> ids.length.toString,
+        "rows-updated" -> updatedRows.toString,
+        "rows-inserted" -> insertCount.toString,
+        "rows-deleted" -> c.deletedRows.toString,
+        "files-rewritten" -> c.filesRewritten.toString) ++
+        (if (mergeOnRead) Map("strategy" -> "merge-on-read") else Map.empty)
     }
-
-    // 5. rewrite affected files per partition group and write the inserts
-    // as one more group, all checkpointed and run concurrently. The insert
-    // set depends on the affected files' LIVE rows, so that group reads
-    // (and is identified by) those files while it replaces none — a stale
-    // inserts output (written against a different live view) re-runs
-    // instead of being silently reused.
-    val rewriteSet =
-      if (noMatchedAction) Nil else RewriteGroup.perBucket(affected, snap)
-    // nothing to rewrite, nothing to insert: the table is already the
-    // merge result — commit no version (insert-only merge whose source
-    // rows all matched, or a matched-delete that matched nothing)
-    if (rewriteSet.isEmpty && insertRows.isEmpty) {
-      new Checkpoint(table, jobId).clear(); return snap
-    }
-    // the inserts group reads every affected file, so it starts in the
-    // first wave and overlaps the file rewrites
-    val insertGroup = insertRows.map(_ => RewriteGroup(InsertsGroup, Nil, affected)).toSeq
-    val rewrite = new GroupRewrite(table, snap, jobId, "merge")
-    val outputs = rewrite.run(insertGroup ++ rewriteSet, concurrency,
-      failAfterGroups) { g =>
-      // inserts land in their hash buckets; the layout repartitions by
-      // bucket so a large batch spreads over the cluster (AQE coalesces
-      // the shuffle down to a few files when the batch is tiny)
-      if (g.name == InsertsGroup) JobPlanning.layoutNewRows(insertRows.get, snap)
-      else {
-        // WHEN MATCHED: delete-flagged rows drop out, SET columns take
-        // the source value where non-null (left-join null = unmatched
-        // row, which the same coalesce leaves untouched)
-        var patched = readLive(g.replaces)
-          .join(updatesSrc, Seq("image_id"), "left")
-        // WHEN NOT MATCHED BY SOURCE THEN DELETE: only source-matched
-        // rows survive the rewrite
-        if (notMatchedBySourceDelete)
-          patched = patched.where(col("_mm") === true).drop("_mm")
-        if (deleteCol.isDefined)
-          patched = patched.where(!coalesce(col("_del"), lit(false))).drop("_del")
-        setFields.foreach { f =>
-          patched = patched
-            .withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys)))
-            .drop(s"_new_${f.phys}")
-        }
-        JobPlanning.alignToPhysical(patched, snap).coalesce(math.max(1, g.replaces.size))
-      }
-    }
-
-    val rewrittenFiles = rewriteSet.flatMap(_.replaces)
-    // target rows removed by WHEN MATCHED DELETE = input-vs-output row
-    // delta of the rewritten groups (updates preserve row counts; any
-    // position deletes folded by the rewrite count here too — they left
-    // the physical files in this commit)
-    val deletedRows = rewrittenFiles.map(_.rowCount).sum -
-      outputs.filter(_.group != InsertsGroup).map(_.rowCount).sum
-    rewrite.commit(insertGroup ++ rewriteSet, outputs, Map(
-      "source-rows" -> ids.length.toString,
-      "rows-updated" -> updatedRows.toString,
-      "rows-inserted" -> insertCount.toString,
-      "rows-deleted" -> deletedRows.toString,
-      "files-rewritten" -> rewrittenFiles.size.toString))
   }
-
-  /** Data file names are UUID-unique (Spark part files), so matching on
-    * the name sidesteps scheme/slash differences between
-    * `input_file_name()` URIs and manifest paths. */
-  private def normalizePath(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
 }

@@ -48,7 +48,7 @@ class RebucketJob(
     val all = RewriteGroup("all", entries)
     val rewrite = new GroupRewrite(table, snap, jobId, "rebucket")
     val outputs = rewrite.run(Seq(all), concurrency = 1) { _ =>
-      val bucket = pmod(xxhash64(col("image_id")), lit(newBuckets.toLong)).cast("int")
+      val bucket = JobPlanning.bucketOf(newBuckets)
       val sub = pmod(xxhash64(col("image_id"), lit("sub")), lit(subPerBucket.toLong)).cast("int")
       // decorated whole-table read: the rewrite folds every live
       // position and equality delete (the commit keeps none, no file

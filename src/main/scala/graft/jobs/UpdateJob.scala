@@ -18,17 +18,12 @@ import org.apache.spark.sql.functions._
   *     prunes files whose manifest ranges/blooms cannot match the
   *     condition) aggregated per file: `(file, matched-row count)`.
   *     The collect is one row per MATCHED FILE, metadata-sized.
-  *  2a. COPY-ON-WRITE (default): only files holding matched rows are
-  *     rewritten, per bucket group, checkpointed and resumable like
-  *     every rewrite job; unmatched files carry by reference. All SET
-  *     expressions evaluate against the OLD row (simultaneous-
-  *     assignment SQL semantics: `SET w = h, h = w` swaps), gated
-  *     per row by the condition.
-  *  2b. MERGE-ON-READ (`mergeOnRead = true`): matched rows' old
-  *     versions become position deletes and their patched post-images
-  *     append as new files — commit O(changed rows), no data file
-  *     rewritten; reads pay the delete anti-join until a compact
-  *     folds it (Iceberg v2's CoW/MOR dial, same as MERGE's).
+  *  2. WRITE — the matched files and one post-image (SET list applied
+  *     to the rows matching the condition, every other row kept) go to
+  *     [[RowLevelWrite]]: copy-on-write by default, merge-on-read with
+  *     `mergeOnRead = true`. All SET expressions evaluate against the
+  *     OLD row (simultaneous-assignment SQL semantics: `SET w = h,
+  *     h = w` swaps).
   *
   * SET expressions and the condition see LOGICAL column names (schema
   * evolution applies); values cast to the declared column type (ANSI:
@@ -71,10 +66,8 @@ class UpdateJob(
     // The index prunes files whose stats cannot satisfy the pushed
     // condition; the collect is one row per matched FILE.
     val (base, index) = table.scanIndexed(all, snap.physicalSchema)
-    val live = table.decorateReadWithPos(base, snap, all)
-    val logical = snap.schemaFields.map(f => col(f.phys).as(f.name)) :+
-      col("__gpath")
-    val perFile = live.select(logical: _*).where(condition)
+    val live = table.toLogical(table.decorateReadWithPos(base, snap, all), snap)
+    val perFile = live.where(condition)
       .groupBy("__gpath").agg(count(lit(1)).as("n")).collect()
     val (scanned, total) = index.lastSelection
     val matchedNames = perFile.map(r => QTable.fileName(r.getString(0))).toSet
@@ -82,73 +75,32 @@ class UpdateJob(
     if (matchedRows == 0) return snap
     val affected = all.filter(f => matchedNames.contains(QTable.fileName(f.path)))
 
-    // applies the SET list in ONE select so every expression sees the
-    // OLD row; non-matching rows (CoW rewrites carry them) keep theirs
-    def applySets(logicalDf: DataFrame, gate: Column): DataFrame = {
-      val extras = logicalDf.columns
+    // 2. the post-image applies the SET list in ONE select so every
+    // expression sees the OLD row; rows outside the condition keep theirs
+    def postImage(df: DataFrame): DataFrame = {
+      val marked = RowLevelWrite.mark(table.toLogical(df, snap), lit(false), condition)
+      val patched = col(RowLevelWrite.Status) === RowLevelWrite.Patched
+      val extras = marked.columns
         .filterNot(snap.schemaFields.map(_.name).contains).map(col(_))
       val outCols = snap.schemaFields.map { f =>
         setFields.find(_._1.name == f.name) match {
           case Some((fd, value)) =>
-            when(gate, value.cast(fd.sparkType)).otherwise(col(f.name)).as(f.name)
+            when(patched, value.cast(fd.sparkType)).otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
       }
-      logicalDf.select(outCols ++ extras: _*)
+      marked.select(outCols ++ extras: _*)
     }
-    def toLogical(df: DataFrame): DataFrame = {
-      val physNames = snap.schemaFields.map(_.phys).toSet
-      val extras = df.columns.filterNot(physNames.contains).map(col(_))
-      df.select(snap.schemaFields.map(f => col(f.phys).as(f.name)) ++ extras: _*)
+    new RowLevelWrite(table, snap, jobId, "update").write(
+      RowChange(affected, Some(postImage _)), mergeOnRead, concurrency,
+      failAfterGroups) { c =>
+      Map("rows-updated" -> matchedRows.toString,
+        "files-scanned" -> scanned.toString,
+        "files-total" -> total.toString,
+        "files-rewritten" -> c.filesRewritten.toString) ++
+        (if (mergeOnRead) Map("strategy" -> "merge-on-read",
+          "new-delete-files" -> c.deleteFiles.toString)
+        else Map("strategy" -> "copy-on-write"))
     }
-    val summaryBase = Map(
-      "job-id" -> jobId,
-      "rows-updated" -> matchedRows.toString,
-      "files-scanned" -> scanned.toString,
-      "files-total" -> total.toString)
-
-    // CHECK constraints veto the POST-IMAGES (old rows matching the
-    // condition, SET applied) before either strategy writes — one extra
-    // pass over the affected files, only when constraints exist
-    if (Constraints.of(snap).nonEmpty)
-      Constraints.enforce(applySets(
-        toLogical(table.readEntriesForRewrite(snap, affected))
-          .where(condition), lit(true))
-        .select(snap.schemaFields.map(f => col(f.name)): _*),
-        snap, "UPDATE")
-
-    // ------------------------------------------------- merge-on-read
-    if (mergeOnRead) {
-      val matched = toLogical(table.readEntriesForRewriteWithPos(snap, affected))
-        .where(condition).cache()
-      try {
-        val (delEntries, nDel) = DeleteJob.writeDeleteFiles(table,
-          matched.select(col("__gpath").as("file_path"), col("__gpos").as("pos")),
-          table.newAttemptDir(jobId, "deletes"))
-        val patched = JobPlanning.alignToPhysical(
-          applySets(matched, lit(true)).drop("__gpath", "__gpos"), snap)
-        val out = JobPlanning.writeNewRows(table, jobId, patched, snap)
-        return table.commit(Some(snap), "update", out,
-          summaryBase ++ Map(
-            "strategy" -> "merge-on-read",
-            "rows-updated" -> nDel.toString,
-            "new-delete-files" -> delEntries.size.toString,
-            "files-rewritten" -> "0"),
-          reuseManifests = snap.manifests,
-          deletesOverride = Some(snap.deleteFiles ++ delEntries))
-      } finally matched.unpersist()
-    }
-
-    // ------------------------------------------------- copy-on-write
-    val groups = RewriteGroup.perBucket(affected, snap)
-    val rewrite = new GroupRewrite(table, snap, jobId, "update")
-    val rewritten = rewrite.run(groups, concurrency, failAfterGroups) { g =>
-      JobPlanning.alignToPhysical(applySets(
-        toLogical(table.readEntriesForRewrite(snap, g.replaces)), condition), snap)
-        .coalesce(math.max(1, g.replaces.size))
-    }
-    rewrite.commit(groups, rewritten, summaryBase ++ Map(
-      "strategy" -> "copy-on-write",
-      "files-rewritten" -> affected.size.toString))
   }
 }

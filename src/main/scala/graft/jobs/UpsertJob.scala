@@ -56,46 +56,37 @@ class UpsertJob(
       require(dupKeys == 0,
         s"upsert source has $dupKeys duplicated image_id(s); resolve last-wins upstream")
 
-      // 1. the equality-delete file: ALL batch keys (an insert-only key's
-      // delete kills nothing — maintenance folds it). Skipped entirely
-      // when NO existing file's id range overlaps the batch (metadata
-      // check; the common case on a fresh table): the entry would be
-      // permanent anti-join debt that can never match.
+      // the batch's keys become one equality delete — an insert-only
+      // key's delete kills nothing, maintenance folds it. Skipped when NO
+      // existing file's id range overlaps the batch (metadata check; the
+      // common case on a fresh table): the entry would be permanent
+      // anti-join debt that can never match.
       val bounds = source.agg(min("image_id"), max("image_id")).head()
       val (keyMin, keyMax) = (bounds.getString(0), bounds.getString(1))
       val anyOverlap = table.entries(snap).exists(f =>
         QTable.utf8Leq(keyMin, f.imageIdMax) && QTable.utf8Leq(f.imageIdMin, keyMax))
-      val (eqEntries, nKeys) =
-        if (!anyOverlap) (Nil, 0L)
-        else UpsertJob.writeEqDeleteFiles(table,
-          source.select("image_id"), table.newAttemptDir(jobId, "eq-deletes"))
 
-      // 2. appended rows: full records, hash-bucketed like any append;
+      // the appended rows: full records, hash-bucketed like any append;
       // the small-batch shuffle AQE-coalesces down to a few files
       val notDeleteFlagged = deleteCol
         .map(c => !coalesce(col(c).cast("boolean"), lit(false)))
         .getOrElse(lit(true))
       val rows = JobPlanning.alignToPhysical(
         source.where(notDeleteFlagged).drop(deleteCol.toSeq: _*)
-          .withColumn("pbucket",
-            pmod(xxhash64(col("image_id")), lit(snap.buckets.toLong)).cast("int")),
+          .withColumn("pbucket", JobPlanning.bucketOf(snap.buckets)),
         snap)
-      // CHECK constraints veto the batch's live records before any write
-      Constraints.enforce(Constraints.logicalView(rows, snap), snap, "upsert")
-      val out = JobPlanning.writeNewRows(table, jobId, rows, snap)
-      val flagged = srcCount - source.where(notDeleteFlagged).count()
 
-      // 3. append-style commit: O(batch) metadata, deletes carried, the
-      // new eq entry stamped with this commit's version (strict-seq rule
+      // one append-style delta commit: O(batch) metadata, the new eq
+      // entry stamped with this commit's version (the strict-seq rule
       // keeps the rows appended here alive through their own delete)
-      table.commit(Some(snap), "upsert", out, Map(
-        "job-id" -> jobId,
-        "source-rows" -> srcCount.toString,
-        "rows-delete-flagged" -> flagged.toString,
-        "eq-delete-keys" -> nKeys.toString,
-        "files-rewritten" -> "0"),
-        reuseManifests = snap.manifests,
-        eqDeletesOverride = Some(snap.eqDeleteFiles ++ eqEntries))
+      new RowLevelWrite(table, snap, jobId, "upsert").write(RowChange(inserts = Some(rows),
+        deletedKeys = Some(source.select("image_id")).filter(_ => anyOverlap)),
+        mergeOnRead = true) { c =>
+        Map("source-rows" -> srcCount.toString,
+          "rows-delete-flagged" -> (srcCount - source.where(notDeleteFlagged).count()).toString,
+          "eq-delete-keys" -> c.eqDeleteKeys.toString,
+          "files-rewritten" -> "0")
+      }
     } finally source.unpersist()
   }
 }

@@ -316,8 +316,7 @@ case class MergeIntoQTableCommand(
         updateCols = updates.map(_._1),
         deleteCol = delFlagCol.map(_ => "_graft_del"),
         insertUnmatched = insertStar,
-        // Iceberg's write.merge.mode property picks the strategy
-        mergeOnRead = t.property("write.merge.mode").contains("merge-on-read"),
+        mergeOnRead = graft.jobs.RowLevelWrite.mergeOnRead(t.property, "merge"),
         notMatchedBySourceDelete = nmbsDelete).run(src0.select(proj: _*)))
     Seq.empty
   }
@@ -370,7 +369,7 @@ case class UpdateQTableCommand(root: String, sets: Seq[(String, String)],
     val jobId = java.util.UUID.randomUUID().toString // see MergeIntoQTableCommand
     graft.jobs.CommitRetry.withCommitRetry()(
       new graft.jobs.UpdateJob(t, jobId,
-        mergeOnRead = t.property("write.update.mode").contains("merge-on-read"))
+        mergeOnRead = graft.jobs.RowLevelWrite.mergeOnRead(t.property, "update"))
         .run(
           sets.map { case (c, s) => c -> expr(s) },
           condSql.map(expr).getOrElse(lit(true))))
