@@ -408,17 +408,12 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
       inputs: Seq[DataFileEntry]): DataFrame =
     if (!s.rowLineage)
       decorateRead(scan(inputs, s.physicalSchema), s, inputs)
-    else readEntriesForRewriteWithPos(s, inputs).drop("__gpath", "__gpos")
+    else readEntriesForRewriteIndexed(s, inputs)._1.drop("__gpath", "__gpos")
 
   /** [[readEntriesForRewrite]] keeping the `__gpath`/`__gpos` address
-    * columns (merge-on-read MERGE needs positions). */
-  def readEntriesForRewriteWithPos(s: Snapshot,
-      inputs: Seq[DataFileEntry]): DataFrame =
-    readEntriesForRewriteIndexed(s, inputs)._1
-
-  /** [[readEntriesForRewriteWithPos]] and its scan's stats-skipping
-    * index, whose `lastSelection` counts the files a pushed predicate
-    * opened (the row-level writes report it). */
+    * columns (merge discovery and merge-on-read writes need positions),
+    * with its scan's stats-skipping index, whose `lastSelection` counts
+    * the files a pushed predicate opened. */
   def readEntriesForRewriteIndexed(s: Snapshot,
       inputs: Seq[DataFileEntry]): (DataFrame, QTableFileIndex) = {
     val (df, index) = scanIndexed(inputs,

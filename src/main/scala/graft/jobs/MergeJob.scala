@@ -139,7 +139,7 @@ class MergeJob(
     // captured before the delete anti-join (Spark does not resolve it
     // through a join)
     def readLivePos(files: Seq[DataFileEntry]) =
-      table.readEntriesForRewriteWithPos(snap, files)
+      table.readEntriesForRewriteIndexed(snap, files)._1
     def keyFrame(keys: Seq[String]) = broadcast(
       source.sparkSession.createDataFrame(keys.map(Tuple1(_))).toDF("image_id"))
     val srcKeys = keyFrame(ids.toSeq)

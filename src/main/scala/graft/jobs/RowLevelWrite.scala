@@ -94,6 +94,8 @@ class RowLevelWrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
 
   private def rewrite(change: RowChange, concurrency: Int, failAfterGroups: Int,
       summary: RowCounts => Map[String, String]): Snapshot = {
+    require(change.dropped.isEmpty && change.deletedKeys.isEmpty,
+      "whole-file drops and equality deletes are merge-on-read only")
     val post = change.postImage.filter(_ => change.affected.nonEmpty)
     veto(post.map(p => rows(p(table.readEntriesForRewrite(snap, change.affected)),
       col(Status) === Patched)), change.inserts)
@@ -177,7 +179,7 @@ object RowLevelWrite {
 
   /** The checkpoint group of the copy-on-write inserts; partition groups
     * are named `b<bucket>` or `d<day>-b<bucket>`, so it cannot collide. */
-  val InsertsGroup = "inserts"
+  private val InsertsGroup = "inserts"
 
   /** Marks each row of `df`: dropped where `dropped` holds, else patched
     * where `patched` holds, else kept. */
