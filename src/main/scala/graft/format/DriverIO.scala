@@ -7,6 +7,8 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, PartitionedFileUtil, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, PartitionedFile}
@@ -18,16 +20,24 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Small reads and writes done in the driver's own thread, with no Spark
   * job: point lookups ([[graft.spark.PointLookupExec]]), tiny appends
-  * ([[graft.jobs.LocalAppend]]) and small cluster groups
-  * ([[graft.jobs.ClusterJob]]). One cap bounds what any of them takes on.
+  * ([[graft.jobs.LocalAppend]]), small cluster groups
+  * ([[graft.jobs.ClusterJob]]) and the row-level writes' small
+  * copy-on-write groups, MERGE's discovery and its inserts
+  * ([[graft.jobs.RowLevelWrite]], [[graft.jobs.MergeJob]]). One cap
+  * bounds what any of them takes on; a read that is not plain or passes
+  * the cap is refused, and the caller keeps its job path: a group with
+  * live deletes, initial defaults or row lineage, a post-image that
+  * joins, a `maxRecordsPerFile` limit.
   *
   * The read side runs a [[Plain]] plan: projections and filters over one
   * qtable `FileSourceScanExec`, with no exchange and no metadata column.
   * It reads the scan's files with the relation's own parquet reader and
   * evaluates the plan's expressions on each row, so it returns the rows
-  * the plan's tasks would. The write side writes part files with Spark's
-  * Parquet writer, options and names, so its files are the ones a write
-  * job writes. */
+  * the plan's tasks would, split as the scan splits them. The write side
+  * writes part files with Spark's Parquet writer, options and names, so
+  * its files are the ones a write job writes. Rows that a job brings to
+  * the driver pass the same cap ([[collectOrKeys]]), and [[frame]] and
+  * [[local]] project rows the driver already holds. */
 object DriverIO {
 
   /** The most bytes the driver takes on for one operation: the
@@ -64,18 +74,23 @@ object DriverIO {
       }
     }
 
-    /** Every row of the plan, copied, or None once their bytes pass
-      * [[Cap]]. */
-    def collect(): Option[Array[InternalRow]] = {
-      val rows = ArrayBuffer.empty[InternalRow]
+    /** Every row of the plan, copied, per partition of [[partitions]], or
+      * None once their bytes pass [[Cap]]. */
+    def collect(): Option[Seq[Array[InternalRow]]] = {
       var bytes = 0L
-      val complete = read(partitions.flatMap(_.files)) { (_, r) =>
-        val u = r.asInstanceOf[UnsafeRow].copy()
-        bytes += u.getSizeInBytes
-        rows += u
-        bytes <= Cap
+      val parts = ArrayBuffer.empty[Array[InternalRow]]
+      val complete = partitions.forall { p =>
+        val rows = ArrayBuffer.empty[InternalRow]
+        val fits = read(p.files) { (_, r) =>
+          val u = r.asInstanceOf[UnsafeRow].copy()
+          bytes += u.getSizeInBytes
+          rows += u
+          bytes <= Cap
+        }
+        parts += rows.toArray
+        fits
       }
-      if (complete) Some(rows.toArray) else None
+      if (complete) Some(parts.toSeq) else None
     }
 
     /** The steps bottom-up, interpreted (no code generation per plan):
@@ -126,10 +141,80 @@ object DriverIO {
   }
 
   /** Every row of `df`, collected on the driver through its [[Plain]]
-    * plan, with the plan's output; None when the plan is not plain or
-    * its rows pass [[Cap]]. */
-  def collect(df: DataFrame): Option[(Seq[Attribute], Array[InternalRow])] =
+    * plan, with the plan's output, per partition of its scan; None when
+    * the plan is not plain or its rows pass [[Cap]]. */
+  def collect(df: DataFrame): Option[(Seq[Attribute], Seq[Array[InternalRow]])] =
     plain(df.queryExecution.sparkPlan).flatMap(p => p.collect().map(p.output -> _))
+
+  /** The task partitions `coalesce(n)` forms, without a shuffle, over
+    * input partitions `parts` that have no preferred location (as the
+    * scans of a qtable have none), as Spark's `DefaultPartitionCoalescer`
+    * forms them: `min(n, parts)` partitions, each a contiguous run of
+    * the inputs in order. */
+  def coalesce[A](parts: Seq[Seq[A]], n: Int): Seq[Seq[A]] = {
+    val k = math.min(n, parts.size)
+    (0 until k).map { i =>
+      parts.slice((i.toLong * parts.size / k).toInt, ((i + 1).toLong * parts.size / k).toInt).flatten
+    }
+  }
+
+  /** The rows of `df` per partition, in order, copied, with one Spark
+    * job: whole (`true`) while their bytes stay within [[Cap]], else
+    * only the columns at ordinals `keys` of every row. A task that
+    * passes the cap keeps only keys from there on, and the driver drops
+    * the whole rows it holds once the partitions it has received pass
+    * it, so whole rows on the driver stay within [[Cap]] plus one task's
+    * share; the keys are one row each. */
+  def collectOrKeys(df: DataFrame, keys: Seq[Int]): (Boolean, Seq[Array[InternalRow]]) = {
+    val output = df.queryExecution.executedPlan.output
+    val all = output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) }
+    val keyRefs = keys.map(all)
+    val rdd = df.queryExecution.toRdd
+    val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+    val keyOf = UnsafeProjection.create(keyRefs)
+    var received = 0L
+    var whole = true
+    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+      val (copy, keyOnly) = (UnsafeProjection.create(all), UnsafeProjection.create(keyRefs))
+      val rows = ArrayBuffer.empty[InternalRow]
+      var bytes = 0L
+      it.foreach { r =>
+        if (bytes <= Cap) {
+          val u = copy(r).copy()
+          bytes += u.getSizeInBytes
+          rows += u
+          if (bytes > Cap) rows.mapInPlace(keyOnly(_).copy())
+        } else rows += keyOnly(r).copy()
+      }
+      (bytes, rows.toArray)
+    }, (i: Int, part: (Long, Array[InternalRow])) => {
+      received += part._1
+      val partWhole = part._1 <= Cap
+      if (whole && received > Cap) {
+        whole = false
+        parts.indices.filter(parts(_) != null).foreach(p => parts(p) = parts(p).map(keyOf(_).copy()))
+      }
+      parts(i) = if (partWhole && !whole) part._2.map(keyOf(_).copy()) else part._2
+    })
+    (whole, parts.toSeq)
+  }
+
+  /** A frame over `rows` of `schema` that the driver holds: projections
+    * and filters over it fold, in the optimizer, into rows the driver
+    * computes ([[local]]). */
+  def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** The rows of `df` as `UnsafeRow`s of its output, computed on the
+    * driver with no job, when its optimized plan is one local relation
+    * (a [[frame]] with projections and filters folded in); None
+    * otherwise. */
+  def local(df: DataFrame): Option[Array[InternalRow]] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation =>
+      val toUnsafe = UnsafeProjection.create(l.output.map(_.dataType).toArray)
+      Some(l.data.map(toUnsafe(_).copy()).toArray)
+    case _ => None
+  }
 
   private def isMetadataCol(a: Attribute): Boolean = a match {
     case r: AttributeReference => FileSourceMetadataAttribute.unapply(r).isDefined

@@ -527,6 +527,12 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   def deleteInputsFor(s: Snapshot, paths: Seq[String]): Seq[String] =
     neededDeletes(s, paths).map(_.path)
 
+  /** Whether a live position or equality delete can kill a row of
+    * `files` under `s` — metadata-only. When none can, the files' live
+    * rows are their stored rows. */
+  def deletesApply(s: Snapshot, files: Seq[DataFileEntry]): Boolean =
+    neededDeletes(s, files.map(_.path)).nonEmpty || eqDeleteInputsFor(s, files).nonEmpty
+
   /** Distinct (delete-file name, referenced data-file name) pairs of a
     * snapshot's live delete set — the exact fold/planning input for
     * rewrite jobs (which data files carry deletes; which delete entries

@@ -345,7 +345,7 @@ class ClusterJob(
     if (nOut > QuantileGrid || g.bytes > DriverIO.Cap ||
         jobTable.spark.sessionState.conf.maxRecordsPerFile > 0) return false
     val (output, rows) = DriverIO.collect(keyed(snap, g, zkeyCol, jobTable)) match {
-      case Some(c) => c
+      case Some((o, parts)) => (o, parts.flatten)
       case None => return false
     }
     val n = output.size - 2

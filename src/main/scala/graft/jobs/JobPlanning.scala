@@ -63,6 +63,46 @@ object JobPlanning {
       .getOrElse(aligned.repartition(col("pbucket")))
   }
 
+  /** [[layoutNewRows]]' file for `aligned`, written into `dir` on the
+    * driver ([[graft.format.DriverIO]]) from `rows`: the frame's rows, as
+    * `UnsafeRow`s, per partition of its input, in order. Adaptive
+    * execution coalesces the bucket repartition of a batch whose shuffle
+    * bytes stay under its minimum partition size into one task, which
+    * reads each input partition's rows shuffle partition by shuffle
+    * partition (`pmod(murmur3(pbucket), shuffle partitions)`), in the
+    * order that partition wrote them; that task writes part file 0.
+    * Returns false, having written nothing, on a day-partitioned table,
+    * with adaptive execution or its coalescing off, under a
+    * `maxRecordsPerFile` limit, or for rows whose bytes pass half that
+    * minimum size (a margin for the shuffle's codec framing and its
+    * rounded block sizes), which keep the job path. */
+  def layoutNewRowsOnDriver(aligned: org.apache.spark.sql.DataFrame,
+      rows: Seq[Seq[org.apache.spark.sql.catalyst.InternalRow]],
+      snap: graft.model.Snapshot, dir: String): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeRow}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = aligned.sparkSession.sessionState.conf
+    // the smaller of the configured minimum and the fifth of the advisory
+    // size Spark's coalescing takes in its test mode
+    val minPartition = math.min(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) / 5)
+    val bytes = rows.iterator.flatten.map(_.asInstanceOf[UnsafeRow].getSizeInBytes + 4L).sum
+    if (graft.format.DayPartition.fieldOf(snap).isDefined || !conf.adaptiveExecutionEnabled ||
+        !conf.coalesceShufflePartitionsEnabled || conf.maxRecordsPerFile > 0 ||
+        bytes == 0 || 2 * bytes > minPartition) return false
+    val output = aligned.queryExecution.optimizedPlan.output
+    val b = output.indexWhere(_.name == "pbucket")
+    val shufflePartition = HashPartitioning(
+      Seq(BoundReference(b, output(b).dataType, output(b).nullable)),
+      conf.numShufflePartitions).partitionIdExpression
+    val ordered = rows.iterator.flatMap(_.sortBy(shufflePartition.eval(_).asInstanceOf[Int]))
+    graft.format.DriverIO.write(aligned.sparkSession,
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(output), dir,
+      Seq(0 -> ordered))
+    true
+  }
+
   /** Writes `aligned` laid out by [[layoutNewRows]] into a fresh attempt
     * directory of the job's `rows` group and harvests the files. */
   def writeNewRows(table: graft.format.QTable, jobId: String,

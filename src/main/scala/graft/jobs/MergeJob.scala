@@ -1,9 +1,13 @@
 package graft.jobs
 
-import graft.format.QTable
+import graft.expr.{KeyLookup, KeyTable}
+import graft.format.{DriverIO, QTable}
 import graft.model._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MERGE INTO keyed by image_id.
   *
@@ -44,22 +48,32 @@ import org.apache.spark.sql.DataFrame
   * target row, and inserting it would commit a NULL `image_id`, which
   * the table schema declares non-null.
   *
-  * Planning is ONE driver collect of the source keys (and delete flags).
-  * Every planner scalar comes from it exactly: row count, NULL and
+  * Planning is ONE Spark job, a collect of the source rows with their
+  * delete flags and SET values ([[DriverIO.collectOrKeys]]). Every
+  * planner scalar comes from it exactly: row count, NULL and
   * multi-match checks, and the key bounds, in the UTF-8 order the
-  * manifest stats use, that prune candidate files by id range. A second
-  * collect joins the pruned candidates with a broadcast of those keys
-  * and returns the matched (id, file) pairs, O(matches); matched files,
-  * matched ids and the insert count all follow on the driver, with no
-  * further Spark job before the first write.
+  * manifest stats use, that prune candidate files by id range. While
+  * the rows fit [[DriverIO.Cap]] the whole source stays on the driver:
+  * the SET payload becomes one hashed key lookup ([[KeyLookup]]) in the
+  * post-image, so a post-image over a plain scan stays plain, and the
+  * inserts are laid out from the held rows. A source over the cap keeps
+  * only its keys, and the post-image joins a broadcast of the payload.
+  *
+  * Discovery reads the candidates' live `image_id`s and tests each
+  * against the source keys: on the driver, with no job, when no live
+  * delete applies to the candidates (the read is then a plain scan)
+  * and their id rows fit the cap; else one collect of a join with a
+  * broadcast of the keys returns the matched (id, file) pairs,
+  * O(matches). Matched files, matched ids and the insert count all
+  * follow on the driver.
   *
   * The matched files and one post-image over their live rows (SET
   * applied, delete-flagged and unmatched-by-source rows dropped) go to
   * [[RowLevelWrite]], which writes them copy-on-write (default: only
   * files holding a matched row rewrite, the inserts as one more group
-  * of the same checkpointed pass) or merge-on-read (`mergeOnRead =
-  * true`: matched rows position-deleted, post-images and inserts
-  * appended).
+  * of the same checkpointed pass; small groups and held inserts on the
+  * driver) or merge-on-read (`mergeOnRead = true`: matched rows
+  * position-deleted, post-images and inserts appended).
   */
 class MergeJob(
     table: QTable,
@@ -70,8 +84,14 @@ class MergeJob(
     mergeOnRead: Boolean = false,
     notMatchedBySourceDelete: Boolean = false,
     insertUnmatched: Boolean = true) {
+  import MergeJob._
 
-  def run(source0: DataFrame, failAfterGroups: Int = Int.MaxValue): Snapshot = {
+  def run(source0: DataFrame, failAfterGroups: Int = Int.MaxValue): Snapshot =
+    run(source0, failAfterGroups, onDriver = true)
+
+  /** [[run]], with the driver paths (payload lookup, discovery, group
+    * and insert writes) allowed or not: both write the same files. */
+  private[graft] def run(source0: DataFrame, failAfterGroups: Int, onDriver: Boolean): Snapshot = {
     val snap = table.currentSnapshot
 
     // resolve the SET list against the snapshot schema up front: target
@@ -92,20 +112,27 @@ class MergeJob(
       s"source is missing update column $c"))
 
     val source = source0.cache()
-    try merge(snap, setFields, source, failAfterGroups)
+    try merge(snap, setFields, source, failAfterGroups, onDriver)
     finally source.unpersist()
   }
 
   private def merge(snap: Snapshot, setFields: Seq[FieldDef],
-      source: DataFrame, failAfterGroups: Int): Snapshot = {
+      source: DataFrame, failAfterGroups: Int, onDriver: Boolean): Snapshot = {
     val all = table.entries(snap)
     val delFlag = deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
 
-    // 1. ONE driver collect of the source keys answers every scalar the
-    // planner needs, exactly. The discovery broadcast below gathers the
-    // same rows on the driver, so this sets no new scale limit.
-    val keyRows = source.select(col("image_id") +: delFlag.toSeq: _*).collect()
-    val ids = keyRows.map(_.getString(0))
+    // 1. ONE collect of the source answers every scalar the planner
+    // needs, exactly. Its rows are the key, the payload (the delete flag
+    // and one `_new_<phys>` per SET column, cast to the declared type)
+    // and the source columns; only the keys come back when the rows pass
+    // the cap, and the keys alone were always O(source rows)
+    val payload = delFlag.map(_.as(Del)).toSeq ++
+      setFields.map(f => col(f.name).cast(f.sparkType).as(s"_new_${f.phys}"))
+    val collected = source.select(
+      (col("image_id") +: payload) ++ source.columns.map(source(_)): _*)
+    val (whole, parts) = DriverIO.collectOrKeys(collected, 0 to delFlag.size)
+    val keyRows = parts.flatten
+    val ids = keyRows.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0).toString)
     val flagged = keyRows.map(r => delFlag.isDefined && r.getBoolean(1))
     // empty source: commit nothing, current snapshot is already correct —
     // UNLESS the mirror-sync clause is on, where an empty source means
@@ -116,6 +143,8 @@ class MergeJob(
     // ANSI MERGE multi-match check: one source row per key or error
     require(ids.distinct.length == ids.length,
       "MERGE source has duplicated image_id(s); resolve last-wins upstream")
+    // the source rows the driver keeps: key, payload, source columns
+    val held = Some(parts).filter(_ => whole && onDriver)
 
     // 2. prune candidate files by image_id range overlap with the source,
     // compared in the unsigned UTF-8 order the manifest stats are
@@ -124,7 +153,8 @@ class MergeJob(
     // NOT MATCHED BY SOURCE clause every live file is a candidate — an
     // unmatched row can live anywhere.
     val candidates =
-      if (ids.isEmpty) Nil
+      if (notMatchedBySourceDelete) all
+      else if (ids.isEmpty) Nil
       else {
         val srcMin = ids.reduce((a, b) => if (QTable.utf8Leq(a, b)) a else b)
         val srcMax = ids.reduce((a, b) => if (QTable.utf8Leq(a, b)) b else a)
@@ -132,75 +162,48 @@ class MergeJob(
           QTable.utf8Leq(f.imageIdMin, srcMax))
       }
 
-    // the discovery read is delete-applied: a position-deleted row must
-    // neither count as a match (else its file is needlessly rewritten)
-    // nor suppress an INSERT of the same key (else the source row would
-    // vanish — the merge-on-read resurrect/lose bug). `_metadata` must be
-    // captured before the delete anti-join (Spark does not resolve it
-    // through a join)
-    def readLivePos(files: Seq[DataFileEntry]) =
-      table.readEntriesForRewriteIndexed(snap, files)._1
-    def keyFrame(keys: Seq[String]) = broadcast(
-      source.sparkSession.createDataFrame(keys.map(Tuple1(_))).toDF("image_id"))
-    val srcKeys = keyFrame(ids.toSeq)
-
-    // 3. find the matched (id, file) pairs with ONE collect: the scan's
-    // `__gpath` (= `_metadata.file_path`) names each row's file. The
-    // result is O(matches): source rows times their table copies.
-    // NOT MATCHED BY SOURCE instead classifies EVERY live file by whether
-    // it holds matched rows, unmatched rows, or both — both kinds must
-    // rewrite (CoW) or contribute delete positions (MOR); that collect is
-    // one row per FILE plus its matched ids.
-    val (matchedIds, matchedFiles, unmatchedFiles) =
-      if (notMatchedBySourceDelete) {
-        val perFile =
-          if (all.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else readLivePos(all)
-            .select(col("image_id"), col("__gpath"))
-            .join(srcKeys.withColumn("_mm", lit(true)), Seq("image_id"), "left")
-            .groupBy("__gpath")
-            .agg(collect_set(when(col("_mm"), col("image_id"))).as("ids"),
-              count(when(col("_mm").isNull, 1)).as("u"))
-            .collect()
-        (perFile.flatMap(_.getSeq[String](1)).toSet,
-         perFile.filter(_.getSeq[String](1).nonEmpty)
-           .map(r => QTable.fileName(r.getString(0))).toSet,
-         perFile.filter(_.getLong(2) > 0).map(r => QTable.fileName(r.getString(0))).toSet)
-      } else {
-        val pairs =
-          if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else readLivePos(candidates)
-            .select(col("image_id"), col("__gpath"))
-            .join(srcKeys, Seq("image_id"))
-            .collect()
-        (pairs.map(_.getString(0)).toSet,
-         pairs.map(r => QTable.fileName(r.getString(1))).toSet, Set.empty[String])
-      }
-    val affected =
-      if (notMatchedBySourceDelete)
-        all.filter { f =>
-          val n = QTable.fileName(f.path)
-          matchedFiles.contains(n) || unmatchedFiles.contains(n)
-        }
-      else candidates.filter(f => matchedFiles.contains(QTable.fileName(f.path)))
+    // 3. per candidate file, the source keys its live rows match and,
+    // under NOT MATCHED BY SOURCE, whether it holds unmatched rows —
+    // both kinds must rewrite (CoW) or contribute delete positions (MOR)
+    val perFile =
+      if (candidates.isEmpty) Map.empty[String, (Seq[String], Long)]
+      else (if (onDriver) discoverOnDriver(snap, candidates, ids) else None)
+        .getOrElse(discover(snap, candidates, ids))
+    val matchedIds = perFile.valuesIterator.flatMap(_._1).toSet
+    val affected = candidates.filter(f => perFile.get(QTable.fileName(f.path)).exists {
+      case (m, unmatched) => m.nonEmpty || (notMatchedBySourceDelete && unmatched > 0)
+    })
 
     // 4. inserts = source ids that matched nothing; a delete-flagged row
     //    that matched nothing is a no-op, not an insert. With no WHEN NOT
     //    MATCHED clause (`insertUnmatched = false`) unmatched source rows
     //    are simply ignored, per ANSI. Counted on the driver; the rows
     //    come from an anti-join against the matched ids, already known.
-    val matchedKey = ids.map(matchedIds.contains)
-    val insertCount =
-      if (!insertUnmatched) 0L
-      else ids.indices.count(i => !flagged(i) && !matchedKey(i)).toLong
+    val inserted = ids.indices.map(i => insertUnmatched && !flagged(i) && !matchedIds.contains(ids(i)))
+    val insertCount = inserted.count(identity).toLong
     val insertRows = if (insertCount == 0) None else Some {
       val base = source.where(!delFlag.getOrElse(lit(false)))
         .drop(deleteCol.toSeq: _*)
       val rows =
         if (matchedIds.isEmpty) base
         else base.join(keyFrame(matchedIds.toSeq), Seq("image_id"), "left_anti")
-      JobPlanning.alignToPhysical(
-        rows.withColumn("pbucket", JobPlanning.bucketOf(snap.buckets)), snap)
+      aligned(rows, snap)
+    }
+    // the same rows from the held source, aligned on the driver, per
+    // source partition: the input partitions of the job path's inserts
+    val heldInserts = held.filter(_ => insertCount > 0).flatMap { ps =>
+      val srcAt = 1 + payload.size
+      val srcRow = UnsafeProjection.create(source.schema.fields.toSeq.zipWithIndex.map {
+        case (f, i) => BoundReference(srcAt + i, f.dataType, f.nullable)
+      })
+      val starts = ps.scanLeft(0)(_ + _.length)
+      val picked = ps.indices.map(p =>
+        ps(p).indices.filter(i => inserted(starts(p) + i)).map(i => srcRow(ps(p)(i)).copy()))
+      val local = DriverIO.frame(source.sparkSession, source.schema, picked.flatten)
+      DriverIO.local(aligned(local.drop(deleteCol.toSeq: _*), snap)).map { rows =>
+        val at = picked.scanLeft(0)(_ + _.size)
+        picked.indices.map(p => rows.slice(at(p), at(p + 1)).toSeq)
+      }
     }
     // no matched ACTION at all (insert-only merge): matched ids are
     // discovered (the inserts exclude them) but their files are never
@@ -209,33 +212,41 @@ class MergeJob(
       setFields.isEmpty && deleteCol.isEmpty && !notMatchedBySourceDelete
     val updatedRows =
       if (noMatchedAction) 0L
-      else ids.indices.count(i => !flagged(i) && matchedKey(i)).toLong
+      else ids.indices.count(i => !flagged(i) && matchedIds.contains(ids(i))).toLong
 
-    // broadcast payload: key, one `_new_<phys>` per SET column (cast to
-    // the declared type), the delete flag (null-safe, default false) and
-    // the match indicator `_mm` (null after the left join = no source row)
-    val updatesSrc = broadcast(source.select(
-      col("image_id") +:
-        (setFields.map(f => col(f.name).cast(f.sparkType).as(s"_new_${f.phys}")) ++
-          delFlag.map(_.as("_del")).toSeq :+ lit(true).as("_mm")): _*))
+    // each target row's matched source payload as one struct column, or
+    // null where no source row matches: a key lookup into the held rows,
+    // or a left join against a broadcast of the payload
+    val withSource: DataFrame => DataFrame = held match {
+      case Some(ps) =>
+        val fields = collected.schema.fields.slice(1, 1 + payload.size)
+        val value = UnsafeProjection.create(fields.toSeq.zipWithIndex.map {
+          case (f, i) => BoundReference(1 + i, f.dataType, f.nullable)
+        })
+        val byKey = KeyTable(ps.iterator.flatten, 0, StructType(fields), value)
+        _.withColumn(Src, KeyLookup.column(col("image_id"), byKey))
+      case None =>
+        val bySource = broadcast(source.select(col("image_id"), struct(payload: _*).as(Src)))
+        _.join(bySource, Seq("image_id"), "left")
+    }
 
     // WHEN MATCHED: delete-flagged rows drop, SET columns take the source
     // value where non-null; WHEN NOT MATCHED BY SOURCE THEN DELETE drops
     // every unmatched row; other unmatched rows are kept untouched
     def postImage(live: DataFrame): DataFrame = {
-      val matched = col("_mm").isNotNull
-      val dropped = (deleteCol.map(_ => matched && col("_del")).toSeq ++
+      val matched = col(Src).isNotNull
+      val dropped = (deleteCol.map(_ => matched && col(s"$Src.$Del")).toSeq ++
         Seq(!matched).filter(_ => notMatchedBySourceDelete)).reduceOption(_ || _)
-      val marked = RowLevelWrite.mark(live.join(updatesSrc, Seq("image_id"), "left"),
-        dropped.getOrElse(lit(false)), matched)
+      val marked = RowLevelWrite.mark(withSource(live), dropped.getOrElse(lit(false)), matched)
       setFields.foldLeft(marked)((p, f) =>
-        p.withColumn(f.phys, coalesce(col(s"_new_${f.phys}"), col(f.phys))))
-        .drop(setFields.map(f => s"_new_${f.phys}") ++ Seq("_del", "_mm"): _*)
+        p.withColumn(f.phys, coalesce(col(s"$Src._new_${f.phys}"), col(f.phys))))
+        .drop(Src)
     }
 
     new RowLevelWrite(table, snap, jobId, "merge").write(
-      RowChange(affected, Some(postImage _).filter(_ => !noMatchedAction), insertRows),
-      mergeOnRead, concurrency, failAfterGroups) { c =>
+      RowChange(affected, Some(postImage _).filter(_ => !noMatchedAction), insertRows,
+        insertRows = heldInserts),
+      mergeOnRead, concurrency, failAfterGroups, onDriver) { c =>
       Map("source-rows" -> ids.length.toString,
         "rows-updated" -> updatedRows.toString,
         "rows-inserted" -> insertCount.toString,
@@ -244,4 +255,78 @@ class MergeJob(
         (if (mergeOnRead) Map("strategy" -> "merge-on-read") else Map.empty)
     }
   }
+
+  /** A broadcast frame of `keys` under `image_id`. */
+  private def keyFrame(keys: Seq[String]): DataFrame = broadcast(
+    table.spark.createDataFrame(keys.map(Tuple1(_))).toDF("image_id"))
+
+  /** New rows of a source frame with their bucket, on the physical schema. */
+  private def aligned(rows: DataFrame, snap: Snapshot): DataFrame =
+    JobPlanning.alignToPhysical(
+      rows.withColumn("pbucket", JobPlanning.bucketOf(snap.buckets)), snap)
+
+  /** [[discover]]'s result from the ids of `files`, read on the driver
+    * with no job and tested against `ids`; None when a live delete
+    * applies to the files (their live rows are then not their stored
+    * rows) or their id rows, as [[DriverIO.collect]] would hold them,
+    * pass the cap. The read holds only the matches. */
+  private def discoverOnDriver(snap: Snapshot, files: Seq[DataFileEntry],
+      ids: Seq[String]): Option[Map[String, (Seq[String], Long)]] = {
+    def idBytes(f: DataFileEntry) = 16L +
+      (math.max(f.imageIdMin.getBytes("UTF-8").length, f.imageIdMax.getBytes("UTF-8").length) + 7) / 8 * 8
+    if (table.deletesApply(snap, files) ||
+        files.map(f => f.rowCount * idBytes(f)).sum > DriverIO.Cap) return None
+    DriverIO.plain(table.scan(files, snap.physicalSchema).select(col("image_id"))
+      .queryExecution.sparkPlan)
+      .map { plan =>
+        val keys = new java.util.HashSet[UTF8String]()
+        ids.foreach(i => keys.add(UTF8String.fromString(i)))
+        val found = scala.collection.mutable.HashMap.empty[String, (List[String], Long)]
+        plan.read(plan.partitions.flatMap(_.files)) { (f, r) =>
+          val id = r.getUTF8String(0)
+          val name = f.toPath.getName
+          val (m, u) = found.getOrElse(name, (Nil, 0L))
+          found(name) = if (keys.contains(id)) (id.toString :: m, u) else (m, u + 1)
+          true
+        }
+        found.toMap
+      }
+  }
+
+  /** Per file of `files` that holds a live row, the source `ids` its
+    * rows match and, under NOT MATCHED BY SOURCE, its unmatched row
+    * count (0 otherwise), by file name: one collect of the live rows
+    * joined with a broadcast of the keys. */
+  private def discover(snap: Snapshot, files: Seq[DataFileEntry],
+      ids: Seq[String]): Map[String, (Seq[String], Long)] = {
+    // the read is delete-applied: a position-deleted row must neither
+    // count as a match (else its file is needlessly rewritten) nor
+    // suppress an INSERT of the same key (else the source row would
+    // vanish — the merge-on-read resurrect/lose bug). The scan's
+    // `__gpath` (= `_metadata.file_path`, captured before the delete
+    // anti-join: Spark does not resolve `_metadata` through a join)
+    // names each row's file
+    val live = table.readEntriesForRewriteIndexed(snap, files)._1
+      .select(col("image_id"), col("__gpath"))
+    if (notMatchedBySourceDelete)
+      // one row per FILE plus its matched ids
+      live.join(keyFrame(ids).withColumn("_mm", lit(true)), Seq("image_id"), "left")
+        .groupBy("__gpath")
+        .agg(collect_set(when(col("_mm"), col("image_id"))).as("ids"),
+          count(when(col("_mm").isNull, 1)).as("u"))
+        .collect()
+        .map(r => QTable.fileName(r.getString(0)) -> (r.getSeq[String](1), r.getLong(2)))
+        .toMap
+    else
+      // O(matches): source rows times their table copies
+      live.join(keyFrame(ids), Seq("image_id")).collect()
+        .groupBy(r => QTable.fileName(r.getString(1)))
+        .map { case (f, rs) => f -> (rs.map(_.getString(0)).toSeq, 0L) }
+  }
+}
+
+object MergeJob {
+  /** The post-image's matched-source struct and its delete-flag field. */
+  private val Src = "__src"
+  private val Del = "__del"
 }

@@ -1,8 +1,10 @@
 package graft.jobs
 
-import graft.format.QTable
+import graft.format.{DriverIO, QTable}
 import graft.model.{DataFileEntry, Snapshot}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 
 /** What one row-level statement changes, as [[RowLevelWrite]] takes it.
@@ -22,21 +24,25 @@ import org.apache.spark.sql.functions._
   * `inserts` are new rows (physical schema with `pbucket`), `dropped`
   * whole files removed at metadata level and `deletedKeys` an
   * `image_id` frame whose older rows an equality delete kills; the last
-  * two are merge-on-read only. */
+  * two are merge-on-read only. `insertRows` are the rows of `inserts`
+  * when the caller holds them on the driver, as `UnsafeRow`s per
+  * partition of the frame's input, in order: copy-on-write may then
+  * write them there ([[JobPlanning.layoutNewRowsOnDriver]]). */
 final case class RowChange(
     affected: Seq[DataFileEntry] = Nil,
     postImage: Option[DataFrame => DataFrame] = None,
     inserts: Option[DataFrame] = None,
     dropped: Seq[DataFileEntry] = Nil,
-    deletedKeys: Option[DataFrame] = None)
+    deletedKeys: Option[DataFrame] = None,
+    insertRows: Option[Seq[Seq[InternalRow]]] = None)
 
 /** What a [[RowLevelWrite]] did, for the job's summary. `deletedRows`
-  * is, under copy-on-write, the rows the rewritten files held minus the
-  * rows their rewrite kept (position deletes the rewrite folds count
-  * too) and, under merge-on-read, the position-deleted rows that were
-  * not re-appended as post-images. `filesScanned`/`filesTotal` are the
-  * files the merge-on-read scan of the affected files opened, out of
-  * those it was given. */
+  * is the live rows the statement removed: under copy-on-write the live
+  * rows of the rewritten files minus the rows their rewrite kept, under
+  * merge-on-read the position-deleted rows that were not re-appended as
+  * post-images; rows already dead before the statement count under
+  * neither. `filesScanned`/`filesTotal` are the files the merge-on-read
+  * scan of the affected files opened, out of those it was given. */
 final case class RowCounts(deletedRows: Long, positions: Long, deleteFiles: Int,
     eqDeleteKeys: Long, filesRewritten: Int, filesScanned: Int, filesTotal: Int)
 
@@ -53,7 +59,18 @@ final case class RowCounts(deletedRows: Long, positions: Long, deleteFiles: Int,
   * The inserts are one more group of the same pass, which reads the
   * affected files (their live rows decide which source rows insert) and
   * replaces none, so a stale inserts output re-runs instead of being
-  * reused, and the write overlaps the rewrites.
+  * reused, and the write overlaps the rewrites. Small groups run on the
+  * driver ([[graft.format.DriverIO]]) with no Spark job, into the files
+  * the job path writes: a bucket group whose post-image is a plain scan
+  * and whose files and rows fit [[graft.format.DriverIO.Cap]] is read,
+  * marked and split as `coalesce(files)` splits it; inserts the caller
+  * holds on the driver are laid out as the bucket repartition lays out
+  * a batch it coalesces into one task. Groups with live deletes,
+  * initial defaults or row lineage (their read is not a plain scan), a
+  * post-image that joins (MERGE's broadcast of a payload over the cap),
+  * a `maxRecordsPerFile` limit or rows over the cap, and inserts over
+  * the coalescing bound or on a day-partitioned table, keep the job
+  * path.
   *
   * Merge-on-read: no data file is rewritten. The changed rows' old
   * versions become position deletes — one `(file_path, pos)` write —
@@ -75,11 +92,13 @@ class RowLevelWrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
   /** Writes `change` with the chosen strategy and commits it as `op`
     * with the job's summary (plus `job-id`); returns the snapshot
     * unchanged, committing nothing, when nothing changed.
-    * `failAfterGroups` is the copy-on-write kill/resume test hook. */
+    * `failAfterGroups` is the copy-on-write kill/resume test hook, and
+    * `onDriver` allows its driver path (both write the same files). */
   def write(change: RowChange, mergeOnRead: Boolean, concurrency: Int = 4,
-      failAfterGroups: Int = Int.MaxValue)(summary: RowCounts => Map[String, String]): Snapshot =
+      failAfterGroups: Int = Int.MaxValue, onDriver: Boolean = true)(
+      summary: RowCounts => Map[String, String]): Snapshot =
     if (mergeOnRead) delta(change, summary)
-    else rewrite(change, concurrency, failAfterGroups, summary)
+    else rewrite(change, concurrency, failAfterGroups, onDriver, summary)
 
   /** The rows of a marked frame that pass `keep`, on the physical schema. */
   private def rows(marked: DataFrame, keep: Column): DataFrame =
@@ -93,7 +112,7 @@ class RowLevelWrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
         Constraints.enforce(Constraints.logicalView(df, snap), snap, op.toUpperCase))
 
   private def rewrite(change: RowChange, concurrency: Int, failAfterGroups: Int,
-      summary: RowCounts => Map[String, String]): Snapshot = {
+      onDriver: Boolean, summary: RowCounts => Map[String, String]): Snapshot = {
     require(change.dropped.isEmpty && change.deletedKeys.isEmpty,
       "whole-file drops and equality deletes are merge-on-read only")
     val post = change.postImage.filter(_ => change.affected.nonEmpty)
@@ -105,21 +124,50 @@ class RowLevelWrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
     if (groups.isEmpty && insertGroup.isEmpty) {
       new Checkpoint(table, jobId).clear(); return snap
     }
+    def kept(g: RewriteGroup): DataFrame =
+      rows(post.get(table.readEntriesForRewrite(snap, g.replaces)), col(Status) =!= Dropped)
+    // one output file per input file at most
+    def files(g: RewriteGroup): Int = math.max(1, g.replaces.size)
     val rewrite = new GroupRewrite(table, snap, jobId, op)
-    val outputs = rewrite.run(insertGroup ++ groups, concurrency, failAfterGroups) { g =>
+    val outputs = rewrite.run(insertGroup ++ groups, concurrency, failAfterGroups,
+      onDriver = (g, dir) => onDriver && (
+        if (g.name == InsertsGroup) change.insertRows.exists(
+          JobPlanning.layoutNewRowsOnDriver(change.inserts.get, _, snap, dir))
+        else keptOnDriver(g, kept(g), files(g), dir))) { g =>
       // inserts land in their hash buckets; the layout repartitions by
       // bucket so a large batch spreads (AQE coalesces a tiny one)
       if (g.name == InsertsGroup) JobPlanning.layoutNewRows(change.inserts.get, snap)
-      else rows(post.get(table.readEntriesForRewrite(snap, g.replaces)),
-        col(Status) =!= Dropped).coalesce(math.max(1, g.replaces.size))
+      else kept(g).coalesce(files(g))
     }
     val rewritten = groups.flatMap(_.replaces)
-    val removed = rewritten.map(_.rowCount).sum -
+    val removed = liveRows(rewritten) -
       outputs.filter(_.group != InsertsGroup).map(_.rowCount).sum
     rewrite.commit(insertGroup ++ groups, outputs, summary(RowCounts(removed,
       positions = 0L, deleteFiles = 0, eqDeleteKeys = 0L,
       filesRewritten = rewritten.size, filesScanned = 0, filesTotal = 0)))
   }
+
+  /** A bucket group's kept rows, read, marked and written into `dir` on
+    * the driver as `coalesce(files)` splits them ([[DriverIO.coalesce]];
+    * partition 0 is written even when empty, as the job writes it).
+    * Returns false, having written nothing, when its files or rows pass
+    * [[DriverIO.Cap]], under a `maxRecordsPerFile` limit, or when its
+    * plan is not a plain scan. */
+  private def keptOnDriver(g: RewriteGroup, kept: => DataFrame, files: Int, dir: String): Boolean =
+    g.bytes <= DriverIO.Cap && table.spark.sessionState.conf.maxRecordsPerFile <= 0 &&
+      DriverIO.collect(kept).exists { case (output, parts) =>
+        DriverIO.write(table.spark, DataTypeUtils.fromAttributes(output), dir,
+          DriverIO.coalesce(parts.map(_.toSeq), files).zipWithIndex.collect {
+            case (rows, p) if p == 0 || rows.nonEmpty => p -> rows.iterator
+          })
+        true
+      }
+
+  /** The live rows of `files`: their row counts when no delete applies
+    * to them, else one count of their delete-applied read. */
+  private def liveRows(files: Seq[DataFileEntry]): Long =
+    if (!table.deletesApply(snap, files)) files.map(_.rowCount).sum
+    else table.readEntriesForRewrite(snap, files).count()
 
   private def delta(change: RowChange, summary: RowCounts => Map[String, String]): Snapshot = {
     import change._

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *     The collect is one row per MATCHED FILE, metadata-sized.
   *  2. WRITE — the matched files and one post-image (SET list applied
   *     to the rows matching the condition, every other row kept) go to
-  *     [[RowLevelWrite]]: copy-on-write by default, merge-on-read with
-  *     `mergeOnRead = true`. All SET expressions evaluate against the
+  *     [[RowLevelWrite]]: copy-on-write by default (a projection over
+  *     the scan, so small groups of a plain table run on the driver),
+  *     merge-on-read with `mergeOnRead = true`. All SET expressions evaluate against the
   *     OLD row (simultaneous-assignment SQL semantics: `SET w = h,
   *     h = w` swaps).
   *
@@ -46,7 +47,13 @@ class UpdateJob(
     mergeOnRead: Boolean = false) {
 
   def run(assignments: Seq[(String, Column)], condition: Column,
-      failAfterGroups: Int = Int.MaxValue): Snapshot = {
+      failAfterGroups: Int = Int.MaxValue): Snapshot =
+    run(assignments, condition, failAfterGroups, onDriver = true)
+
+  /** [[run]], with the copy-on-write driver path allowed or not: both
+    * write the same files. */
+  private[graft] def run(assignments: Seq[(String, Column)], condition: Column,
+      failAfterGroups: Int, onDriver: Boolean): Snapshot = {
     val snap = table.currentSnapshot
     val all = table.entries(snap)
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
@@ -93,7 +100,7 @@ class UpdateJob(
     }
     new RowLevelWrite(table, snap, jobId, "update").write(
       RowChange(affected, Some(postImage _)), mergeOnRead, concurrency,
-      failAfterGroups) { c =>
+      failAfterGroups, onDriver) { c =>
       Map("rows-updated" -> matchedRows.toString,
         "files-scanned" -> scanned.toString,
         "files-total" -> total.toString,

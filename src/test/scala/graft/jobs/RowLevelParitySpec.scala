@@ -141,7 +141,7 @@ class RowLevelParitySpec extends AnyFunSuite {
       (5 -> (("m05", 6, Some(55)))) + (40 -> (("n40", 41, Some(40))))
     parity(want, Seq(1, 10, 25),
       cow = Map("job-id" -> "rl-merge", "source-rows" -> "7", "rows-updated" -> "3",
-        "rows-inserted" -> "2", "rows-deleted" -> "2", "files-rewritten" -> "3"),
+        "rows-inserted" -> "2", "rows-deleted" -> "1", "files-rewritten" -> "3"),
       mor = Map("job-id" -> "rl-merge", "strategy" -> "merge-on-read",
         "source-rows" -> "7", "rows-updated" -> "3", "rows-inserted" -> "2",
         "rows-deleted" -> "1", "files-rewritten" -> "0")) { (t, onRead) =>
@@ -157,7 +157,7 @@ class RowLevelParitySpec extends AnyFunSuite {
       (50 -> (("s50", 51, None)))
     parity(want, keep,
       cow = Map("job-id" -> "rl-sync", "source-rows" -> "15", "rows-updated" -> "14",
-        "rows-inserted" -> "1", "rows-deleted" -> "19", "files-rewritten" -> "5"),
+        "rows-inserted" -> "1", "rows-deleted" -> "17", "files-rewritten" -> "5"),
       mor = Map("job-id" -> "rl-sync", "strategy" -> "merge-on-read",
         "source-rows" -> "15", "rows-updated" -> "14", "rows-inserted" -> "1",
         "rows-deleted" -> "17", "files-rewritten" -> "0")) { (t, onRead) =>
