@@ -159,44 +159,38 @@ object DriverIO {
   }
 
   /** The rows of `df` per partition, in order, copied, with one Spark
-    * job: whole (`true`) while their bytes stay within [[Cap]], else
-    * only the columns at ordinals `keys` of every row. A task that
-    * passes the cap keeps only keys from there on, and the driver drops
-    * the whole rows it holds once the partitions it has received pass
-    * it, so whole rows on the driver stay within [[Cap]] plus one task's
-    * share; the keys are one row each. */
+    * job: whole (`true`) when every partition's rows fit its share of
+    * [[Cap]] (`Cap / partitions`), else only the columns at ordinals
+    * `keys` of every row. A task that passes its share sends only keys,
+    * so the whole rows sent to the driver stay within [[Cap]] in all,
+    * however many partitions `df` has; the keys are one row each. */
   def collectOrKeys(df: DataFrame, keys: Seq[Int]): (Boolean, Seq[Array[InternalRow]]) = {
     val output = df.queryExecution.executedPlan.output
     val all = output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) }
     val keyRefs = keys.map(all)
     val rdd = df.queryExecution.toRdd
-    val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
-    val keyOf = UnsafeProjection.create(keyRefs)
-    var received = 0L
-    var whole = true
-    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+    val share = Cap / math.max(1, rdd.getNumPartitions)
+    val parts = df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
       val (copy, keyOnly) = (UnsafeProjection.create(all), UnsafeProjection.create(keyRefs))
       val rows = ArrayBuffer.empty[InternalRow]
       var bytes = 0L
       it.foreach { r =>
-        if (bytes <= Cap) {
+        if (bytes <= share) {
           val u = copy(r).copy()
           bytes += u.getSizeInBytes
           rows += u
-          if (bytes > Cap) rows.mapInPlace(keyOnly(_).copy())
+          if (bytes > share) rows.mapInPlace(keyOnly(_).copy())
         } else rows += keyOnly(r).copy()
       }
-      (bytes, rows.toArray)
-    }, (i: Int, part: (Long, Array[InternalRow])) => {
-      received += part._1
-      val partWhole = part._1 <= Cap
-      if (whole && received > Cap) {
-        whole = false
-        parts.indices.filter(parts(_) != null).foreach(p => parts(p) = parts(p).map(keyOf(_).copy()))
-      }
-      parts(i) = if (partWhole && !whole) part._2.map(keyOf(_).copy()) else part._2
+      (bytes <= share, rows.toArray)
     })
-    (whole, parts.toSeq)
+    if (parts.forall(_._1)) (true, parts.map(_._2).toSeq)
+    else {
+      val keyOf = UnsafeProjection.create(keyRefs)
+      (false, parts.map { case (whole, rows) =>
+        if (whole) rows.map(keyOf(_).copy(): InternalRow) else rows
+      }.toSeq)
+    }
   }
 
   /** A frame over `rows` of `schema` that the driver holds: projections

@@ -6,6 +6,7 @@ import graft.model._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -54,18 +55,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * multi-match checks, and the key bounds, in the UTF-8 order the
   * manifest stats use, that prune candidate files by id range. While
   * the rows fit [[DriverIO.Cap]] the whole source stays on the driver:
-  * the SET payload becomes one hashed key lookup ([[KeyLookup]]) in the
-  * post-image, so a post-image over a plain scan stays plain, and the
-  * inserts are laid out from the held rows. A source over the cap keeps
-  * only its keys, and the post-image joins a broadcast of the payload.
+  * the SET payload becomes one hashed key lookup ([[KeyLookup]], a
+  * broadcast variable that launches no job) in the post-image, so a
+  * post-image over a plain scan stays plain, and the inserts are laid
+  * out from the held rows; the source columns are collected only when
+  * such inserts can be written (copy-on-write with a WHEN NOT MATCHED
+  * clause). A source over the cap keeps only its keys, and the
+  * post-image joins a broadcast of the payload.
   *
   * Discovery reads the candidates' live `image_id`s and tests each
   * against the source keys: on the driver, with no job, when no live
   * delete applies to the candidates (the read is then a plain scan)
-  * and their id rows fit the cap; else one collect of a join with a
-  * broadcast of the keys returns the matched (id, file) pairs,
-  * O(matches). Matched files, matched ids and the insert count all
-  * follow on the driver.
+  * and they are few enough that the serial read beats a job; else one
+  * collect of a join with a broadcast of the keys returns the matched
+  * (id, file) pairs, O(matches). Matched files, matched ids and the
+  * insert count all follow on the driver.
   *
   * The matched files and one post-image over their live rows (SET
   * applied, delete-flagged and unmatched-by-source rows dropped) go to
@@ -124,12 +128,15 @@ class MergeJob(
     // 1. ONE collect of the source answers every scalar the planner
     // needs, exactly. Its rows are the key, the payload (the delete flag
     // and one `_new_<phys>` per SET column, cast to the declared type)
-    // and the source columns; only the keys come back when the rows pass
-    // the cap, and the keys alone were always O(source rows)
+    // and, when the driver may write inserts from them (copy-on-write
+    // with a WHEN NOT MATCHED clause), the source columns; only the keys
+    // come back when the rows pass the cap, and the keys alone were
+    // always O(source rows)
     val payload = delFlag.map(_.as(Del)).toSeq ++
       setFields.map(f => col(f.name).cast(f.sparkType).as(s"_new_${f.phys}"))
-    val collected = source.select(
-      (col("image_id") +: payload) ++ source.columns.map(source(_)): _*)
+    val insertsHeld = insertUnmatched && !mergeOnRead
+    val collected = source.select((col("image_id") +: payload) ++
+      (if (insertsHeld) source.columns.map(source(_)).toSeq else Nil): _*)
     val (whole, parts) = DriverIO.collectOrKeys(collected, 0 to delFlag.size)
     val keyRows = parts.flatten
     val ids = keyRows.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0).toString)
@@ -143,7 +150,8 @@ class MergeJob(
     // ANSI MERGE multi-match check: one source row per key or error
     require(ids.distinct.length == ids.length,
       "MERGE source has duplicated image_id(s); resolve last-wins upstream")
-    // the source rows the driver keeps: key, payload, source columns
+    // the source rows the driver keeps: key, payload and, for inserts
+    // it may write, source columns
     val held = Some(parts).filter(_ => whole && onDriver)
 
     // 2. prune candidate files by image_id range overlap with the source,
@@ -191,7 +199,7 @@ class MergeJob(
     }
     // the same rows from the held source, aligned on the driver, per
     // source partition: the input partitions of the job path's inserts
-    val heldInserts = held.filter(_ => insertCount > 0).flatMap { ps =>
+    val heldInserts = held.filter(_ => insertsHeld && insertCount > 0).flatMap { ps =>
       val srcAt = 1 + payload.size
       val srcRow = UnsafeProjection.create(source.schema.fields.toSeq.zipWithIndex.map {
         case (f, i) => BoundReference(srcAt + i, f.dataType, f.nullable)
@@ -217,14 +225,15 @@ class MergeJob(
     // each target row's matched source payload as one struct column, or
     // null where no source row matches: a key lookup into the held rows,
     // or a left join against a broadcast of the payload
-    val withSource: DataFrame => DataFrame = held match {
-      case Some(ps) =>
-        val fields = collected.schema.fields.slice(1, 1 + payload.size)
-        val value = UnsafeProjection.create(fields.toSeq.zipWithIndex.map {
-          case (f, i) => BoundReference(1 + i, f.dataType, f.nullable)
-        })
-        val byKey = KeyTable(ps.iterator.flatten, 0, StructType(fields), value)
-        _.withColumn(Src, KeyLookup.column(col("image_id"), byKey))
+    val byKey = held.filter(_ => !noMatchedAction).map { ps =>
+      val fields = collected.schema.fields.slice(1, 1 + payload.size)
+      val value = UnsafeProjection.create(fields.toSeq.zipWithIndex.map {
+        case (f, i) => BoundReference(1 + i, f.dataType, f.nullable)
+      })
+      KeyTable(table.spark.sparkContext, ps.iterator.flatten, 0, StructType(fields), value)
+    }
+    val withSource: DataFrame => DataFrame = byKey match {
+      case Some(t) => _.withColumn(Src, KeyLookup.column(col("image_id"), t))
       case None =>
         val bySource = broadcast(source.select(col("image_id"), struct(payload: _*).as(Src)))
         _.join(bySource, Seq("image_id"), "left")
@@ -243,7 +252,7 @@ class MergeJob(
         .drop(Src)
     }
 
-    new RowLevelWrite(table, snap, jobId, "merge").write(
+    try new RowLevelWrite(table, snap, jobId, "merge").write(
       RowChange(affected, Some(postImage _).filter(_ => !noMatchedAction), insertRows,
         insertRows = heldInserts),
       mergeOnRead, concurrency, failAfterGroups, onDriver) { c =>
@@ -253,7 +262,7 @@ class MergeJob(
         "rows-deleted" -> c.deletedRows.toString,
         "files-rewritten" -> c.filesRewritten.toString) ++
         (if (mergeOnRead) Map("strategy" -> "merge-on-read") else Map.empty)
-    }
+    } finally byKey.foreach(_.destroy())
   }
 
   /** A broadcast frame of `keys` under `image_id`. */
@@ -268,23 +277,22 @@ class MergeJob(
   /** [[discover]]'s result from the ids of `files`, read on the driver
     * with no job and tested against `ids`; None when a live delete
     * applies to the files (their live rows are then not their stored
-    * rows) or their id rows, as [[DriverIO.collect]] would hold them,
-    * pass the cap. The read holds only the matches. */
+    * rows) or they pass [[DriverDiscoverRows]] or [[DriverDiscoverFiles]].
+    * The read holds only the matches and one count per file. */
   private def discoverOnDriver(snap: Snapshot, files: Seq[DataFileEntry],
       ids: Seq[String]): Option[Map[String, (Seq[String], Long)]] = {
-    def idBytes(f: DataFileEntry) = 16L +
-      (math.max(f.imageIdMin.getBytes("UTF-8").length, f.imageIdMax.getBytes("UTF-8").length) + 7) / 8 * 8
-    if (table.deletesApply(snap, files) ||
-        files.map(f => f.rowCount * idBytes(f)).sum > DriverIO.Cap) return None
+    if (table.deletesApply(snap, files) || files.size > DriverDiscoverFiles ||
+        files.map(_.rowCount).sum > DriverDiscoverRows) return None
     DriverIO.plain(table.scan(files, snap.physicalSchema).select(col("image_id"))
       .queryExecution.sparkPlan)
       .map { plan =>
         val keys = new java.util.HashSet[UTF8String]()
         ids.foreach(i => keys.add(UTF8String.fromString(i)))
         val found = scala.collection.mutable.HashMap.empty[String, (List[String], Long)]
+        var (file, name) = (null: PartitionedFile, "")
         plan.read(plan.partitions.flatMap(_.files)) { (f, r) =>
+          if (f ne file) { file = f; name = f.toPath.getName }
           val id = r.getUTF8String(0)
-          val name = f.toPath.getName
           val (m, u) = found.getOrElse(name, (Nil, 0L))
           found(name) = if (keys.contains(id)) (id.toString :: m, u) else (m, u + 1)
           true
@@ -329,4 +337,14 @@ object MergeJob {
   /** The post-image's matched-source struct and its delete-flag field. */
   private val Src = "__src"
   private val Del = "__del"
+
+  /** The most candidate rows, and files, whose ids MERGE's discovery
+    * reads on the driver; past either the job's parallel read is faster.
+    * On 4 cores (local[4]) the driver read cost about 1.45 ms per file
+    * and 0.16 us per row, the job 100-185 ms: the driver won at 300k
+    * rows in 8 and in 64 files (by 15 ms in 64) and lost at 1M
+    * (`BENCH/discover_crossover.scala`, `BENCH/NOTES.md`). Not a memory
+    * bound: the read holds only the matches. */
+  private val DriverDiscoverRows = 1L << 18
+  private val DriverDiscoverFiles = 64
 }

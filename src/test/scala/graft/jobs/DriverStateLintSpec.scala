@@ -9,7 +9,7 @@ import scala.util.matching.Regex
 /** A lint written as a test: every place the engine brings rows to the
   * driver or ships them to every task states what bounds them. A
   * `.collect()`, a `broadcast(` or a `runJob(` (a collect by hand) in
-  * `graft/{jobs,format,verify,spark,streaming}` must sit in a method on
+  * `graft/{jobs,format,verify,spark,streaming,expr}` must sit in a method on
   * the allow-list below, each entry with its bound, or, where there is
   * none yet, the reason and the scale it holds at. A regex cannot see
   * types: a call is placed in the nearest top-level
@@ -18,12 +18,14 @@ import scala.util.matching.Regex
   * state (ROADMAP direction 7). */
 class DriverStateLintSpec extends AnyFunSuite {
   private val SourceRoot = Paths.get("src/main/scala/graft")
-  private val Packages = Seq("jobs", "format", "verify", "spark", "streaming")
+  private val Packages = Seq("jobs", "format", "verify", "spark", "streaming", "expr")
 
   private val Allowed = Map(
     "DriverIO.collect" -> "DriverIO.Cap: the driver read stops once its rows pass it",
-    "DriverIO.collectOrKeys" -> ("DriverIO.Cap of whole rows per task and in all; past it " +
-      "one key row per input row, O(source rows) as MERGE's key collect always was"),
+    "DriverIO.collectOrKeys" -> ("DriverIO.Cap of whole rows in all, Cap / partitions per " +
+      "task; past it one key row per input row, O(source rows) as MERGE's key collect " +
+      "always was"),
+    "KeyTable.apply" -> "DriverIO.Cap: the source rows collectOrKeys held whole",
     "LocalAppend.collectCapped" -> "DriverIO.Cap: the one task stops at it",
     "MergeJob.merge" -> ("unbounded: the SET payload broadcast, only for a source whose " +
       "rows pass DriverIO.Cap"),

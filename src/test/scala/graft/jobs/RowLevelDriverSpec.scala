@@ -4,6 +4,7 @@ import graft.TestSpark
 import graft.format.{DriverIO, QTable}
 import graft.model.DataFileEntry
 import graft.synth.DataGen
+import org.apache.spark.TestListenerBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,9 +24,9 @@ class RowLevelDriverSpec extends AnyFunSuite {
 
   /** 900 rows in 3 buckets x 3 files. */
   private def table(tag: String, rows: Long = 900, buckets: Int = 3,
-      sizes: Array[Int] = DataGen.Sizes): QTable = {
+      sizes: Array[Int] = DataGen.Sizes, filesPerBucket: Int = 3): QTable = {
     val t = QTable.create(TestSpark.tmpDir(tag), spark, buckets)
-    AppendJob.append(t, DataGen.generate(spark, rows, 42L, 3, sizes).toDF(), filesPerBucket = 3)
+    AppendJob.append(t, DataGen.generate(spark, rows, 42L, 3, sizes).toDF(), filesPerBucket)
     t
   }
 
@@ -182,5 +183,27 @@ class RowLevelDriverSpec extends AnyFunSuite {
     sameFiles(d, j, parts = 1)
     assert(sameBag(bag(d), bag(j)))
     assert(bag(d).where(!col("caption").startsWith("fixed: ")).isEmpty)
+  }
+
+  test("a many-partition source sends the driver at most the cap of whole rows") {
+    // 16 partitions of about 1 MiB each: each fits the cap, all of them
+    // pass it; the driver may receive the cap of whole rows and the keys.
+    // One file per table: the append's range split of a batch this size
+    // is sampled, and two tables could split it differently
+    val tables @ Seq(d, j) = Seq("rd-parts-driver", "rd-parts-job").map(
+      table(_, rows = 1400, buckets = 1, sizes = Array(96, 128), filesPerBucket = 1))
+    val fixes = tables.map(_.read().drop("pbucket").repartition(16)
+      .withColumn("caption", concat(lit("fixed: "), col("image_id")))
+      .withColumn("is_delete", lit(false)).cache())
+    assert(fixes.head.select(sum(length(col("bytes")))).head().getLong(0) > 2 * DriverIO.Cap)
+    TestListenerBridge.withConf(spark.sparkContext, "spark.driver.maxResultSize",
+        s"${(DriverIO.Cap >> 20) + 1}m") {
+      merge(d, fixes(0), onDriver = true)
+      merge(j, fixes(1), onDriver = false)
+    }
+    assert(d.currentSnapshot.summary("rows-updated") == "1400")
+    sameFiles(d, j, parts = 1)
+    assert(sameBag(bag(d), bag(j)))
+    fixes.foreach(_.unpersist())
   }
 }
