@@ -95,7 +95,7 @@ object ChangelogScan {
           // the changelog presents every commit under the TO endpoint's
           // schema, so TO's initial defaults apply to files predating
           // their add-column commit — same rule as read(to)
-          Some(t.withInitialDefaults(t.scan(ents, phys), to, ents)
+          Some(t.decorate(t.scan(ents, phys), None, to, ents)
             .withColumn(ChangeTypeCol, lit("insert"))
             .withColumn(CommitVersionCol, lit(v)))
         case _ => // merge, rollback, delete, upsert — anything row-changing:
@@ -162,16 +162,11 @@ object ChangelogScan {
         key: String, row: String) = {
       // images surface TO's initial defaults (the changelog's declared
       // schema — same per-file seq rule as read(to)) over SNAP's delete
-      // set; the no-defaults branch keeps the historical pass-through
+      // set
       val wanted = paths.toSet
       val ents = t.entries(snap).filter(e => wanted.contains(e.path))
-      val live =
-        if (t.defaultsFor(to, ents).isEmpty)
-          t.applyDeletes(t.scan(ents, phys), snap, ents)
-        else t.applyDefaults(
-          t.applyDeletesWithPos(t.scan(ents, phys), snap, ents),
-          to, ents).drop("__gpath", "__gpos")
-      live.select(col("image_id").as(key), struct(allCols.map(col): _*).as(row))
+      t.decorate(t.scan(ents, phys), Some(snap), to, ents)
+        .select(col("image_id").as(key), struct(allCols.map(col): _*).as(row))
     }
     val j = packed(removed, parent, "k_pre", "pre_row")
       .join(packed(added, s, "k_post", "post_row"),

@@ -153,7 +153,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * under their PHYSICAL (creation-time) names and aliased to the
     * current logical names, so a renamed column reads old and new files
     * alike — the projection is a no-op when nothing was renamed. Live
-    * position deletes (merge-on-read) are applied — see [[applyDeletes]].
+    * deletes and initial defaults are applied — see [[decorate]].
     * Planned from the manifests through [[scan]], exactly as
     * [[readIndexed]]. */
   def read(s: Snapshot): DataFrame = readIndexed(s)._1
@@ -165,7 +165,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * cannot, through the exact same delete/rename semantics as a full
     * [[read]]. */
   def readSubset(s: Snapshot, files: Seq[DataFileEntry]): DataFrame =
-    toLogical(decorateRead(scan(files, s.physicalSchema), s, files), s)
+    toLogical(decorate(scan(files, s.physicalSchema), Some(s), s, files), s)
 
   // ------------------------------------------ merge-on-read position deletes
 
@@ -196,138 +196,98 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     dels.filter(d => pathKey(d.dataPathMax) >= lo && pathKey(d.dataPathMin) <= hi)
   }
 
-  /** Apply a snapshot's live position AND equality deletes to a frame
-    * scanned from (a subset of) its data files — the merge-on-read path.
-    *
-    * Position deletes anti-join on `(_metadata.file_path,
-    * _metadata.row_index)`. The join key is the file NAME (UUID-unique
-    * part files), not the full path: a delete file's stored path and
-    * the scan's `_metadata.file_path` may qualify the same file with
-    * different schemes, and names are immune. The delete side is
-    * O(deleted-since-last-fold rows) and AQE broadcasts it when small
-    * (the steady-state case); the paths of `reads` (the snapshot
-    * entries the frame was scanned from) prune delete files whose
-    * referenced-path range cannot overlap the scan, so a scoped rewrite
-    * of one bucket never reads other buckets' delete files.
-    *
-    * Equality deletes anti-join on the key with the Iceberg v2
-    * sequence-number rule — see [[applyEqDeletes]].
-    *
-    * No-op (the unchanged `df`, preserving existing plans byte-for-byte)
-    * when no delete of either flavor can apply. */
-  def applyDeletes(df: DataFrame, s: Snapshot, reads: Seq[DataFileEntry]): DataFrame = {
-    if (reads.isEmpty ||
-        (neededDeletes(s, reads.map(_.path)).isEmpty && s.eqDeleteFiles.isEmpty)) df
-    else applyDeletesWithPos(df, s, reads)
-      .drop("__gpath", "__gpos")
-  }
-
-  /** [[applyDeletes]] variant that also materializes the scan address
-    * columns `__gpath` (= `_metadata.file_path`) and `__gpos`
-    * (= `_metadata.row_index`) for callers that need row positions —
-    * delete writers (DeleteJob, merge-on-read MERGE). The metadata
-    * column must be captured BEFORE the anti-join: Spark does not
-    * resolve `_metadata` through a join. */
-  def applyDeletesWithPos(df: DataFrame, s: Snapshot, reads: Seq[DataFileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, substring_index}
-    val withPos = df
-      .withColumn("__gpath", col("_metadata.file_path"))
-      .withColumn("__gpos", col("_metadata.row_index"))
-    val needed = neededDeletes(s, reads.map(_.path))
-    val posApplied =
-      if (needed.isEmpty) withPos
-      else {
-        val delDf = scan(needed, deleteSchema)
-          .select(substring_index(col("file_path"), "/", -1).as("__gname"),
-            col("pos").as("__gpos"))
-        withPos.withColumn("__gname", substring_index(col("__gpath"), "/", -1))
-          .join(delDf, Seq("__gname", "__gpos"), "left_anti")
-          .drop("__gname")
-      }
-    applyEqDeletes(posApplied, s, reads)
-  }
-
-  // ------------------------------------------------ initial defaults
+  // ------------------------------------------------------ read decoration
 
   /** The fields whose initial default applies to at least one of
     * `inputs` — i.e. some file in the read predates the add-column
     * commit. Empty in steady state (every pre-evolution file has been
-    * rewritten), which is what keeps defaulted tables substitution- and
-    * join-free once maintenance catches up. */
-  private[format] def defaultsFor(s: Snapshot,
-      inputs: Seq[DataFileEntry]): Seq[FieldDef] =
+    * rewritten), which is what keeps defaulted tables substitution-free
+    * once maintenance catches up. */
+  private def defaultsFor(s: Snapshot, inputs: Seq[DataFileEntry]): Seq[FieldDef] =
     s.schemaFields.filter(f => f.defaultOpt.nonEmpty &&
       inputs.exists(_.seq < f.defaultSeq))
 
-  /** Substitute initial defaults into a frame that carries the scan
-    * address column `__gpath` (from [[applyDeletesWithPos]]): rows from
-    * files whose data seq predates a defaulted column's add-column
-    * commit surface the default; rows from later files keep their
-    * stored values — including explicit nulls (NOT a coalesce; Iceberg
-    * v3 `initial-default` semantics). The per-row decision rides a
-    * BROADCAST (file name -> seq) lookup bounded by the READ's file
-    * count — the same metadata-sized shape as the eq-delete seq lookup
-    * — never a literal IN-list, so the plan stays O(1) in file count.
+  /** THE read decoration of a scan of `inputs`, the one read surface
+    * of every reader, rewrite and row-level write:
+    *  - `schema`'s initial defaults: rows of files whose data seq
+    *    predates a defaulted column's add-column commit surface the
+    *    default, later files keep their stored values — explicit nulls
+    *    included (NOT a coalesce; Iceberg v3 `initial-default`);
+    *  - row ids, when `df` carries `_row_id` ([[rewriteSchema]]): a
+    *    stored id wins, null falls back to the file's `firstRowId` +
+    *    physical position (Iceberg v3 `first_row_id + _pos`) — which
+    *    also hands fresh ids to rows written without one (MERGE
+    *    inserts), their file's base range being newly assigned;
+    *  - the live position and equality deletes of `deletes` (None: rows
+    *    as appended — the incremental and streaming reads).
     *
-    * Scale/pushdown note: while any pre-evolution file is live in the
-    * read, predicates on the defaulted column sit above this
-    * substitution and do not reach the parquet scan (which is REQUIRED
-    * for correctness: a pushed `col = default` would drop the very rows
-    * the default makes match); once rewrites bake the default in,
-    * [[defaultsFor]] is empty, the frame passes through untouched, and
-    * pushdown/stats-skipping resume. */
-  private[format] def applyDefaults(df: DataFrame, s: Snapshot,
+    * Defaults and row ids are projections over per-file constants the
+    * scan serves as `_metadata` fields ([[QTableFileIndex]]), so neither
+    * joins. Position deletes anti-join on (file NAME, `row_index`): part
+    * file names are UUID-unique, and a delete file's stored path and the
+    * scan's may qualify the same file with different schemes. Equality
+    * deletes anti-join on the key with the Iceberg v2 sequence rule — a
+    * row dies when its file's seq is strictly below the delete's — both
+    * seqs read the same way. The delete sides are O(live delete rows)
+    * and AQE broadcasts them when small, the steady state since
+    * maintenance folds the debt; the paths of `inputs` prune delete
+    * files whose referenced range cannot overlap the scan, so a scoped
+    * rewrite of one bucket never reads other buckets' delete files.
+    * Spark does not resolve `_metadata` through a join, so a caller that
+    * needs a row's address (`__gpath`/`__gpos`) captures it on `df`.
+    *
+    * Returns `df` unchanged, plan preserved, when nothing applies.
+    * While a pre-evolution file is live, a predicate on its defaulted
+    * column tests the substituted value and never reaches parquet as a
+    * pushed filter — required: a pushed `col = default` would drop the
+    * rows the default makes match — while predicates on other columns
+    * still push into the scan and its stats index; rewrites bake the
+    * default in (their outputs postdate the add-column commit), after
+    * which pushdown resumes. A rewrite that read raw physical files
+    * would instead bake stored nulls over a live default. */
+  def decorate(df: DataFrame, deletes: Option[Snapshot], schema: Snapshot,
       inputs: Seq[DataFileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, substring_index, when}
-    val defs = defaultsFor(s, inputs)
-    if (defs.isEmpty) return df
-    val seqDf = broadcast(spark.createDataFrame(
-      inputs.map(f => (QTable.fileName(f.path), f.seq)))
-      .toDF("__dfname", "__dfseq"))
-    val named = df
-      .withColumn("__dfname", substring_index(col("__gpath"), "/", -1))
-      .join(seqDf, Seq("__dfname"), "left")
-    defs.foldLeft(named) { (acc, f) =>
-      // unmatched file names (impossible by construction: `inputs`
-      // covers the scan) conservatively read as post-evolution
-      acc.withColumn(f.phys,
-        when(coalesce(col("__dfseq"), lit(Long.MaxValue)) < lit(f.defaultSeq),
-          lit(f.default).cast(f.sparkType)).otherwise(col(f.phys)))
-    }.drop("__dfname", "__dfseq")
+    import org.apache.spark.sql.functions.{coalesce, col, lit, substring_index, when}
+    def meta(field: String) = col(s"_metadata.$field")
+    val seq = meta(QTableFileIndex.SeqField)
+    val defaulted = defaultsFor(schema, inputs).foldLeft(df) { (acc, f) =>
+      acc.withColumn(f.phys, when(seq < lit(f.defaultSeq),
+        lit(f.default).cast(f.sparkType)).otherwise(col(f.phys)))
+    }
+    val projected =
+      if (!df.columns.contains(QTable.RowIdCol)) defaulted
+      else defaulted.withColumn(QTable.RowIdCol, coalesce(col(QTable.RowIdCol),
+        meta(QTableFileIndex.FirstRowIdField) + meta("row_index")))
+    val pos = deletes.toSeq.flatMap(neededDeletes(_, inputs.map(_.path)))
+    val eq = deletes.toSeq.flatMap(_.eqDeleteFiles.filter(d => inputs.exists(eqApplies(d, _))))
+    if (pos.isEmpty && eq.isEmpty) return projected
+    val captured = projected
+      .withColumn("__qname", substring_index(meta("file_path"), "/", -1))
+      .withColumn("__qpos", meta("row_index"))
+      .withColumn("__qseq", seq)
+    val posApplied =
+      if (pos.isEmpty) captured
+      else captured.join(scan(pos, deleteSchema).select(
+          substring_index(col("file_path"), "/", -1).as("__qname"), col("pos").as("__qpos")),
+        Seq("__qname", "__qpos"), "left_anti")
+    val eqApplied =
+      if (eq.isEmpty) posApplied
+      else posApplied.join(scan(eq, eqDeleteSchema)
+          .select(col("image_id").as("__qkey"), seq.as("__qkseq")),
+        col("image_id") === col("__qkey") && col("__qseq") < col("__qkseq"), "left_anti")
+    eqApplied.drop("__qname", "__qpos", "__qseq")
   }
 
-  /** The full read decoration over a scan of `inputs`: merge-on-read
-    * deletes (both flavors) + initial-default substitution. Returns the
-    * input frame UNCHANGED (plan preserved byte-for-byte) when neither
-    * applies. This is the read surface maintenance rewrites must go
-    * through: a rewrite that scanned raw physical files would bake
-    * stored nulls over a live default and silently lose it (the
-    * rewritten file's seq postdates the add-column commit). */
-  def decorateRead(df: DataFrame, s: Snapshot,
-      inputs: Seq[DataFileEntry]): DataFrame = {
-    if (defaultsFor(s, inputs).isEmpty) applyDeletes(df, s, inputs)
-    else applyDefaults(applyDeletesWithPos(df, s, inputs), s, inputs)
-      .drop("__gpath", "__gpos")
+  /** A snapshot's data files as a raw physical relation (no deletes,
+    * defaults or renames applied) — what [[graft.spark.QTableSource]]
+    * serves — when that is exactly what [[read]] returns: no column to
+    * alias, and no live delete or initial default for [[decorate]]. */
+  private[graft] def plainRelation(s: Snapshot)
+      : Option[(org.apache.spark.sql.execution.datasources.HadoopFsRelation, QTableFileIndex)] = {
+    val ents = entries(s)
+    if (s.hasRenames || deletesApply(s, ents) || defaultsFor(s, ents).nonEmpty) None
+    else Some(relationOver(ents, s.physicalSchema))
   }
-
-  /** [[decorateRead]] keeping the `__gpath`/`__gpos` scan address
-    * columns — for callers that need row positions (DeleteJob,
-    * merge-on-read MERGE). */
-  def decorateReadWithPos(df: DataFrame, s: Snapshot,
-      inputs: Seq[DataFileEntry]): DataFrame =
-    applyDefaults(applyDeletesWithPos(df, s, inputs), s, inputs)
-
-  /** Defaults-only decoration of a RAW scan of `inputs` (no delete
-    * application — for surfaces that read appended files as-written:
-    * incremental scan, the streaming source). Captures the scan address
-    * itself, so it must wrap the scan frame directly; no-op (plan
-    * preserved) when no default applies to `inputs`. */
-  def withInitialDefaults(df: DataFrame, s: Snapshot,
-      inputs: Seq[DataFileEntry]): DataFrame =
-    if (defaultsFor(s, inputs).isEmpty) df
-    else applyDefaults(df.withColumn("__gpath",
-      org.apache.spark.sql.functions.col("_metadata.file_path")), s, inputs)
-      .drop("__gpath")
 
   // ------------------------------------------- row lineage (v3 _row_id)
 
@@ -350,34 +310,15 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
       propertiesOverride = Some(snap.props + ("row.lineage" -> "true")))
   }
 
-  /** Physical scan schema + nullable `_row_id`: files that never
-    * materialized the column surface null for it, which the readers
-    * below coalesce to `firstRowId + position`. */
-  private def physicalSchemaWithRowId(s: Snapshot)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(s.physicalSchema.fields :+
+  /** The scan schema of a rewrite read: physical, plus a nullable
+    * `_row_id` when `s` tracks row lineage — files that never
+    * materialized the column surface null for it, which [[decorate]]
+    * fills. */
+  def rewriteSchema(s: Snapshot): org.apache.spark.sql.types.StructType =
+    if (!s.rowLineage) s.physicalSchema
+    else org.apache.spark.sql.types.StructType(s.physicalSchema.fields :+
       org.apache.spark.sql.types.StructField(QTable.RowIdCol,
         org.apache.spark.sql.types.LongType, nullable = true))
-
-  /** Materialize `_row_id` on a frame carrying `__gpath`/`__gpos`: a
-    * stored id wins (rewritten files carry one per copied row), null
-    * falls back to the entry's `firstRowId` + physical position — which
-    * also hands fresh ids to rows written without one (MERGE inserts)
-    * because their file's base range is newly assigned. The lookup is
-    * the same metadata-sized broadcast shape as the eq-delete and
-    * initial-default lookups. */
-  private def applyRowIds(df: DataFrame,
-      inputs: Seq[DataFileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, substring_index}
-    val baseDf = broadcast(spark.createDataFrame(
-      inputs.map(f => (QTable.fileName(f.path), f.firstRowId)))
-      .toDF("__rlname", "__rlbase"))
-    df.withColumn("__rlname", substring_index(col("__gpath"), "/", -1))
-      .join(baseDf, Seq("__rlname"), "left")
-      .withColumn(QTable.RowIdCol,
-        coalesce(col(QTable.RowIdCol), col("__rlbase") + col("__gpos")))
-      .drop("__rlname", "__rlbase")
-  }
 
   /** Read a snapshot with its stable `_row_id` lineage column appended
     * to the logical schema (deletes + initial defaults applied as in
@@ -386,41 +327,20 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     require(s.rowLineage,
       "row lineage is not enabled on this snapshot (enable-row-lineage)")
     import org.apache.spark.sql.functions.col
-    val ents = entries(s)
-    val cols = s.schemaFields.map(f => col(f.phys).as(f.name)) :+
-      col(QTable.RowIdCol)
-    val withPos = applyDeletesWithPos(
-      scan(ents, physicalSchemaWithRowId(s)), s, ents)
-    applyRowIds(applyDefaults(withPos, s, ents), ents)
-      .drop("__gpath", "__gpos")
-      .select(cols: _*)
+    readEntriesForRewrite(s, entries(s)).select(
+      s.schemaFields.map(f => col(f.phys).as(f.name)) :+ col(QTable.RowIdCol): _*)
   }
 
   def readWithRowId(): DataFrame = readWithRowId(currentSnapshot)
 
-  /** The read surface maintenance REWRITES must use: fully decorated
-    * (deletes folded, defaults baked) physical frame — plus, when the
+  /** The read surface maintenance REWRITES use: [[decorate]] over
+    * [[rewriteSchema]] — deletes folded, defaults baked and, when the
     * table tracks row lineage, a materialized `_row_id` column the
     * rewrite writes through to its output files (stored ids beat the
     * by-position fallback on the next read, so a re-sort cannot lose
-    * them). Without lineage this is exactly [[decorateRead]]. */
-  def readEntriesForRewrite(s: Snapshot,
-      inputs: Seq[DataFileEntry]): DataFrame =
-    if (!s.rowLineage)
-      decorateRead(scan(inputs, s.physicalSchema), s, inputs)
-    else readEntriesForRewriteIndexed(s, inputs)._1.drop("__gpath", "__gpos")
-
-  /** [[readEntriesForRewrite]] keeping the `__gpath`/`__gpos` address
-    * columns (merge discovery and merge-on-read writes need positions),
-    * with its scan's stats-skipping index, whose `lastSelection` counts
-    * the files a pushed predicate opened. */
-  def readEntriesForRewriteIndexed(s: Snapshot,
-      inputs: Seq[DataFileEntry]): (DataFrame, QTableFileIndex) = {
-    val (df, index) = scanIndexed(inputs,
-      if (s.rowLineage) physicalSchemaWithRowId(s) else s.physicalSchema)
-    val live = decorateReadWithPos(df, s, inputs)
-    (if (s.rowLineage) applyRowIds(live, inputs) else live, index)
-  }
+    * them). */
+  def readEntriesForRewrite(s: Snapshot, inputs: Seq[DataFileEntry]): DataFrame =
+    decorate(scan(inputs, rewriteSchema(s)), Some(s), s, inputs)
 
   // ----------------------------------------------------- equality deletes
 
@@ -438,45 +358,6 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
   private def eqApplies(d: EqDeleteFileEntry, f: DataFileEntry): Boolean =
     f.seq < d.seq && QTable.utf8Leq(d.idMin, f.imageIdMax) &&
       QTable.utf8Leq(f.imageIdMin, d.idMax)
-
-  /** Apply a snapshot's live equality deletes to a frame (which must
-    * carry `__gpath`) scanned from the entries `reads`: anti-join on the
-    * key with the per-row file seq strictly below the delete's seq.
-    *
-    * Scale shape: the file-name → seq lookup is bounded by the READ's
-    * file count (the same list scan planning already materializes, never
-    * O(table)); the delete side is O(live eq-delete keys) and AQE
-    * broadcasts it when small — the steady state, since maintenance
-    * folds the debt ([[retainEqDeletes]]). Entirely a no-op — plan
-    * untouched — when no live delete can apply to the read set. */
-  private def applyEqDeletes(df: DataFrame, s: Snapshot,
-      reads: Seq[DataFileEntry]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val eq = s.eqDeleteFiles
-    if (eq.isEmpty || reads.isEmpty) return df
-    val applicable = eq.filter(d => reads.exists(f => eqApplies(d, f)))
-    if (applicable.isEmpty) return df
-    val spark = df.sparkSession
-    // file name -> data seq for the read subset (metadata-sized)
-    val seqDf = broadcast(spark.createDataFrame(
-      reads.map(f => (QTable.fileName(f.path), f.seq))).toDF("__ename", "__eseq"))
-    // key -> delete seq: each key row carries its OWN entry's seq,
-    // attached via the delete-file name (consolidation-safe)
-    val dseqDf = broadcast(spark.createDataFrame(
-      applicable.map(d => (QTable.fileName(d.path), d.seq))).toDF("__dname", "__dseq"))
-    val delKeys = scan(applicable, eqDeleteSchema)
-      .select(col("image_id").as("__dkey"),
-        substring_index(col("_metadata.file_path"), "/", -1).as("__dname"))
-      .join(dseqDf, "__dname")
-      .select(col("__dkey"), col("__dseq"))
-    df.withColumn("__ename", substring_index(col("__gpath"), "/", -1))
-      .join(seqDf, Seq("__ename"), "left")
-      .join(delKeys,
-        col("image_id") === col("__dkey") &&
-          coalesce(col("__eseq"), lit(0L)) < col("__dseq"),
-        "left_anti")
-      .drop("__ename", "__eseq")
-  }
 
   /** The equality-delete entries still needed once only `surviving`
     * data files remain live (a rewrite job's fold rule): an entry drops
@@ -615,17 +496,10 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
       partitionSchema = org.apache.spark.sql.types.StructType(Nil),
       dataSchema = org.apache.spark.sql.GraftBridge.asNullable(schema),
       bucketSpec = None,
-      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      fileFormat = new QTableParquetFormat(),
       options = Map.empty)(spark)
     (rel, index)
   }
-
-  /** A snapshot's data files as a raw physical relation (no deletes,
-    * defaults or renames applied) — what [[graft.spark.QTableSource]]
-    * serves when none of those apply. */
-  private[graft] def relationFor(s: Snapshot)
-      : (org.apache.spark.sql.execution.datasources.HadoopFsRelation, QTableFileIndex) =
-    relationOver(entries(s), s.physicalSchema)
 
   /** Read a snapshot through the Catalyst-integrated stats-skipping
     * [[QTableFileIndex]]: pushed filters on phash/pbucket/image_id prune
@@ -636,18 +510,14 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * the skip ratio for tests/metrics). [[read]] is this frame. */
   def readIndexed(s: Snapshot): (DataFrame, QTableFileIndex) = {
     val ents = entries(s)
-    val (df0, index) = scanIndexed(ents, s.physicalSchema)
-    // merge-on-read: anti-join live position deletes above the indexed
-    // scan (pushed filters and stats skipping still reach the scan node
-    // below the join; a no-op when the snapshot carries no deletes);
-    // initial defaults substitute above that when pre-evolution files
-    // are still live
-    val df = decorateRead(df0, s, ents)
-    // renamed columns surface under logical names via a projection the
-    // optimizer collapses into the scan (alias pushdown keeps the stats
-    // skipping on phash/pbucket/image_id intact — those are base fields
-    // whose physical names never change)
-    (toLogical(df, s), index)
+    val (df, index) = scanIndexed(ents, s.physicalSchema)
+    // deletes and initial defaults decorate the indexed scan (pushed
+    // filters and stats skipping still reach the scan node below any
+    // anti-join); renamed columns surface under logical names via a
+    // projection the optimizer collapses into the scan (alias pushdown
+    // keeps the stats skipping on phash/pbucket/image_id intact — those
+    // are base fields whose physical names never change)
+    (toLogical(decorate(df, Some(s), s, ents), s), index)
   }
 
   def readIndexed(): (DataFrame, QTableFileIndex) = readIndexed(currentSnapshot)
@@ -901,7 +771,7 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * later with an explicit null stays null. Metadata-only: no file is
     * touched; rewrites (compact/cluster/merge CoW) bake the default
     * into their output, after which reads are substitution-free again
-    * (see [[applyDefaults]]). Restricted to primitive types whose
+    * (see [[decorate]]). Restricted to primitive types whose
     * literal has an unambiguous string form. */
   def addColumn(name: String, dtype: String,
       default: Option[String] = None): Snapshot = {
@@ -1166,61 +1036,68 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     "drop-column", "widen-column", "analyze-ndv", "set-properties",
     "enable-row-lineage")
 
-  /** Iceberg-style incremental append scan planning: the data files ADDED
-    * by each `append` snapshot in the chain (fromV, toV]. Appends commit
-    * parent manifests BY REFERENCE (see [[commit]]/AppendJob), so the diff
-    * is manifest-level — O(appended metadata), never O(table), which is
-    * what lets a 10^12-row table serve CDC-style consumers cheaply.
-    * Row-set-preserving rewrites (compact/cluster/rebucket/
-    * rewrite-manifests/add-column) contribute nothing and are skipped;
-    * `merge`/`rollback` change or remove rows and cannot be expressed as
-    * an append delta, so the chain walk refuses them (Iceberg's
-    * incremental scan makes the same refusal for overwrite/delete). */
-  def addedEntries(fromV: Long, toV: Long): Seq[DataFileEntry] = {
-    require(fromV <= toV, s"incremental range reversed: v$fromV > v$toV")
-    val buf = Seq.newBuilder[DataFileEntry]
+  /** The data files the commits in (fromV, toV] of this ref APPENDED,
+    * each with its commit's `timestampMs` — the one manifest-level walk
+    * behind [[addedEntries]] and [[streamedEntriesWithTs]]. Appends
+    * commit parent manifests BY REFERENCE (see [[commit]]/AppendJob), so
+    * the diff is O(appended metadata), never O(table). A clone-birth
+    * appends its whole manifest set (parentVersion = -1: no parent to
+    * diff against; Delta-style clone-as-initial-snapshot); row-set-
+    * preserving commits contribute nothing. Any other commit — rows
+    * changed or removed, or a clone that adopted live delete files
+    * (entries-as-appended would over-emit killed rows) — goes to
+    * `changed`, which refuses it by throwing or skips it by returning. */
+  private def appendedEntries(fromV: Long, toV: Long, scan: String)(
+      changed: Snapshot => Unit): Seq[(DataFileEntry, Long)] = {
+    require(fromV <= toV, s"$scan range reversed: v$fromV > v$toV")
+    val buf = Seq.newBuilder[(DataFileEntry, Long)]
     var s = snapshotAt(toV)
     var done = s.version <= fromV
     while (!done) {
       // the parent loaded for an append's manifest diff is reused to
       // advance the walk — one snapshot read per hop, not two
       var loadedParent: Option[Snapshot] = None
-      s.operation match {
+      val added = s.operation match {
         case "append" | "cherry-pick" => // both add files, parent manifests by reference
           val parent = snapshotAt(s.parentVersion)
           loadedParent = Some(parent)
           val parentManifests = parent.manifests.map(_.path).toSet
-          buf ++= s.manifests.filterNot(m => parentManifests.contains(m.path))
-            .flatMap(m => readManifest(m).files)
-        case "create" => () // table birth: no files by definition
-        case "clone" => // table birth WITH data (Delta-style: a clone is
-          // incrementally readable as an initial snapshot — its entire
-          // manifest set is the delta, parentVersion = -1 means there is
-          // no parent to diff against). Adopted delete debt would make
-          // "entries as appended" over-emit killed rows, so that one
-          // shape refuses toward the changelog (which applies deletes).
-          if (s.deleteFiles.nonEmpty || s.eqDeleteFiles.nonEmpty)
-            throw new IllegalArgumentException(
-              s"cannot incrementally read across clone-birth v${s.version}: " +
-                "the clone adopted live delete files from its source, so " +
-                "its initial rows are not expressible as plain appends — " +
-                "use readChanges (CLI: changes), or compact the clone " +
-                "first to fold the adopted deletes")
-          buf ++= s.manifests.flatMap(m => readManifest(m).files)
-        case op if RowPreservingOps.contains(op) => () // layout-only
-        case op =>
-          throw new IllegalArgumentException(
-            s"cannot incrementally read across a '$op' snapshot " +
-              s"(v${s.version}): rows were changed or removed, not " +
-              "appended — use readChanges (CLI: changes) for a " +
-              "changelog that follows merges and rollbacks")
+          s.manifests.filterNot(m => parentManifests.contains(m.path))
+        case "clone" if s.deleteFiles.isEmpty && s.eqDeleteFiles.isEmpty => s.manifests
+        case op if op == "create" || RowPreservingOps.contains(op) => Nil
+        case _ => changed(s); Nil
       }
+      val ts = s.timestampMs
+      buf ++= added.flatMap(m => readManifest(m).files).map(f => (f, ts))
       // stop at the range start or at table birth (no parent to walk to)
       done = s.parentVersion < 0 || s.parentVersion <= fromV
       if (!done) s = loadedParent.getOrElse(snapshotAt(s.parentVersion))
     }
     buf.result()
   }
+
+  /** Iceberg-style incremental append scan planning: the data files ADDED
+    * by each append in the chain (fromV, toV] — what lets a 10^12-row
+    * table serve CDC-style consumers cheaply. `merge`/`rollback` change
+    * or remove rows and cannot be expressed as an append delta, so the
+    * walk refuses them (Iceberg's incremental scan makes the same
+    * refusal for overwrite/delete), as it refuses a clone-birth that
+    * adopted live deletes. */
+  def addedEntries(fromV: Long, toV: Long): Seq[DataFileEntry] =
+    appendedEntries(fromV, toV, "incremental") { s =>
+      throw new IllegalArgumentException(
+        if (s.operation == "clone")
+          s"cannot incrementally read across clone-birth v${s.version}: " +
+            "the clone adopted live delete files from its source, so " +
+            "its initial rows are not expressible as plain appends — " +
+            "use readChanges (CLI: changes), or compact the clone " +
+            "first to fold the adopted deletes"
+        else
+          s"cannot incrementally read across a '${s.operation}' snapshot " +
+            s"(v${s.version}): rows were changed or removed, not " +
+            "appended — use readChanges (CLI: changes) for a " +
+            "changelog that follows merges and rollbacks")
+    }.map(_._1)
 
   /** [[addedEntries]]'s STREAMING-source variant: same manifest-level
     * walk over (fromV, toV], but row-changing commits either fail with
@@ -1239,56 +1116,26 @@ class QTable(val root: String, val spark: SparkSession) extends Serializable {
     * needs an event-time column, and the commit wall-clock is the
     * honest one a table-following feed has). */
   def streamedEntriesWithTs(fromV: Long, toV: Long,
-      skipChangeCommits: Boolean): Seq[(DataFileEntry, Long)] = {
-    require(fromV <= toV, s"streaming range reversed: v$fromV > v$toV")
-    val buf = Seq.newBuilder[(DataFileEntry, Long)]
-    var s = snapshotAt(toV)
-    var done = s.version <= fromV
-    while (!done) {
-      var loadedParent: Option[Snapshot] = None
-      s.operation match {
-        case "append" | "cherry-pick" => // both add files, parent manifests by reference
-          val parent = snapshotAt(s.parentVersion)
-          loadedParent = Some(parent)
-          val parentManifests = parent.manifests.map(_.path).toSet
-          buf ++= s.manifests.filterNot(m => parentManifests.contains(m.path))
-            .flatMap(m => readManifest(m).files).map(f => (f, s.timestampMs))
-        case "create" => ()
-        case "clone" if s.deleteFiles.isEmpty && s.eqDeleteFiles.isEmpty =>
-          // a fresh streaming read of a cloned table emits the cloned
-          // dataset as its initial micro-batch (Delta-style clone-as-
-          // initial-snapshot); adopted delete debt falls through to the
-          // row-changing refusal below (or is skipped) because entries-
-          // as-appended would over-emit killed rows
-          buf ++= s.manifests.flatMap(m => readManifest(m).files)
-            .map(f => (f, s.timestampMs))
-        case op if RowPreservingOps.contains(op) => ()
-        case _ if skipChangeCommits => ()
-        case op =>
-          throw new IllegalStateException(
-            s"streaming read reached a '$op' commit (v${s.version}): rows " +
-              "were changed, not appended. Restart with " +
-              "option(\"skip-change-commits\", true) to skip such commits " +
-              "(their changes are NOT emitted), or consume readChanges " +
-              "(CLI: changes) for full CDC")
-      }
-      done = s.parentVersion < 0 || s.parentVersion <= fromV
-      if (!done) s = loadedParent.getOrElse(snapshotAt(s.parentVersion))
+      skipChangeCommits: Boolean): Seq[(DataFileEntry, Long)] =
+    appendedEntries(fromV, toV, "streaming") { s =>
+      if (!skipChangeCommits)
+        throw new IllegalStateException(
+          s"streaming read reached a '${s.operation}' commit (v${s.version}): rows " +
+            "were changed, not appended. Restart with " +
+            "option(\"skip-change-commits\", true) to skip such commits " +
+            "(their changes are NOT emitted), or consume readChanges " +
+            "(CLI: changes) for full CDC")
     }
-    buf.result()
-  }
 
   /** Read exactly the rows appended in (fromV, toV] — see
     * [[addedEntries]]. Uses the `to` snapshot's recorded schema (logical
-    * names; files resolve under their physical names as in [[read]]). */
+    * names; files resolve under their physical names as in [[read]]) and
+    * its initial defaults; deletes stay unapplied by contract
+    * (incremental = rows as appended). */
   def readIncremental(fromV: Long, toV: Long): DataFrame = {
     val to = snapshotAt(toV)
     val ents = addedEntries(fromV, toV)
-    // initial defaults of the `to` schema apply to appended files that
-    // predate the add-column commit (deletes stay un-applied here by
-    // contract: incremental = "rows as appended")
-    toLogical(withInitialDefaults(
-      scan(ents, to.physicalSchema), to, ents), to)
+    toLogical(decorate(scan(ents, to.physicalSchema), None, to, ents), to)
   }
 
   /** Row-level changelog (CDC) over (fromV, toV] — unlike

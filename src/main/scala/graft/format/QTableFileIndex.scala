@@ -1,11 +1,12 @@
 package graft.format
 
-import graft.model.{DataFileEntry, FileEntry}
+import graft.model.{DataFileEntry, EqDeleteFileEntry, FileEntry}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The file listing behind EVERY qtable read — the custom `FileIndex`
@@ -29,9 +30,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * pruning, AQE, joins). Delete files carry no such stats and are
   * always listed whole.
   *
-  * Two indexes over the same file set are EQUAL (as `InMemoryFileIndex`
-  * compares root paths), so two reads of one snapshot match in exchange
-  * reuse and the `CacheManager`.
+  * Each listed file carries its entry's constants — data sequence
+  * number and first row id — which [[QTableParquetFormat]] serves as
+  * `_metadata` fields: per-file values a read projects like any column,
+  * with no lookup join.
+  *
+  * Two indexes over the same files with the same constants are EQUAL
+  * (as `InMemoryFileIndex` compares root paths), so two reads of one
+  * snapshot match in exchange reuse and the `CacheManager`; a re-stamp
+  * of the same paths (enable-row-lineage) is a different relation.
   */
 class QTableFileIndex(entries: Seq[FileEntry]) extends FileIndex {
 
@@ -59,16 +66,17 @@ class QTableFileIndex(entries: Seq[FileEntry]) extends FileIndex {
 
   override def refresh(): Unit = ()
 
-  private lazy val pathSet: Set[String] = entries.iterator.map(_.path).toSet
+  private lazy val listing: Map[String, Map[String, Any]] =
+    entries.iterator.map(e => e.path -> QTableFileIndex.constants(e)).toMap
 
   // the mutable test/DML hooks above take no part: they describe how a
   // relation is used, not what it reads
   override def equals(other: Any): Boolean = other match {
-    case o: QTableFileIndex => pathSet == o.pathSet
+    case o: QTableFileIndex => listing == o.listing
     case _ => false
   }
 
-  override def hashCode(): Int = pathSet.hashCode
+  override def hashCode(): Int = listing.hashCode
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
@@ -78,8 +86,9 @@ class QTableFileIndex(entries: Seq[FileEntry]) extends FileIndex {
     }
     lastSelection = (selected.size, entries.size)
     val statuses = selected.map { e =>
-      new FileStatus(e.byteCount, false, 1, 128L << 20, 0L, new HPath(e.path))
-    }.toArray
+      FileStatusWithMetadata(new FileStatus(e.byteCount, false, 1, 128L << 20, 0L,
+        new HPath(e.path)), QTableFileIndex.constants(e))
+    }
     Seq(PartitionDirectory(InternalRow.empty, statuses))
   }
 
@@ -227,4 +236,28 @@ class QTableFileIndex(entries: Seq[FileEntry]) extends FileIndex {
     range(name, e).forall { case (mn, _) => cmp(mn, v).forall(_ <= 0) }
   private def ltMin(name: String, v: Any, e: DataFileEntry): Boolean =
     range(name, e).forall { case (mn, _) => cmp(mn, v).forall(_ < 0) }
+}
+
+object QTableFileIndex {
+  /** `_metadata` field: the file's data sequence number (a delete
+    * file's own for equality deletes, 0 for position deletes). */
+  val SeqField = "qtable_seq"
+
+  /** `_metadata` field: the file's row-lineage base, `firstRowId`
+    * (-1 where none is stamped). */
+  val FirstRowIdField = "qtable_first_row_id"
+
+  private[format] def constants(e: FileEntry): Map[String, Any] = e match {
+    case d: DataFileEntry => Map(SeqField -> d.seq, FirstRowIdField -> d.firstRowId)
+    case d: EqDeleteFileEntry => Map(SeqField -> d.seq, FirstRowIdField -> -1L)
+    case _ => Map(SeqField -> 0L, FirstRowIdField -> -1L)
+  }
+}
+
+/** Parquet, with each file's [[QTableFileIndex]] constants declared as
+  * `_metadata` fields, filled per file from the listing. */
+class QTableParquetFormat extends ParquetFileFormat {
+  override def metadataSchemaFields: Seq[StructField] =
+    super.metadataSchemaFields ++ Seq(QTableFileIndex.SeqField, QTableFileIndex.FirstRowIdField)
+      .map(FileSourceConstantMetadataStructField(_, LongType, nullable = false))
 }

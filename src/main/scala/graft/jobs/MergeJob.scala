@@ -314,7 +314,8 @@ class MergeJob(
     // `__gpath` (= `_metadata.file_path`, captured before the delete
     // anti-join: Spark does not resolve `_metadata` through a join)
     // names each row's file
-    val live = table.readEntriesForRewriteIndexed(snap, files)._1
+    val live = table.decorate(table.scan(files, snap.physicalSchema)
+      .withColumn("__gpath", col("_metadata.file_path")), Some(snap), snap, files)
       .select(col("image_id"), col("__gpath"))
     if (notMatchedBySourceDelete)
       // one row per FILE plus its matched ids

@@ -77,7 +77,7 @@ final case class RowCounts(deletedRows: Long, positions: Long, deleteFiles: Int,
   * and the patched rows append with the inserts as new files, so the
   * commit costs O(changed rows) instead of O(affected files' bytes):
   * the right shape when matches are sparse across huge files. Reads pay
-  * the delete anti-join ([[QTable.applyDeletes]]) until a compact or
+  * the delete anti-join ([[QTable.decorate]]) until a compact or
   * cluster folds it. Data manifests carry by reference; with whole-file
   * drops only the manifests holding a dropped entry are rewritten, and
   * delete entries left referencing no live file fold with them. No
@@ -174,7 +174,9 @@ class RowLevelWrite(table: QTable, snap: Snapshot, jobId: String, op: String) {
     // the changed rows with their addresses, cached: the counts, the
     // veto, the delete write and the post-image write all read them
     val scanned = postImage.filter(_ => affected.nonEmpty).map { p =>
-      val (live, index) = table.readEntriesForRewriteIndexed(snap, affected)
+      val (scan, index) = table.scanIndexed(affected, table.rewriteSchema(snap))
+      val live = table.decorate(scan.withColumn("__gpath", col("_metadata.file_path"))
+        .withColumn("__gpos", col("_metadata.row_index")), Some(snap), snap, affected)
       (p(live).where(col(Status) =!= Kept).cache(), index)
     }
     val changed = scanned.map(_._1)

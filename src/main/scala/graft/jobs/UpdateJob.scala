@@ -73,7 +73,8 @@ class UpdateJob(
     // The index prunes files whose stats cannot satisfy the pushed
     // condition; the collect is one row per matched FILE.
     val (base, index) = table.scanIndexed(all, snap.physicalSchema)
-    val live = table.toLogical(table.decorateReadWithPos(base, snap, all), snap)
+    val live = table.toLogical(table.decorate(
+      base.withColumn("__gpath", col("_metadata.file_path")), Some(snap), snap, all), snap)
     val perFile = live.where(condition)
       .groupBy("__gpath").agg(count(lit(1)).as("n")).collect()
     val (scanned, total) = index.lastSelection

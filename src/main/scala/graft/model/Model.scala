@@ -86,7 +86,8 @@ final case class DataFileEntry(
     // files really were written before the feature existed. Harvest
     // produces [[DataFileEntry.UnstampedSeq]]; QTable.commit stamps the
     // claimed version; carried (untouched copy-on-write) entries keep
-    // their original seq.
+    // their original seq. Reads see it per row as the scan's
+    // `_metadata.qtable_seq` constant (graft.format.QTableFileIndex).
     seq: Long = 0L,
     // row-lineage base (Iceberg v3 `first_row_id`): the file's rows get
     // stable ids `firstRowId + physical position` unless a materialized
@@ -99,6 +100,7 @@ final case class DataFileEntry(
     // rollback refuses to cross the enable boundary — so a 0 from a
     // pre-lineage manifest is never read as an id. In-memory fresh
     // entries default to the [[DataFileEntry.UnstampedRowId]] sentinel.
+    // Reads see it per row as `_metadata.qtable_first_row_id`.
     firstRowId: Long = DataFileEntry.UnstampedRowId) extends FileEntry {
 
   /** Null-safe accessor: entries from pre-colStats manifests deserialize
@@ -145,8 +147,8 @@ object DataFileEntry {
 /** One position-delete file (merge-on-read row deletes, the Iceberg v2
   * analogue): a parquet file of `(file_path: string, pos: long)` rows,
   * each marking one row of one DATA file as deleted. Readers apply the
-  * live delete set as an anti-join on `(_metadata.file_path,
-  * _metadata.row_index)`; rewrite jobs fold deletes into the data files
+  * live delete set as an anti-join on the file name and
+  * `_metadata.row_index`; rewrite jobs fold deletes into the data files
   * they rewrite and drop entries that no longer reference a live file.
   *
   * `dataPathMin`/`dataPathMax` bound the referenced data-file paths
@@ -177,7 +179,8 @@ final case class DeleteFileEntry(
   * older versions of the batch's keys) alongside the batch's appended
   * rows, so commit cost is O(batch) no matter how big the table is.
   *
-  * The read side pays an extra anti-join (key match + seq comparison)
+  * The read side pays an extra anti-join (key match + seq comparison,
+  * both seqs per-file `_metadata` constants of the scans, no lookup)
   * until compaction folds the debt: rewrites read delete-applied, their
   * outputs get a fresh seq above every live delete, and an entry whose
   * applicable files were all rewritten is dropped

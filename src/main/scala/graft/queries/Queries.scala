@@ -1578,7 +1578,7 @@ object Queries {
     * u2 overriding a mix of original, u1-replaced and re-added keys.
     * Every stage's input is exported as parquet, so DuckDB recomputes
     * the final state as nested "replace by key" set algebra — the whole
-    * eq-delete read path (per-file seq lookup, key anti-join, strict-seq
+    * eq-delete read path (per-file seq constants, key anti-join, strict-seq
     * survival) sits under an exact external oracle, with the delete debt
     * still LIVE (no fold ran). */
   private val Q41 = fixture("q41", 1) { (s, root) =>

@@ -177,28 +177,28 @@ class QTableSource extends RelationProvider with CreatableRelationProvider
         }
       case None => ()
     }
-    // decorated-read FALLBACK: a snapshot with renamed columns (needs
-    // the physical->logical aliasing projection) or live merge-on-read
-    // deletes (needs the anti-joins) cannot be served by the raw
-    // HadoopFsRelation — instead of refusing, wrap the full
+    // decorated-read FALLBACK: a snapshot whose read is not its raw
+    // HadoopFsRelation (renamed columns need the physical->logical
+    // aliasing projection, live deletes the anti-joins, pre-evolution
+    // files their initial defaults) — instead of refusing, wrap the full
     // [[QTable.read]] DataFrame as a PrunedFilteredScan: column pruning
     // and best-effort filter pushdown flow INTO the inner plan (whose
     // stats-skipping FileIndex still prunes files), and Spark
     // re-applies every filter above a V1 source, so unconverted
     // predicates stay correct. Head-of-main fallbacks stay DML-capable
     // (the rules match on dmlRoot and the jobs reload at head).
-    if (snap.hasRenames || snap.deleteFiles.nonEmpty || snap.eqDeleteFiles.nonEmpty)
-      return new QTableDecoratedScan(ctx, t.read(snap),
-        s"QTableDecorated($path, v${snap.version})",
-        dmlRoot = if (Seq("version", "tag", "branch", "as-of-ts")
-          .forall(!parameters.contains(_))) Some(path) else None)
-    val (rel, index) = t.relationFor(snap)
-    // SQL INSERT INTO: only a head-of-main relation is appendable (a
-    // time-traveled or branch view must never take writes aimed at
-    // main's head). QTableExtensions reroutes inserts on this marker.
-    if (Seq("version", "tag", "branch", "as-of-ts").forall(!parameters.contains(_)))
-      index.insertRoot = Some(path)
-    rel
+    val headOfMain = Seq("version", "tag", "branch", "as-of-ts").forall(!parameters.contains(_))
+    t.plainRelation(snap) match {
+      case Some((rel, index)) =>
+        // SQL INSERT INTO: only a head-of-main relation is appendable (a
+        // time-traveled or branch view must never take writes aimed at
+        // main's head). QTableExtensions reroutes inserts on this marker.
+        if (headOfMain) index.insertRoot = Some(path)
+        rel
+      case None =>
+        new QTableDecoratedScan(ctx, t.read(snap), s"QTableDecorated($path, v${snap.version})",
+          dmlRoot = Some(path).filter(_ => headOfMain))
+    }
   }
 }
 

@@ -92,24 +92,21 @@ class QTableStreamSource(ctx: SQLContext, path: String,
     // pinned source schema: later-added columns stay invisible until a
     // restart; files predating an added column read nulls (name-mapped)
     // — unless the column carries an initial default, which substitutes
-    // per file exactly as in batch reads (a stream-static broadcast
-    // lookup, no-op when every batch file postdates the defaults)
-    var df = table.scan(ents, baseSchema)
-    if (withCommitTs)
-      // capture the scan address BEFORE any join (Spark does not
-      // resolve `_metadata` through one); the name->commit-ts lookup is
-      // a broadcast bounded by the batch's file count
-      df = df.withColumn("__tsname",
-        substring_index(col("_metadata.file_path"), "/", -1))
-    df = table.withInitialDefaults(df, pinnedSnap, ents)
-    if (withCommitTs) {
-      val tsDf = broadcast(ctx.sparkSession.createDataFrame(
-        entsTs.map { case (f, ts) => (QTable.fileName(f.path), ts) })
-        .toDF("__tsname", "__tsms"))
-      df = df.join(tsDf, Seq("__tsname"), "left")
-        .withColumn("_commit_ts", timestamp_millis(col("__tsms")))
-        .drop("__tsname", "__tsms")
-    }
+    // per file exactly as in batch reads
+    val rows = table.decorate(table.scan(ents, baseSchema), None, pinnedSnap, ents)
+    val df =
+      if (!withCommitTs) rows
+      else {
+        // a commit time is not a file-entry constant: the name->commit-ts
+        // lookup is a broadcast bounded by the batch's file count
+        val tsDf = broadcast(ctx.sparkSession.createDataFrame(
+          entsTs.map { case (f, ts) => (QTable.fileName(f.path), ts) })
+          .toDF("__tsname", "__tsms"))
+        rows.withColumn("__tsname", substring_index(col("_metadata.file_path"), "/", -1))
+          .join(tsDf, Seq("__tsname"), "left")
+          .withColumn("_commit_ts", timestamp_millis(col("__tsms")))
+          .drop("__tsname", "__tsms")
+      }
     org.apache.spark.sql.GraftBridge.asStreaming(
       df.select(schema.fieldNames.map(col).toSeq: _*))
   }

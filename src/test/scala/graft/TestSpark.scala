@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.TestListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import java.io.IOException
 import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
@@ -71,41 +72,53 @@ object TestSpark {
     * the Hadoop-FileSystem CommitIO impl instead of the java.nio one. */
   def tmpDirUri(prefix: String): String = "file:" + tmpDir(prefix)
 
+  /** `body` run with `listener` on the bus, which has delivered every
+    * event of `body`'s jobs when this returns. */
+  private def listening[A](listener: SparkListener)(body: => A): A = {
+    val sc = spark.sparkContext
+    TestListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      TestListenerBridge.drainListenerBus(sc)
+      a
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** The jobs started while `body` runs, as (description, task count of
     * each stage). */
   def jobsDuring[A](body: => A): (A, Seq[(String, Seq[Int])]) = {
-    val sc = spark.sparkContext
-    TestListenerBridge.drainListenerBus(sc)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
-    val listener = new SparkListener {
+    val seen = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val a = listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val desc = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
         seen.add((desc, e.stageInfos.map(_.numTasks)))
       }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      TestListenerBridge.drainListenerBus(sc)
-      (a, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+    })(body)
+    (a, seen.asScala.toSeq)
+  }
+
+  /** The physical plan descriptions of the SQL executions started while
+    * `body` runs. */
+  def plansDuring[A](body: => A): (A, Seq[String]) = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val a = listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => seen.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    })(body)
+    (a, seen.asScala.toSeq)
   }
 
   /** Bytes the tasks that end while `body` runs write to shuffle. */
   def shuffleBytesDuring[A](body: => A): (A, Long) = {
-    val sc = spark.sparkContext
-    TestListenerBridge.drainListenerBus(sc)
     val written = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new SparkListener {
+    val a = listening(new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      TestListenerBridge.drainListenerBus(sc)
-      (a, written.get)
-    } finally sc.removeSparkListener(listener)
+    })(body)
+    (a, written.get)
   }
 }

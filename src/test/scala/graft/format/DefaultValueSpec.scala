@@ -23,14 +23,16 @@ class DefaultValueSpec extends AnyFunSuite {
     val t = QTable.create(TestSpark.tmpDir(prefix), spark, buckets = 2)
     AppendJob.append(t, DataGen.generate(spark, 60, 42L, 2).toDF(), 2) // v1
     t.addColumn("views", "int", Some("7")) // v2, metadata-only
-    val explicit = DataGen.generate(spark, 30, 99L, 1).toDF()
+    AppendJob.append(t, explicit, 1) // v3
+    t
+  }
+
+  private def explicit =
+    DataGen.generate(spark, 30, 99L, 1).toDF()
       .withColumn("image_id", concat(lit("new-"), col("image_id")))
       .withColumn("views",
         when(pmod(xxhash64(col("image_id")), lit(3)) === 0, lit(null))
           .otherwise(lit(100)).cast("int"))
-    AppendJob.append(t, explicit, 1) // v3
-    t
-  }
 
   test("old rows surface the default; explicit nulls stay null") {
     val t = fixture("dv1")
@@ -75,9 +77,12 @@ class DefaultValueSpec extends AnyFunSuite {
     // rewritten files (no substitution) shows the stored 7s
     val raw = t.scan(t.entries(c), c.physicalSchema)
     assert(raw.where(col(f.phys) === 7).count() == 60)
-    // and the decorated read is the identity pass-through again (no
-    // broadcast seq-lookup join left in the plan)
-    assert(!t.read(c).queryExecution.optimizedPlan.toString.contains("__dfseq"))
+    // and the decorated read is the identity pass-through again: no
+    // per-file constant referenced, no join
+    val plan = t.read(c).queryExecution.optimizedPlan
+    assert(!plan.toString.contains("_metadata"), s"steady-state read uses metadata:\n$plan")
+    assert(plan.collectFirst { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+      s"steady-state read joins:\n$plan")
   }
 
   test("merge CoW rewrite of a matched pre-evolution file keeps defaults") {
@@ -139,6 +144,33 @@ class DefaultValueSpec extends AnyFunSuite {
     // (v0, v1] = the pre-evolution append, read under the head schema
     val inc = t.readIncremental(0L, t.currentVersion)
     assert(inc.where(col("views") === 7).count() == 60)
+  }
+
+  test("defaults and row ids read as projections: no join, no broadcast") {
+    val t = fixture("dv8")
+    t.enableRowLineage()
+    val snap = t.currentSnapshot
+    val f = snap.schemaFields.find(_.name == "views").get
+    assert(t.entries(snap).exists(_.seq < f.defaultSeq),
+      "fixture must hold live pre-evolution files")
+    // the model: pre-evolution rows read the default, later rows their
+    // stored values; the ids are the stamped ranges, 0 until 90
+    val model = DataGen.generate(spark, 60, 42L, 2).toDF()
+      .select(col("image_id"), lit(7).as("views"))
+      .unionByName(explicit.select("image_id", "views"))
+    for (df <- Seq(t.read(), t.readWithRowId())) {
+      val views = df.select("image_id", "views")
+      assert(views.exceptAll(model).isEmpty && model.exceptAll(views).isEmpty)
+      df.collect()
+      val logical = df.queryExecution.optimizedPlan
+      assert(logical.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+        s"the decorated read joins:\n$logical")
+      val physical = df.queryExecution.executedPlan.toString
+      assert(!physical.contains("Broadcast"), s"the decorated read broadcasts:\n$physical")
+    }
+    val ids = t.readWithRowId().select("_row_id").collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == (0L until 90L))
   }
 
   test("validation: bad literals and unsupported types fail the ALTER") {

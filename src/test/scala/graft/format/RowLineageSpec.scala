@@ -47,6 +47,22 @@ class RowLineageSpec extends AnyFunSuite {
     assert(!t.read().columns.contains("_row_id"))
   }
 
+  test("enable-row-lineage in one session: reads get the stamped ids, not a cached relation's") {
+    val t = QTable.create(TestSpark.tmpDir("rl-stale"), spark, buckets = 2)
+    AppendJob.append(t, prefixed(60, 9L, "a"), filesPerBucket = 2)
+    // the read readWithRowId plans, cached over the same paths while
+    // their row-id bases were still unstamped
+    val s0 = t.currentSnapshot
+    val ext = org.apache.spark.sql.types.StructType(s0.physicalSchema.fields :+
+      org.apache.spark.sql.types.StructField("_row_id",
+        org.apache.spark.sql.types.LongType, nullable = true))
+    val unstamped = t.decorate(t.scan(t.entries(s0), ext), Some(s0), s0, t.entries(s0)).cache()
+    assert(unstamped.where(col("_row_id") < 0).count() > 0)
+    t.enableRowLineage()
+    assert(idMap(t).values.toSeq.sorted == (0L until 60L))
+    unstamped.unpersist()
+  }
+
   test("compact, cluster, and rebucket preserve ids exactly (materialization)") {
     val t = QTable.create(TestSpark.tmpDir("rl2"), spark, buckets = 2)
     AppendJob.append(t, prefixed(200, 3L, "a"), filesPerBucket = 3)

@@ -42,9 +42,6 @@ class DriverStateLintSpec extends AnyFunSuite {
     "ClusterJob.groupQuantiles" -> ("one (file, group) row per sampled file broadcast; " +
       "GridBatchGroups x 127 longs of grids collected"),
     "ParquetStats.entriesFor" -> "one entry per listed file, past DistributeThreshold files",
-    "QTable.applyDefaults" -> "one (file, seq) row per read file",
-    "QTable.applyRowIds" -> "one (file, first row id) row per read file",
-    "QTable.applyEqDeletes" -> "one (file, seq) row per read file and per applicable delete file",
     "QTable.deletePairs" -> "one (delete file, data file) pair per referenced file",
     "ScanEquivalence.verdict" -> "limit(MaxPinnedIds + 1) differing ids",
     "QTableStreamSource.getBatch" -> "one (file, commit time) row per file of the batch")

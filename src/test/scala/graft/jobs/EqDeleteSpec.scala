@@ -278,7 +278,7 @@ class EqDeleteSpec extends AnyFunSuite {
     assert(t.read(c).count() == 0)
   }
 
-  test("eq anti-join broadcasts both lookup sides and never shuffles the data") {
+  test("eq anti-join broadcasts the key side and never shuffles the data") {
     val t = fresh(400)
     new UpsertJob(t, deleteCol = Some("is_delete"))
       .run(batch(t, "2", "plan", delSuffix = Some("6")))
@@ -286,9 +286,9 @@ class EqDeleteSpec extends AnyFunSuite {
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // the key-delete set is KB-sized vs a TB-scale data side: the eq
-    // anti-join must broadcast, and the file-seq lookup (metadata-sized)
-    // must broadcast too — shuffling the table for either is the bug
-    // that would not survive 100 TB
+    // anti-join must broadcast (both sides' seqs are per-file scan
+    // constants, no lookup join) — shuffling the table is the bug that
+    // would not survive 100 TB
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"expected broadcast left-anti eq-delete application, got:\n$plan")
     assert(!plan.contains("SortMergeJoin"),

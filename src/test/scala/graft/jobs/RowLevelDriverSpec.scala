@@ -132,7 +132,8 @@ class RowLevelDriverSpec extends AnyFunSuite {
     val (_, discovery) = TestSpark.jobsDuring {
       val all = t.entries(snap)
       val (base, _) = t.scanIndexed(all, snap.physicalSchema)
-      t.toLogical(t.decorateReadWithPos(base, snap, all), snap).where(cond)
+      t.toLogical(t.decorate(base.withColumn("__gpath", col("_metadata.file_path")),
+        Some(snap), snap, all), snap).where(cond)
         .groupBy("__gpath").agg(count(lit(1))).collect()
     }
     val (u, updateJobs) = TestSpark.jobsDuring(
@@ -140,6 +141,20 @@ class RowLevelDriverSpec extends AnyFunSuite {
     assert(u.summary("files-rewritten").toInt > 0)
     assert(updateJobs.map(_._2) == discovery.map(_._2),
       s"the update launched $updateJobs, its discovery $discovery")
+  }
+
+  test("discovery on a table with no deletes reads no row index") {
+    val t = table("rd-discover-pos")
+    val src = source().cache()
+    val (_, plans) = TestSpark.plansDuring {
+      merge(t, src, onDriver = false)
+      update(t, onDriver = false)
+    }
+    src.unpersist()
+    assert(plans.count(_.contains("__gpath")) == 2,
+      s"expected the merge's and the update's discovery scans:\n${plans.mkString("\n")}")
+    assert(!plans.exists(_.contains("_tmp_metadata_row_index")),
+      s"a copy-on-write statement read row indexes:\n${plans.mkString("\n")}")
   }
 
   test("groups with live deletes, defaults or row lineage keep the job path") {

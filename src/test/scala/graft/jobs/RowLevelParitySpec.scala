@@ -203,7 +203,7 @@ class RowLevelParitySpec extends AnyFunSuite {
     assert(bag(t) == modelBag(BaseModel -- (16 until 24) - 1))
     assert(own(snap.summary) == Map("job-id" -> "rl-delete", "deleted-rows" -> "9",
       "files-dropped" -> "1", "rows-dropped-with-files" -> "8",
-      "new-delete-files" -> "1", "files-scanned" -> "4", "files-total" -> "4"))
+      "new-delete-files" -> "1", "files-scanned" -> "2", "files-total" -> "4"))
   }
 
   test("upsert replaces, inserts and deletes whole records") {
